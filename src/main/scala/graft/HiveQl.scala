@@ -3057,11 +3057,22 @@ object HiveQl {
   private val SetSystemProp =
     """(?is)^\s*SET\s+system:([^=\s]+)\s*=\s*(.*?)\s*;?\s*$""".r
 
+  // SET mapred.reduce.tasks=-1 — Hive 0.8's shipped default, "estimate
+  // the reducer count" (HiveConf / MapRedTask.setNumberOfReducers). Spark
+  // maps the key onto spark.sql.shuffle.partitions and rejects negatives;
+  // graft's equivalent of "auto" is the count the session was built with
+  // (Sessions.builder), which AQE then coalesces from runtime sizes.
+  private val SetAutoReducers =
+    """(?is)^\s*SET\s+(?:hiveconf:)?mapred\.reduce\.tasks\s*=\s*-1\s*;?\s*$""".r
+
   def statementExec(q: String): Option[SparkSession => Unit] =
     if (bypassStatements.get) None
     else q match {
       case SetSystemProp(k, v) =>
         Some(_ => { System.setProperty(k.trim, v); () })
+      case SetAutoReducers() =>
+        Some(s => s.conf.set("spark.sql.shuffle.partitions",
+          s.sparkContext.getConf.get("spark.sql.shuffle.partitions", Sessions.cpus)))
       case LoadData(local, path, overwrite, table, part) =>
         Some(s => {
           Authz.checkLoadTarget(s, table)

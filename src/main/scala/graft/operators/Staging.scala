@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate}
 
 /** Stage-boundary materialization — the Spark-native analogue of the
   * reference's between-job scratch-dir writes (`ExecDriver.java:94` runs one
@@ -57,16 +58,12 @@ object Staging {
     * copy. Re-staging the same name overwrites (bench reruns recompute —
     * results never go stale across inputs).
     *
-    * The write is SIZE-AWARE: a REBALANCE hint lets AQE pick the output
-    * partition count from runtime shuffle statistics against
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` — a ~60k-row stage
-    * publishes one file instead of `defaultParallelism` slivers (the
-    * small-file posture [[graft.sources.Compaction]] exists to repair,
-    * planned away before the write instead of after), and a 100 TB stage
-    * publishes advisory-sized files with no driver-side estimate. Opt out
-    * per session with `graft.staging.rebalance=false` when the input
-    * partitioning is already byte-targeted and the extra exchange isn't
-    * worth it.
+    * The write is SIZE-AWARE through [[sized]], the rule every Staging
+    * write shares: a ~60k-row stage publishes one file instead of
+    * `defaultParallelism` slivers (the small-file posture
+    * [[graft.sources.Compaction]] exists to repair, planned away before the
+    * write instead of after), and a 100 TB stage publishes advisory-sized
+    * files with no driver-side estimate.
     */
   def stage(df: DataFrame, name: String): DataFrame = {
     require(name.matches("[\\w.-]+"),
@@ -120,20 +117,22 @@ object Staging {
     * OUTSIDE the store root (partition discovery on a concurrent reader
     * must never see a half-written `epoch=N`), is audited for `_SUCCESS`,
     * and renames in atomically. Re-running the same epoch replaces just
-    * that partition (idempotent retry).
+    * that partition (idempotent retry). Sized by the same [[sized]] rule as
+    * [[stage]] — a delta-sized epoch is one file with no exchange.
+    *
+    * Returns a schema-pinned scan of the NEW partition alone (no `epoch`
+    * column), so a store component derived from this one can be appended
+    * from the published rows without re-deriving them.
     */
   def appendEpoch(df: DataFrame, dir: String, epoch: Long,
-      appScratch: Boolean = false): Unit = {
+      appScratch: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     if (appScratch) registerCleanup(spark)
     val root = new Path(dir)
     val target = new Path(root, s"epoch=$epoch")
     val tmp = new Path(root.getParent, root.getName + s"__epoch${epoch}_tmp")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sized =
-      if (spark.conf.getOption("graft.staging.rebalance").contains("false")) df
-      else df.hint("REBALANCE")
-    sized.write.mode("overwrite").parquet(tmp.toString)
+    sized(df).write.mode("overwrite").parquet(tmp.toString)
     if (!fs.exists(new Path(tmp, "_SUCCESS")))
       throw new IllegalStateException(
         s"epoch append for ${target} did not commit")
@@ -141,6 +140,7 @@ object Staging {
     if (fs.exists(target)) fs.delete(target, true)
     if (!fs.rename(tmp, target))
       throw new IllegalStateException(s"epoch publish failed for $target")
+    spark.read.schema(df.schema).parquet(target.toString)
   }
 
   /** Highest `epoch=N` partition present under `dir` (-1 if none) — how a
@@ -156,29 +156,46 @@ object Staging {
       .foldLeft(-1L)(math.max)
   }
 
+  /** The output-file sizing rule every Staging write shares. Opt out per
+    * session with `graft.staging.rebalance=false` when the input
+    * partitioning is already byte-targeted.
+    *  - A grouping `Aggregate` or a `Deduplicate` (what `.distinct()`
+    *    builds) root is written as is: its own shuffle is already
+    *    AQE-coalesced to advisory-sized partitions, so a rebalance would be
+    *    a second exchange for nothing. Its size estimate is skipped too —
+    *    the optimizer overestimates aggregates, and the estimate costs an
+    *    optimizer pass.
+    *  - Otherwise, below `graft.staging.rebalance.minBytes` (8 MB) by the
+    *    optimizer's estimate, a shuffle-free `coalesce(1)` gives the one
+    *    file a rebalance would (guide §2.4: don't pay an exchange whose
+    *    only job was file sizing).
+    *  - Otherwise a REBALANCE hint lets AQE pick the output partition count
+    *    from runtime shuffle statistics against
+    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` — the 100 TB
+    *    posture.
+    */
+  private def sized(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (spark.conf.getOption("graft.staging.rebalance").contains("false")) df
+    else df.queryExecution.analyzed match {
+      case a: Aggregate if a.groupingExpressions.nonEmpty => df
+      case _: Deduplicate => df
+      case _ =>
+        val b = Sizing.planBytes(df)
+        val tiny = b >= 0 && b < spark.conf
+          .getOption("graft.staging.rebalance.minBytes")
+          .map(_.toLong).getOrElse(8L << 20)
+        if (tiny) df.coalesce(1) else df.hint("REBALANCE")
+    }
+  }
+
   private def publish(df: DataFrame, target: Path,
       rebalance: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val tmp = new Path(target.getParent, target.getName + "__stage_tmp")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // REBALANCE is the 100 TB posture (advisory-sized output files from
-    // runtime stats) but is a whole extra exchange + AQE stage; when the
-    // optimizer's estimate says the stage output is tiny, a shuffle-free
-    // coalesce(1) gives the same one-file outcome (guide §2.4: don't pay
-    // an exchange whose only job was file sizing). Estimates only ever
-    // OVERSHOOT for the aggregate-shaped frames staged here, so a big
-    // stage can never wrongly lose its rebalance.
-    val tiny = {
-      val b = Sizing.planBytes(df)
-      b >= 0 && b < spark.conf.getOption("graft.staging.rebalance.minBytes")
-        .map(_.toLong).getOrElse(8L << 20)
-    }
-    val sized =
-      if (!rebalance ||
-          spark.conf.getOption("graft.staging.rebalance").contains("false")) df
-      else if (tiny) df.coalesce(1)
-      else df.hint("REBALANCE")
-    sized.write.mode("overwrite").parquet(tmp.toString)
+    (if (rebalance) sized(df) else df).write.mode("overwrite")
+      .parquet(tmp.toString)
     // audit: the commit marker must exist before the copy becomes readable
     if (!fs.exists(new Path(tmp, "_SUCCESS")))
       throw new IllegalStateException(
@@ -186,6 +203,6 @@ object Staging {
     if (fs.exists(target)) fs.delete(target, true)
     if (!fs.rename(tmp, target))
       throw new IllegalStateException(s"staging publish failed for $target")
-    spark.read.parquet(target.toString)
+    spark.read.schema(df.schema).parquet(target.toString)
   }
 }

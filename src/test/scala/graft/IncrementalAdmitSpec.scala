@@ -36,6 +36,42 @@ class IncrementalAdmitSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+  /** Spark jobs started inside `body`, counted by a SparkListener on the
+    * body's job group. Listener events arrive asynchronously, so a marker
+    * job runs after the body: its end event is delivered after every event
+    * the body's jobs posted.
+    */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "spec_admit_jobs"
+    val marker = "spec_admit_jobs_marker"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    def groupOf(p: java.util.Properties) =
+      Option(p).flatMap(x => Option(x.getProperty("spark.jobGroup.id")))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groupOf(e.properties) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(`marker`) => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "admission under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job end")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("admission never reads existing text — the store replaces the corpus") {
     import spark.implicits._
     // the existing corpus lives in its own parquet dir so a read of it is
@@ -195,5 +231,53 @@ class IncrementalAdmitSpec extends SparkSpec {
       store, docs(3L -> perm, 4L -> other), 0.8, None, 16, 2)
     assert(admitted.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(4L),
       "id order must not decide store-side rejection")
+  }
+
+  test("one admission runs a pinned number of jobs") {
+    // the admission is bound by per-job fixed cost, not compute: a schema-
+    // inference read-back, a rebalance exchange on a delta-sized write or a
+    // second verdict join each come back as extra jobs and fail this pin.
+    // Bound measured on this fixture: delta words write (1), verdict
+    // (window, joins, write: 5), words append (verdict broadcast, write:
+    // 2), bands append (1)
+    val budget = 9
+    val store = Dedup.buildSigStore(docs(1L -> base, 2L -> other), "spec_admit_jobs")
+    val delta = docs(100L -> perm, 101L -> third)
+    var admitted: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsIn {
+      admitted = Dedup.incrementalAdmit(store, delta, 0.8, None, 16, 2)._1
+    }
+    assert(jobs <= budget, s"one admission ran $jobs jobs, budget $budget")
+    assert(admitted.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(101L))
+  }
+
+  test("over-cap bucket and both-band agreement: raw candidate rows admit the same ids") {
+    // twelve store docs share one word set, so both of their bands agree
+    // and each band bucket holds them all: over the default cap of 10, so
+    // the probe keeps ids 1..10 only. Every candidate pair agrees on BOTH
+    // bands — two raw candidate rows per pair, which the verdict's
+    // distinct must fold like the old per-pair band count did
+    val words = base.split(' ').toSeq
+    val rotations = (1L to 12L).map(i =>
+      i -> (words.drop(i.toInt % 10) ++ words.take(i.toInt % 10)).mkString(" "))
+    val store = Dedup.buildSigStore(docs(rotations :+ (20L -> other): _*),
+      "spec_admit_overcap")
+    val permOther = "tango sierra romeo quebec papa oscar november mike lima kilo"
+    val fresh = "aa bb cc dd ee ff gg hh ii jj"
+    val (admitted, updated) = Dedup.incrementalAdmit(store, docs(
+      0L -> perm,        // below every store id: rejected by store docs 1..9
+      100L -> perm,      // rejected by the capped store docs (and by doc 0)
+      101L -> third,     // novel
+      102L -> permOther, // agrees on both bands with store doc 20
+      103L -> "one two three four five six seven eight nine ten",
+      104L -> fresh,     // novel; its delta twin 105 sorts after it
+      105L -> fresh.split(' ').reverse.mkString(" ")), 0.8, None, 16, 2)
+    assert(admitted.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      == Seq(101L, 103L, 104L))
+    assert(updated.words.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      == ((1L to 12L) ++ Seq(20L, 101L, 103L, 104L)))
+    assert(updated.bands.select("doc_id").distinct().collect().map(_.getLong(0))
+      .sorted.toSeq == ((1L to 12L) ++ Seq(20L, 101L, 103L, 104L)),
+      "the bands epoch must cover exactly the admitted docs")
   }
 }

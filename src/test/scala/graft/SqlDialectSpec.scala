@@ -335,6 +335,19 @@ class SqlDialectSpec extends SparkSpec {
     assert(content == "resource-payload")
   }
 
+  test("SET mapred.reduce.tasks=-1 (Hive's auto) restores the session's partition count") {
+    val built = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      HiveQl.sql(spark, "SET mapred.reduce.tasks=31")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "31")
+      HiveQl.sql(spark, "set mapred.reduce.tasks = -1;")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == Sessions.cpus)
+      HiveQl.sql(spark, "SET mapred.reduce.tasks=31")
+      HiveQl.sql(spark, "SET hiveconf:mapred.reduce.tasks=-1")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == Sessions.cpus)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", built)
+  }
+
   test("CREATE TEMPORARY FUNCTION binds a graft class to a new name (FunctionTask.java)") {
     HiveQl.sql(spark,
       "CREATE TEMPORARY FUNCTION my_hash AS 'graft.functions.HiveHash08'")

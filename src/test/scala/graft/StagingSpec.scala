@@ -52,6 +52,49 @@ class StagingSpec extends SparkSpec {
     } finally spark.conf.unset("graft.staging.rebalance")
   }
 
+  test("stage() reads back with the written schema: same schema and rows as inference") {
+    // the staged copy is scanned with the schema just written, not by
+    // footer inference — it must see exactly what a fresh inferred read of
+    // the same directory sees, nested and nullable types included
+    val df = spark.sql("""
+      SELECT id,
+             array(id, id + 1, IF(id = 2, NULL, id)) AS arr,
+             map('k', id, 'n', IF(id = 3, NULL, id)) AS m,
+             named_struct('a', id, 'b', array(cast(id AS string)),
+                          'c', IF(id = 1, NULL, named_struct('d', id * 2))) AS st,
+             timestamp'2020-02-29 12:34:56.789' + make_interval(0, 0, 0, id) AS ts,
+             IF(id = 4, NULL, cast(id AS decimal(12, 3)) / 7) AS dec
+      FROM range(6)""")
+    val staged = Staging.stage(df, "spec_stage_roundtrip")
+    val inferred = spark.read.parquet(Staging.scratchRoot(spark) + "/spec_stage_roundtrip")
+    assert(staged.schema == inferred.schema,
+      s"pinned read-back schema drifted:\n${staged.schema.treeString}\nvs inferred\n" +
+        inferred.schema.treeString)
+    val rows = staged.orderBy("id").collect().toSeq
+    assert(rows == inferred.orderBy("id").collect().toSeq)
+    assert(rows == df.orderBy("id").collect().toSeq, "staging must not change the rows")
+  }
+
+  test("aggregate-rooted stages skip the rebalance and still publish one file") {
+    import spark.implicits._
+    val frag = (1 to 60000).toDF("id").repartition(32)
+    def dataFiles(name: String): Int = {
+      val dir = new org.apache.hadoop.fs.Path(Staging.scratchRoot(spark), name)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+        .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    }
+    // the aggregate's own shuffle is AQE-coalesced: no second exchange
+    // needed to land one file
+    val grouped = Staging.stage(
+      frag.groupBy(($"id" % 100).as("k")).count(), "spec_stage_agg")
+    assert(grouped.count() == 100)
+    assert(dataFiles("spec_stage_agg") == 1)
+    val distinct = Staging.stage(frag.select(($"id" % 7).as("k")).distinct(),
+      "spec_stage_distinct")
+    assert(distinct.orderBy("k").collect().map(_.getInt(0)).toSeq == (0 to 6))
+    assert(dataFiles("spec_stage_distinct") == 1)
+  }
+
   test("q117's final job reads staged round-3 centroids, not the 3-round lineage") {
     val df = SparkEntry.queries("q117_kmeans_iterated")(spark, sfDir)
     df.collect()

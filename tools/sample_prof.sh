@@ -7,7 +7,7 @@ OUT=${2:-/tmp/prof.txt}
 : > "$OUT"
 END=$((SECONDS + SECS))
 while [ $SECONDS -lt $END ]; do
-  PID=$(jps -l 2>/dev/null | grep -E "graft\.(Explain|RunSubset|Verify|Bench)" | awk '{print $1}' | head -1)
+  PID=$(jps -l 2>/dev/null | grep -E "graft\.(Explain|RunSubset|Verify|Bench)|graftbench\.Main" | awk '{print $1}' | head -1)
   if [ -n "$PID" ]; then
     jstack "$PID" 2>/dev/null | awk '/"main"/{f=1} f&&/^$/{f=0} f' >> "$OUT"
     echo "---" >> "$OUT"
