@@ -1811,14 +1811,7 @@ object HiveQl {
     val result = statementExec(q) match {
       case Some(exec) => exec(spark); spark.emptyDataFrame
       case None => withSelfReadOverwriteRetry(spark, q)(
-        withLegacyStoreRetry(spark) { c =>
-          val fin = rewrite(q)
-          if (spark.conf.getOption("graft.debug.sql").contains("true"))
-            // diagnostic escape: control bytes visible
-            System.err.println("[graft.sql] " + fin.flatMap(ch =>
-              if (ch < ' ' && ch != '\n') f"\\x${ch.toInt}%02x" else ch.toString))
-          c.sql(fin)
-        })
+        withLegacyStoreRetry(spark)(_.sql(rewrite(q))))
     }
     if (!holdDdl) bumpInsertTargets(spark, maskedQ)
     mergeSmallFiles(spark, maskedQ, qLits)

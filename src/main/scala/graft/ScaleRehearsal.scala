@@ -105,26 +105,17 @@ object ScaleRehearsal {
       .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
 
     // ---- time each query at 1× and 10× (min of 2; noop sink) ----
-    // a trailing `!unstaged` on a query name times the same query with
-    // Staging.stage as a passthrough — the staged-vs-lazy A/B the staging
-    // contract's value claim rests on (VERDICT r6 Next #7)
     def time(name: String, dir: String): Double = {
-      val (qname, unstaged) =
-        if (name.endsWith("!unstaged")) (name.stripSuffix("!unstaged"), true)
-        else (name, false)
-      if (unstaged) spark.conf.set("graft.staging.disable", "true")
-      try {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(qname)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      } finally if (unstaged) spark.conf.unset("graft.staging.disable")
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      math.min(once(), once())
     }
     // one warm pass so the first measured query isn't charged for JIT
-    SparkEntry.queries(names.head.stripSuffix("!unstaged"))(spark, sf1)
+    SparkEntry.queries(names.head)(spark, sf1)
       .write.format("noop").mode("overwrite").save()
     println(s"factor=$factor")
     println(f"${"query"}%-22s ${"t1x(s)"}%8s ${"tNx(s)"}%8s ${"alpha"}%6s")

@@ -1,12 +1,15 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,…] — given query
+  * names, only those queries and their oracle_sql.json entries are written.
+  */
 object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with [[RunSubset]].
     */
   def jsonQuote(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -19,7 +22,12 @@ object Verify {
   } + "\""
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args.take(2)
+    val all = SparkEntry.queries
+    val queries = args.lift(2).map(_.split(",").toSet).fold(all) { names =>
+      require(names.forall(all.contains), s"unknown query name in ${args(2)}")
+      all.filter(kv => names(kv._1))
+    }
     val spark = Sessions.get("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -30,7 +38,7 @@ object Verify {
     // leaked SET broke q178). Sorted order makes any residual cross-query
     // effect at least deterministic. ensureRegistered: function registry is
     // per-SessionState, so shadowing builtins must be re-pinned per session.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val qs = Sessions.isolatedClone(spark)
         fn(qs, sfDir).coalesce(1).write.mode("overwrite")
@@ -39,7 +47,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => queries.contains(kv._1))
       .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -42,9 +42,9 @@ object Dedup extends QueryModule {
     * unbounded numbers from round 7 on).
     */
 
-  /** Bucket cap for the near-dup PAIR operators, resolved: explicit
-    * argument wins, else session conf `graft.dedup.bucketcap` (default 10);
-    * a value <= 0 disables the cap. The cap is ON BY DEFAULT because the
+  /** Bucket cap for the near-dup PAIR operators, resolved: an explicit
+    * argument wins, else 10; a value <= 0 disables the cap. The cap is ON
+    * BY DEFAULT because the
     * uncapped pair-list contract is quadratic in duplicate-group size BY
     * CONSTRUCTION — at the 30× rehearsal the uncapped minhash operator
     * measured α ≈ 1.86 and 747 s with spill-retry instability (SURVEY
@@ -52,10 +52,7 @@ object Dedup extends QueryModule {
     * entry points get the bounded plan; opting out is a deliberate,
     * fixture-scale act.
     */
-  private def resolvedCap(s: org.apache.spark.sql.SparkSession,
-      cap: Option[Int]): Int =
-    cap.getOrElse(s.conf.getOption("graft.dedup.bucketcap")
-      .map(_.toInt).getOrElse(10))
+  private def resolvedCap(cap: Option[Int]): Int = cap.getOrElse(10)
 
   /** MinHash-LSH candidate pairs over `docs(doc_id, text)`: per-doc
     * `numHashes` MinHash signature (native minhash_sig kernel), banded into
@@ -110,7 +107,7 @@ object Dedup extends QueryModule {
   def minhashPairs(docs: org.apache.spark.sql.DataFrame, numHashes: Int = 16,
       numBands: Int = 2, cap: Option[Int] = None): org.apache.spark.sql.DataFrame =
     cappedBandPairs(minhashBands(docs, numHashes, numBands),
-      resolvedCap(docs.sparkSession, cap))
+      resolvedCap(cap))
 
   /** Candidate pairs from a banded signature frame `(doc_id, band, bh)`:
     * bucket membership capped to the `c` lowest doc_ids (WindowGroupLimit —
@@ -372,7 +369,7 @@ object Dedup extends QueryModule {
       wordsOf(incoming.transform(Sizing.spreadForCompute)),
       s"${ep}_delta_words", store.baseDir)
     val pairs = admissionPairs(store.bands,
-      bandsFromWords(inWords, numHashes, numBands), resolvedCap(s, cap))
+      bandsFromWords(inWords, numHashes, numBands), resolvedCap(cap))
     // verification reads word sets only: store words (staged parquet) for
     // the existing side, delta words for the incoming side
     val rejected = stageStore(
@@ -462,13 +459,12 @@ object Dedup extends QueryModule {
   def incrementalAdmit(existing: org.apache.spark.sql.DataFrame,
       incoming: org.apache.spark.sql.DataFrame, threshold: Double,
       cap: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    val s = existing.sparkSession
     val exWords = Staging.stage(wordsOf(existing.transform(Sizing.spreadForCompute)),
       "sigstore_existing_words")
     val inWords = Staging.stage(wordsOf(incoming.transform(Sizing.spreadForCompute)),
       "sigstore_existing_d0_delta_words")
     val pairs = admissionPairs(bandsFromWords(exWords), bandsFromWords(inWords),
-      resolvedCap(s, cap))
+      resolvedCap(cap))
     val rejected = verifyPairsW(exWords.union(inWords), pairs, threshold)
       .select(col("b_id").as("doc_id")).distinct()
     incoming.join(rejected, Seq("doc_id"), "left_anti")
@@ -545,7 +541,7 @@ object Dedup extends QueryModule {
       s"${ep}_delta_members", store.baseDir)
     val probe = store.members.withColumn("origin", lit("E"))
       .union(inAssigned.withColumn("origin", lit("I")))
-    val c = resolvedCap(s, cap)
+    val c = resolvedCap(cap)
     val kept =
       if (c <= 0) probe
       else probe
@@ -591,11 +587,10 @@ object Dedup extends QueryModule {
     */
   def nearDupLifecycle(docs: org.apache.spark.sql.DataFrame,
       threshold: Double, cap: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
     val words = Staging.stage(
       wordsOf(docs.transform(Sizing.spreadForCompute)),
       "lifecycle_words")
-    val cands = cappedBandPairs(bandsFromWords(words), resolvedCap(s, cap))
+    val cands = cappedBandPairs(bandsFromWords(words), resolvedCap(cap))
     val verified = Staging.stage(
       verifyPairsW(words, cands, threshold).select(col("a_id"), col("b_id")),
       "lifecycle_verified")
@@ -619,7 +614,6 @@ object Dedup extends QueryModule {
     * oracles it against a recursive-CTE closure.
     */
   def clusterAssign(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
     val bands = docs
       .transform(Sizing.spreadForHeavyCompute)
       .selectExpr("doc_id",
@@ -704,48 +698,32 @@ object Dedup extends QueryModule {
     // closure, so a silent early exit would surface only as an
     // unexplained mismatch at scale.
     val maxRounds = 64
-    // Staging (not cache) cuts the LOGICAL plan at the stage boundary —
-    // the Pregel checkpoint posture, same per-round scratch write as
-    // q117: cache only truncates execution, so the plan tree still
-    // quadrupled per round (each superstep references `labels` twice)
-    // and the driver OOMed rendering it at the unbounded 10× rehearsal
-    // before any executor ran short of memory. stageEvery stays 1:
-    // a >1 setting makes every lazy round's convergence count EXECUTE
-    // its supersteps and then the next staged round recompute them
-    // inside its deeper plan — idle A/B at local[32] sf0.1 measured
-    // stageEvery=2 at 6.40 s vs 3.41 s for stage-every-round (r7
-    // build), a 1.9× regression, so the halved scratch-write count
-    // never pays for the duplicated execution.
-    val stagingOff =
-      s.conf.getOption("graft.staging.disable").contains("true")
-    val stageEvery =
-      s.conf.getOption("graft.cc.stageEvery").map(_.toInt).getOrElse(1)
+    // Every round is staged. Staging (not cache) cuts the LOGICAL plan at
+    // the stage boundary, the Pregel checkpoint posture: the lazy form's
+    // plan tree quadrupled per round (each superstep references `labels`
+    // twice) and OOMed the driver at the unbounded 10× rehearsal (SURVEY
+    // §6.10). Staging every other round was 1.9× slower (SURVEY §6.12):
+    // the unstaged round's convergence count executes its supersteps and
+    // the next staged round recomputes them inside its deeper plan.
+    Observed.ensureListener(s)
     while (changed > 0 && iter < maxRounds) {
       // two supersteps per scheduler round trip; the fixpoint test is
       // sound on the SECOND step alone (if it moved nothing, the first
       // step's output was already stable). Measured: three supersteps
       // per round is ~2.5× SLOWER — the deeper per-round plan costs
       // more in codegen/planning than the saved actions. Each round is
-      // ONE job: staged rounds fuse the convergence check into the
-      // scratch write via observe() (the mover count arrives as an
-      // observed metric of the write job itself — no second action
-      // over the staged output); lazy rounds get it from the count
-      // action that is anyway their only execution.
+      // ONE job: the convergence check is fused into the scratch write
+      // via observe() (the mover count arrives as an observed metric of
+      // the write job itself — no second action over the staged output).
       val cur = propagate(propagate(labels).drop("moved"))
-      if (!stagingOff && iter % stageEvery == stageEvery - 1) {
-        Observed.ensureListener(s)
-        val obs = Observed.freshName(s"${stageName}_conv")
-        val staged = Staging.stage(
-          cur.observe(obs,
-            coalesce(sum(when(col("moved"), 1L).otherwise(0L)), lit(0L))
-              .as("moved_n")),
-          s"${stageName}_r$iter")
-        changed = Observed.take(obs).getAs[Long]("moved_n")
-        labels = staged.drop("moved")
-      } else {
-        changed = cur.filter(col("moved")).count()
-        labels = cur.drop("moved")
-      }
+      val obs = Observed.freshName(s"${stageName}_conv")
+      val staged = Staging.stage(
+        cur.observe(obs,
+          coalesce(sum(when(col("moved"), 1L).otherwise(0L)), lit(0L))
+            .as("moved_n")),
+        s"${stageName}_r$iter")
+      changed = Observed.take(obs).getAs[Long]("moved_n")
+      labels = staged.drop("moved")
       iter += 1
     }
     edges.unpersist()
@@ -774,7 +752,6 @@ object Dedup extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     require(maxHamming <= 2,
       "the 4-band pigeonhole key is lossless only for hamming <= 2")
-    val s = docs.sparkSession
     val bands = docs
       .transform(Sizing.spreadForCompute)
       .selectExpr("doc_id",
@@ -785,7 +762,7 @@ object Dedup extends QueryModule {
                    array(1, 2), array(1, 3), array(2, 3)),
              p -> cast((shiftright(simhash, p[0] * 8) & 255) * 256 +
                        (shiftright(simhash, p[1] * 8) & 255) AS int))) AS (band, bv)""")
-    val c = resolvedCap(s, cap)
+    val c = resolvedCap(cap)
     val kept =
       if (c <= 0) bands
       else bands
@@ -1088,9 +1065,9 @@ object Dedup extends QueryModule {
     //      normalized dedup (q50/q118) clears first in a real pipeline.
     QueryDef(
       "q121_minhash_capped",
-      // the PRODUCTION entry point: minhashPairs with its default cap
-      // (graft.dedup.bucketcap, 10) — exactly what a user gets calling the
-      // operator without opting out. The oracle replicates the
+      // the PRODUCTION entry point: minhashPairs with its default cap of
+      // 10 — exactly what a user gets calling the operator without an
+      // explicit cap. The oracle replicates the
       // deterministic selection with QUALIFY row_number() <= 10.
       (s, dir) =>
         minhashPairs(fixtureBound(t(s, dir, "documents"), "doc_id", 200))

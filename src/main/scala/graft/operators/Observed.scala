@@ -29,7 +29,7 @@ object Observed {
   private val seq = new AtomicLong()
 
   /** Observation names must be unique per concurrent execution; re-running
-    * the same query (bench min-of-2, RunSubset loops) must never read a
+    * the same query (bench min-of-2, Verify subset reruns) must never read a
     * stale metric, so every run gets a fresh name.
     */
   def freshName(prefix: String): String = prefix + "_" + seq.incrementAndGet()

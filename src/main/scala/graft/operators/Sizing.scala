@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   *
   * [[spreadForCompute]] keeps the spread-for-CPU intent but gates it on the
   * optimizer's size estimate of the input plan:
-  *   - below `graft.repartition.minBytes` (default 32 MB) the exchange is
+  *   - below [[MinBytes]] (32 MB) the exchange is
   *     skipped outright — the scan's own partitioning (1-2 tasks for a
   *     sub-split file) is already minimal, and a round-robin exchange (plus
   *     its mandatory sort-before-repartition) would only ADD a stage;
@@ -22,21 +22,22 @@ import org.apache.spark.sql.DataFrame
   *     core count for genuinely large inputs (`bytes / 128 MB` when that
   *     exceeds defaultParallelism), so a 100 TB corpus is not squeezed into
   *     one wave of core-count partitions.
-  * Both knobs are session confs so a cluster profile can retune without a
-  * rebuild. Row content is unchanged either way — round-robin repartition
-  * only moves rows — so every oracle result is byte-identical.
+  * Row content is unchanged either way — round-robin repartition only
+  * moves rows — so every oracle result is byte-identical.
   */
 object Sizing {
 
   /** Inputs estimated below this never get the spread exchange. */
-  def minBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.repartition.minBytes")
-      .map(_.toLong).getOrElse(32L << 20)
+  private val MinBytes = 32L << 20
 
   /** Target partition size once a spread IS warranted. */
-  def targetBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.repartition.targetBytes")
-      .map(_.toLong).getOrElse(128L << 20)
+  private val TargetBytes = 128L << 20
+
+  /** The small-input gate of [[spreadForCompute]], for callers that
+    * measure the input's bytes some other way (a streaming plan has no
+    * size estimate).
+    */
+  def belowSpreadGate(bytes: Long): Boolean = bytes >= 0 && bytes < MinBytes
 
   /** `df.repartition(defaultParallelism)` with a data-size gate — see
     * object doc. Safe wherever the old constant-count spread was: the
@@ -45,13 +46,7 @@ object Sizing {
     */
   def spreadForCompute(df: DataFrame): DataFrame = {
     val bytes = planBytes(df)
-    if (bytes >= 0 && bytes < minBytes(df)) df
-    else {
-      val dp = df.sparkSession.sparkContext.defaultParallelism.toLong
-      val n = if (bytes < 0) dp
-        else math.max(dp, (bytes + targetBytes(df) - 1) / targetBytes(df))
-      df.repartition(math.min(n, Int.MaxValue.toLong).toInt)
-    }
+    if (belowSpreadGate(bytes)) df else spread(df, bytes)
   }
 
   /** As [[spreadForCompute]] but WITHOUT the small-input gate — for
@@ -61,13 +56,15 @@ object Sizing {
     * 584 KB fixture is seconds of CPU, and the r18 full-bench caught
     * exactly the gated sites regressing when that work serialized
     * (q63 0.8→4.3 s, q97, q90, q86). Still data-adaptive upward: the
-    * count grows past core count once the input outgrows targetBytes.
+    * count grows past core count once the input outgrows [[TargetBytes]].
     */
-  def spreadForHeavyCompute(df: DataFrame): DataFrame = {
-    val bytes = planBytes(df)
+  def spreadForHeavyCompute(df: DataFrame): DataFrame =
+    spread(df, planBytes(df))
+
+  private def spread(df: DataFrame, bytes: Long): DataFrame = {
     val dp = df.sparkSession.sparkContext.defaultParallelism.toLong
     val n = if (bytes < 0) dp
-      else math.max(dp, (bytes + targetBytes(df) - 1) / targetBytes(df))
+      else math.max(dp, (bytes + TargetBytes - 1) / TargetBytes)
     df.repartition(math.min(n, Int.MaxValue.toLong).toInt)
   }
 

@@ -69,12 +69,6 @@ object Staging {
     require(name.matches("[\\w.-]+"),
       s"stage name must be a plain file name, got: $name")
     val spark = df.sparkSession
-    // A/B switch for the scaling rehearsal: passthrough = the lazy
-    // one-deep-plan formulation the staged queries would have without the
-    // stage cut. Results are identical (staging only moves WHERE work
-    // happens); never set outside a measurement harness.
-    if (spark.conf.getOption("graft.staging.disable").contains("true"))
-      return df
     registerCleanup(spark)
     publish(df, new Path(scratchRoot(spark), name))
   }
@@ -156,16 +150,19 @@ object Staging {
       .foldLeft(-1L)(math.max)
   }
 
-  /** The output-file sizing rule every Staging write shares. Opt out per
-    * session with `graft.staging.rebalance=false` when the input
-    * partitioning is already byte-targeted.
+  /** Inputs estimated below this are written as one file, with no
+    * exchange.
+    */
+  private val OneFileBytes = 8L << 20
+
+  /** The output-file sizing rule every Staging write shares.
     *  - A grouping `Aggregate` or a `Deduplicate` (what `.distinct()`
     *    builds) root is written as is: its own shuffle is already
     *    AQE-coalesced to advisory-sized partitions, so a rebalance would be
     *    a second exchange for nothing. Its size estimate is skipped too —
     *    the optimizer overestimates aggregates, and the estimate costs an
     *    optimizer pass.
-    *  - Otherwise, below `graft.staging.rebalance.minBytes` (8 MB) by the
+    *  - Otherwise, below [[OneFileBytes]] (8 MB) by the
     *    optimizer's estimate, a shuffle-free `coalesce(1)` gives the one
     *    file a rebalance would (guide §2.4: don't pay an exchange whose
     *    only job was file sizing).
@@ -174,20 +171,14 @@ object Staging {
     *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` — the 100 TB
     *    posture.
     */
-  private def sized(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.getOption("graft.staging.rebalance").contains("false")) df
-    else df.queryExecution.analyzed match {
+  private def sized(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
       case a: Aggregate if a.groupingExpressions.nonEmpty => df
       case _: Deduplicate => df
       case _ =>
         val b = Sizing.planBytes(df)
-        val tiny = b >= 0 && b < spark.conf
-          .getOption("graft.staging.rebalance.minBytes")
-          .map(_.toLong).getOrElse(8L << 20)
-        if (tiny) df.coalesce(1) else df.hint("REBALANCE")
+        if (b >= 0 && b < OneFileBytes) df.coalesce(1) else df.hint("REBALANCE")
     }
-  }
 
   private def publish(df: DataFrame, target: Path,
       rebalance: Boolean = true): DataFrame = {

@@ -25,11 +25,10 @@ import org.apache.spark.sql.types.{DoubleType, StringType}
   */
 object HiveStringSum extends Rule[LogicalPlan] {
 
-  private val Rewritten = TreeNodeTag[Boolean]("graft.hiveStringSum")
+  private val Rewritten = TreeNodeTag[Boolean]("graft.stringSumRewritten")
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.hiveStringSum", "true").toBoolean) plan
-    else plan.resolveOperatorsUp {
+    plan.resolveOperatorsUp {
       case agg: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         agg.transformExpressionsUp {
           case ae @ AggregateExpression(Sum(c: Cast, _), _, false, None, _)

@@ -250,11 +250,7 @@ object HiveSequenceFile {
     // SIZE-AWARE like Staging.stage / HiveRCFile.write: AQE picks the
     // output file count from runtime stats (REBALANCE), not from whatever
     // partitioning the input happened to have
-    val sized =
-      if (df.sparkSession.conf.getOption("graft.staging.rebalance").contains("false"))
-        encoded
-      else encoded.hint("REBALANCE")
-    sized
+    encoded.hint("REBALANCE")
       .rdd.map(r => (new BytesWritable(), new HText(r.getString(0))))
       .saveAsNewAPIHadoopFile(path, classOf[BytesWritable], classOf[HText],
         classOf[org.apache.hadoop.mapreduce.lib.output

@@ -468,11 +468,8 @@ object HiveRCFile {
     // SIZE-AWARE like Staging.stage: REBALANCE lets AQE pick the partition
     // count (= output .rc file count) from runtime statistics, so a tiny
     // result is one file instead of input-partitioning slivers and a large
-    // one lands advisory-sized parts. Same opt-out conf as staging.
-    val asText =
-      if (df.sparkSession.conf.getOption("graft.staging.rebalance").contains("false"))
-        projected
-      else projected.hint("REBALANCE")
+    // one lands advisory-sized parts.
+    val asText = projected.hint("REBALANCE")
     val dir = new Path(path)
     val hconf = new org.apache.hadoop.conf.Configuration(
       df.sparkSession.sparkContext.hadoopConfiguration)

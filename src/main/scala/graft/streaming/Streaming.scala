@@ -78,7 +78,7 @@ object Streaming extends QueryModule {
     * spread-for-CPU repartition on the INGEST SOURCE's byte size instead
     * (guide §2.2/§2.6 — partition count follows data, not core count; a
     * 584 KB fixture directory must not fan every micro-batch into
-    * core-count tasks). Same conf knob as the batch helper.
+    * core-count tasks). Same gate as the batch helper.
     */
   private def spreadBySource(df: DataFrame, spark: SparkSession,
       sfDir: String, table: String): DataFrame = {
@@ -87,9 +87,7 @@ object Streaming extends QueryModule {
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
       catch { case _: Exception => -1L }
-    val min = spark.conf.getOption("graft.repartition.minBytes")
-      .map(_.toLong).getOrElse(32L << 20)
-    if (bytes >= 0 && bytes < min) df
+    if (graft.operators.Sizing.belowSpreadGate(bytes)) df
     else df.repartition(spark.sparkContext.defaultParallelism)
   }
 

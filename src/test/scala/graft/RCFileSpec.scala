@@ -208,17 +208,16 @@ class RCFileSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-rc-sized").toString
     val frag = (1 to 5000).toDF("id").repartition(32) // tiny rows fanned wide
-    spark.conf.set("graft.staging.rebalance", "false")
-    try {
-      HiveRCFile.write(frag, dir) // input partitioning preserved on opt-out
-      assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".rc")) == 32)
-    } finally spark.conf.unset("graft.staging.rebalance")
-    HiveRCFile.write(frag, dir) // REBALANCE default: AQE sizes the output
+    HiveRCFile.write(frag, dir)
+    // a stale part, as a run with more output partitions would leave
+    Files.copy(java.nio.file.Paths.get(dir, "part-00000.rc"),
+      java.nio.file.Paths.get(dir, "part-00031.rc"))
+    HiveRCFile.write(frag, dir) // REBALANCE: AQE sizes the output
     val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".rc"))
     assert(parts.length == 1,
       s"5000 ints are far below the advisory partition size: one part, not ${parts.length}")
-    // overwrite semantics (ADVICE r9): the 32 stale parts are gone, and the
-    // read sees exactly the latest write
+    // overwrite semantics (ADVICE r9): the stale part is gone, and the read
+    // sees exactly the latest write
     assert(HiveRCFile.read(spark, dir,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",

@@ -230,6 +230,22 @@ class SourcesSpec extends SparkSpec {
       Tables.load(spark, sfDir, "nation").count())
   }
 
+  test("sequencefile PRODUCTION write is size-aware and overwrites") {
+    import graft.sources.HiveSequenceFile
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-seq-sized").toString + "/t"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT")
+    def parts: Int = new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    HiveSequenceFile.write((1 to 5000).toDF("id").repartition(32), dir) // tiny rows fanned wide
+    assert(parts == 1,
+      s"5000 ints are far below the advisory partition size: one part, not $parts")
+    // overwrite semantics: the second write replaces the first, no stale rows
+    HiveSequenceFile.write((1 to 700).toDF("id").repartition(32), dir)
+    assert(parts == 1)
+    assert(HiveSequenceFile.readTable(spark, dir, schema).as[Int].collect().sorted.toSeq ==
+      (1 to 700))
+  }
+
   test("nested collections deeper than one level round trip (8-level separators)") {
     import spark.implicits._
     val df = Seq(

@@ -44,12 +44,6 @@ class StagingSpec extends SparkSpec {
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     assert(dataFiles("spec_stage_sized") == 1,
       "60k ints are far below the advisory partition size: one file, not 32 slivers")
-    // opt-out preserves the input partitioning
-    spark.conf.set("graft.staging.rebalance", "false")
-    try {
-      Staging.stage(frag, "spec_stage_raw")
-      assert(dataFiles("spec_stage_raw") == 32)
-    } finally spark.conf.unset("graft.staging.rebalance")
   }
 
   test("stage() reads back with the written schema: same schema and rows as inference") {
