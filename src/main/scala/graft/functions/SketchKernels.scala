@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native signature kernels for the near-dup sketch family (q52/q121
   * MinHash, q53/q122 SimHash). The SQL-HOF formulations they replace are

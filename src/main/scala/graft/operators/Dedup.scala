@@ -90,19 +90,37 @@ object Dedup extends QueryModule {
   def wordsOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.selectExpr("doc_id", "array_distinct(split(lower(text), ' ')) AS ws")
 
-  /** Banded MinHash signatures from a `(doc_id, ws)` word-set frame. */
-  def bandsFromWords(words: org.apache.spark.sql.DataFrame, numHashes: Int = 16,
+  /** `(doc_id, ws, bhs)` from a `(doc_id, ws)` word-set frame: `bhs` holds
+    * the `numBands` md5 band hashes of the word set's `numHashes`-value
+    * MinHash signature (band j hashes values j·r+1 .. (j+1)·r, r =
+    * numHashes / numBands, joined by ','). The signature is bound once, as
+    * the argument of a one-element `transform`: computed in one projection
+    * and read in the next, CollapseProject would inline `minhash_sig` into
+    * the per-band lambda and evaluate it once per band.
+    */
+  private def signaturesOf(words: org.apache.spark.sql.DataFrame, numHashes: Int = 16,
       numBands: Int = 2): org.apache.spark.sql.DataFrame = {
     require(numBands >= 1 && numHashes % numBands == 0,
       s"numHashes ($numHashes) must divide into numBands ($numBands)")
     val rows = numHashes / numBands
-    words
-      .selectExpr("doc_id", s"minhash_sig(ws, $numHashes) AS sig")
-      .selectExpr("doc_id",
-        s"""posexplode(transform(sequence(0, ${numBands - 1}),
+    words.selectExpr("doc_id", "ws",
+      s"""transform(array(minhash_sig(ws, $numHashes)),
+           sig -> transform(sequence(0, ${numBands - 1}),
              j -> md5(array_join(transform(slice(sig, j * $rows + 1, $rows),
-                                           v -> cast(v AS string)), ',')))) AS (band, bh)""")
+                                           v -> cast(v AS string)), ','))))[0] AS bhs""")
   }
+
+  /** One `(<cols>, band, bh)` row per band hash of a `(doc_id, ws, bhs)`
+    * frame; `cols` are select expressions over it.
+    */
+  private def bandRows(sigs: org.apache.spark.sql.DataFrame,
+      cols: String*): org.apache.spark.sql.DataFrame =
+    sigs.selectExpr(cols :+ "posexplode(bhs) AS (band, bh)": _*)
+
+  /** Banded MinHash signatures from a `(doc_id, ws)` word-set frame. */
+  def bandsFromWords(words: org.apache.spark.sql.DataFrame, numHashes: Int = 16,
+      numBands: Int = 2): org.apache.spark.sql.DataFrame =
+    bandRows(signaturesOf(words, numHashes, numBands), "doc_id")
 
   def minhashPairs(docs: org.apache.spark.sql.DataFrame, numHashes: Int = 16,
       numBands: Int = 2, cap: Option[Int] = None): org.apache.spark.sql.DataFrame =
@@ -151,78 +169,77 @@ object Dedup extends QueryModule {
       threshold: Double): org.apache.spark.sql.DataFrame =
     verifyPairsW(wordsOf(docs), pairs, threshold)
 
-  /** As [[verifyPairs]], over a pre-computed `(doc_id, ws)` frame — the
-    * [[SigStore]] path, where existing word sets come from staged parquet
-    * and the raw text is never rescanned.
+  /** As [[verifyPairs]], over a pre-computed `(doc_id, ws)` frame, where
+    * existing word sets come from staged parquet and the raw text is never
+    * rescanned.
     */
   def verifyPairsW(words: org.apache.spark.sql.DataFrame,
       pairs: org.apache.spark.sql.DataFrame,
-      threshold: Double): org.apache.spark.sql.DataFrame = {
-    val keep = pairs.columns.toSeq
+      threshold: Double): org.apache.spark.sql.DataFrame =
     pairs
       .join(words.toDF("a_id", "wa"), Seq("a_id"))
       .join(words.toDF("b_id", "wb"), Seq("b_id"))
-      .selectExpr(keep ++ Seq("size(array_intersect(wa, wb)) AS inter",
-        "size(wa) AS na", "size(wb) AS nb"): _*)
-      // Hive `/` is double division (session coercion), mirroring q51's
-      // raw-ratio-then-round-once FP discipline
-      .selectExpr(keep :+ "round(inter / (na + nb - inter), 6) AS jaccard": _*)
+      .select(pairs.columns.map(col) :+ jaccard.as("jaccard"): _*)
       .filter(col("jaccard") >= threshold)
-  }
+
+  /** Exact Jaccard of the word sets `wa` and `wb`. Hive `/` is double
+    * division (session coercion), mirroring q51's raw-ratio-then-round-once
+    * FP discipline.
+    */
+  private def jaccard: org.apache.spark.sql.Column =
+    expr("round(size(array_intersect(wa, wb)) / " +
+      "(size(wa) + size(wb) - size(array_intersect(wa, wb))), 6)")
 
   /** The persisted artifact a delta-dedup run leaves behind for the next
-    * one: staged band signatures + staged word sets for every admitted doc.
-    * Both live as parquet under the staging scratch root (in production, a
-    * table on the shared FS) — admission against a 100 TB corpus reads
-    * THESE, never the corpus text. `name` scopes the staged paths, so
-    * successive deltas chain against the same store directories.
+    * one: one signature row `(doc_id, ws, bhs)` per admitted doc — its word
+    * set (what verification reads) and its `numBands` band hashes (what the
+    * candidate probe reads), as parquet under the staging scratch root or a
+    * caller-owned `baseDir`. Admission against a 100 TB corpus reads THESE,
+    * never the corpus text. `name` scopes the store directory, so
+    * successive deltas chain against the same store.
     *
-    * LAYOUT (r11): the words and bands stores are EPOCH-PARTITIONED
-    * directories — `(store)_words/epoch=N/`, one partition per admission
-    * call, bootstrap = epoch 0. An admission APPENDS only the admitted
-    * delta's rows as a new epoch partition ([[Staging.appendEpoch]]) and
-    * the store reads as the union of partitions, so the update costs I/O
-    * proportional to the DELTA: the corpus-scale store is never rewritten
-    * (the r10 formulation unioned and overwrote the whole store per delta
-    * — O(corpus) I/O per admission, per micro-batch under `admitStream`).
-    * This is the reference's own incremental contract — `ALTER TABLE ADD
-    * PARTITION` (metastore Warehouse.java partition-add path) appends a
-    * partition without touching its siblings. Fragmentation from many
-    * small epochs is repaired out-of-band by [[compactSigStore]].
-    */
-  /** `epoch` numbers the admission calls chained through this store: each
-    * delta's scratch artifacts (delta words, rejected verdict) stage under
-    * epoch-scoped names, so the NEXT admit on the chain never clobbers
+    * LAYOUT: ONE epoch-partitioned directory, `<name>_words/epoch=N/`, one
+    * partition per admission call, bootstrap = epoch 0. An admission
+    * APPENDS only the admitted delta's rows as a new epoch partition
+    * ([[Staging.appendEpoch]]) and the store reads as the union of
+    * partitions, so the update costs I/O proportional to the DELTA: the
+    * corpus-scale store is never rewritten. This is the reference's own
+    * incremental contract — `ALTER TABLE ADD PARTITION` (metastore
+    * Warehouse.java partition-add path) appends a partition without
+    * touching its siblings. Fragmentation from many small epochs is
+    * repaired out-of-band by [[compactSigStore]]. (Stores written in the
+    * older two-directory layout, `<name>_words` + `<name>_bands`, are not
+    * read: [[loadSigStore]] rejects them.)
+    *
+    * `words` `(doc_id, ws)` and `bands` `(doc_id, band, bh)` are views of
+    * the one frame.
+    *
+    * `epoch` numbers the admission calls chained through this store: each
+    * delta's scratch artifacts (staged delta signatures, rejected verdict)
+    * stage in the app-scoped scratch under epoch-scoped names
+    * (`<name>_d<epoch>_*`), so the NEXT admit on the chain never clobbers
     * files a still-lazy `admitted` result from the PREVIOUS admit reads
-    * (the q131 composition consumes both deltas' admissions at the end) —
-    * and each admission's store append lands under `epoch=N`, never
-    * touching earlier partitions, so a previously returned SigStore's
-    * DataFrames (a snapshot of the partitions that existed at its epoch)
-    * stay valid forever.
+    * (the q131 composition consumes both deltas' admissions at the end),
+    * and a store name must be unique within an application. Each
+    * admission's store append lands under `epoch=N`, never touching
+    * earlier partitions, so a previously returned SigStore's DataFrames (a
+    * snapshot of the partitions that existed at its epoch) stay valid
+    * forever.
     */
   final case class SigStore(name: String,
-      bands: org.apache.spark.sql.DataFrame,
-      words: org.apache.spark.sql.DataFrame,
+      sigs: org.apache.spark.sql.DataFrame,
       baseDir: Option[String] = None,
-      epoch: Long = 0L)
+      epoch: Long = 0L) {
+    def words: org.apache.spark.sql.DataFrame = sigs.select(col("doc_id"), col("ws"))
+    def bands: org.apache.spark.sql.DataFrame = bandRows(sigs, "doc_id")
+  }
 
-  /** Store placement: the app-scoped staging scratch by default (tests,
-    * single-run pipelines), or a caller-owned DURABLE directory when
-    * `baseDir` is set — the production posture, since a store that
-    * evaporates with the application defeats "the store the last run left
-    * behind". [[loadSigStore]] reattaches to a durable store in a later
-    * application.
-    */
-  private def stageStore(df: org.apache.spark.sql.DataFrame, name: String,
-      baseDir: Option[String]): org.apache.spark.sql.DataFrame =
-    baseDir match {
-      case Some(b) => Staging.stageAt(df, s"$b/$name")
-      case None => Staging.stage(df, name)
-    }
-
-  /** Directory of one store component (`words`/`bands`/`members`): the
-    * caller-owned durable dir when `baseDir` is set, else the app-scoped
-    * staging scratch.
+  /** Directory of one store component (`words`/`members`/`centroids`): a
+    * caller-owned DURABLE directory when `baseDir` is set — the production
+    * posture, since a store that evaporates with the application defeats
+    * "the store the last run left behind" — else the app-scoped staging
+    * scratch (tests, single-run pipelines). [[loadSigStore]] reattaches to
+    * a durable store in a later application.
     */
   private def storePath(s: org.apache.spark.sql.SparkSession, name: String,
       baseDir: Option[String]): String =
@@ -233,7 +250,7 @@ object Dedup extends QueryModule {
     * safe: [[Staging]]). Partition discovery adds the `epoch` column;
     * downstream operators see only the data columns (their unions are
     * positional). The file listing is snapshotted at read time, so a
-    * SigStore's DataFrames pin the partitions of THEIR epoch — later
+    * store's DataFrames pin the partitions of THEIR epoch — later
     * appends are invisible to earlier snapshots by construction.
     */
   private def readEpochs(s: org.apache.spark.sql.SparkSession, dir: String,
@@ -249,22 +266,23 @@ object Dedup extends QueryModule {
       storePath(df.sparkSession, name, baseDir), epoch,
       appScratch = baseDir.isEmpty)
 
+  /** The directory name of a [[SigStore]]'s one component. */
+  private def sigDir(name: String): String = s"${name}_words"
+
   /** Bootstrap a [[SigStore]] from a deduped corpus — the ONE full scan of
-    * `docs.text` in the store's lifetime. Words stage first; bands derive
-    * from the staged words, so the text is read exactly once.
+    * `docs.text` in the store's lifetime. One write: the corpus'
+    * signature rows as epoch 0.
     */
   def buildSigStore(docs: org.apache.spark.sql.DataFrame, name: String,
       numHashes: Int = 16, numBands: Int = 2,
       baseDir: Option[String] = None): SigStore = {
     val s = docs.sparkSession
-    val words0 = appendStore(
-      wordsOf(docs.transform(Sizing.spreadForCompute)),
-      s"${name}_words", baseDir, 0L)
-    val bands0 = appendStore(bandsFromWords(words0, numHashes, numBands),
-      s"${name}_bands", baseDir, 0L)
+    val sigs0 = appendStore(
+      signaturesOf(wordsOf(docs.transform(Sizing.spreadForCompute)),
+        numHashes, numBands),
+      sigDir(name), baseDir, 0L)
     SigStore(name,
-      readEpochs(s, storePath(s, s"${name}_bands", baseDir), bands0.schema),
-      readEpochs(s, storePath(s, s"${name}_words", baseDir), words0.schema),
+      readEpochs(s, storePath(s, sigDir(name), baseDir), sigs0.schema),
       baseDir)
   }
 
@@ -272,53 +290,69 @@ object Dedup extends QueryModule {
     * `baseDir` — the restart half of the production delta loop: bootstrap
     * once with `buildSigStore(..., baseDir = Some(dir))`, then every later
     * run loads the store, admits its delta, and the updated store is
-    * already published back to the same dir. The one store read that
-    * INFERS its schema (once per application): every later read of the
-    * store pins the schema found here.
+    * already published back to the same dir. Reads the one directory
+    * `<name>_words`; the one store read that INFERS its schema (once per
+    * application): every later read of the store pins the schema found
+    * here. A store in the older two-directory layout (rows without `bhs`,
+    * band rows under `<name>_bands`) fails here: there is no migration,
+    * rebuild it with [[buildSigStore]].
     */
   def loadSigStore(spark: org.apache.spark.sql.SparkSession, name: String,
       baseDir: String): SigStore = {
-    def load(dir: String, cols: String*) =
-      spark.read.parquet(dir).select(cols.map(col): _*)
-    SigStore(name,
-      load(s"$baseDir/${name}_bands", "doc_id", "band", "bh"),
-      load(s"$baseDir/${name}_words", "doc_id", "ws"),
-      Some(baseDir),
-      epoch = math.max(0L, Staging.maxEpoch(spark, s"$baseDir/${name}_words")))
+    val dir = s"$baseDir/${sigDir(name)}"
+    val sigs = spark.read.parquet(dir)
+    if (!sigs.columns.contains("bhs"))
+      throw new IllegalStateException(
+        s"$dir holds no bhs column: it is a signature store in the old " +
+          s"two-directory layout (${sigDir(name)} + ${name}_bands), which " +
+          "is no longer read; rebuild it with buildSigStore")
+    SigStore(name, sigs.select(col("doc_id"), col("ws"), col("bhs")),
+      Some(baseDir), epoch = math.max(0L, Staging.maxEpoch(spark, dir)))
   }
 
-  /** The candidate-pair stage of admission, exposed for the executed-plan
-    * pin (PlanShapeSpec: WindowGroupLimit bounds probe buckets BEFORE the
-    * shuffle; the kept→delta join stays a band equi-join). `probe` buckets
-    * are capped to the `c` lowest doc_ids; store→delta pairs reject in ANY
-    * id order (ADVICE r9 — a delta doc whose id sorts below its existing
-    * near-dup is still rejected) while a_id < b_id orders intra-delta
-    * pairs — deterministic, oracle-replicable.
+  /** The rejection verdict of admission, exposed for the executed-plan pin
+    * (PlanShapeSpec): the distinct ids of delta docs in `inSigs` that an
+    * exact-Jaccard-verified candidate pair links to a doc of `storeSigs`
+    * or to an earlier doc of the delta. Both inputs are `(doc_id, ws,
+    * bhs)` signature frames.
     *
-    * Output is the RAW candidate rows `(a_id, b_id)`, one per agreeing
-    * band — no per-pair band count: admission only asks whether SOME
-    * verified pair rejects `b_id`, and the verdict's `distinct` removes the
-    * duplicates, so grouping the pairs first was a shuffle whose result was
-    * thrown away.
+    *  1. PREFILTER: the store's band rows are semi-joined to the
+    *     `(band, bh)` keys the delta touches — a broadcast of the delta's
+    *     keys, so no store row outside a touched bucket is shuffled.
+    *  2. PROBE: prefiltered store rows ∪ delta rows, each carrying its word
+    *     set, capped to the `c` lowest doc_ids per `(band, bh)`
+    *     (WindowGroupLimit — bounded BEFORE the shuffle).
+    *  3. The kept rows join the delta rows on `(band, bh)`; store→delta
+    *     pairs reject in ANY id order (ADVICE r9 — a delta doc whose id
+    *     sorts below its existing near-dup is still rejected) while
+    *     a_id < b_id orders intra-delta pairs — deterministic,
+    *     oracle-replicable. Exact Jaccard is computed on the candidate row
+    *     itself, from the two carried word sets: there is no verification
+    *     join back to the store.
+    *
+    * The prefilter leaves the capped membership unchanged: the window
+    * partitions by `(band, bh)` and the semi-join keeps EVERY store row of
+    * each bucket the delta touches, so each such bucket ranks the same
+    * members; buckets the delta does not touch yield no pairs anyway.
     */
-  private[graft] def admissionPairs(storeBands: org.apache.spark.sql.DataFrame,
-      inBands: org.apache.spark.sql.DataFrame,
+  private[graft] def admissionVerdict(storeSigs: org.apache.spark.sql.DataFrame,
+      inSigs: org.apache.spark.sql.DataFrame, threshold: Double,
       c: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val probe = storeBands.withColumn("origin", lit("E"))
-      .union(inBands.withColumn("origin", lit("I")))
+    val inBands = bandRows(inSigs, "doc_id AS b_id", "ws AS wb")
+    val probe = bandRows(storeSigs, "doc_id AS a_id", "ws AS wa", "'E' AS origin")
+      .join(inBands, Seq("band", "bh"), "left_semi")
+      .unionByName(bandRows(inSigs, "doc_id AS a_id", "ws AS wa", "'I' AS origin"))
     val kept =
       if (c <= 0) probe
       else probe
         .withColumn("mrk", row_number().over(
-          Window.partitionBy(col("band"), col("bh")).orderBy(col("doc_id"))))
+          Window.partitionBy(col("band"), col("bh")).orderBy(col("a_id"))))
         .filter(col("mrk") <= c)
-        .select(col("doc_id"), col("band"), col("bh"), col("origin"))
-    kept.toDF("a_id", "band", "bh", "origin")
-      .join(inBands.toDF("b_id", "band", "bh"), Seq("band", "bh"))
+    kept.join(inBands, Seq("band", "bh"))
       .filter(when(col("origin") === "E", col("a_id") =!= col("b_id"))
-        .otherwise(col("a_id") < col("b_id")))
-      .select(col("a_id"), col("b_id"))
+        .otherwise(col("a_id") < col("b_id")) && jaccard >= threshold)
+      .select(col("b_id").as("doc_id")).distinct()
   }
 
   /** Incremental near-dup ADMISSION against a pre-staged [[SigStore]] — the
@@ -326,148 +360,129 @@ object Dedup extends QueryModule {
     * existing corpus is represented ENTIRELY by the store (zero scans of
     * existing text — IncrementalAdmitSpec pins the executed plan). Returns
     * `(admitted, updatedStore)`: the updated store carries the admitted
-    * docs' bands+words APPENDED as a new `epoch=N` partition — existing
+    * docs' signature rows APPENDED as a new `epoch=N` partition — existing
     * partitions are untouched, the update writes delta-sized bytes only —
     * so successive deltas chain with no rebuild.
     *
     * An incoming doc is rejected when an exact-Jaccard-verified candidate
-    * pair links it to a store doc (ANY id order — a delta doc whose id
-    * happens to sort below an existing near-dup is still rejected; ADVICE
-    * r9) or to an earlier member of the same delta (a_id < b_id keeps
-    * intra-delta rejection deterministic and oracle-replicable). Candidate
-    * buckets on the probe side are capped like [[minhashPairs]]; the
-    * incoming side is never capped — every delta doc must be judged.
-    * Doc ids must be unique across store + delta (append-only corpus ids).
+    * pair links it to a store doc (ANY id order) or to an earlier member of
+    * the same delta ([[admissionVerdict]]). Candidate buckets on the probe
+    * side are capped like [[minhashPairs]]; the incoming side is never
+    * capped — every delta doc must be judged. Doc ids must be unique across
+    * store + delta (append-only corpus ids).
+    *
+    * COST: O(delta) shuffle. Only the store rows of the buckets the delta
+    * touches cross an exchange (the prefilter), and verification reads the
+    * word sets carried on the candidate rows, so no store-sized join runs.
+    * The store's parquet is still scanned once per admission.
     *
     * JOB BUDGET: the admission is bound by per-job fixed cost (scheduling,
     * AQE re-planning and the driver gap around each job), not by compute,
-    * so it runs only the jobs its result needs — nine per call at the
-    * delta sizes of the admission benchmark, plus the caller's collection
-    * of `admitted` (IncrementalAdmitSpec pins the count on its fixture):
-    * the delta-words stage (one write), the verdict (the capped band
-    * window, the verification joins and one write), the words append (the
-    * verdict broadcast and one write) and the bands append (one
-    * scan-and-write). What keeps it there: every staged copy and store
-    * read is schema-pinned (no inference job — see [[Staging]]), every
-    * write follows Staging's shared size rule (a delta-sized write is one
-    * file with no rebalance exchange; the aggregate-rooted verdict keeps
-    * its own AQE-coalesced shuffle), the bands epoch derives from the
-    * words epoch just published instead of anti-joining the verdict a
-    * second time, and candidate pairs are not grouped before verification
-    * ([[admissionPairs]]).
+    * so it runs only the jobs its result needs — eight per call on
+    * IncrementalAdmitSpec's fixture, which pins the count, plus the
+    * caller's collection of `admitted`: the delta stage (one write: the
+    * delta's signatures are computed once, here), the verdict (five: the
+    * prefilter's broadcast of the delta's keys, the broadcast of the delta
+    * rows the candidates join, the capped window's exchange, the distinct's
+    * exchange and one write) and the epoch append (the verdict broadcast
+    * and one write). What keeps it there: every staged copy and store read
+    * is schema-pinned (no inference job — see [[Staging]]), every write
+    * follows Staging's shared size rule (a delta-sized write is one file
+    * with no rebalance exchange; the distinct-rooted verdict keeps its own
+    * AQE-coalesced shuffle), and one append publishes words and band
+    * hashes together.
+    *
+    * The delta stage and the verdict live in the app-scoped scratch
+    * ([[Staging.stage]]) even for a durable store: the lazy `admitted`
+    * result needs them only within the application, and the durable
+    * directory receives only the epoch append.
     */
   def incrementalAdmit(store: SigStore,
       incoming: org.apache.spark.sql.DataFrame, threshold: Double,
       cap: Option[Int], numHashes: Int,
       numBands: Int): (org.apache.spark.sql.DataFrame, SigStore) = {
     val s = incoming.sparkSession
-    // delta scratch names are EPOCH-scoped (see SigStore.epoch): the next
-    // admit in the chain must not replace files this call's lazy results read
+    // delta scratch names are EPOCH-scoped (see SigStore): the next admit
+    // in the chain must not replace files this call's lazy results read
     val ep = s"${store.name}_d${store.epoch}"
-    // one scan of the delta text; bands derive from the staged delta words
-    val inWords = stageStore(
-      wordsOf(incoming.transform(Sizing.spreadForCompute)),
-      s"${ep}_delta_words", store.baseDir)
-    val pairs = admissionPairs(store.bands,
-      bandsFromWords(inWords, numHashes, numBands), resolvedCap(cap))
-    // verification reads word sets only: store words (staged parquet) for
-    // the existing side, delta words for the incoming side
-    val rejected = stageStore(
-      verifyPairsW(store.words.union(inWords), pairs, threshold)
-        .select(col("b_id").as("doc_id")).distinct(),
-      s"${ep}_delta_rejected", store.baseDir)
+    val inSigs = Staging.stage(
+      signaturesOf(wordsOf(incoming.transform(Sizing.spreadForCompute)),
+        numHashes, numBands),
+      s"${ep}_delta_sigs")
+    val rejected = Staging.stage(
+      admissionVerdict(store.sigs, inSigs, threshold, resolvedCap(cap)),
+      s"${ep}_delta_rejected")
     // store update = APPEND the admitted delta's rows as a new epoch
     // partition — existing epochs are never read or rewritten, so the
     // update's I/O is proportional to the delta (IncrementalAdmitSpec pins
     // bytes-written and the untouched epoch-0 files)
     val newEpoch = store.epoch + 1
-    val addedWords = appendStore(
-      inWords.join(rejected, Seq("doc_id"), "left_anti"),
-      s"${store.name}_words", store.baseDir, newEpoch)
-    // the bands epoch hashes the words epoch just published — exactly the
-    // admitted docs, with no second anti-join against the verdict
-    appendStore(bandsFromWords(addedWords, numHashes, numBands),
-      s"${store.name}_bands", store.baseDir, newEpoch)
-    (incoming.join(rejected, Seq("doc_id"), "left_anti"), SigStore(store.name,
-      readEpochs(s, storePath(s, s"${store.name}_bands", store.baseDir),
-        store.bands.schema),
-      readEpochs(s, storePath(s, s"${store.name}_words", store.baseDir),
-        store.words.schema),
-      store.baseDir, newEpoch))
+    appendStore(inSigs.join(rejected, Seq("doc_id"), "left_anti"),
+      sigDir(store.name), store.baseDir, newEpoch)
+    (incoming.join(rejected, Seq("doc_id"), "left_anti"),
+      store.copy(
+        sigs = readEpochs(s, storePath(s, sigDir(store.name), store.baseDir),
+          store.sigs.schema),
+        epoch = newEpoch))
   }
 
   /** Out-of-band maintenance for an epoch-partitioned [[SigStore]]: fold
-    * every epoch into a single fresh partition (one read of the store, one
-    * write, published write-audit-then-swap). Run it OPPORTUNISTICALLY —
-    * e.g. when [[Staging.maxEpoch]] says hundreds of delta partitions have
-    * accumulated — exactly like [[graft.sources.Compaction]] repairs
-    * small-file sprawl; admissions themselves never pay this cost. The
-    * compacted store keeps the same epoch counter so chained scratch names
-    * never collide with the pre-compaction run's.
+    * every epoch of its one directory into a single fresh partition (one
+    * read of the store, one write, published write-audit-then-swap). Run
+    * it OPPORTUNISTICALLY — e.g. when [[Staging.maxEpoch]] says hundreds of
+    * delta partitions have accumulated — exactly like
+    * [[graft.sources.Compaction]] repairs small-file sprawl; admissions
+    * themselves never pay this cost. The compacted store keeps the same
+    * epoch counter so chained scratch names never collide with the
+    * pre-compaction run's.
     */
   def compactSigStore(store: SigStore): SigStore = {
-    val s = store.words.sparkSession
-    def fold(name: String,
-        schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
-      val dir = storePath(s, name, store.baseDir)
-      val merged = stageStore(readEpochs(s, dir, schema),
-        s"${name}__compact", store.baseDir)
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // Swap via rename (ADVICE r11): the replacement root is FULLY built
-      // at a sibling path before the live root is touched, so no crash
-      // window leaves the store absent with nothing recoverable on disk —
-      // a crash between the two renames leaves <name>__old (the complete
-      // pre-compaction store) and <name>__next (the complete compacted
-      // one) both intact.
-      val next = new org.apache.hadoop.fs.Path(dir + "__next")
-      val old = new org.apache.hadoop.fs.Path(dir + "__old")
-      fs.delete(next, true); fs.delete(old, true)
-      Staging.appendEpoch(merged, next.toString, store.epoch,
-        appScratch = store.baseDir.isEmpty)
-      if (!fs.rename(root, old))
-        throw new IllegalStateException(
-          s"compaction swap: could not move $root aside")
-      if (!fs.rename(next, root)) {
-        fs.rename(old, root) // restore the pre-compaction store
-        throw new IllegalStateException(s"compaction swap failed for $root")
-      }
-      fs.delete(old, true)
-      // the __compact staging copy auto-cleans only in app-scratch mode; a
-      // durable baseDir would otherwise leak a full store copy per fold
-      fs.delete(new org.apache.hadoop.fs.Path(
-        storePath(s, s"${name}__compact", store.baseDir)), true)
-      readEpochs(s, dir, schema)
+    val s = store.sigs.sparkSession
+    val dir = storePath(s, sigDir(store.name), store.baseDir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // Swap via rename (ADVICE r11): the replacement root is FULLY built at a
+    // sibling path before the live root is touched, so no crash window
+    // leaves the store absent with nothing recoverable on disk — a crash
+    // between the two renames leaves <dir>__old (the complete
+    // pre-compaction store) and <dir>__next (the complete compacted one)
+    // both intact.
+    val next = new org.apache.hadoop.fs.Path(dir + "__next")
+    val old = new org.apache.hadoop.fs.Path(dir + "__old")
+    fs.delete(next, true); fs.delete(old, true)
+    Staging.appendEpoch(readEpochs(s, dir, store.sigs.schema), next.toString,
+      store.epoch, appScratch = store.baseDir.isEmpty)
+    if (!fs.rename(root, old))
+      throw new IllegalStateException(
+        s"compaction swap: could not move $root aside")
+    if (!fs.rename(next, root)) {
+      fs.rename(old, root) // restore the pre-compaction store
+      throw new IllegalStateException(s"compaction swap failed for $root")
     }
-    SigStore(store.name,
-      fold(s"${store.name}_bands", store.bands.schema),
-      fold(s"${store.name}_words", store.words.schema),
-      store.baseDir, store.epoch)
+    fs.delete(old, true)
+    store.copy(sigs = readEpochs(s, dir, store.sigs.schema))
   }
 
   /** Convenience bootstrap form (and the q129 oracle surface): one-shot
-    * judgment of `incoming` against `existing`, same admission rule as the
-    * store overload but with only the two staged writes the plan actually
-    * reuses — each word set feeds both banding and verification, so each
-    * stages once; the rejected verdict and the band frames have single
-    * consumers and stay lazy, and no store is materialized or updated
-    * (this form discards it — the r11 idle A/B caught the bootstrap path
-    * paying the chaining overload's store writes for a result nobody
-    * read). Production deltas call the store overload so the corpus is
-    * never re-hashed.
+    * judgment of `incoming` against `existing`, by the same verdict as the
+    * store overload ([[admissionVerdict]]). Only the delta's signatures
+    * stage — they feed the prefilter keys, the probe and the candidate
+    * join; the existing side's signatures have the probe as their single
+    * consumer and stay lazy, as does the verdict, and no store is
+    * materialized or updated (this form discards it — the r11 idle A/B
+    * caught the bootstrap path paying the chaining overload's store writes
+    * for a result nobody read). Production deltas call the store overload
+    * so the corpus is never re-hashed.
     */
   def incrementalAdmit(existing: org.apache.spark.sql.DataFrame,
       incoming: org.apache.spark.sql.DataFrame, threshold: Double,
       cap: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    val exWords = Staging.stage(wordsOf(existing.transform(Sizing.spreadForCompute)),
-      "sigstore_existing_words")
-    val inWords = Staging.stage(wordsOf(incoming.transform(Sizing.spreadForCompute)),
-      "sigstore_existing_d0_delta_words")
-    val pairs = admissionPairs(bandsFromWords(exWords), bandsFromWords(inWords),
-      resolvedCap(cap))
-    val rejected = verifyPairsW(exWords.union(inWords), pairs, threshold)
-      .select(col("b_id").as("doc_id")).distinct()
-    incoming.join(rejected, Seq("doc_id"), "left_anti")
+    val exSigs = signaturesOf(wordsOf(existing.transform(Sizing.spreadForCompute)))
+    val inSigs = Staging.stage(
+      signaturesOf(wordsOf(incoming.transform(Sizing.spreadForCompute))),
+      "sigstore_existing_d0_delta_sigs")
+    incoming.join(admissionVerdict(exSigs, inSigs, threshold, resolvedCap(cap)),
+      Seq("doc_id"), "left_anti")
   }
 
   // ---- Embedding-side incremental admission (the SemDeDup delta shape) --
@@ -511,7 +526,8 @@ object Dedup extends QueryModule {
       centroids: org.apache.spark.sql.DataFrame, name: String,
       baseDir: Option[String] = None): VecStore = {
     val s = existing.sparkSession
-    val cents = stageStore(centroids, s"${name}_centroids", baseDir)
+    val cents = baseDir.fold(Staging.stage(centroids, s"${name}_centroids"))(
+      b => Staging.stageAt(centroids, s"$b/${name}_centroids"))
     val members0 = appendStore(assignToCentroids(existing, cents),
       s"${name}_members", baseDir, 0L)
     VecStore(name, cents,
@@ -537,8 +553,10 @@ object Dedup extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val s = incoming.sparkSession
     val ep = s"${store.name}_d${store.epoch}"
-    val inAssigned = stageStore(assignToCentroids(incoming, store.centroids),
-      s"${ep}_delta_members", store.baseDir)
+    // delta scratch stays app-scoped even for a durable store, as in
+    // [[incrementalAdmit]]
+    val inAssigned = Staging.stage(assignToCentroids(incoming, store.centroids),
+      s"${ep}_delta_members")
     val probe = store.members.withColumn("origin", lit("E"))
       .union(inAssigned.withColumn("origin", lit("I")))
     val c = resolvedCap(cap)
@@ -549,7 +567,7 @@ object Dedup extends QueryModule {
           Window.partitionBy(col("c_id")).orderBy(col("vec_id"))))
         .filter(col("mrk") <= c)
         .select(col("vec_id"), col("c_id"), col("ne"), col("origin"))
-    val rejected = stageStore(
+    val rejected = Staging.stage(
       kept.toDF("a_id", "c_id", "na", "origin")
         .join(inAssigned.toDF("b_id", "c_id", "nb"), Seq("c_id"))
         .filter(when(col("origin") === "E", col("a_id") =!= col("b_id"))
@@ -557,7 +575,7 @@ object Dedup extends QueryModule {
         .selectExpr("b_id", "round(vec_dot(na, nb), 4) AS sim")
         .filter(col("sim") >= threshold)
         .select(col("b_id").as("vec_id")).distinct(),
-      s"${ep}_delta_rejected", store.baseDir)
+      s"${ep}_delta_rejected")
     val admitted = incoming.join(rejected, Seq("vec_id"), "left_anti")
     // same append-only update as [[incrementalAdmit]]: only the admitted
     // delta's assignments land, as a fresh epoch partition

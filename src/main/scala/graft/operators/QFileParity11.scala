@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 11 (round 12): the small singles — subquery

@@ -25,7 +25,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity12 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte}
+  import QFileParity.{fixtures, fresh, Src1Cte}
 
   /** One `fmt:<dt>:<container>` STRING per partition, from the bytes. */
   private def formatFacts(s: SparkSession, table: String): Seq[String] = {

@@ -14,7 +14,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity15 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte}
 
   private val RefData = "/root/reference/data/files"
 

@@ -23,7 +23,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity20 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcCte}
 
   private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
     import s.implicits._

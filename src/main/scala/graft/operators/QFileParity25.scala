@@ -19,7 +19,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity25 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcCte}
 
   private val RefData = "/root/reference/data/files"
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
@@ -23,7 +23,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity3 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcPartCte}
 
   private val NF = "NULLS FIRST"
 

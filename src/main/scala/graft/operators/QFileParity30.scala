@@ -11,7 +11,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity30 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte}
 
   private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
     import s.implicits._

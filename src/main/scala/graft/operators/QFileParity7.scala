@@ -14,7 +14,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity7 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, Src1Cte}
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
 
   private val RefData = "/root/reference/data/files"
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
@@ -16,7 +15,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity8 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
+  import QFileParity.{fixtures, fresh}
   import QFileParity6.describeRows
 
   private val RefData = "/root/reference/data/files"

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{QueryDef, QueryModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.10 — pure extension: the

@@ -36,27 +36,34 @@ class IncrementalAdmitSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
-  /** Spark jobs started inside `body`, counted by a SparkListener on the
-    * body's job group. Listener events arrive asynchronously, so a marker
-    * job runs after the body: its end event is delivered after every event
-    * the body's jobs posted.
+  /** Spark jobs started inside `body` and the shuffle bytes their tasks
+    * wrote, counted by a SparkListener on the body's job group. Listener
+    * events arrive asynchronously, so a marker job runs after the body:
+    * its end event is delivered after every event the body's jobs posted.
     */
-  private def jobsIn(body: => Unit): Int = {
+  private def measured(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val group = "spec_admit_jobs"
     val marker = "spec_admit_jobs_marker"
     val counted = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
     val drained = new java.util.concurrent.CountDownLatch(1)
     def groupOf(p: java.util.Properties) =
       Option(p).flatMap(x => Option(x.getProperty("spark.jobGroup.id")))
     val listener = new org.apache.spark.scheduler.SparkListener {
       private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      private val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         groupOf(e.properties) match {
-          case Some(`group`) => counted.incrementAndGet()
+          case Some(`group`) =>
+            counted.incrementAndGet()
+            e.stageIds.foreach(stages.add)
           case Some(`marker`) => markerJobs.add(e.jobId)
           case _ =>
         }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         if (markerJobs.contains(e.jobId)) drained.countDown()
     }
@@ -68,9 +75,14 @@ class IncrementalAdmitSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "listener never saw the marker job end")
-      counted.get
+      (counted.get, shuffled.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `n` docs of 30 words unique to each doc, so no two are near-dups. */
+  private def corpus(n: Int): Seq[(Long, String)] =
+    (0L until n.toLong).map(i =>
+      (i, s"corpus doc $i " + (0 until 30).map(j => s"w${i}_$j").mkString(" ")))
 
   test("admission never reads existing text — the store replaces the corpus") {
     import spark.implicits._
@@ -127,9 +139,10 @@ class IncrementalAdmitSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-sigstore").toString
     Dedup.buildSigStore(docs(1L -> base), "durable_store",
       baseDir = Some(dir))
-    assert(new java.io.File(dir, "durable_store_bands").isDirectory
-      && new java.io.File(dir, "durable_store_words").isDirectory,
+    assert(new java.io.File(dir, "durable_store_words").isDirectory,
       "durable store must land at the caller's path, not the scratch root")
+    assert(!new java.io.File(dir, "durable_store_bands").exists,
+      "band hashes live in the one signature component, not a bands directory")
     // a "later run" reattaches by path alone — no docs, no prior DataFrames
     val reattached = Dedup.loadSigStore(spark, "durable_store", dir)
     val (adm, _) = Dedup.incrementalAdmit(
@@ -167,15 +180,12 @@ class IncrementalAdmitSpec extends SparkSpec {
   }
 
   test("store update writes delta-sized bytes and never rewrites earlier epochs") {
-    import spark.implicits._
     // a store ~50× the delta: if the update path still rewrote the whole
     // store (the r10 union+overwrite), the admission's store write would be
     // corpus-sized and epoch-0's files would be unlinked and recreated
-    val corpus = (0L until 500L).map(i =>
-      (i, s"corpus doc $i " + (0 until 30).map(j => s"w${i}_$j").mkString(" ")))
     val dir = java.nio.file.Files.createTempDirectory("graft-epochstore").toString
-    val store = Dedup.buildSigStore(corpus.toDF("doc_id", "text"),
-      "epoch_proof", baseDir = Some(dir))
+    val store = Dedup.buildSigStore(docs(corpus(500): _*), "epoch_proof",
+      baseDir = Some(dir))
 
     def snapshot(sub: String): Map[String, (Long, Long)] = {
       val root = new java.io.File(dir, sub)
@@ -183,9 +193,8 @@ class IncrementalAdmitSpec extends SparkSpec {
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
       walk(root).map(f => f.getPath -> (f.length, f.lastModified)).toMap
     }
-    val words0 = snapshot("epoch_proof_words/epoch=0")
-    val bands0 = snapshot("epoch_proof_bands/epoch=0")
-    val storeBytes = words0.values.map(_._1).sum + bands0.values.map(_._1).sum
+    val sigs0 = snapshot("epoch_proof_words/epoch=0")
+    val storeBytes = sigs0.values.map(_._1).sum
 
     val delta = docs(1000L -> other, 1001L -> perm) // 1001 has no store twin here
     val (admitted, updated) = Dedup.incrementalAdmit(store, delta, 0.8, None, 16, 2)
@@ -194,13 +203,10 @@ class IncrementalAdmitSpec extends SparkSpec {
 
     // 1) earlier epochs are byte-for-byte untouched: same paths, lengths,
     //    and modification times — nothing was unlinked or rewritten
-    assert(snapshot("epoch_proof_words/epoch=0") == words0,
-      "epoch-0 words partition must not be rewritten by an admission")
-    assert(snapshot("epoch_proof_bands/epoch=0") == bands0,
-      "epoch-0 bands partition must not be rewritten by an admission")
+    assert(snapshot("epoch_proof_words/epoch=0") == sigs0,
+      "epoch-0 signature partition must not be rewritten by an admission")
     // 2) the bytes the update DID write scale with the DELTA, not the store
-    val deltaBytes = snapshot("epoch_proof_words/epoch=1").values.map(_._1).sum +
-      snapshot("epoch_proof_bands/epoch=1").values.map(_._1).sum
+    val deltaBytes = snapshot("epoch_proof_words/epoch=1").values.map(_._1).sum
     assert(deltaBytes * 5 < storeBytes,
       s"store update must be delta-sized: wrote $deltaBytes b against a $storeBytes b store")
   }
@@ -237,14 +243,15 @@ class IncrementalAdmitSpec extends SparkSpec {
     // the admission is bound by per-job fixed cost, not compute: a schema-
     // inference read-back, a rebalance exchange on a delta-sized write or a
     // second verdict join each come back as extra jobs and fail this pin.
-    // Bound measured on this fixture: delta words write (1), verdict
-    // (window, joins, write: 5), words append (verdict broadcast, write:
-    // 2), bands append (1)
-    val budget = 9
+    // Bound measured on this fixture: delta signatures write (1), verdict
+    // (prefilter key broadcast, delta-row broadcast, window exchange,
+    // distinct exchange, write: 5), epoch append (verdict broadcast,
+    // write: 2)
+    val budget = 8
     val store = Dedup.buildSigStore(docs(1L -> base, 2L -> other), "spec_admit_jobs")
     val delta = docs(100L -> perm, 101L -> third)
     var admitted: org.apache.spark.sql.DataFrame = null
-    val jobs = jobsIn {
+    val (jobs, _) = measured {
       admitted = Dedup.incrementalAdmit(store, delta, 0.8, None, 16, 2)._1
     }
     assert(jobs <= budget, s"one admission ran $jobs jobs, budget $budget")
@@ -279,5 +286,57 @@ class IncrementalAdmitSpec extends SparkSpec {
     assert(updated.bands.select("doc_id").distinct().collect().map(_.getLong(0))
       .sorted.toSeq == ((1L to 12L) ++ Seq(20L, 101L, 103L, 104L)),
       "the bands epoch must cover exactly the admitted docs")
+  }
+
+  test("admission shuffles delta-sized bytes whatever the store size") {
+    // the same delta against a store of N and of 4N docs: the prefilter
+    // keeps only the store rows of the buckets the delta touches, and
+    // verification reads the word sets carried on the candidate rows, so
+    // nothing store-sized crosses an exchange. Each store holds `base`,
+    // which the delta's `perm` near-dups, so a touched bucket is not empty
+    def shuffledBy(n: Int): (Long, Seq[Long]) = {
+      val store = Dedup.buildSigStore(docs(corpus(n) :+ (100000L -> base): _*),
+        s"spec_admit_flat_$n")
+      var admitted: org.apache.spark.sql.DataFrame = null
+      val (_, bytes) = measured {
+        admitted = Dedup.incrementalAdmit(store,
+          docs(200000L -> perm, 200001L -> third), 0.8, None, 16, 2)._1
+      }
+      (bytes, admitted.select("doc_id").collect().map(_.getLong(0)).toSeq)
+    }
+    val (small, admSmall) = shuffledBy(500)
+    val (large, admLarge) = shuffledBy(2000)
+    assert(admSmall == Seq(200001L) && admLarge == Seq(200001L))
+    assert(small > 0, "the capped window and the verdict shuffle at least the delta")
+    assert(large <= small * 3 / 2,
+      s"admission shuffle grew with the store: $small b at 500 docs, $large b at 2000")
+  }
+
+  test("a durable store directory holds only the store after admissions") {
+    // the delta stage and the verdict are app-scoped scratch: two
+    // admissions leave nothing but the signature component in the
+    // caller's directory
+    val dir = java.nio.file.Files.createTempDirectory("graft-sigstore-clean").toString
+    val store0 = Dedup.buildSigStore(docs(1L -> base), "clean_store", baseDir = Some(dir))
+    val (adm1, store1) = Dedup.incrementalAdmit(
+      store0, docs(50L -> other, 51L -> perm), 0.8, None, 16, 2)
+    val (adm2, _) = Dedup.incrementalAdmit(
+      store1, docs(60L -> third), 0.8, None, 16, 2)
+    assert(adm1.union(adm2).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+      == Seq(50L, 60L))
+    assert(new java.io.File(dir).list.toSeq == Seq("clean_store_words"),
+      s"admission scratch leaked into the durable store directory: " +
+        new java.io.File(dir).list.mkString(", "))
+  }
+
+  test("loadSigStore rejects a store in the old two-directory layout") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-sigstore-old").toString
+    Seq((1L, Seq("alpha", "bravo"))).toDF("doc_id", "ws")
+      .write.parquet(s"$dir/old_store_words/epoch=0")
+    Seq((1L, 0, "h0")).toDF("doc_id", "band", "bh")
+      .write.parquet(s"$dir/old_store_bands/epoch=0")
+    val e = intercept[IllegalStateException](Dedup.loadSigStore(spark, "old_store", dir))
+    assert(e.getMessage.contains("old_store_bands"), e.getMessage)
   }
 }

@@ -257,17 +257,22 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("admission pair stage: capped probe bounds buckets BEFORE the shuffle") {
-    // the stage that runs inside the admission job, pinned via its public
-    // seam (Dedup.admissionPairs): same WindowGroupLimit contract as q121
+    // the stage that runs inside the admission job, pinned via its seam
+    // (Dedup.admissionVerdict): same WindowGroupLimit contract as q121,
+    // below it the semi-join that prefilters store rows to the delta's
+    // buckets. Signature rows: band 0 is one shared over-cap bucket, band 1
+    // a bucket per doc
     import spark.implicits._
-    val mk = (ids: Seq[Long]) => ids.flatMap(i => Seq((i, 0, "h1"), (i, 1, s"h$i")))
-      .toDF("doc_id", "band", "bh")
-    val pairs = graft.operators.Dedup.admissionPairs(
-      mk(1L to 40L), mk(100L to 120L), 10)
-    pairs.collect()
-    val p = pairs.queryExecution.executedPlan.toString
+    val mk = (ids: Seq[Long]) => ids.map(i => (i, Seq("w", s"w$i"), Seq("h1", s"h$i")))
+      .toDF("doc_id", "ws", "bhs")
+    val verdict = graft.operators.Dedup.admissionVerdict(
+      mk(1L to 40L), mk(100L to 120L), 0.3, 10)
+    verdict.collect()
+    val p = verdict.queryExecution.executedPlan.toString
     assert(p.contains("row_number(), 10, Partial"),
       s"probe-side bucket cap lost its pre-shuffle bound:\n$p")
+    assert(p.contains("LeftSemi"),
+      s"store rows must be prefiltered to the delta's buckets:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"candidate generation must stay on the band equi-join:\n$p")
   }

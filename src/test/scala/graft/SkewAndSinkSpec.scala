@@ -12,7 +12,6 @@ import org.apache.spark.sql.streaming.Trigger
 class SkewAndSinkSpec extends SparkSpec {
 
   test("AQE splits a skewed join partition") {
-    import spark.implicits._
     // one hot key carrying ~all rows, plus a long tail
     val big = spark.range(0, 400000)
       .select(when(col("id") % 10 =!= 0, lit(7L)).otherwise(col("id") % 1000).as("k"),

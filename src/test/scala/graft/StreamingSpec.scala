@@ -3,7 +3,7 @@ package graft
 import graft.streaming.{Sessionizer, UserSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Drives the stateful sessionizer through a real incremental stream
   * (MemoryStream, two micro-batches) and asserts sessions close on gap and

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.expr
-
 /** Unicode normalization kernels (functions/TextNorm.scala) -- the cases the
   * ASCII fixture can't exercise: canonical composition folds precomposed
   * and decomposed forms to one dedup key, NFKC additionally folds

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
-
 /** Proves the native vec_dot / vec_normalize kernels are bit-identical to
   * the SQL-HOF formulations they replaced in the embedding operators (which
   * the DuckDB oracles still describe), including null-element,
