@@ -19,13 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup extends QueryModule {
 
-  /** 32-bit int from the first 8 hex chars of md5 — the deterministic,
-    * engine-portable hash used by every sketch here (DuckDB computes the
-    * same bytes).
-    */
-  private def h32(e: String): String =
-    s"cast(conv(substr(md5($e), 1, 8), 16, 10) AS bigint)"
-
   /** Stop-shingle bound for Jaccard dedup (q51): a shingle seen in more than
     * this many documents is dropped before the inverted-index self-join,
     * capping any one shingle's candidate bucket at ~DfCap²/2 pairs.
@@ -184,11 +177,13 @@ object Dedup extends QueryModule {
 
   /** Exact Jaccard of the word sets `wa` and `wb`. Hive `/` is double
     * division (session coercion), mirroring q51's raw-ratio-then-round-once
-    * FP discipline.
+    * FP discipline. The intersection size is bound once, as the argument of
+    * a one-element `transform` (the [[signaturesOf]] idiom): spelled out,
+    * the ratio and `round`'s NaN/Infinity guard each evaluate it again.
     */
   private def jaccard: org.apache.spark.sql.Column =
-    expr("round(size(array_intersect(wa, wb)) / " +
-      "(size(wa) + size(wb) - size(array_intersect(wa, wb))), 6)")
+    expr("transform(array(size(array_intersect(wa, wb))), " +
+      "i -> round(i / (size(wa) + size(wb) - i), 6))[0]")
 
   /** The persisted artifact a delta-dedup run leaves behind for the next
     * one: one signature row `(doc_id, ws, bhs)` per admitted doc — its word
@@ -632,14 +627,8 @@ object Dedup extends QueryModule {
     * oracles it against a recursive-CTE closure.
     */
   def clusterAssign(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val bands = docs
-      .transform(Sizing.spreadForHeavyCompute)
-      .selectExpr("doc_id",
-        "minhash_sig(array_distinct(split(lower(text), ' ')), 16) AS sig")
-      .selectExpr("doc_id",
-        """posexplode(transform(sequence(0, 1),
-             j -> md5(array_join(transform(slice(sig, j * 8 + 1, 8),
-                                           v -> cast(v AS string)), ',')))) AS (band, bh)""")
+    val bands = bandRows(
+      signaturesOf(wordsOf(docs.transform(Sizing.spreadForHeavyCompute))), "doc_id")
     // STAR edges, not all-pairs: connected components only needs
     // CONNECTIVITY, and every member of a band bucket is reachable
     // through the bucket's min-id hub — identical clusters, O(bucket)
@@ -816,26 +805,16 @@ object Dedup extends QueryModule {
           * sqrt(list_sum(list_transform(range(1, len(ne) + 1),
                                          i -> CAST(ne[i] AS DOUBLE) * CAST(ne[i] AS DOUBLE)))))"""
 
-  /** SemDeDup clustering stage (q104/q116): normalize ONCE (vec_normalize =
-    * the staged-l2 HOF chain in a native kernel, so every later similarity
-    * is a single native dot product), then assign each vector to its
-    * nearest of the k broadcast centroids by map-side argmax.
+  /** SemDeDup clustering stage (q104/q116): the first 8 vectors,
+    * normalized, are the k centroids, and [[assignToCentroids]] normalizes
+    * every vector ONCE (vec_normalize = the staged-l2 HOF chain in a native
+    * kernel, so every later similarity is a single native dot product) and
+    * assigns it to its nearest centroid by map-side argmax.
     */
   private def semdedupAssign(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    import org.apache.spark.sql.expressions.Window
-    val embN = t(s, dir, "embeddings")
-      .transform(Sizing.spreadForCompute)
-      .selectExpr("vec_id", "vec_normalize(embedding) AS ne")
-    val cents = embN.filter(col("vec_id") < 8)
-      .selectExpr("vec_id AS c_id", "ne AS ce")
-    embN
-      .crossJoin(broadcast(cents))
-      .selectExpr("vec_id", "ne", "c_id",
-        "round(vec_dot(ne, ce), 6) AS csim")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_id"))))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("ne"), col("c_id"))
+    val emb = t(s, dir, "embeddings")
+    assignToCentroids(emb, emb.filter(col("vec_id") < 8)
+      .selectExpr("vec_id AS c_id", "vec_normalize(embedding) AS ce"))
   }
 
   /** SemDeDup pairing stage: within-cluster pairing as an alias self-join

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{HiveQl, QueryDef, QueryModule, Sessions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, concat, concat_ws, lit}
 
 /** Reference `.q`-file parity battery (SURVEY.md §5 carry-over): the
   * reference's OWN clientpositive test statements, executed through
@@ -30,6 +31,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QFileParity extends QueryModule {
 
+  /** Root of the reference's source tree: the one place the `.q` fixture
+    * files are located (QTestUtil.createSources reads `data/files/`). Every
+    * LOAD / ADD FILE path on the Spark side and every `read_csv` path in
+    * the oracle SQL derives from it.
+    */
+  private[graft] final val RefRoot = "/root/reference"
+  private[graft] final val RefData = RefRoot + "/data/files"
+  private[graft] final val RefScripts = RefRoot + "/data/scripts"
+  private[graft] final val TestDat = RefData + "/test.dat"
+
   /** Register `src`/`srcpart` temp views on this session; returns the per-SF
     * dest-table suffix. Idempotent per (session, dir).
     */
@@ -55,7 +66,7 @@ object QFileParity extends QueryModule {
     // src_thrift (QTestUtil.java:478): the REFERENCE'S OWN complex.seq —
     // TBinaryProtocol Complex records — decoded by sources.HiveThriftSeq
     graft.sources.HiveThriftSeq
-      .readComplex(s, "/root/reference/data/files/complex.seq")
+      .readComplex(s, s"$RefData/complex.seq")
       .createOrReplaceTempView("src_thrift")
     (dir.hashCode & Int.MaxValue).toString
   }
@@ -156,6 +167,173 @@ object QFileParity extends QueryModule {
     // warehouse). fresh means fresh — forget them.
     try graft.Authz.forgetObject(s, n) catch { case _: Exception => }
     try graft.Protect.clearTable(s, n) catch { case _: Exception => }
+  }
+
+  // ---- section helpers shared by the tranche files ----------------------
+  //
+  // A tranche query returns the union of its sections, each tagged with a
+  // `sec` number so both sides can totally order the rows. Two row shapes
+  // are in use: `Pairs` (sec, c1, c2) and `Lines` (sec, c1), where a
+  // `Lines` row |-joins its columns; a tranche imports one family.
+
+  private[operators] object Pairs {
+    /** (sec, c1, c2) rows from literal key/value facts. */
+    def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
+      import s.implicits._
+      kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
+    }
+
+    def ordered(dfs: Seq[DataFrame]): DataFrame =
+      dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
+  }
+
+  private[operators] object Lines {
+    /** (sec, c1) rows from literal facts, `c1` = "key|value". */
+    def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
+      import s.implicits._
+      kv.toDF("c1", "c2").select(lit(sec).as("sec"),
+        concat_ws("|", col("c1"), col("c2")).as("c1"))
+    }
+
+    def ordered(dfs: Seq[DataFrame]): DataFrame =
+      dfs.reduce(_ union _).orderBy("sec", "c1")
+  }
+
+  /** A two-column (sec, c1, c2) section of `df`, materialized. */
+  private[operators] def dump(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
+    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
+      col(c2).cast("string").as("c2")).localCheckpoint(true)
+
+  /** Standardized leg dump: every column coalesced to 'NULL' strings and
+    * |-joined, so heterogeneous legs union into one (sec, c1) frame that
+    * both sides can totally order. */
+  private[operators] def leg(sec: Int, df: DataFrame): DataFrame = {
+    // positional rename first: select-* self-joins carry duplicate column
+    // names, which would make by-name references ambiguous
+    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
+    val joined = concat_ws("|", r.columns.map(c =>
+      coalesce(col(c).cast("string"), lit("NULL"))): _*)
+    r.select(lit(sec).as("sec"), joined.as("c1"))
+  }
+
+  /** DuckDB twin of [[leg]] over `cols` of `from`. */
+  private[operators] def legSql(sec: Int, cols: Seq[String], from: String): String =
+    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
+      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
+
+  /** The single BIGINT a count query returns. */
+  private[operators] def cnt(s: SparkSession, q: String): Long =
+    HiveQl.sql(s, q).collect()(0).getLong(0)
+
+  /** DuckDB read of a (key INT, value) ^A-delimited reference file. */
+  private[operators] def csv(name: String): String =
+    s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
+        auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'}))"""
+
+  /** Java String.hashCode in DuckDB (the q89 recipe): fold c*31+ch under
+    * mod 2^32 (multiplication-homomorphic ≡ Java's int wrap), then recentre
+    * into signed-int range. */
+  private[operators] def jh(c: String): String =
+    s"""(((list_reduce(list_prepend(CAST(0 AS BIGINT),
+        list_transform(range(1, length($c) + 1),
+          i -> CAST(ascii(($c)[i:i]) AS BIGINT))),
+        (a, b) -> (a * 31 + b) % 4294967296)
+        + 2147483648) % 4294967296) - 2147483648)"""
+
+  private[operators] def rmrf(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** (sec, c1, c2) fact rows from a table's stats parameters. */
+  private[operators] def tblStats(s: SparkSession, sec: Int, t: String): DataFrame = {
+    val meta = s.sessionState.catalog.getTableMetadata(
+      s.sessionState.sqlParser.parseTableIdentifier(t))
+    val p = meta.properties
+    Pairs.facts(s, sec, Seq(
+      "tbl:numRows" -> p.getOrElse("numRows", "<none>"),
+      "tbl:hasFiles" -> p.get("numFiles").exists(_.toLong > 0).toString,
+      "tbl:hasBytes" -> p.get("totalSize").exists(_.toLong > 0).toString))
+  }
+
+  /** (sec, c1, c2) fact rows: one numRows per partition (sorted spec). */
+  private[operators] def partStats(s: SparkSession, sec: Int, t: String): DataFrame = {
+    val ti = s.sessionState.sqlParser.parseTableIdentifier(t)
+    val rows = s.sessionState.catalog.listPartitions(ti).map { p =>
+      val spec = p.spec.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/")
+      s"part:$spec" -> p.parameters.getOrElse("numRows", "<none>")
+    }.sortBy(_._1)
+    Pairs.facts(s, sec, rows)
+  }
+
+  // the exim (export/import) family
+
+  private[operators] def exportDir(qn: String, sfx: String) = s"/tmp/graft_exim/${qn}_$sfx"
+
+  private[operators] def loadEmp(s: SparkSession, t: String, co: String, st: String): Unit =
+    HiveQl.sql(s, s"""load data local inpath "$TestDat"
+      into table $t partition (emp_country="$co", emp_state="$st")""")
+
+  private[operators] def dumpEmp(s: SparkSession, sec: Int, t: String): DataFrame =
+    HiveQl.sql(s, s"select * from $t").select(lit(sec).as("sec"),
+      col("emp_id").cast("string").as("c1"),
+      concat(col("emp_country"), lit("/"), col("emp_state")).as("c2"))
+      .localCheckpoint(true)
+
+  /** importer-database dance shared by every exim def: create+use a fresh
+    * db, run the import steps, then restore the default db. */
+  private[operators] def inImporterDb(s: SparkSession, qn: String, sfx: String)(
+      body: => DataFrame): DataFrame = {
+    val db = s"importer_${qn}_$sfx"
+    HiveQl.sql(s, s"drop database if exists $db cascade")
+    HiveQl.sql(s, s"create database $db")
+    HiveQl.sql(s, s"use $db")
+    try body finally {
+      HiveQl.sql(s, "use default")
+      HiveQl.sql(s, s"drop database if exists $db cascade")
+    }
+  }
+
+  private[operators] def empLegSql(sec: Int, parts: Seq[(String, String)]): String =
+    parts.map { case (co, st) =>
+      s"""SELECT $sec AS sec, CAST(dep_id AS VARCHAR) AS c1, '$co/$st' AS c2 FROM dept"""
+    }.mkString(" UNION ALL ")
+
+  // the index family
+
+  /** Real src-shaped table (the .q files index src/srcpart, temp views
+    * here — an index needs a catalog table). */
+  private[operators] def srcTable(s: SparkSession, qn: String, sfx: String): String = {
+    val t = s"idxsrc_${qn}_$sfx"
+    fresh(s, t)
+    HiveQl.sql(s, s"create table $t (key string, value string) stored as textfile")
+    HiveQl.sql(s, s"insert overwrite table $t select * from src")
+    t
+  }
+
+  private[operators] def srcpartTable(s: SparkSession, qn: String, sfx: String,
+      fmt: String = "TEXTFILE"): String = {
+    val t = s"idxsrcpart_${qn}_$sfx"
+    fresh(s, t)
+    HiveQl.sql(s, s"CREATE TABLE $t (key string, value string) " +
+      s"PARTITIONED BY (ds string, hr string) STORED AS $fmt")
+    for (ds <- Seq("2008-04-08", "2008-04-09"); hr <- Seq("11", "12"))
+      HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t PARTITION (ds='$ds', hr='$hr') " +
+        s"SELECT key, value FROM srcpart WHERE ds = '$ds' AND hr = '$hr'")
+    t
+  }
+
+  private[operators] def idxTable(t: String, idx: String) = s"default__${t}_${idx}__"
+
+  private[operators] def extractDir(s: SparkSession, qn: String, sfx: String): String =
+    s"/tmp/graft_idx/${qn}_$sfx"
+
+  private[operators] def dirNonEmpty(s: SparkSession, d: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(d)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(st =>
+      st.isFile && st.getLen > 0 && !st.getPath.getName.startsWith("_"))
   }
 
   /** clientpositive/join_nulls.q select inventory (non-SMB section): join
@@ -1052,7 +1230,7 @@ object QFileParity extends QueryModule {
           HiveQl.sql(s, s"create table ${t._1}(key int, value string) " +
             "CLUSTERED BY (key) SORTED BY (key) INTO 1 BUCKETS STORED AS RCFILE")
           HiveQl.sql(s,
-            s"load data local inpath '/root/reference/data/files/${t._2}' " +
+            s"load data local inpath '$RefData/${t._2}' " +
               s"overwrite into table ${t._1}")
         }
         // foreign-loaded files carry no Spark bucket ids in their names —
@@ -1258,7 +1436,7 @@ object QFileParity extends QueryModule {
         HiveQl.sql(s, s"FROM src1 INSERT OVERWRITE TABLE $d1 SELECT length(src1.value)")
         HiveQl.sql(s, s"CREATE TABLE $d2(name STRING) STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv4.txt' INTO TABLE $d2")
+          s"LOAD DATA LOCAL INPATH '$RefData/kv4.txt' INTO TABLE $d2")
         HiveQl.sql(s,
           s"""SELECT 1 AS src, len FROM $d1
               UNION ALL SELECT 2 AS src, length($d2.name) AS len FROM $d2
@@ -1284,7 +1462,7 @@ object QFileParity extends QueryModule {
         fresh(s, t)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value int) STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in3.txt' INTO TABLE $t")
+          s"LOAD DATA LOCAL INPATH '$RefData/in3.txt' INTO TABLE $t")
         val joins = Seq(
           "JOIN" -> "a.key > 40 AND a.value > 50 AND a.key = a.value AND b.key > 40 AND b.value > 50 AND b.key = b.value",
           "LEFT OUTER JOIN" -> "a.key > 40 AND a.value > 50 AND a.key = a.value AND b.key > 40 AND b.value > 50 AND b.key = b.value",
@@ -2441,7 +2619,7 @@ object QFileParity extends QueryModule {
         HiveQl.sql(s, s"FROM src1 INSERT OVERWRITE TABLE $d1 SELECT reverse(src1.value)")
         HiveQl.sql(s, s"CREATE TABLE $d2(name STRING) STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv4.txt' INTO TABLE $d2")
+          s"LOAD DATA LOCAL INPATH '$RefData/kv4.txt' INTO TABLE $d2")
         HiveQl.sql(s,
           s"""SELECT v, n FROM (
                 SELECT len AS v, CAST(-1 AS BIGINT) AS n FROM $d1
@@ -2582,9 +2760,9 @@ object QFileParity extends QueryModule {
         val (t1, t2) = (s"join_1to1_1_$sfx", s"join_1to1_2_$sfx")
         fresh(s, t1, t2)
         HiveQl.sql(s, s"CREATE TABLE $t1(key1 int, key2 int, value int) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in5.txt' INTO TABLE $t1")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/in5.txt' INTO TABLE $t1")
         HiveQl.sql(s, s"CREATE TABLE $t2(key1 int, key2 int, value int) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in6.txt' INTO TABLE $t2")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/in6.txt' INTO TABLE $t2")
         def legSql(off: Int) = Join1to1Conds.zipWithIndex.map {
           case ((jk, cond), i) =>
             s"""SELECT ${i + 1 + off} AS jt, a.key1 AS ak1, a.key2 AS ak2,
@@ -2643,11 +2821,11 @@ object QFileParity extends QueryModule {
         val (s1, s2) = (s"smb_input1_$sfx", s"smb_input2_$sfx")
         fresh(s, t, s1, s2)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value int) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in1.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/in1.txt' INTO TABLE $t")
         HiveQl.sql(s, s"CREATE TABLE $s1(key int, value int) CLUSTERED BY (key) SORTED BY (key) INTO 2 BUCKETS STORED AS TEXTFILE")
         HiveQl.sql(s, s"CREATE TABLE $s2(key int, value int) CLUSTERED BY (value) SORTED BY (value) INTO 2 BUCKETS STORED AS TEXTFILE")
         for (f <- Seq("in1.txt", "in2.txt"); tt <- Seq(s1, s2))
-          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/$f' INTO TABLE $tt")
+          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/$f' INTO TABLE $tt")
         HiveQl.sql(s, "SET hive.optimize.bucketmapJOIN=true")
         HiveQl.sql(s, "SET hive.optimize.bucketmapJOIN.sortedmerge=true")
         val two = JoinNullsCases.zipWithIndex.map { case (c, i) =>
@@ -2733,9 +2911,9 @@ object QFileParity extends QueryModule {
           FIELDS TERMINATED BY ',' STORED AS TEXTFILE""")
         HiveQl.sql(s, s"""CREATE TABLE $tc (bar_id int, n int) ROW FORMAT DELIMITED FIELDS
           TERMINATED BY ',' STORED AS TEXTFILE""")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/hive_626_foo.txt' OVERWRITE INTO TABLE $tf")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/hive_626_bar.txt' OVERWRITE INTO TABLE $tb")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/hive_626_count.txt' OVERWRITE INTO TABLE $tc")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/hive_626_foo.txt' OVERWRITE INTO TABLE $tf")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/hive_626_bar.txt' OVERWRITE INTO TABLE $tb")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/hive_626_count.txt' OVERWRITE INTO TABLE $tc")
         HiveQl.sql(s,
           s"""select $tf.foo_name, $tb.bar_name, n from $tf join $tb on $tf.foo_id =
               $tb.foo_id join $tc on $tc.bar_id = $tb.bar_id""")
@@ -4415,12 +4593,12 @@ object QFileParity extends QueryModule {
         val d = s"input4_${fixtures(s, dir)}"
         fresh(s, d)
         HiveQl.sql(s, s"CREATE TABLE $d(KEY STRING, VALUE STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $d")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $d")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $d")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $d")
         HiveQl.sql(s, s"SELECT $d.VALUE AS value, $d.KEY AS key FROM $d ORDER BY key, value")
       },
-      Some("""WITH kv1 AS (
-          SELECT * FROM read_csv('/root/reference/data/files/kv1.txt',
+      Some(s"""WITH kv1 AS (
+          SELECT * FROM read_csv('$RefData/kv1.txt',
             delim=chr(1), header=false,
             columns={'key': 'VARCHAR', 'value': 'VARCHAR'}))
         SELECT value, key FROM (
@@ -4543,8 +4721,8 @@ object QFileParity extends QueryModule {
         val (t1, t2) = (s"t1_i3l_$sfx", s"t2_i3l_$sfx")
         fresh(s, t1, t2)
         HiveQl.sql(s, s"CREATE TABLE $t1(key STRING, value STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t1")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv2.txt' INTO TABLE $t1")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t1")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv2.txt' INTO TABLE $t1")
         HiveQl.sql(s, s"CREATE TABLE $t2(key STRING, value STRING)")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t2 SELECT * FROM " +
           s"(SELECT * FROM $t1 DISTRIBUTE BY key SORT BY key, value) T LIMIT 20")
@@ -4587,11 +4765,11 @@ object QFileParity extends QueryModule {
         val (t1, t2) = (s"tstparttbl_$sfx", s"tstparttbl2_$sfx")
         fresh(s, t1, t2)
         HiveQl.sql(s, s"CREATE TABLE $t1(KEY STRING, VALUE STRING) PARTITIONED BY(ds string) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t1 PARTITION (ds='2008-04-09')")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/nullfile.txt' INTO TABLE $t1 PARTITION (ds='2008-04-08')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t1 PARTITION (ds='2008-04-09')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/nullfile.txt' INTO TABLE $t1 PARTITION (ds='2008-04-08')")
         HiveQl.sql(s, s"CREATE TABLE $t2(KEY STRING, VALUE STRING) PARTITIONED BY(ds string) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/nullfile.txt' INTO TABLE $t2 PARTITION (ds='2008-04-09')")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/nullfile.txt' INTO TABLE $t2 PARTITION (ds='2008-04-08')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/nullfile.txt' INTO TABLE $t2 PARTITION (ds='2008-04-09')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/nullfile.txt' INTO TABLE $t2 PARTITION (ds='2008-04-08')")
         HiveQl.sql(s,
           s"""SELECT (select count(1) from $t1) AS n1,
                      (select count(1) from $t2) AS n2""")
@@ -4627,9 +4805,9 @@ object QFileParity extends QueryModule {
         val (t1, t2) = (s"ng5_a_$sfx", s"ng5_b_$sfx")
         fresh(s, t1, t2)
         HiveQl.sql(s, s"CREATE TABLE $t1(KEY STRING, VALUE STRING) PARTITIONED BY(ds string) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t1 PARTITION (ds='2009-04-09')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t1 PARTITION (ds='2009-04-09')")
         HiveQl.sql(s, s"CREATE TABLE $t2(KEY STRING, VALUE STRING) PARTITIONED BY(ds string) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t2 PARTITION (ds='2009-04-09')")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t2 PARTITION (ds='2009-04-09')")
         HiveQl.sql(s,
           s"""select u.* from
               (
@@ -4638,8 +4816,8 @@ object QFileParity extends QueryModule {
                 select key, value from $t2 y where y.ds='2009-04-09'
               )u ORDER BY key, value""")
       },
-      Some("""WITH kv1 AS (
-          SELECT * FROM read_csv('/root/reference/data/files/kv1.txt',
+      Some(s"""WITH kv1 AS (
+          SELECT * FROM read_csv('$RefData/kv1.txt',
             delim=chr(1), header=false,
             columns={'key': 'VARCHAR', 'value': 'VARCHAR'}))
         SELECT key, value FROM kv1 ORDER BY key, value""")),
@@ -4680,7 +4858,7 @@ object QFileParity extends QueryModule {
         fresh(s, t1, t2, t3)
         for ((t, f) <- Seq(t1 -> "T1.txt", t2 -> "T2.txt", t3 -> "T3.txt")) {
           HiveQl.sql(s, s"CREATE TABLE $t(key STRING, val STRING) STORED AS TEXTFILE")
-          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/$f' INTO TABLE $t")
+          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/$f' INTO TABLE $t")
         }
         val parts = Seq(
           s"SELECT 1 AS jt, a.key AS c1, a.val AS c2, c.key AS c3, CAST(NULL AS STRING) AS c4 FROM $t1 a JOIN src c ON c.key+1=a.key",
@@ -5002,7 +5180,7 @@ object QFileParity extends QueryModule {
         HiveQl.sql(s, s"CREATE TABLE $d1(len INT)")
         HiveQl.sql(s, s"FROM src1 INSERT OVERWRITE TABLE $d1 SELECT length(src1.value)")
         HiveQl.sql(s, s"CREATE TABLE $d2(name STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv4.txt' INTO TABLE $d2")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv4.txt' INTO TABLE $d2")
         HiveQl.sql(s,
           s"""SELECT 'a' AS tag, len FROM $d1
               UNION ALL SELECT 'b', length($d2.name) FROM $d2
@@ -5013,7 +5191,7 @@ object QFileParity extends QueryModule {
           SELECT 'a' AS tag, length(value) AS len FROM src1
           UNION ALL
           SELECT 'b', length(name) FROM read_csv(
-            '/root/reference/data/files/kv4.txt', delim=chr(1),
+            '$RefData/kv4.txt', delim=chr(1),
             header=false, columns={'name': 'VARCHAR'})) u
         ORDER BY tag, len""")),
 
@@ -5046,19 +5224,19 @@ object QFileParity extends QueryModule {
         val (t, d) = (s"srcbucket_$sfx", s"dest1_s4_$sfx")
         fresh(s, t, d)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value string) CLUSTERED BY (key) INTO 2 BUCKETS STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket0.txt' INTO TABLE $t")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket1.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket0.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket1.txt' INTO TABLE $t")
         HiveQl.sql(s, s"CREATE TABLE $d(key INT, value STRING) STORED AS TEXTFILE")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $d SELECT s.* " +
           s"FROM $t TABLESAMPLE (BUCKET 1 OUT OF 2 on key) s")
         HiveQl.sql(s, s"SELECT $d.* FROM $d ORDER BY key, value")
       },
-      Some("""WITH sb AS (
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket0.txt',
+      Some(s"""WITH sb AS (
+          SELECT * FROM read_csv('$RefData/srcbucket0.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'})
           UNION ALL
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket1.txt',
+          SELECT * FROM read_csv('$RefData/srcbucket1.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'}))
         SELECT key, value FROM sb WHERE key % 2 = 0
@@ -5073,19 +5251,19 @@ object QFileParity extends QueryModule {
         val (t, d) = (s"srcbucket6_$sfx", s"dest1_s6_$sfx")
         fresh(s, t, d)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value string) CLUSTERED BY (key) INTO 2 BUCKETS STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket0.txt' INTO TABLE $t")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket1.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket0.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket1.txt' INTO TABLE $t")
         HiveQl.sql(s, s"CREATE TABLE $d(key INT, value STRING) STORED AS TEXTFILE")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $d SELECT s.* " +
           s"FROM $t TABLESAMPLE (BUCKET 1 OUT OF 4 on key) s")
         HiveQl.sql(s, s"SELECT $d.* FROM $d ORDER BY key, value")
       },
-      Some("""WITH sb AS (
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket0.txt',
+      Some(s"""WITH sb AS (
+          SELECT * FROM read_csv('$RefData/srcbucket0.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'})
           UNION ALL
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket1.txt',
+          SELECT * FROM read_csv('$RefData/srcbucket1.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'}))
         SELECT key, value FROM sb WHERE key % 4 = 0
@@ -5099,19 +5277,19 @@ object QFileParity extends QueryModule {
         val (t, d) = (s"srcbucket7_$sfx", s"dest1_s7_$sfx")
         fresh(s, t, d)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value string) CLUSTERED BY (key) INTO 2 BUCKETS STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket0.txt' INTO TABLE $t")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket1.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket0.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket1.txt' INTO TABLE $t")
         HiveQl.sql(s, s"CREATE TABLE $d(key INT, value STRING) STORED AS TEXTFILE")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $d SELECT s.* " +
           s"FROM $t TABLESAMPLE (BUCKET 1 OUT OF 4 on key) s WHERE s.key > 100")
         HiveQl.sql(s, s"SELECT $d.* FROM $d ORDER BY key, value")
       },
-      Some("""WITH sb AS (
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket0.txt',
+      Some(s"""WITH sb AS (
+          SELECT * FROM read_csv('$RefData/srcbucket0.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'})
           UNION ALL
-          SELECT * FROM read_csv('/root/reference/data/files/srcbucket1.txt',
+          SELECT * FROM read_csv('$RefData/srcbucket1.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'}))
         SELECT key, value FROM sb WHERE key % 4 = 0 AND key > 100
@@ -5182,7 +5360,7 @@ object QFileParity extends QueryModule {
         HiveQl.sql(s, s"CREATE TABLE $d1(key INT, val1 INT, val2 INT)")
         HiveQl.sql(s, s"CREATE TABLE $d2(key INT, val1 INT, val2 INT)")
         HiveQl.sql(s, s"CREATE TABLE $inp(key INT, value STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv5.txt' INTO TABLE $inp")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/kv5.txt' INTO TABLE $inp")
         val stmt =
           s"""FROM $inp
               INSERT OVERWRITE TABLE $d1 SELECT $inp.key, count(substr($inp.value,5)), count(distinct substr($inp.value,5)) GROUP BY $inp.key
@@ -5195,8 +5373,8 @@ object QFileParity extends QueryModule {
               UNION ALL SELECT 'd2', key, val1, val2 FROM $d2
               ORDER BY tag, key""")
       },
-      Some("""WITH kv5 AS (
-          SELECT * FROM read_csv('/root/reference/data/files/kv5.txt',
+      Some(s"""WITH kv5 AS (
+          SELECT * FROM read_csv('$RefData/kv5.txt',
             delim=chr(1), header=false,
             columns={'key': 'INT', 'value': 'VARCHAR'}))
         SELECT tag, key, CAST(val1 AS INT) AS val1, CAST(val2 AS INT) AS val2
@@ -5255,8 +5433,8 @@ object QFileParity extends QueryModule {
         fresh(s, d, sb)
         HiveQl.sql(s, "SET hive.map.aggr=true")
         HiveQl.sql(s, s"CREATE TABLE $sb(key int, value string) CLUSTERED BY (key) INTO 2 BUCKETS STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket0.txt' INTO TABLE $sb")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/srcbucket1.txt' INTO TABLE $sb")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket0.txt' INTO TABLE $sb")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/srcbucket1.txt' INTO TABLE $sb")
         HiveQl.sql(s, s"create table $d(key string, value int)")
         HiveQl.sql(s,
           s"""insert overwrite table $d
@@ -6061,7 +6239,7 @@ object QFileParity extends QueryModule {
         val t = s"myinput1_ajn_${fixtures(s, dir)}"
         fresh(s, t)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value int) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in1.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/in1.txt' INTO TABLE $t")
         HiveQl.sql(s, "SET hive.auto.convert.join=true")
         checksumUnion(s, autoNullsSelects(t), 0).orderBy("jt")
       },
@@ -6080,7 +6258,7 @@ object QFileParity extends QueryModule {
         val t = s"myinput1_ajf_${fixtures(s, dir)}"
         fresh(s, t)
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value int) STORED AS TEXTFILE")
-        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data/files/in3.txt' INTO TABLE $t")
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/in3.txt' INTO TABLE $t")
         HiveQl.sql(s, "SET hive.auto.convert.join=true")
         val forms = autoFiltersSelects(t)
         val leg1 = checksumUnion(s, forms, 0).localCheckpoint(true)

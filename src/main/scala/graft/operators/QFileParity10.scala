@@ -13,10 +13,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity10 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh}
+  import QFileParity.{fixtures, fresh, RefData}
   import QFileParity6.describeRows
-
-  private val RefData = "/root/reference/data/files"
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -10,9 +10,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity11 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
+  import QFileParity.{fixtures, fresh, SrcCte, RefData}
 
   val defs: Seq[QueryDef] = Seq(
 

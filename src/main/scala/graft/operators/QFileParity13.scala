@@ -21,9 +21,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity13 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
+  import QFileParity.{fixtures, fresh, SrcCte, RefData}
 
   /** The smbbucket_{1,2,3}.txt fixture rows (fixtures ship as .rc; the .txt
     * twins are the reference's own plaintext of the same rows). */

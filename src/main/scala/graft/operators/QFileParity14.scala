@@ -18,13 +18,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity14 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private val RefData = "/root/reference/data/files"
-
-  private def csv(name: String): String =
-    s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
-        auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'}))"""
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, RefData, csv}
 
   /** DuckDB CTEs for the srcbucket (2 buckets: files 0,1) and srcbucket2
     * (4 buckets: files 20–23) fixture tables. */

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 15 (round 13): the stats family (stats0–7)
@@ -14,42 +12,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity15 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte}
-
-  private val RefData = "/root/reference/data/files"
-
-  /** (sec, c1, c2) fact rows from a table's stats parameters. */
-  private def tblStats(s: SparkSession, sec: Int, t: String): DataFrame = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(t))
-    val p = meta.properties
-    facts(s, sec, Seq(
-      "tbl:numRows" -> p.getOrElse("numRows", "<none>"),
-      "tbl:hasFiles" -> p.get("numFiles").exists(_.toLong > 0).toString,
-      "tbl:hasBytes" -> p.get("totalSize").exists(_.toLong > 0).toString))
-  }
-
-  /** (sec, c1, c2) fact rows: one numRows per partition (sorted spec). */
-  private def partStats(s: SparkSession, sec: Int, t: String): DataFrame = {
-    val ti = s.sessionState.sqlParser.parseTableIdentifier(t)
-    val rows = s.sessionState.catalog.listPartitions(ti).map { p =>
-      val spec = p.spec.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/")
-      s"part:$spec" -> p.parameters.getOrElse("numRows", "<none>")
-    }.sortBy(_._1)
-    facts(s, sec, rows)
-  }
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def dump(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
+  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, RefData, tblStats, partStats, dump}
+  import QFileParity.Pairs.{facts, ordered}
 
   val defs: Seq[QueryDef] = Seq(
 

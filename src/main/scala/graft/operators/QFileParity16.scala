@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 16 (round 13): the small-file merge and
@@ -17,19 +16,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity16 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def dump(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, dump, RefData}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** Data-file count under a table (or its partition dirs, recursive 1). */
   private def fileCount(s: SparkSession, t: String): Long = {
@@ -472,7 +460,7 @@ object QFileParity16 extends QueryModule {
               'field.delim'=' ',
               'serialization.null.format'='-' ) STORED AS TEXTFILE""")
         HiveQl.sql(s, "LOAD DATA LOCAL INPATH " +
-          s"'/root/reference/data/files/apache.access.log' INTO TABLE $t")
+          s"'$RefData/apache.access.log' INTO TABLE $t")
         HiveQl.sql(s, s"SELECT a.* FROM $t a")
       },
       Some("""SELECT '127.0.0.1' AS ipaddress, CAST(NULL AS VARCHAR) AS identd,

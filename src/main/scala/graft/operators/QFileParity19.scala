@@ -24,26 +24,11 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity19 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh}
+  import QFileParity.{fixtures, fresh, TestDat, rmrf, exportDir, loadEmp, dumpEmp, inImporterDb,
+    empLegSql}
+  import QFileParity.Pairs.{facts, ordered}
 
-  private val TestDat = "/root/reference/data/files/test.dat"
   private val DeptRows = (1 to 6)
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def rm(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def exportDir(qn: String, sfx: String) = s"/tmp/graft_exim/${qn}_$sfx"
 
   private def deptDdl(t: String): String =
     s"""create table $t ( dep_id int comment "department id")
@@ -59,40 +44,16 @@ object QFileParity19 extends QueryModule {
   private def loadDept(s: SparkSession, t: String): Unit =
     HiveQl.sql(s, s"""load data local inpath "$TestDat" into table $t""")
 
-  private def loadEmp(s: SparkSession, t: String, co: String, st: String): Unit =
-    HiveQl.sql(s, s"""load data local inpath "$TestDat"
-      into table $t partition (emp_country="$co", emp_state="$st")""")
-
   private def dumpDept(s: SparkSession, sec: Int, t: String): DataFrame =
     HiveQl.sql(s, s"select * from $t").select(lit(sec).as("sec"),
       col("dep_id").cast("string").as("c1"),
       lit(null).cast("string").as("c2")).localCheckpoint(true)
-
-  private def dumpEmp(s: SparkSession, sec: Int, t: String): DataFrame =
-    HiveQl.sql(s, s"select * from $t").select(lit(sec).as("sec"),
-      col("emp_id").cast("string").as("c1"),
-      concat(col("emp_country"), lit("/"), col("emp_state")).as("c2"))
-      .localCheckpoint(true)
 
   private def locFact(s: SparkSession, sec: Int, t: String, exp: String): DataFrame = {
     val loc = s.sessionState.catalog.getTableMetadata(
       s.sessionState.sqlParser.parseTableIdentifier(t)).location.toString
     facts(s, sec, Seq("loc_in_export" -> loc.contains(
       exp.stripPrefix("file:")).toString))
-  }
-
-  /** importer-database dance shared by every def: create+use a fresh db,
-    * run the import steps, then restore the default db. */
-  private def inImporterDb(s: SparkSession, qn: String, sfx: String)(
-      body: => DataFrame): DataFrame = {
-    val db = s"importer_${qn}_$sfx"
-    HiveQl.sql(s, s"drop database if exists $db cascade")
-    HiveQl.sql(s, s"create database $db")
-    HiveQl.sql(s, s"use $db")
-    try body finally {
-      HiveQl.sql(s, "use default")
-      HiveQl.sql(s, s"drop database if exists $db cascade")
-    }
   }
 
   private val DeptOracle =
@@ -102,11 +63,6 @@ object QFileParity19 extends QueryModule {
     secs.map(sec =>
       s"SELECT $sec AS sec, CAST(dep_id AS VARCHAR) AS c1, CAST(NULL AS VARCHAR) AS c2 FROM dept")
       .mkString(" UNION ALL ")
-
-  private def empLegSql(sec: Int, parts: Seq[(String, String)]): String =
-    parts.map { case (co, st) =>
-      s"""SELECT $sec AS sec, CAST(dep_id AS VARCHAR) AS c1, '$co/$st' AS c2 FROM dept"""
-    }.mkString(" UNION ALL ")
 
   // ---- the nonpartitioned dept flows ------------------------------------
 
@@ -118,7 +74,7 @@ object QFileParity19 extends QueryModule {
       val sfx = fixtures(s, dir)
       val t = s"exim_department_${qn}_$sfx"
       val exp = exportDir(qn, sfx)
-      fresh(s, t); rm(s, exp)
+      fresh(s, t); rmrf(s, exp)
       HiveQl.sql(s, deptDdl(t))
       if (load) loadDept(s, t)
       HiveQl.sql(s, s"export table $t to '$exp'")
@@ -126,7 +82,7 @@ object QFileParity19 extends QueryModule {
       inImporterDb(s, qn, sfx) {
         HiveQl.sql(s, s"import from '$exp'")
         val d = dumpDept(s, 0, t)
-        rm(s, exp) // managed import copied the data: the table still reads
+        rmrf(s, exp) // managed import copied the data: the table still reads
         val c = facts(s, 1, Seq("rows_after_rm_export" ->
           HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
         HiveQl.sql(s, s"drop table $t")
@@ -155,7 +111,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q705_$sfx"
         val exp = exportDir("q705", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -163,7 +119,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"import from '$exp'")
           val c = facts(s, 0, Seq("rows" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(c))
         }
       },
@@ -175,7 +131,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q706_$sfx"
         val exp = exportDir("q706", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         loadEmp(s, t, "in", "tn")
         HiveQl.sql(s, s"export table $t to '$exp'")
@@ -183,7 +139,7 @@ object QFileParity19 extends QueryModule {
         inImporterDb(s, "q706", sfx) {
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -198,7 +154,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_department_q707_$sfx"
         val exp = exportDir("q707", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -208,7 +164,7 @@ object QFileParity19 extends QueryModule {
                stored as textfile tblproperties("maker"="krishna")""")
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpDept(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -222,7 +178,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q708_$sfx"
         val exp = exportDir("q708", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -231,7 +187,7 @@ object QFileParity19 extends QueryModule {
         inImporterDb(s, "q708", sfx) {
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -247,7 +203,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q709_$sfx"
         val exp = exportDir("q709", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -256,7 +212,7 @@ object QFileParity19 extends QueryModule {
         inImporterDb(s, "q709", sfx) {
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -271,7 +227,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q710_$sfx"
         val exp = exportDir("q710", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -281,7 +237,7 @@ object QFileParity19 extends QueryModule {
         inImporterDb(s, "q710", sfx) {
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -296,7 +252,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q711_$sfx"
         val exp = exportDir("q711", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -312,7 +268,7 @@ object QFileParity19 extends QueryModule {
           loadEmp(s, t, "us", "al")
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -328,7 +284,7 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_department_q712_$sfx"
         val t2 = s"exim_imported_dept_q712_$sfx"
         val exp = exportDir("q712", sfx)
-        fresh(s, t, t2); rm(s, exp)
+        fresh(s, t, t2); rmrf(s, exp)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -345,7 +301,7 @@ object QFileParity19 extends QueryModule {
           val d = dumpDept(s, 0, t2)
           HiveQl.sql(s, s"drop table $t2")
           HiveQl.sql(s, s"drop table $t")
-          rm(s, exp)
+          rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -360,7 +316,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q713_$sfx"
         val exp = exportDir("q713", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -372,7 +328,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"""import table $t partition
             (emp_country="us", emp_state="tn") from '$exp'""")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -389,18 +345,18 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_department_q714_$sfx"
         val exp = exportDir("q714", sfx)
         val store = s"/tmp/graft_exim/store_q714_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s,
           s"""create external table $t ( dep_id int comment "department id")
              stored as textfile location '$store'
              tblproperties("creator"="krishna")""")
         loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
-        HiveQl.sql(s, s"drop table $t"); rm(s, store)
+        HiveQl.sql(s, s"drop table $t"); rmrf(s, store)
         inImporterDb(s, "q714", sfx) {
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpDept(s, 0, t)
-          rm(s, exp) // managed import: the copy survives
+          rmrf(s, exp) // managed import: the copy survives
           val c = facts(s, 1, Seq("rows_after_rm" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           HiveQl.sql(s, s"drop table $t")
@@ -419,7 +375,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_department_q715_$sfx"
         val exp = exportDir("q715", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -427,7 +383,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"import external table $t from '$exp'")
           val d = dumpDept(s, 0, t)
           val f = locFact(s, 1, t, exp) // external contract: data in export
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d, f))
         }
       },
@@ -444,7 +400,7 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_department_q716_$sfx"
         val exp = exportDir("q716", sfx)
         val store = s"/tmp/graft_exim/store_q716_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -452,11 +408,11 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s,
             s"import external table $t from '$exp' location '$store'")
           val d = dumpDept(s, 0, t)
-          rm(s, exp) // data lives at the LOCATION, not the export
+          rmrf(s, exp) // data lives at the LOCATION, not the export
           val c = facts(s, 1, Seq("rows_after_rm_export" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           val f = locFact(s, 2, t, store)
-          HiveQl.sql(s, s"drop table $t"); rm(s, store)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, store)
           ordered(Seq(d, c, f))
         }
       },
@@ -472,18 +428,18 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_department_q717_$sfx"
         val exp = exportDir("q717", sfx)
         val store = s"/tmp/graft_exim/store_q717_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
         inImporterDb(s, "q717", sfx) {
           HiveQl.sql(s, s"import table $t from '$exp' location '$store'")
           val d = dumpDept(s, 0, t)
-          rm(s, exp)
+          rmrf(s, exp)
           val c = facts(s, 1, Seq("rows_after_rm_export" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           val f = locFact(s, 2, t, store)
-          HiveQl.sql(s, s"drop table $t"); rm(s, store)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, store)
           ordered(Seq(d, c, f))
         }
       },
@@ -501,7 +457,7 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_department_q718_$sfx"
         val exp = exportDir("q718", sfx)
         val store = s"/tmp/graft_exim/store_q718_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, deptDdl(t)); loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
@@ -509,7 +465,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"import table $t from '$exp' location '$store'")
           val d = dumpDept(s, 0, t)
           val f = locFact(s, 1, t, store)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp); rm(s, store)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp); rmrf(s, store)
           ordered(Seq(d, f))
         }
       },
@@ -525,7 +481,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q719_$sfx"
         val exp = exportDir("q719", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -536,7 +492,7 @@ object QFileParity19 extends QueryModule {
             (emp_country="us", emp_state="tn") from '$exp'""")
           val d = dumpEmp(s, 0, t)
           val f = locFact(s, 1, t, exp)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d, f))
         }
       },
@@ -554,7 +510,7 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_employee_q720_$sfx"
         val exp = exportDir("q720", sfx)
         val store = s"/tmp/graft_exim/store_q720_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, empDdl(t))
         loadEmp(s, t, "in", "tn"); loadEmp(s, t, "in", "ka")
         HiveQl.sql(s, s"export table $t to '$exp'")
@@ -563,10 +519,10 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s,
             s"import external table $t from '$exp' location '$store'")
           val d = dumpEmp(s, 0, t)
-          rm(s, exp)
+          rmrf(s, exp)
           val c = facts(s, 1, Seq("rows_after_rm_export" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
-          HiveQl.sql(s, s"drop table $t"); rm(s, store)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, store)
           ordered(Seq(d, c))
         }
       },
@@ -582,7 +538,7 @@ object QFileParity19 extends QueryModule {
         val t = s"exim_employee_q721_$sfx"
         val exp = exportDir("q721", sfx)
         val store = s"/tmp/graft_exim/store_q721_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -592,7 +548,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s,
             s"import external table $t from '$exp' location '$store'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp); rm(s, store)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp); rmrf(s, store)
           ordered(Seq(d))
         }
       },
@@ -608,7 +564,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_department_q722_$sfx"
         val exp = exportDir("q722", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, s"create table $t ( dep_id int) stored as textfile")
         loadDept(s, t)
         HiveQl.sql(s, s"grant Select on table $t to user hive_test_user")
@@ -618,7 +574,7 @@ object QFileParity19 extends QueryModule {
           val p = new org.apache.hadoop.fs.Path(exp, "_metadata")
           p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p).toString
         }))
-        rm(s, exp)
+        rmrf(s, exp)
         ordered(Seq(ok))
       },
       Some("SELECT 0 AS sec, 'exported' AS c1, 'true' AS c2")),
@@ -629,7 +585,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_department_q723_$sfx"
         val exp = exportDir("q723", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, s"create table $t ( dep_id int) stored as textfile")
         loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
@@ -640,7 +596,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"grant Update on table $t to user hive_test_user")
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpDept(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -653,7 +609,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q724_$sfx"
         val exp = exportDir("q724", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, empDdl(t))
         loadEmp(s, t, "in", "tn")
         HiveQl.sql(s, s"export table $t to '$exp'")
@@ -664,7 +620,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"grant Update on table $t to user hive_test_user")
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpEmp(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },
@@ -677,7 +633,7 @@ object QFileParity19 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_department_q725_$sfx"
         val exp = exportDir("q725", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s, s"create table $t ( dep_id int) stored as textfile")
         loadDept(s, t)
         HiveQl.sql(s, s"export table $t to '$exp'")
@@ -686,7 +642,7 @@ object QFileParity19 extends QueryModule {
           HiveQl.sql(s, s"grant Create on database importer_q725_$sfx to user hive_test_user")
           HiveQl.sql(s, s"import from '$exp'")
           val d = dumpDept(s, 0, t)
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(d))
         }
       },

@@ -18,7 +18,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity2 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, Src1Cte}
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, Src1Cte, RefData}
 
   /** src1 + srcpart + src in one oracle prelude (join26/join32's shape). */
   private val Src1PartCte = SrcPartCte.stripSuffix(")") + """),
@@ -468,8 +468,8 @@ object QFileParity2 extends QueryModule {
             "output.format.string" = "%1$s %2$s %3$s %4$s %5$s %6$s %7$s %8$s %9$s"
           )
           STORED AS TEXTFILE""")
-        HiveQl.sql(s, "LOAD DATA LOCAL INPATH '/root/reference/data/files/apache.access.log' INTO TABLE " + t)
-        HiveQl.sql(s, "LOAD DATA LOCAL INPATH '/root/reference/data/files/apache.access.2.log' INTO TABLE " + t)
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/apache.access.log' INTO TABLE " + t)
+        HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefData/apache.access.2.log' INTO TABLE " + t)
         HiveQl.sql(s, "SELECT host, identity, user, time, request, status, " +
           "size, referer, agent FROM " + t + " ORDER BY time")
       },

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 20 (round 13): the index .q families —
@@ -23,53 +21,9 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity20 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  /** Real src-shaped table (the .q files index src/srcpart, temp views
-    * here — an index needs a catalog table). */
-  private def srcTable(s: SparkSession, qn: String, sfx: String): String = {
-    val t = s"idxsrc_${qn}_$sfx"
-    fresh(s, t)
-    HiveQl.sql(s, s"create table $t (key string, value string) stored as textfile")
-    HiveQl.sql(s, s"insert overwrite table $t select * from src")
-    t
-  }
-
-  private def srcpartTable(s: SparkSession, qn: String, sfx: String,
-      fmt: String = "TEXTFILE"): String = {
-    val t = s"idxsrcpart_${qn}_$sfx"
-    fresh(s, t)
-    HiveQl.sql(s, s"CREATE TABLE $t (key string, value string) " +
-      s"PARTITIONED BY (ds string, hr string) STORED AS $fmt")
-    for (ds <- Seq("2008-04-08", "2008-04-09"); hr <- Seq("11", "12"))
-      HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t PARTITION (ds='$ds', hr='$hr') " +
-        s"SELECT key, value FROM srcpart WHERE ds = '$ds' AND hr = '$hr'")
-    t
-  }
-
-  private def idxTable(t: String, idx: String) = s"default__${t}_${idx}__"
-
-  private def extractDir(s: SparkSession, qn: String, sfx: String): String =
-    s"/tmp/graft_idx/${qn}_$sfx"
-
-  private def dirNonEmpty(s: SparkSession, d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isFile && st.getLen > 0 && !st.getPath.getName.startsWith("_"))
-  }
+  import QFileParity.{fixtures, fresh, SrcCte, dump, srcTable, srcpartTable, idxTable, extractDir,
+    dirNonEmpty}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** COMPACT shape shared by index_compact_1/_3 and index_auto bases. */
   private def compactSingle(qn: String, qf: String, fmt: String) = QueryDef(
@@ -92,7 +46,7 @@ object QFileParity20 extends QueryModule {
       HiveQl.sql(s, s"""INSERT OVERWRITE DIRECTORY "$ed" SELECT `_bucketname`, """ +
         s"to_json(`_offsets`) FROM $it WHERE key=100")
       val f1 = facts(s, 1, Seq("extracted" -> dirNonEmpty(s, ed).toString))
-      val d2 = dump2(HiveQl.sql(s,
+      val d2 = dump(HiveQl.sql(s,
         s"SELECT key, value FROM $t WHERE key=100 ORDER BY key"), 2, "key", "value")
       HiveQl.sql(s, s"DROP INDEX src_index on $t")
       ordered(Seq(f0, f1, d2))
@@ -124,7 +78,7 @@ object QFileParity20 extends QueryModule {
           to_json(COLLECT_SET(`_offset`)) FROM $it WHERE NOT
           EWAH_BITMAP_EMPTY(`_bitmaps`) AND key=100 GROUP BY `_bucketname`""")
       val f1 = facts(s, 1, Seq("extracted" -> dirNonEmpty(s, ed).toString))
-      val d2 = dump2(HiveQl.sql(s,
+      val d2 = dump(HiveQl.sql(s,
         s"SELECT key, value FROM $t WHERE key=100 ORDER BY key"), 2, "key", "value")
       HiveQl.sql(s, s"DROP INDEX src_index ON $t")
       ordered(Seq(f0, f1, d2))
@@ -158,9 +112,9 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"""INSERT OVERWRITE DIRECTORY "$ed" SELECT `_bucketname`, """ +
           s"to_json(`_offsets`) FROM $it x WHERE x.key=100 AND x.ds = '2008-04-08'")
         val f1 = facts(s, 1, Seq("extracted" -> dirNonEmpty(s, ed).toString))
-        val d2 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d2 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=100 AND ds = '2008-04-08' ORDER BY key"), 2, "key", "value")
-        val d3 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d3 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=100 AND ds = '2008-04-08' and hr = 11 ORDER BY key"),
           3, "key", "value")
         HiveQl.sql(s, s"DROP INDEX srcpart_index_proj on $t")
@@ -192,9 +146,9 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"CREATE INDEX srcpart_rc_index ON TABLE $t(key) " +
           "as 'COMPACT' WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX srcpart_rc_index ON $t REBUILD")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=100 AND ds = '2008-04-08' ORDER BY key"), 0, "key", "value")
-        val d1 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d1 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=100 AND ds = '2008-04-08' and hr = 11 ORDER BY key"),
           1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX srcpart_rc_index on $t")
@@ -217,7 +171,7 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"CREATE INDEX srcpart_index_proj ON TABLE $t(key) " +
           "as 'BITMAP' WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX srcpart_index_proj ON $t REBUILD")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=100 AND ds = '2008-04-08' and hr = 11 ORDER BY key"),
           0, "key", "value")
         HiveQl.sql(s, s"DROP INDEX srcpart_index_proj on $t")
@@ -255,7 +209,7 @@ object QFileParity20 extends QueryModule {
                    FROM $i2 WHERE value = "val_0" AND NOT EWAH_BITMAP_EMPTY(`_bitmaps`)) t
               GROUP BY t.bucketname) x""").collect()(0).getLong(0)
         val f0 = facts(s, 0, Seq("or_buckets_nonempty" -> (or > 0).toString))
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"""SELECT key, value FROM $t WHERE key=0 OR value = "val_0" ORDER BY key"""),
           1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src1_index ON $t")
@@ -293,7 +247,7 @@ object QFileParity20 extends QueryModule {
               ON a.bucketname = b.bucketname AND a.offset = b.offset
               GROUP BY a.bucketname) x""").collect()(0).getLong(0)
         val f0 = facts(s, 0, Seq("and_buckets_nonempty" -> (and > 0).toString))
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"""SELECT key, value FROM $t WHERE key=0 AND value = "val_0" ORDER BY key"""),
           1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src1_index ON $t")
@@ -313,7 +267,7 @@ object QFileParity20 extends QueryModule {
       (s, dir) => {
         val sfx = fixtures(s, dir)
         val t = srcTable(s, "q734", sfx)
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key > 80 AND key < 100 ORDER BY key"), 0, "key", "value")
         HiveQl.sql(s, s"drop index if exists src_index on $t")
         HiveQl.sql(s, s"CREATE INDEX src_index ON TABLE $t(key) as 'COMPACT' " +
@@ -321,7 +275,7 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"ALTER INDEX src_index ON $t REBUILD")
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
         HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
-        val d1 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d1 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key > 80 AND key < 100 ORDER BY key"), 1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_index on $t")
         ordered(Seq(d0, d1))
@@ -346,7 +300,7 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"ALTER INDEX src_part_index ON $t REBUILD")
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
         HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key=86 AND ds='2008-04-09' ORDER BY key"), 0, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_part_index ON $t")
         ordered(Seq(d0))
@@ -371,7 +325,7 @@ object QFileParity20 extends QueryModule {
           "WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_key_index ON $t REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_val_index ON $t REBUILD")
-        val d0 = dump2(HiveQl.sql(s,
+        val d0 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=86 ORDER BY key"), 0, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_key_index ON $t")
         HiveQl.sql(s, s"DROP INDEX src_val_index ON $t")
@@ -391,12 +345,12 @@ object QFileParity20 extends QueryModule {
           s"""SELECT a.key as ak, b.key as bk FROM $t a JOIN $t b ON (a.value = b.value)
              WHERE a.key > 80 AND a.key < 100 AND b.key > 70 AND b.key < 90
              ORDER BY ak, bk""")
-        val d0 = dump2(q, 0, "ak", "bk")
+        val d0 = dump(q, 0, "ak", "bk")
         HiveQl.sql(s, s"drop index if exists src_index on $t")
         HiveQl.sql(s, s"CREATE INDEX src_index ON TABLE $t(key) as 'BITMAP' " +
           "WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_index ON $t REBUILD")
-        val d1 = dump2(q, 1, "ak", "bk")
+        val d1 = dump(q, 1, "ak", "bk")
         HiveQl.sql(s, s"DROP INDEX src_index on $t")
         ordered(Seq(d0, d1))
       },
@@ -421,16 +375,16 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, s"CREATE INDEX src_index ON TABLE $t(key) as 'COMPACT' " +
           "WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_index ON $t REBUILD")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key > 80 AND key < 100 ORDER BY key"), 0, "key", "value")
-        val d1 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d1 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key < 10 OR key > 480 ORDER BY key"), 1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_index on $t")
         HiveQl.sql(s, s"drop index if exists src_val_index on $t")
         HiveQl.sql(s, s"CREATE INDEX src_val_index ON TABLE $t(value) as 'COMPACT' " +
           "WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_val_index ON $t REBUILD")
-        val d2 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+        val d2 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
           "WHERE key > 80 AND key < 100 ORDER BY key"), 2, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_val_index on $t")
         val tp = srcpartTable(s, "q738", sfx)
@@ -439,7 +393,7 @@ object QFileParity20 extends QueryModule {
           "as 'COMPACT' WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_part_index ON $tp " +
           "PARTITION (ds='2008-04-08', hr=11) REBUILD")
-        val d3 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $tp " +
+        val d3 = dump(HiveQl.sql(s, s"SELECT key, value FROM $tp " +
           "WHERE ds='2008-04-09' AND hr=12 AND key < 10 ORDER BY key"),
           3, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_part_index on $tp")
@@ -496,7 +450,7 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, "SET hive.optimize.index.autoupdate=true")
         HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t SELECT * FROM src")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT * FROM $t WHERE key = 86"),
+        val d0 = dump(HiveQl.sql(s, s"SELECT * FROM $t WHERE key = 86"),
           0, "key", "val")
         HiveQl.sql(s, s"DROP table $t")
         ordered(Seq(d0))
@@ -520,7 +474,7 @@ object QFileParity20 extends QueryModule {
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
         HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t SELECT * FROM src")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT * FROM $t WHERE key = 86"),
+        val d0 = dump(HiveQl.sql(s, s"SELECT * FROM $t WHERE key = 86"),
           0, "key", "val")
         HiveQl.sql(s, s"DROP table $t")
         ordered(Seq(d0))

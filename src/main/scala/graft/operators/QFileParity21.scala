@@ -14,19 +14,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity21 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
+  import QFileParity.{fixtures, fresh, SrcCte, dump, RefData}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** SHOW LOCKS rows with the per-run table suffix normalized away. */
   private def lockRows(s: SparkSession, sec: Int, showSql: String,
@@ -182,11 +171,11 @@ object QFileParity21 extends QueryModule {
             .map(r => (r.getString(4), r.getString(3))).sorted
           facts(s, sec, rows)
         }
-        def sel(sec: Int) = dump2(HiveQl.sql(s,
+        def sel(sec: Int) = dump(HiveQl.sql(s,
           s"select key, value from $t order by key, value limit 5"), sec, "key", "value")
         // the .q reads ONLY the granted column under select(key) —
         // column grants are column-precise (Driver.doAuthorization)
-        def selKey(sec: Int) = dump2(HiveQl.sql(s,
+        def selKey(sec: Int) = dump(HiveQl.sql(s,
           s"select key from $t order by key limit 5")
           .selectExpr("key", "cast(null as string) as value"), sec, "key", "value")
         HiveQl.sql(s, s"grant select on table $t to user hive_test_user")
@@ -255,7 +244,7 @@ object QFileParity21 extends QueryModule {
         HiveQl.sql(s, "set hive.session.user=hive_test_user")
         HiveQl.sql(s, s"insert overwrite table $t partition (ds='2010') " +
           s"select key, value from $tmp")
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"select key, ds from $t where ds='2010' order by key limit 5"),
           1, "key", "ds")
         HiveQl.sql(s, "set hive.session.user=" + sys.props.getOrElse("user.name", "root"))
@@ -298,8 +287,8 @@ object QFileParity21 extends QueryModule {
           HiveQl.sql(s, "SHOW TABLES").where("isTemporary = false")
             .count().toString))
         HiveQl.sql(s, "LOAD DATA LOCAL INPATH " +
-          "'/root/reference/data/files/test.dat' INTO TABLE test_table")
-        val d3 = dump2(HiveQl.sql(s,
+          s"'$RefData/test.dat' INTO TABLE test_table")
+        val d3 = dump(HiveQl.sql(s,
           "SELECT * FROM test_table ORDER BY col1"), 3, "col1", "col1")
         HiveQl.sql(s, "USE default")
         HiveQl.sql(s, s"DROP DATABASE $db CASCADE")
@@ -341,8 +330,8 @@ object QFileParity21 extends QueryModule {
         fresh(s, t)
         HiveQl.sql(s, s"create table $t (a int, b int, c int, d int)")
         HiveQl.sql(s, "LOAD DATA LOCAL INPATH " +
-          s"'/root/reference/data/files/in4.txt' INTO TABLE $t")
-        val d0 = dump2(HiveQl.sql(s,
+          s"'$RefData/in4.txt' INTO TABLE $t")
+        val d0 = dump(HiveQl.sql(s,
           s"select a, concat(b, '|', c, '|', d) as bcd from $t"), 0, "a", "bcd")
         val d1 = HiveQl.sql(s,
           s"""select a, count(distinct b) as db, count(distinct c) as dc,

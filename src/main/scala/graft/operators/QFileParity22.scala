@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
@@ -16,19 +16,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity22 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
+  import QFileParity.{fixtures, fresh, SrcCte, dump, RefData}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** The semijoin.q fixture quartet (t1 ⊆ src keys ≤ 10, t2 = doubled,
     * t3 = t1 ∪ t2, t4 empty). */
@@ -67,31 +56,31 @@ object QFileParity22 extends QueryModule {
         fresh(s, lv, rc)
         HiveQl.sql(s, s"CREATE TABLE $lv (inputs string) STORED AS RCFILE")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $lv SELECT key FROM src")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, myCol FROM src LATERAL VIEW " +
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, myCol FROM src LATERAL VIEW " +
           "explode(array(1,2,3)) myTable AS myCol SORT BY key ASC, myCol ASC LIMIT 1"),
           0, "key", "myCol")
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           """SELECT myTable.myCol as c1, myTable2.myCol2 as c2 FROM (select * from src order by key limit 1) s
              LATERAL VIEW explode(array(1,2,3)) myTable AS myCol
              LATERAL VIEW explode(array('a', 'b', 'c')) myTable2 AS myCol2"""),
           1, "c1", "c2")
-        val d2 = dump2(HiveQl.sql(s,
+        val d2 = dump(HiveQl.sql(s,
           """SELECT myTable2.myCol2 as c1, 'x' as c2 FROM (select * from src order by key limit 1) s
              LATERAL VIEW explode(array(array(1,2,3))) myTable AS myCol
              LATERAL VIEW explode(myTable.myCol) myTable2 AS myCol2"""),
           2, "c1", "c2")
         // the .q refs the table as tmp_PYANG_lv too — names are
         // case-insensitive; both forms must read
-        val d3 = dump2(HiveQl.sql(s, s"SELECT myCol, 'x' as c2 from " +
+        val d3 = dump(HiveQl.sql(s, s"SELECT myCol, 'x' as c2 from " +
           s"(select * from ${lv.toUpperCase} order by inputs limit 1) t " +
           "LATERAL VIEW explode(array(1,2,3)) myTab as myCol"), 3, "myCol", "c2")
         HiveQl.sql(s, s"CREATE TABLE $rc (key string, value array<string>) STORED AS RCFILE")
         HiveQl.sql(s, s"INSERT OVERWRITE TABLE $rc SELECT key, array(value) " +
           "FROM src ORDER BY key LIMIT 20")
-        val d4 = dump2(HiveQl.sql(s,
+        val d4 = dump(HiveQl.sql(s,
           s"SELECT key, myCol from $rc LATERAL VIEW explode(value) myTable AS myCol"),
           4, "key", "myCol")
-        val d5 = dump2(HiveQl.sql(s,
+        val d5 = dump(HiveQl.sql(s,
           s"""SELECT subq.key as key, subq.myCol as myCol FROM (
               SELECT key, myCol from $rc LATERAL VIEW explode(value) myTable AS myCol
              ) subq"""), 5, "key", "myCol")
@@ -117,7 +106,7 @@ object QFileParity22 extends QueryModule {
         val sfx = fixtures(s, dir)
         val (t1, t2, t3, t4) = semiFixtures(s, "q752", sfx)
         def leg(sec: Int, sql: String, c1: String = "key", c2: String = "value") =
-          dump2(HiveQl.sql(s, sql), sec, c1, c2)
+          dump(HiveQl.sql(s, sql), sec, c1, c2)
         val legs = Seq(
           leg(0, s"select * from $t1 a left semi join $t2 b on a.key=b.key"),
           leg(1, s"select * from $t2 a left semi join $t1 b on b.key=a.key"),
@@ -234,20 +223,20 @@ object QFileParity22 extends QueryModule {
         for ((t, f) <- Seq(a -> "T1", b -> "T2", c -> "T3", d4 -> "T1")) {
           HiveQl.sql(s, s"CREATE TABLE $t(key STRING, val STRING) STORED AS TEXTFILE")
           HiveQl.sql(s, "LOAD DATA LOCAL INPATH " +
-            s"'/root/reference/data/files/$f.txt' INTO TABLE $t")
+            s"'$RefData/$f.txt' INTO TABLE $t")
         }
         HiveQl.sql(s, s"CREATE TABLE $dj(key INT, value STRING) STORED AS TEXTFILE")
         HiveQl.sql(s, s"FROM src src1 JOIN src src2 ON (src1.key = src2.key) " +
           s"INSERT OVERWRITE TABLE $dj SELECT src1.key, src2.value")
         val c0 = facts(s, 0, Seq("dest_rows" ->
           HiveQl.sql(s, s"select count(1) from $dj").collect()(0).getLong(0).toString))
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"""SELECT /*+ STREAMTABLE(a) */ concat(a.key,'|',b.val,'|',c.val) as c1,
               d.val as c2
             FROM $a a JOIN $b b ON a.key = b.key
                       JOIN $c c ON b.key = c.key
                       JOIN $d4 d ON c.key = d.key"""), 1, "c1", "c2")
-        val d2 = dump2(HiveQl.sql(s,
+        val d2 = dump(HiveQl.sql(s,
           s"""SELECT concat(x.key, '|', Y.value) as c1, 'x' as c2 FROM
               (SELECT src.* FROM src) x JOIN (SELECT src.* FROM src) Y
               ON (x.key = Y.key) WHERE x.key < 10"""), 2, "c1", "c2")
@@ -291,7 +280,7 @@ object QFileParity22 extends QueryModule {
           (3, "SELECT x.key as key, x.value as v1 FROM SRC x where x.key = 20 CLUSTER BY v1"))
         legs.map { case (sec, q) =>
           val df = HiveQl.sql(s, q)
-          dump2(df.toDF("key", "value"), sec, "key", "value")
+          dump(df.toDF("key", "value"), sec, "key", "value")
         }.reduce(_ union _).orderBy("sec", "c1", "c2")
       },
       Some(s"""$SrcCte, legs AS (
@@ -363,16 +352,16 @@ object QFileParity22 extends QueryModule {
         fresh(s, tn, tt, tb)
         HiveQl.sql(s, s"create table $tn(a int) stored as textfile")
         HiveQl.sql(s, "load data local inpath " +
-          s"'/root/reference/data/files/test.dat' overwrite into table $tn")
-        val d0 = dump2(HiveQl.sql(s, s"select null as a, null as b from $tn"),
+          s"'$RefData/test.dat' overwrite into table $tn")
+        val d0 = dump(HiveQl.sql(s, s"select null as a, null as b from $tn"),
           0, "a", "b")
         HiveQl.sql(s, s"create table $tt(a int, b string)")
         HiveQl.sql(s, s"insert overwrite table $tt select null, null from $tn")
-        val d1 = dump2(HiveQl.sql(s, s"select * from $tt"), 1, "a", "b")
+        val d1 = dump(HiveQl.sql(s, s"select * from $tt"), 1, "a", "b")
         HiveQl.sql(s, s"""create table $tb(a int, b string) row format serde
           "org.apache.hadoop.hive.serde2.lazybinary.LazyBinarySerDe"""")
         HiveQl.sql(s, s"insert overwrite table $tb select null, null from $tn")
-        val d2 = dump2(HiveQl.sql(s, s"select * from $tb"), 2, "a", "b")
+        val d2 = dump(HiveQl.sql(s, s"select * from $tb"), 2, "a", "b")
         ordered(Seq(d0, d1, d2))
       },
       Some("""SELECT s.sec, CAST(NULL AS VARCHAR) AS c1, CAST(NULL AS VARCHAR) AS c2
@@ -385,13 +374,13 @@ object QFileParity22 extends QueryModule {
       "q760_qf_explode_null",
       (s, dir) => {
         fixtures(s, dir)
-        val d0 = dump2(HiveQl.sql(s,
+        val d0 = dump(HiveQl.sql(s,
           """SELECT explode(col) AS myCol FROM
               ((SELECT array(1,2,3) AS col FROM src LIMIT 1)
                UNION ALL
                (SELECT IF(false, array(1,2,3), NULL) AS col FROM src LIMIT 1)) a""")
           .select(col("myCol"), lit("x").as("c2")), 0, "myCol", "c2")
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           """SELECT explode(col) AS (myCol1,myCol2) FROM
               ((SELECT map(1,'one',2,'two',3,'three') AS col FROM src LIMIT 1)
                UNION ALL

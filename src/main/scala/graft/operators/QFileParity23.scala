@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 23 (round 13): view and metadata-listing
@@ -14,19 +13,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity23 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
+  import QFileParity.{fixtures, fresh, SrcCte, dump}
+  import QFileParity.Pairs.{facts, ordered}
 
   private def partRows(s: SparkSession, sec: Int, sql: String): DataFrame =
     facts(s, sec, HiveQl.sql(s, sql).collect().toSeq
@@ -59,12 +47,12 @@ object QFileParity23 extends QueryModule {
           s"as select * from $t")
         HiveQl.sql(s, s"alter view $v add partition (ds='2008-04-08',hr='11')")
         HiveQl.sql(s, s"alter view $v add partition (ds='2008-04-08',hr='12')")
-        val d0 = dump2(HiveQl.sql(s, s"select key, value from $v " +
+        val d0 = dump(HiveQl.sql(s, s"select key, value from $v " +
           "where value='val_409' and ds='2008-04-08' and hr='11'"), 0, "key", "value")
         val p1 = partRows(s, 1, s"show partitions $v")
         HiveQl.sql(s, s"create or replace view $v partitioned on (ds, hr) " +
           s"as select value, ds, hr from $t")
-        val d2 = dump2(HiveQl.sql(s, s"select value, ds from $v " +
+        val d2 = dump(HiveQl.sql(s, s"select value, ds from $v " +
           "where value='val_409' and ds='2008-04-08' and hr='11'"), 2, "value", "ds")
         val p3 = partRows(s, 3, s"show partitions $v") // replace reset it
         HiveQl.sql(s, s"drop view $v")
@@ -95,8 +83,8 @@ object QFileParity23 extends QueryModule {
         HiveQl.sql(s, s"drop view if exists $v")
         HiveQl.sql(s, s"""CREATE VIEW $v PARTITIONED ON (value) AS
           SELECT key, value FROM $base WHERE key=86""")
-        val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $v"), 0, "key", "value")
-        val d1 = dump2(HiveQl.sql(s, s"SELECT key, 'x' as c2 FROM $v"), 1, "key", "c2")
+        val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $v"), 0, "key", "value")
+        val d1 = dump(HiveQl.sql(s, s"SELECT key, 'x' as c2 FROM $v"), 1, "key", "c2")
         HiveQl.sql(s, s"ALTER VIEW $v " +
           "ADD PARTITION (value='val_86') PARTITION (value='val_xyz')")
         HiveQl.sql(s, s"ALTER VIEW $v ADD IF NOT EXISTS PARTITION (value='val_xyz')")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 24 (round 14): the index .q long tail —
@@ -17,51 +15,9 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity24 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  private def srcTable(s: SparkSession, qn: String, sfx: String): String = {
-    val t = s"idxsrc_${qn}_$sfx"
-    fresh(s, t)
-    HiveQl.sql(s, s"create table $t (key string, value string) stored as textfile")
-    HiveQl.sql(s, s"insert overwrite table $t select * from src")
-    t
-  }
-
-  private def srcpartTable(s: SparkSession, qn: String, sfx: String,
-      fmt: String = "TEXTFILE"): String = {
-    val t = s"idxsrcpart_${qn}_$sfx"
-    fresh(s, t)
-    HiveQl.sql(s, s"CREATE TABLE $t (key string, value string) " +
-      s"PARTITIONED BY (ds string, hr string) STORED AS $fmt")
-    for (ds <- Seq("2008-04-08", "2008-04-09"); hr <- Seq("11", "12"))
-      HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t PARTITION (ds='$ds', hr='$hr') " +
-        s"SELECT key, value FROM srcpart WHERE ds = '$ds' AND hr = '$hr'")
-    t
-  }
-
-  private def idxTable(t: String, idx: String) = s"default__${t}_${idx}__"
-
-  private def extractDir(s: SparkSession, qn: String, sfx: String): String =
-    s"/tmp/graft_idx/${qn}_$sfx"
-
-  private def dirNonEmpty(s: SparkSession, d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isFile && st.getLen > 0 && !st.getPath.getName.startsWith("_"))
-  }
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, dump, srcTable, srcpartTable, idxTable,
+    extractDir, dirNonEmpty}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** index_[bitmap_]compression shared shape: hive.exec.compress.result
     * around an indexed range scan. */
@@ -77,7 +33,7 @@ object QFileParity24 extends QueryModule {
       HiveQl.sql(s, s"ALTER INDEX src_index ON $t REBUILD")
       HiveQl.sql(s, "SET hive.optimize.index.filter=true")
       HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
-      val d0 = dump2(HiveQl.sql(s, s"SELECT key, value FROM $t " +
+      val d0 = dump(HiveQl.sql(s, s"SELECT key, value FROM $t " +
         "WHERE key > 80 AND key < 100 ORDER BY key"), 0, "key", "value")
       HiveQl.sql(s, s"DROP INDEX src_index on $t")
       HiveQl.sql(s, "SET hive.exec.compress.result=false")
@@ -96,7 +52,7 @@ object QFileParity24 extends QueryModule {
       val sfx = fixtures(s, dir)
       val a = srcTable(s, qn, sfx)
       val b = srcpartTable(s, qn, sfx)
-      def body(sec: Int) = dump2(HiveQl.sql(s,
+      def body(sec: Int) = dump(HiveQl.sql(s,
         s"""SELECT a.key, a.value FROM $a a JOIN $b b ON (a.key = b.key)
             WHERE a.key > 80 AND a.key < 100 AND b.key > 70 AND b.key < 90
             ORDER BY a.key"""), sec, "key", "value")
@@ -141,11 +97,11 @@ object QFileParity24 extends QueryModule {
           "SET hive.input.format=org.apache.hadoop.hive.ql.io.HiveInputFormat")
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
         HiveQl.sql(s, "SET hive.optimize.index.filter.compact.minsize=0")
-        val d0 = dump2(HiveQl.sql(s,
+        val d0 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 ORDER BY key"), 0, "key", "value")
         HiveQl.sql(s,
           "SET hive.input.format=org.apache.hadoop.hive.ql.io.CombineHiveInputFormat")
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 ORDER BY key"), 1, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_index on $t")
         ordered(Seq(d0, d1))
@@ -169,7 +125,7 @@ object QFileParity24 extends QueryModule {
       (s, dir) => {
         val sfx = fixtures(s, dir)
         val t = srcTable(s, "q778", sfx)
-        val d0 = dump2(HiveQl.sql(s,
+        val d0 = dump(HiveQl.sql(s,
           s"""SELECT key, value FROM $t WHERE key=0 AND value = "val_0" ORDER BY key"""),
           0, "key", "value")
         HiveQl.sql(s, s"drop index if exists src1_index on $t")
@@ -202,7 +158,7 @@ object QFileParity24 extends QueryModule {
               GROUP BY a.bucketname""")
         val f2 = facts(s, 2, Seq("extracted" -> dirNonEmpty(s, ed).toString))
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
-        val d3 = dump2(HiveQl.sql(s,
+        val d3 = dump(HiveQl.sql(s,
           s"""SELECT key, value FROM $t WHERE key=0 AND value = "val_0" ORDER BY key"""),
           3, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src1_index ON $t")
@@ -232,7 +188,7 @@ object QFileParity24 extends QueryModule {
           "WITH DEFERRED REBUILD")
         HiveQl.sql(s, s"ALTER INDEX src_part_index ON $t REBUILD")
         HiveQl.sql(s, "SET hive.optimize.index.filter=true")
-        val d0 = dump2(HiveQl.sql(s,
+        val d0 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 AND ds='2008-04-09' ORDER BY key"),
           0, "key", "value")
         HiveQl.sql(s, s"DROP INDEX src_part_index ON $t")
@@ -272,7 +228,7 @@ object QFileParity24 extends QueryModule {
               WHERE NOT EWAH_BITMAP_EMPTY(`_bitmaps`) AND x.key=100
                 AND x.ds = '2008-04-08' GROUP BY `_bucketname`""")
         val f1 = facts(s, 1, Seq("extracted_ds" -> dirNonEmpty(s, ed).toString))
-        val d2 = dump2(HiveQl.sql(s,
+        val d2 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 AND ds = '2008-04-08' ORDER BY key"),
           2, "key", "value")
         HiveQl.sql(s,
@@ -281,7 +237,7 @@ object QFileParity24 extends QueryModule {
               WHERE NOT EWAH_BITMAP_EMPTY(`_bitmaps`) AND x.key=100
                 AND x.ds = '2008-04-08' and x.hr = 11 GROUP BY `_bucketname`""")
         val f3 = facts(s, 3, Seq("extracted_ds_hr" -> dirNonEmpty(s, ed).toString))
-        val d4 = dump2(HiveQl.sql(s,
+        val d4 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 AND ds = '2008-04-08' and hr = 11 " +
             "ORDER BY key"), 4, "key", "value")
         HiveQl.sql(s, s"DROP INDEX srcpart_rc_index on $t")
@@ -295,7 +251,7 @@ object QFileParity24 extends QueryModule {
               WHERE NOT EWAH_BITMAP_EMPTY(`_bitmaps`) AND key=100
               GROUP BY `_bucketname`""")
         val f5 = facts(s, 5, Seq("extracted_all" -> dirNonEmpty(s, ed).toString))
-        val d6 = dump2(HiveQl.sql(s,
+        val d6 = dump(HiveQl.sql(s,
           s"SELECT key, value FROM $t WHERE key=100 ORDER BY key"), 6, "key", "value")
         HiveQl.sql(s, s"DROP INDEX srcpart_rc_index on $t")
         HiveQl.sql(s, s"DROP TABLE $t")
@@ -419,7 +375,7 @@ object QFileParity24 extends QueryModule {
         val f0 = facts(s, 0, Seq("stale_idx_key86" -> HiveQl.sql(s,
           s"SELECT count(*) FROM $it WHERE key = 86 AND foo='bar'")
           .collect()(0).getLong(0).toString))
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"SELECT key, val FROM $t WHERE key = 86 AND foo = 'bar'"), 1, "key", "val")
         HiveQl.sql(s, "SET hive.optimize.index.filter=false")
         HiveQl.sql(s, s"DROP INDEX temp_index on $t")

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 25 (round 14): the stats .q tail —
@@ -19,44 +18,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity25 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
-
-  private def csv(name: String): String =
-    s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
-        auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'}))"""
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  private def tblStats(s: SparkSession, sec: Int, t: String): DataFrame = {
-    val meta = s.sessionState.catalog.getTableMetadata(
-      s.sessionState.sqlParser.parseTableIdentifier(t))
-    val p = meta.properties
-    facts(s, sec, Seq(
-      "tbl:numRows" -> p.getOrElse("numRows", "<none>"),
-      "tbl:hasFiles" -> p.get("numFiles").exists(_.toLong > 0).toString,
-      "tbl:hasBytes" -> p.get("totalSize").exists(_.toLong > 0).toString))
-  }
-
-  private def partStats(s: SparkSession, sec: Int, t: String): DataFrame = {
-    val ti = s.sessionState.sqlParser.parseTableIdentifier(t)
-    val rows = s.sessionState.catalog.listPartitions(ti).map { p =>
-      val spec = p.spec.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/")
-      s"part:$spec" -> p.parameters.getOrElse("numRows", "<none>")
-    }.sortBy(_._1)
-    facts(s, sec, rows)
-  }
+  import QFileParity.{fixtures, fresh, SrcCte, RefData, csv, dump, tblStats, partStats}
+  import QFileParity.Pairs.{facts, ordered}
 
   /** `totalNumberFiles:` value from SHOW TABLE EXTENDED rows. */
   private def extFiles(s: SparkSession, t: String, spec: Option[String] = None): String =

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 26 (round 14): the exim long tail noted
@@ -14,25 +12,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity26 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh}
-
-  private val TestDat = "/root/reference/data/files/test.dat"
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def rm(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def exportDir(qn: String, sfx: String) = s"/tmp/graft_exim/${qn}_$sfx"
+  import QFileParity.{fixtures, fresh, rmrf, exportDir, loadEmp, dumpEmp, inImporterDb, empLegSql}
+  import QFileParity.Pairs.{facts, ordered}
 
   private def empDdl(t: String, external: Boolean = false,
       location: Option[String] = None): String =
@@ -44,33 +25,6 @@ object QFileParity26 extends QueryModule {
         stored as textfile
         ${location.map(l => s"location '$l'").getOrElse("")}
         tblproperties("creator"="krishna")"""
-
-  private def loadEmp(s: SparkSession, t: String, co: String, st: String): Unit =
-    HiveQl.sql(s, s"""load data local inpath "$TestDat"
-      into table $t partition (emp_country="$co", emp_state="$st")""")
-
-  private def dumpEmp(s: SparkSession, sec: Int, t: String): DataFrame =
-    HiveQl.sql(s, s"select * from $t").select(lit(sec).as("sec"),
-      col("emp_id").cast("string").as("c1"),
-      concat(col("emp_country"), lit("/"), col("emp_state")).as("c2"))
-      .localCheckpoint(true)
-
-  private def inImporterDb(s: SparkSession, qn: String, sfx: String)(
-      body: => DataFrame): DataFrame = {
-    val db = s"importer_${qn}_$sfx"
-    HiveQl.sql(s, s"drop database if exists $db cascade")
-    HiveQl.sql(s, s"create database $db")
-    HiveQl.sql(s, s"use $db")
-    try body finally {
-      HiveQl.sql(s, "use default")
-      HiveQl.sql(s, s"drop database if exists $db cascade")
-    }
-  }
-
-  private def empLegSql(sec: Int, parts: Seq[(String, String)]): String =
-    parts.map { case (co, st) =>
-      s"""SELECT $sec AS sec, CAST(dep_id AS VARCHAR) AS c1, '$co/$st' AS c2 FROM dept"""
-    }.mkString(" UNION ALL ")
 
   private val DeptOracle =
     (1 to 6).map(i => s"($i)").mkString("dept(dep_id) AS (VALUES ", ",", ")")
@@ -87,7 +41,7 @@ object QFileParity26 extends QueryModule {
         val sfx = fixtures(s, dir)
         val t = s"exim_employee_q798_$sfx"
         val exp = exportDir("q798", sfx)
-        fresh(s, t); rm(s, exp)
+        fresh(s, t); rmrf(s, exp)
         HiveQl.sql(s,
           s"""create table $t (emp_id int comment 'employee id', emp_name string,
               emp_dob string comment 'employee date of birth', emp_sex string comment 'M/F')
@@ -121,7 +75,7 @@ object QFileParity26 extends QueryModule {
               .collect().map(_.getString(0))
               .find(_.startsWith("partitioned:"))
               .map(_.stripPrefix("partitioned:")).getOrElse("<none>")))
-          HiveQl.sql(s, s"drop table $t"); rm(s, exp)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, exp)
           ordered(Seq(f0))
         }
       },
@@ -141,7 +95,7 @@ object QFileParity26 extends QueryModule {
         val t = s"exim_employee_q799_$sfx"
         val exp = exportDir("q799", sfx)
         val store = s"/tmp/graft_exim/store_q799_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -153,10 +107,10 @@ object QFileParity26 extends QueryModule {
           HiveQl.sql(s, s"""import external table $t partition
             (emp_country="us", emp_state="tn") from '$exp'""")
           val d0 = dumpEmp(s, 0, t)
-          rm(s, exp); s.catalog.refreshTable(t)
+          rmrf(s, exp); s.catalog.refreshTable(t)
           val f1 = facts(s, 1, Seq("rows_after_rm_export" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
-          rm(s, store); s.catalog.refreshTable(t)
+          rmrf(s, store); s.catalog.refreshTable(t)
           val f2 = facts(s, 2, Seq("rows_after_rm_store" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           HiveQl.sql(s, s"drop table $t")
@@ -180,7 +134,7 @@ object QFileParity26 extends QueryModule {
         val exp = exportDir("q800", sfx)
         val store = s"/tmp/graft_exim/store_q800_$sfx"
         val store2 = s"/tmp/graft_exim/store2_q800_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store); rm(s, store2)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store); rmrf(s, store2)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -200,12 +154,12 @@ object QFileParity26 extends QueryModule {
               .exists(_.stripPrefix("totalNumberFiles:").toLong > 0).toString,
             "part_loc_in_store" -> ext.find(_.startsWith("location:"))
               .exists(_.contains(store.stripPrefix("file:"))).toString))
-          rm(s, exp); s.catalog.refreshTable(t)
+          rmrf(s, exp); s.catalog.refreshTable(t)
           val d1 = dumpEmp(s, 1, t)
-          rm(s, store); s.catalog.refreshTable(t)
+          rmrf(s, store); s.catalog.refreshTable(t)
           val f2 = facts(s, 2, Seq("rows_after_rm_store" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
-          HiveQl.sql(s, s"drop table $t"); rm(s, store2)
+          HiveQl.sql(s, s"drop table $t"); rmrf(s, store2)
           ordered(Seq(f0, d1, f2))
         }
       },
@@ -228,7 +182,7 @@ object QFileParity26 extends QueryModule {
         val exp = exportDir("q801", sfx)
         val store = s"/tmp/graft_exim/store_q801_$sfx"
         val store2 = s"/tmp/graft_exim/store2_q801_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store); rm(s, store2)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store); rmrf(s, store2)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -245,9 +199,9 @@ object QFileParity26 extends QueryModule {
           val f0 = facts(s, 0, Seq(
             "n_partitions" -> parts.length.toString,
             "has_ap" -> parts.exists(_.contains("emp_state=ap")).toString))
-          rm(s, exp); s.catalog.refreshTable(t)
+          rmrf(s, exp); s.catalog.refreshTable(t)
           val d1 = dumpEmp(s, 1, t)
-          rm(s, store); s.catalog.refreshTable(t)
+          rmrf(s, store); s.catalog.refreshTable(t)
           val f2 = facts(s, 2, Seq("rows_after_rm_store" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           HiveQl.sql(s, s"drop table $t")
@@ -270,7 +224,7 @@ object QFileParity26 extends QueryModule {
         val t = s"exim_employee_q802_$sfx"
         val exp = exportDir("q802", sfx)
         val store = s"/tmp/graft_exim/store_q802_$sfx"
-        fresh(s, t); rm(s, exp); rm(s, store)
+        fresh(s, t); rmrf(s, exp); rmrf(s, store)
         HiveQl.sql(s, empDdl(t))
         for ((co, st) <- Seq("in" -> "tn", "in" -> "ka", "us" -> "tn", "us" -> "ka"))
           loadEmp(s, t, co, st)
@@ -284,10 +238,10 @@ object QFileParity26 extends QueryModule {
             s.sessionState.catalog.getTableMetadata(
               s.sessionState.sqlParser.parseTableIdentifier(t))
               .location.toString.contains(store.stripPrefix("file:")).toString))
-          rm(s, exp); s.catalog.refreshTable(t)
+          rmrf(s, exp); s.catalog.refreshTable(t)
           val f2 = facts(s, 2, Seq("rows_after_rm_export" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
-          rm(s, store); s.catalog.refreshTable(t)
+          rmrf(s, store); s.catalog.refreshTable(t)
           val f3 = facts(s, 3, Seq("rows_after_rm_store" ->
             HiveQl.sql(s, s"select count(1) from $t").collect()(0).getLong(0).toString))
           HiveQl.sql(s, s"drop table $t")

@@ -18,22 +18,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity27 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"), col("c1"), col("c2"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1", "c2")
-
-  private def dump2(df: DataFrame, sec: Int, c1: String, c2: String): DataFrame =
-    df.select(lit(sec).as("sec"), col(c1).cast("string").as("c1"),
-      col(c2).cast("string").as("c2")).localCheckpoint(true)
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, dump, cnt, leg, RefData, csv, legSql}
+  import QFileParity.Pairs.{facts, ordered}
 
   private def dataFiles(s: SparkSession, table: String): Seq[String] = {
     val meta = s.sessionState.catalog.getTableMetadata(
@@ -52,24 +38,6 @@ object QFileParity27 extends QueryModule {
     out.toSeq
   }
 
-  /** Standardized leg dump: every column coalesced to 'NULL' strings and
-    * |-joined, so heterogeneous legs union into one (sec, c1) frame that
-    * both sides can totally order. */
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    // positional rename first: select-* self-joins carry duplicate column
-    // names, which would make by-name references ambiguous
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private val RefData = "/root/reference/data/files"
-
-  private def csv(name: String): String =
-    s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
-        auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'}))"""
-
   /** Java String.hashCode in DuckDB (the q89 recipe): fold c*31+ch under
     * mod 2^32 (multiplication-homomorphic ≡ Java's int wrap), then recentre
     * into signed-int range. */
@@ -79,10 +47,6 @@ object QFileParity27 extends QueryModule {
           i -> CAST(ascii($c[i:i]) AS BIGINT))),
         (a, b) -> (a * 31 + b) % 4294967296)
         + 2147483648) % 4294967296) - 2147483648)"""
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -563,7 +527,7 @@ object QFileParity27 extends QueryModule {
           HiveQl.sql(s, s"show grant user hive_test_user on table $t")
             .collect().toSeq.map(r => (r.getString(4), r.getString(3))).sorted)
         HiveQl.sql(s, "set hive.session.user=hive_test_user")
-        val d1 = dump2(HiveQl.sql(s,
+        val d1 = dump(HiveQl.sql(s,
           s"select key from $t order by key limit 20")
           .selectExpr("key", "'k' as tag"), 1, "key", "tag")
         HiveQl.sql(s, "set hive.session.user=" + sys.props.getOrElse("user.name", "root"))
@@ -658,7 +622,7 @@ object QFileParity27 extends QueryModule {
             HiveQl.sql(s, s"show grant user hive_test_user on table $t(key)")
               .collect().toSeq.map(r => (r.getString(4), r.getString(3))).sorted)
           HiveQl.sql(s, "set hive.session.user=hive_test_user")
-          val d4 = dump2(HiveQl.sql(s,
+          val d4 = dump(HiveQl.sql(s,
             s"select key from $t where ds>='2010' order by key limit 20")
             .selectExpr("key", "'k' as tag"), sec + 4, "key", "tag")
           HiveQl.sql(s, "set hive.session.user=" + sys.props.getOrElse("user.name", "root"))

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 28 (round 15): the in-reach singles from
@@ -13,37 +12,12 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity28 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def csv(name: String): String =
-    s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
-        auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'}))"""
+  import QFileParity.{fixtures, fresh, SrcCte, RefData, leg, legSql, csv, cnt}
+  import QFileParity.Lines.facts
 
   private def csvStr(name: String): String =
     s"""(SELECT * FROM read_csv('$RefData/$name.txt', delim=chr(1), header=false,
         auto_detect=false, quote='', columns={'key': 'VARCHAR', 'val': 'VARCHAR'}))"""
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 29 (round 15): bucket_groupby +
@@ -11,34 +9,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity29 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def jh(c: String): String =
-    s"""(((list_reduce(list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(1, length($c) + 1),
-          i -> CAST(ascii(($c)[i:i]) AS BIGINT))),
-        (a, b) -> (a * 31 + b) % 4294967296)
-        + 2147483648) % 4294967296) - 2147483648)"""
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, leg, legSql, jh}
+  import QFileParity.Lines.{facts, ordered}
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
@@ -11,37 +11,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity30 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def jh(c: String): String =
-    s"""(((list_reduce(list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(1, length($c) + 1),
-          i -> CAST(ascii(($c)[i:i]) AS BIGINT))),
-        (a, b) -> (a * 31 + b) % 4294967296)
-        + 2147483648) % 4294967296) - 2147483648)"""
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, leg, legSql, jh, cnt}
+  import QFileParity.Lines.{facts, ordered}
 
   /** The .q's INPUTFORMAT/OUTPUTFORMAT create + filtered insert + dump. */
   private def fileformatBody(qn: String, in: String, out: String) = QueryDef(

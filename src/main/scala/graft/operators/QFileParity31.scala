@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 31 (round 15): CLI/session singles —
@@ -12,30 +11,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity31 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, leg, legSql, cnt, RefData}
+  import QFileParity.Lines.{facts, ordered}
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -338,14 +315,14 @@ object QFileParity31 extends QueryModule {
         HiveQl.sql(s, "set hive.heartbeat.interval=5")
         HiveQl.sql(s, s"CREATE TABLE $t(key int, value string) STORED AS TEXTFILE")
         HiveQl.sql(s, "LOAD DATA LOCAL INPATH " +
-          s"'/root/reference/data/files/kv6.txt' INTO TABLE $t")
+          s"'$RefData/kv6.txt' INTO TABLE $t")
         val f = facts(s, 0, Seq("join_cnt" ->
           cnt(s, s"select count(1) from $t t1 join $t t2 on t1.key=t2.key").toString))
         HiveQl.sql(s, s"drop table $t")
         f.orderBy("sec", "c1")
       },
       Some(s"""WITH kv6 AS (SELECT * FROM read_csv(
-          '/root/reference/data/files/kv6.txt', delim=chr(1), header=false,
+          '$RefData/kv6.txt', delim=chr(1), header=false,
           auto_detect=false, quote='', columns={'key': 'INT', 'value': 'VARCHAR'})),
         j AS (SELECT count(1) AS c FROM kv6 a JOIN kv6 b ON a.key = b.key)
         SELECT 0 AS sec, 'join_cnt|' || CAST(c AS VARCHAR) AS c1 FROM j""")),

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 32 (round 15): the mapjoin .q family,
@@ -15,30 +13,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity32 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, Src1Cte, SrcPartCte, leg, legSql, RefData}
+  import QFileParity.Lines.{facts, ordered}
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -196,7 +172,7 @@ object QFileParity32 extends QueryModule {
         fixtures(s, dir)
         val bos = new java.io.ByteArrayOutputStream()
         val rdr = new java.io.BufferedReader(new java.io.StringReader(
-          "dfs -cat file:///root/reference/data/files/kv1.txt;"))
+          s"dfs -cat file://$RefData/kv1.txt;"))
         graft.GraftSql.run(s, rdr, new java.io.PrintStream(bos),
           interactive = false, silent = true)
         val lines = bos.toString("UTF-8").split("\n").count(_.contains("val_"))
@@ -224,7 +200,7 @@ object QFileParity32 extends QueryModule {
         HiveQl.sql(s, s"""create table $t ( dep_id int comment "department id")
           stored as textfile
           tblproperties("creator"="krishna")""")
-        HiveQl.sql(s, s"""load data local inpath "/root/reference/data/files/test.dat" into table $t""")
+        HiveQl.sql(s, s"""load data local inpath "$RefData/test.dat" into table $t""")
         HiveQl.sql(s, s"export table $t to '$exp'")
         HiveQl.sql(s, s"drop table $t")
         HiveQl.sql(s, s"drop database if exists $db cascade")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 33 (round 15): the comprehensive
@@ -10,27 +8,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity33 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def legSql(sec: Int, cols: Seq[String], from: String): String =
-    s"SELECT $sec AS sec, concat_ws('|', " + cols.map(c =>
-      s"COALESCE(CAST($c AS VARCHAR), 'NULL')").mkString(", ") + s") AS c1 $from"
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
+  import QFileParity.{fixtures, fresh, SrcCte, leg, legSql, RefData}
+  import QFileParity.Lines.{facts, ordered}
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -135,7 +114,7 @@ object QFileParity33 extends QueryModule {
         HiveQl.sql(s, s"CREATE TABLE $sb(key int, value string) CLUSTERED BY (key) " +
           "INTO 2 BUCKETS STORED AS TEXTFILE")
         for (f <- Seq("srcbucket0", "srcbucket1"))
-          HiveQl.sql(s, s"load data local inpath '/root/reference/data/files/$f.txt' " +
+          HiveQl.sql(s, s"load data local inpath '$RefData/$f.txt' " +
             s"INTO TABLE $sb")
         HiveQl.sql(s, s"""CREATE VIEW ${v(13)} AS
           SELECT s.key
@@ -181,10 +160,10 @@ object QFileParity33 extends QueryModule {
           d11, d12, d12b, d13, d14, d15, d16, f17))
       },
       Some {
-        val sb = """sbf AS (SELECT * FROM read_csv('/root/reference/data/files/srcbucket0.txt',
+        val sb = s"""sbf AS (SELECT * FROM read_csv('$RefData/srcbucket0.txt',
             delim=chr(1), header=false, auto_detect=false, quote='',
             columns={'key': 'INT', 'value': 'VARCHAR'})
-          UNION ALL SELECT * FROM read_csv('/root/reference/data/files/srcbucket1.txt',
+          UNION ALL SELECT * FROM read_csv('$RefData/srcbucket1.txt',
             delim=chr(1), header=false, auto_detect=false, quote='',
             columns={'key': 'INT', 'value': 'VARCHAR'}))"""
         s"""$SrcCte, $sb,

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 34 (round 15): protectmode.q (table- and
@@ -11,34 +10,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity34 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh}
-
-  private val TestDat = "/root/reference/data/files/test.dat"
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
-
-  private def rmrf(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  import QFileParity.{fixtures, fresh, TestDat, cnt, rmrf}
+  import QFileParity.Lines.{facts, ordered}
 
   private def inImporter(s: SparkSession, db: String)(body: => DataFrame): DataFrame = {
     HiveQl.sql(s, s"drop database if exists $db cascade")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 35 (round 15): the small-singles tail —
@@ -13,28 +12,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity35 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, RefData, leg, cnt}
+  import QFileParity.Lines.{facts, ordered}
 
   private def provider(s: SparkSession, t: String): String =
     s.sessionState.catalog.getTableMetadata(TableIdentifier(t))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
@@ -13,26 +13,9 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity36 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, Src1Cte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, Src1Cte, leg, cnt, RefRoot, RefData,
+    RefScripts}
+  import QFileParity.Lines.{facts, ordered}
 
   private def descCols(s: SparkSession, t: String): String =
     HiveQl.sql(s, s"describe $t").collect()
@@ -107,7 +90,7 @@ object QFileParity36 extends QueryModule {
         HiveQl.sql(s, s"CREATE TABLE $t(key STRING, value STRING) " +
           "ROW FORMAT DELIMITED FIELDS TERMINATED BY '9' STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/string.txt' INTO TABLE $t")
+          s"LOAD DATA LOCAL INPATH '$RefData/string.txt' INTO TABLE $t")
         val df = HiveQl.sql(s, s"""
           SELECT REGEXP_REPLACE(REGEXP_REPLACE(REGEXP_REPLACE(key, '\\001', '^A'), '\\0', '^@'), '\\002', '^B') AS k, value
           FROM (
@@ -241,7 +224,7 @@ object QFileParity36 extends QueryModule {
         fresh(s, t)
         HiveQl.sql(s, s"create table $t(contents string) stored as textfile")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/docurl.txt' INTO TABLE $t")
+          s"LOAD DATA LOCAL INPATH '$RefData/docurl.txt' INTO TABLE $t")
         val script = s"/tmp/graft_extracturl_$sfx.sh"
         java.nio.file.Files.write(java.nio.file.Paths.get(script),
           ("#!/bin/sh\n" +
@@ -457,7 +440,7 @@ object QFileParity36 extends QueryModule {
         val t = s"loadpart1_q915_$sfx"
         fresh(s, t)
         HiveQl.sql(s,
-          "ADD FILE /root/reference/data/scripts/error_script")
+          s"ADD FILE $RefScripts/error_script")
         HiveQl.sql(s, s"CREATE TABLE $t(a STRING, b STRING) PARTITIONED BY (ds STRING)")
         val insertFailed = try {
           HiveQl.sql(s, s"INSERT OVERWRITE TABLE $t PARTITION (ds='2009-01-01') " +
@@ -468,7 +451,7 @@ object QFileParity36 extends QueryModule {
         val shape = descCols(s, t)
         val parts0 = HiveQl.sql(s, s"SHOW PARTITIONS $t").count()
         val loadFailed = try {
-          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '/root/reference/data1/files/kv1.txt' " +
+          HiveQl.sql(s, s"LOAD DATA LOCAL INPATH '$RefRoot/data1/files/kv1.txt' " +
             s"INTO TABLE $t PARTITION(ds='2009-05-05')")
           false
         } catch { case e: Exception =>

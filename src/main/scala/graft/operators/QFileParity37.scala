@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.functions._
 import graft.{HiveQl, QueryDef, QueryModule}
 
 /** Parity battery, tranche file 37 (round 15): SHOW INDEXES edge cases,
@@ -12,23 +11,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity37 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private def facts(s: SparkSession, sec: Int, kv: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    kv.toDF("c1", "c2").select(lit(sec).as("sec"),
-      concat_ws("|", col("c1"), col("c2")).as("c1"))
-  }
-
-  private def leg(sec: Int, df: DataFrame): DataFrame = {
-    val r = df.toDF(df.columns.indices.map(i => s"_lc$i"): _*)
-    val joined = concat_ws("|", r.columns.map(c =>
-      coalesce(col(c).cast("string"), lit("NULL"))): _*)
-    r.select(lit(sec).as("sec"), joined.as("c1"))
-  }
-
-  private def ordered(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_ union _).orderBy("sec", "c1")
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, leg, cnt, rmrf, RefData}
+  import QFileParity.Lines.{facts, ordered}
 
   /** Collect a (sec, c1) result into a table-independent local DataFrame —
     * required before dropping the tables a leg() scans (the registry
@@ -37,15 +21,6 @@ object QFileParity37 extends QueryModule {
   private def materialized(s: SparkSession, df: DataFrame): DataFrame = {
     import s.implicits._
     df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.toDF("sec", "c1")
-  }
-
-  private def cnt(s: SparkSession, q: String): Long =
-    HiveQl.sql(s, q).collect()(0).getLong(0)
-
-  private def rmrf(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
   }
 
   private def putFile(s: SparkSession, src: String, dest: String): Unit = {
@@ -156,7 +131,7 @@ object QFileParity37 extends QueryModule {
         val base = s"/tmp/graft_q921_$sfx"
         val tP = s"p_q921_$sfx"
         val tQ = s"q_q921_$sfx"
-        val np = "/root/reference/data/files/name-phone.txt"
+        val np = s"$RefData/name-phone.txt"
         rmrf(s, base)
         fresh(s, tP, tQ)
         try {
@@ -214,7 +189,7 @@ object QFileParity37 extends QueryModule {
           "org.apache.hadoop.hive.ql.io.BucketizedHiveInputFormat")
         HiveQl.sql(s, s"CREATE TABLE $t1(name STRING) STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t1")
+          s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t1")
         HiveQl.sql(s, s"CREATE TABLE $t2(name STRING) STORED AS SEQUENCEFILE")
         // 500^3 = 125M joined rows capped at 5M by the LIMIT
         HiveQl.sql(s, s"""INSERT OVERWRITE TABLE $t2 SELECT * FROM (
@@ -226,9 +201,9 @@ object QFileParity37 extends QueryModule {
         val c2 = cnt(s, s"SELECT COUNT(1) FROM $t2")
         HiveQl.sql(s, s"CREATE TABLE $t3(name STRING) STORED AS TEXTFILE")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE $t3")
+          s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE $t3")
         HiveQl.sql(s,
-          s"LOAD DATA LOCAL INPATH '/root/reference/data/files/kv2.txt' INTO TABLE $t3")
+          s"LOAD DATA LOCAL INPATH '$RefData/kv2.txt' INTO TABLE $t3")
         val c3 = cnt(s, s"SELECT COUNT(1) FROM $t3")
         val out = ordered(Seq(facts(s, 0, Seq(
           "t2_count" -> c2.toString, "t3_count" -> c3.toString))))
@@ -304,8 +279,8 @@ object QFileParity37 extends QueryModule {
           val out = fs.create(new org.apache.hadoop.fs.Path(loc, name), true)
           try out.write(content.getBytes("UTF-8")) finally out.close()
         }
-        write("symlink1.txt", "/root/reference/data/files/T1.txt\n/root/reference/data/files/T3.txt\n")
-        write("symlink2.txt", "/root/reference/data/files/T2.txt\n")
+        write("symlink1.txt", s"$RefData/T1.txt\n$RefData/T3.txt\n")
+        write("symlink2.txt", s"$RefData/T2.txt\n")
         s.catalog.refreshTable(t)
         val all = HiveQl.sql(s, s"SELECT * FROM $t order by key, value")
         val vals = HiveQl.sql(s, s"SELECT value FROM $t order by value")

@@ -22,9 +22,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity5 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte}
-
-  private val RefData = "/root/reference/data/files"
+  import QFileParity.{fixtures, fresh, SrcCte, RefData}
 
   /** covar_tab (udaf_corr/covar_pop/covar_samp.q): the reference's 6-row
     * tab-delimited fixture with NULL holes in b and c.

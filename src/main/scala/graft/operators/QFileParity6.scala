@@ -14,9 +14,8 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity6 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, RefData, RefScripts}
 
-  private val RefData = "/root/reference/data/files"
   private val Kv1Cte =
     s"""WITH kv1 AS (SELECT * FROM read_csv('$RefData/kv1.txt', delim=chr(1),
           header=false, auto_detect=false, quote='', columns={'key': 'VARCHAR', 'value': 'VARCHAR'}))"""
@@ -559,7 +558,7 @@ object QFileParity6 extends QueryModule {
         val d = s"dest1_i20_${fixtures(s, dir)}"
         fresh(s, d)
         HiveQl.sql(s, s"CREATE TABLE $d(key INT, value STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, "ADD FILE /root/reference/data/scripts/input20_script")
+        HiveQl.sql(s, s"ADD FILE $RefScripts/input20_script")
         HiveQl.sql(s,
           s"""FROM (
                 FROM src
@@ -585,7 +584,7 @@ object QFileParity6 extends QueryModule {
         val d = s"dest1_i33_${fixtures(s, dir)}"
         fresh(s, d)
         HiveQl.sql(s, s"CREATE TABLE $d(key INT, value STRING) STORED AS TEXTFILE")
-        HiveQl.sql(s, "ADD FILE /root/reference/data/scripts/input20_script")
+        HiveQl.sql(s, s"ADD FILE $RefScripts/input20_script")
         HiveQl.sql(s,
           s"""FROM (
                 FROM src

@@ -14,9 +14,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity7 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private val RefData = "/root/reference/data/files"
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, RefData}
 
   /** src + srcpart + src1 in one oracle CTE (join33's shape). */
   private val SrcPartSrc1Cte = SrcPartCte.stripSuffix(")") + """),

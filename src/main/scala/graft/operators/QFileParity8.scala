@@ -15,10 +15,9 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity8 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh}
+  import QFileParity.{fixtures, fresh, RefData}
   import QFileParity6.describeRows
 
-  private val RefData = "/root/reference/data/files"
   private val Kv1Cte =
     s"""WITH kv1 AS (SELECT * FROM read_csv('$RefData/kv1.txt', delim=chr(1),
           header=false, auto_detect=false, quote='',

@@ -18,9 +18,7 @@ import graft.{HiveQl, QueryDef, QueryModule}
   */
 object QFileParity9 extends QueryModule {
 
-  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte}
-
-  private val RefData = "/root/reference/data/files"
+  import QFileParity.{fixtures, fresh, SrcCte, SrcPartCte, RefData}
 
   private def likeSrcpart(s: SparkSession, t: String): Unit =
     HiveQl.sql(s,

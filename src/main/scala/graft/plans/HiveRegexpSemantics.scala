@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object HiveRegexpSemantics extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveExpressionsUp {
-      case r @ RLike(left, pat)
+      case RLike(left, pat)
           if pat.foldable && pat.dataType.isInstanceOf[org.apache.spark.sql.types.StringType] &&
             pat.eval() == UTF8String.EMPTY_UTF8 =>
         // null input → null (both engines), else false

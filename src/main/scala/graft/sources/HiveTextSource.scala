@@ -350,7 +350,7 @@ object HiveTextSource {
             fields(j).dataType, level + 1)
         }.mkString(levelSep(level))
       case StringType => v.asInstanceOf[UTF8String].toString
-      case d: DecimalType =>
+      case _: DecimalType =>
         v.asInstanceOf[Decimal].toJavaBigDecimal.toPlainString
       case DateType =>
         DateTimeUtils.toJavaDate(v.asInstanceOf[Int]).toString

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.QFileParity.RefData
 
 /** clientnegative parity battery, tranche 1 — the reference's error-path
   * corpus (ql/src/test/queries/clientnegative/, 284 files) transcribed
@@ -120,9 +121,9 @@ class NegativeParitySpec extends SparkSpec {
     Seq("drop table if exists tbl_protectmode6_neg",
       "create table tbl_protectmode6_neg (c1 string,c2 string) partitioned by (p string)",
       "alter table tbl_protectmode6_neg add partition (p='p1')",
-      "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' OVERWRITE INTO TABLE tbl_protectmode6_neg partition (p='p1')",
+      s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' OVERWRITE INTO TABLE tbl_protectmode6_neg partition (p='p1')",
       "alter table tbl_protectmode6_neg partition (p='p1') enable offline"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' OVERWRITE INTO TABLE tbl_protectmode6_neg partition (p='p1')",
+    s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' OVERWRITE INTO TABLE tbl_protectmode6_neg partition (p='p1')",
     "offline")
 
   refuses("protectmode_part_no_drop",
@@ -297,7 +298,7 @@ class NegativeParitySpec extends SparkSpec {
     matSrc("lvf_src_neg") ++ Seq(
       "DROP VIEW IF EXISTS xxx11_lvf_neg",
       "CREATE VIEW xxx11_lvf_neg AS SELECT * FROM lvf_src_neg"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE xxx11_lvf_neg",
+    s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE xxx11_lvf_neg",
     "view", "not allowed", "UNSUPPORTED")
 
   refuses("create_view_failure1",
@@ -474,19 +475,19 @@ class NegativeParitySpec extends SparkSpec {
   refuses("load_part_nospec",
     Seq("drop table if exists lpn_neg",
       "create table lpn_neg (key string) partitioned by (ds string) stored as textfile"),
-    "load data local inpath '/root/reference/data/files/kv1.txt' into table lpn_neg",
+    s"load data local inpath '$RefData/kv1.txt' into table lpn_neg",
     "partition", "PARTITION_SPEC")
 
   refuses("load_wrong_fileformat",
     Seq("drop table if exists lwf_neg",
       "CREATE TABLE lwf_neg (a STRING) STORED AS SEQUENCEFILE"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' INTO TABLE lwf_neg",
+    s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' INTO TABLE lwf_neg",
     "file format")
 
   refuses("load_wrong_fileformat_txt_seq",
     Seq("drop table if exists lwf_txt_neg",
       "CREATE TABLE lwf_txt_neg (a STRING) STORED AS TEXTFILE"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.seq' INTO TABLE lwf_txt_neg",
+    s"LOAD DATA LOCAL INPATH '$RefData/kv1.seq' INTO TABLE lwf_txt_neg",
     "file format")
 
   refuses("analyze_view",

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.QFileParity.{RefData, RefScripts, TestDat}
 
 /** clientnegative parity battery, tranche 2 — EXPORT/IMPORT compatibility
   * refusals (ImportSemanticAnalyzer.checkTable/checkPaths), authorization
@@ -10,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 class NegativeParitySpec2 extends SparkSpec {
 
   private val sf = SparkTestSession.sf001
-  private val TestDat = "/root/reference/data/files/test.dat"
 
   private def freshSession(): SparkSession = {
     val s = Sessions.isolatedClone(spark)
@@ -319,7 +319,7 @@ class NegativeParitySpec2 extends SparkSpec {
     Seq("drop table if exists nopart_load_neg2",
       "create table nopart_load_neg2 (a string) " +
         "partitioned by (ds string) stored as textfile"),
-    "load data local inpath '/root/reference/data/files/kv1.txt' " +
+    s"load data local inpath '$RefData/kv1.txt' " +
       "overwrite into table nopart_load_neg2",
     "Need to specify partition columns")
 
@@ -411,7 +411,7 @@ class NegativeParitySpec2 extends SparkSpec {
   // ---- script failures -------------------------------------------------
   refuses("script_error", Nil,
     "SELECT TRANSFORM(src.key, src.value) USING " +
-      "'/root/reference/data/scripts/error_script' AS (tkey, tvalue) FROM src",
+      s"'$RefScripts/error_script' AS (tkey, tvalue) FROM src",
     "error", "non-zero", "failed", "exit")
 
   // ---- engine supersets (the reference's capability limits) ---------------

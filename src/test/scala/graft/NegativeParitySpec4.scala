@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.QFileParity.TestDat
 
 /** clientnegative parity battery, tranche 4 — the remaining view/exim/
   * authorization/lock/udf families, closing the corpus. Same harness
@@ -9,7 +10,6 @@ import org.apache.spark.sql.SparkSession
 class NegativeParitySpec4 extends SparkSpec {
 
   private val sf = SparkTestSession.sf001
-  private val TestDat = "/root/reference/data/files/test.dat"
 
   private def freshSession(): SparkSession = {
     val s = Sessions.isolatedClone(spark)

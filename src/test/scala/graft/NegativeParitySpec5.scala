@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.QFileParity.{RefData, TestDat}
 
 /** clientnegative parity battery, tranche 5 — the final 23 files: script
   * pipe failures, remaining exim/fileformat incompatibilities, view
@@ -10,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 class NegativeParitySpec5 extends SparkSpec {
 
   private val sf = SparkTestSession.sf001
-  private val TestDat = "/root/reference/data/files/test.dat"
 
   private def freshSession(): SparkSession = {
     val s = Sessions.isolatedClone(spark)
@@ -264,7 +264,7 @@ class NegativeParitySpec5 extends SparkSpec {
   refuses("load_wrong_fileformat_rc_seq",
     Seq("drop table if exists lwfrs_neg5",
       "CREATE TABLE lwfrs_neg5 (a STRING) STORED AS SEQUENCEFILE"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/smbbucket_1.rc' " +
+    s"LOAD DATA LOCAL INPATH '$RefData/smbbucket_1.rc' " +
       "INTO TABLE lwfrs_neg5",
     "file format")
 
@@ -272,14 +272,14 @@ class NegativeParitySpec5 extends SparkSpec {
     Seq("drop table if exists lwnp_neg5",
       "CREATE TABLE lwnp_neg5 (a STRING, b STRING) " +
         "partitioned by (ds string, ts string) stored as textfile"),
-    "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1.txt' " +
+    s"LOAD DATA LOCAL INPATH '$RefData/kv1.txt' " +
       "INTO TABLE lwnp_neg5 PARTITION(ds='2009-05-05')",
     "Need to specify partition columns")
 
   refuses("fetchtask_ioexception",
     Seq("drop table if exists fioe_neg5",
       "CREATE TABLE fioe_neg5 (key STRING, value STRING) STORED AS SEQUENCEFILE",
-      "LOAD DATA LOCAL INPATH '/root/reference/data/files/kv1_broken.seq' " +
+      s"LOAD DATA LOCAL INPATH '$RefData/kv1_broken.seq' " +
         "OVERWRITE INTO TABLE fioe_neg5"),
     "SELECT * FROM fioe_neg5",
     "EOF", "IOException", "FAILED_READ", "corrupt", "error", "not an",

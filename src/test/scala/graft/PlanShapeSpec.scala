@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import graft.operators.QFileParity.RefData
 
 /** Asserts the physical plans are the ones a 100 TB deployment needs — not
   * just that results match: filters/projections reach the parquet scan,
@@ -275,6 +276,11 @@ class PlanShapeSpec extends SparkSpec {
       s"store rows must be prefiltered to the delta's buckets:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"candidate generation must stay on the band equi-join:\n$p")
+    // Jaccard binds the word-set intersection once: one occurrence in each
+    // copy of the plan the string holds (AQE's final and initial plans)
+    val intersects = "array_intersect".r.findAllIn(p).size
+    assert(intersects <= 2,
+      s"array_intersect appears $intersects times, more than once per plan copy:\n$p")
   }
 
   test("q130: lifecycle survivor plan reads staged labels, no re-derivation") {
@@ -344,7 +350,7 @@ class PlanShapeSpec extends SparkSpec {
       "INTO 4 BUCKETS STORED AS TEXTFILE")
     for (f <- Seq("srcbucket20", "srcbucket21", "srcbucket22", "srcbucket23"))
       HiveQl.sql(spark, "load data local inpath " +
-        s"'/root/reference/data/files/$f.txt' INTO TABLE $t")
+        s"'$RefData/$f.txt' INTO TABLE $t")
     val df = HiveQl.sql(spark,
       s"SELECT s.key FROM $t TABLESAMPLE (BUCKET 1 OUT OF 2 on key) s")
     // positional pruning: buckets 0 and 2 = srcbucket20 + srcbucket22. The

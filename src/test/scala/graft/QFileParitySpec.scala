@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.QFileParity.RefData
 
 /** The clientpositive parity battery's fixture and dialect guarantees
   * (q139-q145 carry the end-to-end oracle checks; this pins what the oracle
@@ -174,7 +175,7 @@ class QFileParitySpec extends SparkSpec {
       "smbbucket_3" -> Seq(4, 10, 17, 19, 20, 23))
     for ((f, keys) <- expected) {
       val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/reference/data/files/$f.rc"))
+        java.nio.file.Paths.get(s"$RefData/$f.rc"))
       val (nc, rows) = graft.sources.HiveRCFile.readFile(bytes)
       assert(nc == 2, s"$f declares $nc columns")
       val got = rows.toVector.map(r =>
@@ -190,11 +191,11 @@ class QFileParitySpec extends SparkSpec {
     // yields the same 500 rows kv1.txt holds
     val df = spark.read.format("graft.sources.HiveSeqSource")
       .schema("key INT, value STRING")
-      .load("/root/reference/data/files/kv1.seq")
+      .load(s"$RefData/kv1.seq")
     val got = df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq
       .sorted
     val want = scala.io.Source.fromFile(
-        "/root/reference/data/files/kv1.txt", "UTF-8")
+        s"$RefData/kv1.txt", "UTF-8")
       .getLines().map { l =>
         val p = l.split(""); (p(0).toInt, p(1))
       }.toSeq.sorted
@@ -209,7 +210,7 @@ class QFileParitySpec extends SparkSpec {
     val e = intercept[Exception] {
       spark.read.format("graft.sources.HiveSeqSource")
         .schema("key INT, value STRING")
-        .load("/root/reference/data/files/kv1_broken.seq")
+        .load(s"$RefData/kv1_broken.seq")
         .collect()
     }
     assert(e != null)
