@@ -27,9 +27,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, Logical
   *
   * The store is JVM-scoped like the rest of the metadata surface (the
   * reference keeps it in metastore tables ROLES/TBL_PRIVS/DB_PRIVS);
-  * enforcement sits in the statement path ([[HiveQl.sql]] via
-  * [[checkStatement]] — the Driver.compile layering), so it covers the
-  * CLI, Thrift, and library entry points identically.
+  * enforcement sits in the one statement path ([[plans.HiveDialectParser]]
+  * via [[checkStatement]] — the Driver.compile layering), so it covers the
+  * CLI, Thrift, raw `spark.sql` and library entry points identically.
   */
 object Authz {
 
@@ -477,14 +477,15 @@ object Authz {
       deny("Update", "outputs", spark.catalog.currentDatabase, table)
   }
 
-  /** Driver.doAuthorization for one statement: parse (unresolved is
-    * enough — names are what get authorized), inputs need Select, insert
-    * targets need Update.
+  /** Driver.doAuthorization for one statement over its unresolved plan
+    * (names are what get authorized; None for dialect forms): inputs need
+    * Select, insert targets need Update.
     */
   private val AddPartitionAuth =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION""".r
 
-  def checkStatement(spark: SparkSession, stmt: String): Unit = {
+  def checkStatement(spark: SparkSession, stmt: String,
+      parsed: Option[LogicalPlan]): Unit = {
     if (!enabled(spark)) return
     // DDLSemanticAnalyzer's addPartition output requires CREATE
     // (authorization_fail_2.q's golden: "No privilege 'Create' found")
@@ -501,9 +502,7 @@ object Authz {
         if (!holds(spark, currentUser(spark), "Alter", t))
           deny("Alter", "inputs", spark.catalog.currentDatabase, t)
       }
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(HiveQl.rewrite(stmt))
-      catch { case _: Exception => return }
+    val plan = parsed.getOrElse(return)
     val user = currentUser(spark)
     val db = spark.catalog.currentDatabase
     val (inputs, outputs) = referencedTables(plan)

@@ -7,7 +7,7 @@ import scala.util.Random
 import org.apache.spark.sql.SparkSession
 
 /** Oracle-differential fuzzing (VERDICT r16 #3): FuzzParitySpec's
-  * differential leg compares `HiveQl.sql` against raw `spark.sql` on the
+  * differential leg compares `HiveQl.sql` against `HiveQl.native` on the
   * SAME engine, so a Hive-semantics divergence both share is invisible to
   * it. This generator aims the fuzz at the DuckDB oracle instead: seeded
   * random statements in the HIVE dialect exercising the compat shims —

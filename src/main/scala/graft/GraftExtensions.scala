@@ -19,8 +19,9 @@ object GraftExtensions {
     // sum over STRING is non-NULL for any non-null input (udaf_number_format.q)
     ext.injectResolutionRule(_ => plans.HiveStringSum)
     // HiveQL dialect below EVERY entry point (Driver.compile layering):
-    // Thrift/JDBC clients and view re-parsing get the same hint/TABLESAMPLE/
-    // UNIQUEJOIN rewrites + variable substitution as HiveQl.sql callers
+    // HiveQl.sql, raw spark.sql and Thrift/JDBC clients share one statement
+    // path (text passes, dispatch, checks, post-hooks); view re-parsing
+    // gets the substitution and static rewrites
     ext.injectParser((session, delegate) =>
       new plans.HiveDialectParser(session, delegate))
     // automatic index rewrite (IndexWhereProcessor posture, gated by

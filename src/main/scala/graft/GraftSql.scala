@@ -74,8 +74,8 @@ object GraftSql {
     spark.conf.getOption("graft.cli.max.rows").map(_.toInt).getOrElse(1000)
 
   /** Execute one statement; returns (keep-going, exit status). `${...}`
-    * substitution happens inside [[HiveQl.sql]] (Hive semantics, all entry
-    * points); the CLI only pre-substitutes the `SOURCE` path so
+    * substitution happens in the session's statement path (Hive semantics,
+    * all entry points); the CLI only pre-substitutes the `SOURCE` path so
     * `source ${hivevar:dir}/x.q` works. A `SOURCE`d script's exit status
     * (its own failing statements recover per-statement but mark failure)
     * surfaces in the second slot so the outer [[run]] exit code reflects it.

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** HiveQL dialect entry point (SURVEY.md §7.2 M1). Spark 4 parses nearly the
   * whole Hive-0.8 grammar natively (SORT/DISTRIBUTE/CLUSTER BY, LATERAL
@@ -966,8 +967,9 @@ object HiveQl {
         java.util.regex.Matcher.quoteReplacement(
           s"${storedAsUsing(m.group(2))} PARTITIONED BY ${m.group(1)}")),
       m => java.util.regex.Matcher.quoteReplacement(storedAsUsing(m.group(1))))
-    // HOLD_DDLTIME is consumed in sql() (DDL-time suppression) — Spark's
-    // planner must not see it as an unknown hint
+    // HOLD_DDLTIME is consumed by the statement checks and post-hooks
+    // (DDL-time suppression) — Spark's planner must not see it as an
+    // unknown hint
     val noHold = HoldDdltime.replaceAllIn(storedAs, "")
     val noStream = StreamTable.replaceAllIn(noHold, "")
     val hinted0 = MapJoin.replaceAllIn(noStream, m => s"/*+ BROADCAST(${m.group(1)}) */")
@@ -1684,11 +1686,34 @@ object HiveQl {
         aliased.mkString(",") + tail, lits)
   }
 
-  def sql(spark: SparkSession, rawQ: String): DataFrame = {
-    // bashSafeScriptArgs runs OUTERMOST: it introduces escaped quotes into
-    // USING literals that the other TRANSFORM passes' `[^']+` matchers
-    // must never see
-    val q = bashSafeScriptArgs(restCaptureDefaultTransform(
+  /** Runs one HiveQL statement through the session's one statement path,
+    * [[plans.HiveDialectParser]] — the same as raw `spark.sql` and JDBC. */
+  def sql(spark: SparkSession, q: String): DataFrame = {
+    plans.HiveDialectParser.of(spark)
+    spark.sql(q)
+  }
+
+  /** A statement graft submits while running another one (the native half
+    * of a dialect form, a post-hook's metadata update, a retry): only
+    * substitution and the static rewrites, no dispatch, checks or
+    * post-hooks, so it cannot recurse into the statement that issued it. */
+  private[graft] def native(spark: SparkSession, text: String): DataFrame = {
+    val outer = bypassStatements.get
+    bypassStatements.set(true)
+    try spark.sql(text) finally bypassStatements.set(outer)
+  }
+
+  private val bypassStatements = ThreadLocal.withInitial[Boolean](() => false)
+
+  /** Whether the current thread is inside [[native]]. */
+  private[graft] def inNative: Boolean = bypassStatements.get
+
+  /** A statement's text passes, before it is classified and parsed.
+    * bashSafeScriptArgs runs OUTERMOST: it introduces escaped quotes into
+    * USING literals that the other TRANSFORM passes' `[^']+` matchers must
+    * never see. */
+  private[graft] def prepare(spark: SparkSession, rawQ: String): String =
+    bashSafeScriptArgs(restCaptureDefaultTransform(
       absorbTransformRemainder(spark,
       wrapPartialConsumption(spark, injectScriptEnv(spark,
         resolveScriptPaths(spark,
@@ -1699,66 +1724,33 @@ object HiveQl {
                   autogenCtasAliases(spark,
                     applyTestMode(spark,
                       stripLocationPattern(substituteVars(spark, rawQ))))))))))))))
-    // Driver.doAuthorization layering: enforce before execution on every
-    // entry point that funnels through this driver analogue (no-op unless
-    // hive.security.authorization.enabled)
-    Authz.checkStatement(spark, q)
-    // OFFLINE protect mode (ErrorMsg.OFFLINE_TABLE_OR_PARTITION; no-op
-    // with no offline tables)
-    Protect.checkStatement(spark, q)
-    // EXPLAIN over a DIALECT statement (one Spark's parser cannot see —
-    // SHOW INDEXES, LOAD, EXPORT...): the reference explains every
-    // statement kind (ExplainTask over the semantic analyzer's task DAG);
-    // the engine surfaces the statement's dialect dispatch as the plan.
-    // Spark-parseable bodies (EXPLAIN SELECT/DROP FUNCTION...) pass
-    // through to Spark's own ExplainCommand below.
-    """(?is)^\s*EXPLAIN\s+(?:EXTENDED\s+|FORMATTED\s+|DEPENDENCY\s+)?([\s\S]*)$""".r
-      .findFirstMatchIn(q).foreach { m =>
-        val body = m.group(1)
-        val dialect =
-          try statementRows(body).isDefined || statementExec(body).isDefined
-          catch { case _: Exception => false }
-        if (dialect) {
-          import org.apache.spark.sql.types.{StringType, StructField, StructType}
-          return spark.createDataFrame(
-            java.util.Arrays.asList(
-              org.apache.spark.sql.Row("ABSTRACT SYNTAX TREE:"),
-              org.apache.spark.sql.Row("  " + body.trim.takeWhile(_ != '\n')),
-              org.apache.spark.sql.Row("STAGE PLANS: dialect statement " +
-                "(graft statement dispatch)")),
-            StructType(Seq(StructField("plan", StringType, nullable = false))))
-        }
-      }
-    statementRows(q) match {
-      case Some((schema, rows)) =>
-        return spark.createDataFrame(
-          java.util.Arrays.asList(rows(spark): _*), schema)
-      case None =>
-    }
+
+  private def masked(q: String): (String, IndexedSeq[String]) =
+    try maskLiterals(q) catch { case _: IllegalArgumentException => (q, IndexedSeq.empty[String]) }
+
+  // native statements with empty output that may carry post-hooks: INSERT
+  // (also FROM/WITH ... INSERT), CREATE, DROP, ALTER TABLE ... ADD
+  // PARTITION. Queries, SET, SHOW, DESCRIBE and EXPLAIN run as planned.
+  private val LeadingComments = "^(?:\\s+|--[^\n]*|\u0001\\d+\u0001)*".r
+  private val WriteStatement =
+    ("""(?is)^(?:INSERT\b|CREATE\b|DROP\b|(?:FROM|WITH)\b.*\bINSERT\s+(?:INTO|OVERWRITE)\b|""" +
+      """ALTER\s+TABLE\s+\S+\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION\b)""").r
+
+  private[graft] def isWrite(q: String): Boolean =
+    WriteStatement.findFirstIn(LeadingComments.replaceFirstIn(masked(q)._1, "")).isDefined
+
+  /** A statement's semantic checks, after authorization and protect mode,
+    * over its unresolved plan (None for dialect forms and parse errors). */
+  private[graft] def checkStatement(spark: SparkSession, q: String, plan: Option[LogicalPlan]): Unit = {
+    val (maskedQ, qLits) = masked(q)
     // HOLD_DDLTIME hint (Hive.g:1499 TOK_HOLD_DDLTIME; SemanticAnalyzer
-    // .checkHoldDDLTime): an INSERT normally refreshes the dest table's
-    // transient_lastDdlTime (the metastore update loadTable/loadPartition
-    // performs); the hint suppresses that, and is rejected for dynamic or
-    // non-existent partitions with the reference's exact message
-    // (ErrorMsg.java:170).
-    val (maskedQ, qLits) =
-      try maskLiterals(q) catch { case _: IllegalArgumentException => (q, IndexedSeq.empty[String]) }
-    val holdDdl = HoldDdltime.findFirstIn(maskedQ).isDefined
-    if (holdDdl) checkHoldDdltime(spark, maskedQ, qLits)
+    // .checkHoldDDLTime): rejected for dynamic or non-existent partitions
+    // with the reference's exact message (ErrorMsg.java:170)
+    if (HoldDdltime.findFirstIn(maskedQ).isDefined) checkHoldDdltime(spark, maskedQ, qLits)
     checkSemanticHooksPre(spark, maskedQ)
-    updateInputAccessTime(spark, q)
-    repointArchivedForDrop(spark, maskedQ)
-    // index metadata cascades with a dropped table (resolve roots while
-    // the table still exists; NO_DROP protection must veto FIRST so a
-    // refused drop doesn't lose its indexes)
-    DropTableStmt.findFirstMatchIn(maskedQ).foreach { m =>
-      if (spark.catalog.tableExists(m.group(1))) {
-        Protect.checkDrop(spark, m.group(1).split('.').last)
-        operators.Indexes.dropAllForTable(spark, m.group(1))
-      }
-    }
+    plan.foreach(updateInputAccessTime(spark, _))
     checkSampleBounds(spark, maskedQ)
-    plans.StrictMode.check(spark, q)
+    plan.foreach(plans.StrictMode.check(spark, _))
     checkReservedPartitionNames(spark, q)
     checkInsertLockConflicts(spark, maskedQ)
     checkExecHookClasses(spark)
@@ -1783,21 +1775,28 @@ object HiveQl {
       .findFirstMatchIn(maskedQ).foreach { m =>
         val hasPartClause =
           """(?is)PARTITIONED\s+ON""".r.findFirstIn(maskedQ).isDefined
-        try {
-          val meta = spark.sessionState.catalog.getTableMetadata(
-            spark.sessionState.sqlParser.parseTableIdentifier(m.group(1)))
-          val hadParts = meta.properties.get(ViewPartsKey).exists(_.nonEmpty)
-          val declared = meta.properties.contains(ViewPartColsKey)
-          if (hadParts && declared != hasPartClause)
-            throw new IllegalArgumentException(
-              "Cannot add or drop partition columns with CREATE OR REPLACE " +
-                "VIEW if partitions currently exist")
-        } catch {
-          case e: IllegalArgumentException if e.getMessage != null &&
-              e.getMessage.contains("partition columns") => throw e
-          case _: Exception =>
-        }
+        val meta = try Some(spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(m.group(1))))
+        catch { case _: Exception => None }
+        val hadParts = meta.exists(_.properties.get(ViewPartsKey).exists(_.nonEmpty))
+        if (hadParts && meta.exists(_.properties.contains(ViewPartColsKey)) != hasPartClause)
+          throw new IllegalArgumentException(
+            "Cannot add or drop partition columns with CREATE OR REPLACE " +
+              "VIEW if partitions currently exist")
       }
+  }
+
+  /** Runs a native write/DDL's parsed plan with Hive's self-read overwrite
+    * and store-assignment semantics. */
+  private[graft] def runWrite(spark: SparkSession, q: String, plan: LogicalPlan): Unit =
+    withSelfReadOverwriteRetry(spark, q)(withLegacyStoreRetry(spark)(
+      _.sessionState.executePlan(plan).assertCommandExecuted()))
+
+  /** Runs a non-query statement, then its post-hooks (the metastore side
+    * effects of the reference's MoveTask/StatsTask/DDLTask). */
+  private[graft] def runStatement(spark: SparkSession, q: String, rawQ: String)(
+      run: SparkSession => Unit): Unit = {
+    val (maskedQ, qLits) = masked(q)
     // tables contained in a database about to be dropped, captured while
     // the catalog can still list them — the post-drop grant/protect
     // cascade below needs the names (ADVICE r16 #4)
@@ -1808,25 +1807,17 @@ object HiveQl {
           .map(_.name).toSeq
         catch { case _: Exception => Seq.empty[String] }
       }
-    val result = statementExec(q) match {
-      case Some(exec) => exec(spark); spark.emptyDataFrame
-      case None => withSelfReadOverwriteRetry(spark, q)(
-        withLegacyStoreRetry(spark)(_.sql(rewrite(q))))
-    }
-    if (!holdDdl) bumpInsertTargets(spark, maskedQ)
+    run(spark)
+    // an INSERT refreshes the dest table's transient_lastDdlTime (the
+    // metastore update loadTable/loadPartition performs) unless the
+    // HOLD_DDLTIME hint suppresses it
+    if (HoldDdltime.findFirstIn(maskedQ).isEmpty) bumpInsertTargets(spark, maskedQ)
     mergeSmallFiles(spark, maskedQ, qLits)
     autogatherStats(spark, maskedQ, qLits)
     applyDefaultTableParams(spark, maskedQ)
     applySemanticHooksPost(spark, maskedQ)
     recordLocationPattern(spark, rawQ)
     resolvePatternedPartitions(spark, maskedQ)
-    // a DROPPED table's protect flags die with it (the reference keeps
-    // them in table properties) — clear the side store once the catalog
-    // entry is really gone
-    DropTableStmt.findFirstMatchIn(maskedQ).foreach { m =>
-      val gone = !spark.catalog.tableExists(m.group(1))
-      if (gone) Protect.clearTable(spark, m.group(1))
-    }
     // a DROPPED database takes its DB-scoped grants with it (ObjectStore
     // .dropDatabase removes the DB_PRIVS rows), and its tables' grants
     // and protect flags cascade (TBL_PRIVS / TABLE_PARAMS rows die with
@@ -1845,7 +1836,6 @@ object HiveQl {
         }
       }
     }
-    result
   }
 
   // ---- Path patterns in table locations (HIVE-1707's `location
@@ -2069,50 +2059,42 @@ object HiveQl {
         }
     }
 
+  private val DropDatabaseStmt =
+    """(?is)^\s*DROP\s+(?:DATABASE|SCHEMA)\s+(?:IF\s+EXISTS\s+)?([\w]+)""".r
+
   // ---- DROP TABLE over ARCHIVED partitions: Spark's catalog drop deletes
   // each partition path, and a `har:` URI is not deletable through the
   // HarFileSystem. The reference drops archived tables fine (the har file
   // lives INSIDE the table dir) — repoint har partitions at their physical
   // directories first, so the recursive table-dir delete takes everything.
-  private val DropTableStmt =
-    """(?is)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
-
-  private val DropDatabaseStmt =
-    """(?is)^\s*DROP\s+(?:DATABASE|SCHEMA)\s+(?:IF\s+EXISTS\s+)?([\w]+)""".r
-
-  private def repointArchivedForDrop(spark: SparkSession, masked: String): Unit =
-    DropTableStmt.findFirstMatchIn(masked).foreach { m =>
-      try {
-        val ti = TableIdentifier(m.group(1).split('.').last,
-          m.group(1).split('.').dropRight(1).lastOption)
-        val cat = spark.sessionState.catalog
-        val meta = cat.getTableMetadata(ti)
-        if (meta.partitionColumnNames.nonEmpty) {
-          val harParts = cat.listPartitions(ti)
-            .filter(p => Option(p.location.getScheme).contains("har"))
-          if (harParts.nonEmpty) {
-            val base = new org.apache.hadoop.fs.Path(meta.location)
-            cat.alterPartitions(ti, harParts.map { p =>
-              val phys = meta.partitionColumnNames.foldLeft(base)((acc, c) =>
-                new org.apache.hadoop.fs.Path(acc,
-                  org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                    .getPartitionPathString(c, p.spec(c))))
-              p.copy(storage = p.storage.copy(locationUri = Some(phys.toUri)))
-            })
-          }
+  private def repointArchivedForDrop(spark: SparkSession, table: String): Unit =
+    try {
+      val ti = TableIdentifier(table.split('.').last,
+        table.split('.').dropRight(1).lastOption)
+      val cat = spark.sessionState.catalog
+      val meta = cat.getTableMetadata(ti)
+      if (meta.partitionColumnNames.nonEmpty) {
+        val harParts = cat.listPartitions(ti)
+          .filter(p => Option(p.location.getScheme).contains("har"))
+        if (harParts.nonEmpty) {
+          val base = new org.apache.hadoop.fs.Path(meta.location)
+          cat.alterPartitions(ti, harParts.map { p =>
+            val phys = meta.partitionColumnNames.foldLeft(base)((acc, c) =>
+              new org.apache.hadoop.fs.Path(acc,
+                org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                  .getPartitionPathString(c, p.spec(c))))
+            p.copy(storage = p.storage.copy(locationUri = Some(phys.toUri)))
+          })
         }
-      } catch { case _: Exception => }
-    }
+      }
+    } catch { case _: Exception => }
 
   // ---- UpdateInputAccessTimeHook.PreExec shim (updateAccessTime.q): when
   // listed in hive.exec.pre.hooks, every input table of a query gets its
   // lastAccessTime stamped before execution.
-  private def updateInputAccessTime(spark: SparkSession, q: String): Unit = {
+  private def updateInputAccessTime(spark: SparkSession, plan: LogicalPlan): Unit = {
     if (!spark.conf.getOption("hive.exec.pre.hooks").exists(
         _.contains("UpdateInputAccessTimeHook"))) return
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(rewrite(q))
-      catch { case _: Exception => return }
     val (inputs, _) = Authz.referencedTables(plan)
     val now = System.currentTimeMillis()
     inputs.foreach { t =>
@@ -2148,14 +2130,11 @@ object HiveQl {
       .filter(_.nonEmpty).map(_.split("\\s+")(0))
     val props = Option(m.group(3)).map(p => " " + unmaskLiterals(p, lits)).getOrElse("")
     val body = unmaskLiterals(m.group(4), lits)
-    val out = spark.sql(rewrite(body)).schema.fieldNames
+    val out = native(spark, body).schema.fieldNames
     require(out.length == names.length,
       s"view $name declares ${names.length} columns but its body yields ${out.length}")
     val sel = out.zip(names).map { case (o, n) => s"`$o` AS $n" }.mkString(", ")
-    bypassStatements.set(true)
-    try spark.sql(rewrite(
-      s"CREATE VIEW $name$props AS SELECT $sel FROM ($body) graft_vw"))
-    finally bypassStatements.set(false)
+    native(spark, s"CREATE VIEW $name$props AS SELECT $sel FROM ($body) graft_vw")
   }
 
   private val CreateTableName =
@@ -2254,7 +2233,8 @@ object HiveQl {
   }
 
   // the hint sits in Hive's hint position (after SELECT); strip happens in
-  // rewriteMasked like STREAMTABLE, detection happens in sql() above
+  // rewriteMasked like STREAMTABLE, detection in the statement checks and
+  // post-hooks above
   private val HoldDdltime = """(?i)/\*\+\s*HOLD_DDLTIME\s*\*/""".r
   // the lookahead skips INSERT OVERWRITE [LOCAL] DIRECTORY (a path, not a
   // table — it must not trigger table-property work); `quoted` identifiers
@@ -2277,7 +2257,7 @@ object HiveQl {
             "non-existent partitions")
         if (spec.split(",").exists(!_.contains("="))) throw err // dynamic
         val exists =
-          try !spark.sql(
+          try !native(spark,
             s"SHOW PARTITIONS ${m.group(1)} PARTITION ($spec)").isEmpty
           catch { case _: Exception => false }
         if (!exists) throw err
@@ -2295,18 +2275,21 @@ object HiveQl {
       .filterNot(_.equalsIgnoreCase("DIRECTORY")) // INSERT OVERWRITE DIRECTORY
       .foreach { t =>
         try {
-          // direct catalog read, NOT `SHOW TBLPROPERTIES` SQL: this runs
-          // after EVERY INSERT statement of every .q battery, and the SQL
-          // round trip (parse + analyze + execute + collect) was a
-          // measurable share of the ~70-120 ms inter-statement driver gaps
-          // (q632 profile). Same visibility: temp views / missing tables
-          // throw AnalysisException exactly as SHOW did.
-          val ti = spark.sessionState.sqlParser.parseTableIdentifier(t)
-          val prev = spark.sessionState.catalog.getTableMetadata(ti)
-            .properties.get("transient_lastDdlTime").map(_.trim)
+          // one metastore read and one write, then the relation-cache
+          // invalidation ALTER TABLE SET TBLPROPERTIES performs (later scans
+          // must not keep a stale FileIndex). Not the SQL command: it makes
+          // six serialized metastore calls, and this runs after every INSERT
+          // from every entry point. Temp views / missing tables throw
+          // AnalysisException — ignored.
+          val cat = spark.sessionState.catalog
+          val ti = cat.qualifyIdentifier(spark.sessionState.sqlParser.parseTableIdentifier(t))
+          val raw = cat.externalCatalog.getTable(ti.database.get, ti.table)
+          val prev = raw.properties.get("transient_lastDdlTime").map(_.trim)
             .filter(_.forall(_.isDigit)).map(_.toLong).getOrElse(0L)
-          Protect.setDdlTime(spark, t,
-            math.max(System.currentTimeMillis() / 1000, prev + 1))
+          val now = math.max(System.currentTimeMillis() / 1000, prev + 1)
+          cat.externalCatalog.alterTable(raw.copy(properties =
+            raw.properties + ("transient_lastDdlTime" -> now.toString)))
+          cat.invalidateCachedTable(ti)
         } catch { case _: org.apache.spark.sql.AnalysisException => }
       }
 
@@ -2609,14 +2592,14 @@ object HiveQl {
     else t
   }
 
-  /** Hive-0.8 STORE-ASSIGNMENT semantics for the driver path: the reference
+  /** Hive-0.8 STORE-ASSIGNMENT semantics for HiveQL INSERTs: the reference
     * inserts through any type mismatch (LazySimpleSerDe re-parses text;
     * UDFToInteger returns null on malformed — q88's error-semantics
     * contract), while Spark's default ANSI store policy REJECTS e.g. the
     * STRING→INT dest casts every clientpositive insert relies on
     * (groupby1.q writes `src.key` into `key INT`). Retry-on-reject rather
-    * than a global LEGACY flip: sessions keep Spark-native safety for raw
-    * `spark.sql`, DSv2 writes (which disallow LEGACY) are untouched unless
+    * than a global LEGACY flip: DataFrame-API writes keep Spark-native
+    * safety, DSv2 writes (which disallow LEGACY) are untouched unless
     * they themselves fail the safety check, and the flip is restored even
     * on failure. The first failure happens at ANALYSIS, before any write,
     * so the retry never double-executes a side effect.
@@ -2854,7 +2837,7 @@ object HiveQl {
     * always sees the pre-insert data (union22.q overwrites ds='2' from a
     * join that reads ds='1' of the same table). Spark's v1 insert rejects
     * ANY self-read at the table level (UNSUPPORTED_OVERWRITE.TABLE). Shim,
-    * driver path only: on that exact error for a single INSERT OVERWRITE
+    * HiveQL statements only: on that exact error for a single INSERT OVERWRITE
     * TABLE statement, run the source query alone, materialize it
     * (`localCheckpoint` severs the plan's lineage against the dest
     * relation — the engine-level analogue of Hive's intermediate map
@@ -2865,38 +2848,22 @@ object HiveQl {
     ("""(?is)^\s*(INSERT\s+OVERWRITE\s+TABLE\s+(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*""" +
       """\s*(?:PARTITION\s*\([^)]*\))?)\s*(SELECT|FROM|\().*""").r
   private def withSelfReadOverwriteRetry(spark: SparkSession, q: String)(
-      body: => DataFrame): DataFrame =
+      body: => Unit): Unit =
     try body catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNSUPPORTED_OVERWRITE") =>
         val m = SelfReadInsert.findFirstMatchIn(q).getOrElse(throw e)
         val query = q.substring(m.end(1))
-        val snap = withLegacyStoreRetry(spark)(c => c.sql(rewrite(query)))
+        val snap = withLegacyStoreRetry(spark)(native(_, query))
           .localCheckpoint(true)
         val tmp = "graft_self_read_" +
           java.util.UUID.randomUUID.toString.replace("-", "")
         snap.createOrReplaceTempView(tmp)
         try withLegacyStoreRetry(spark)(
-          c => c.sql(rewrite(s"${m.group(1)} SELECT * FROM $tmp")))
+          native(_, s"${m.group(1)} SELECT * FROM $tmp"))
         finally spark.catalog.dropTempView(tmp)
     }
 
-  /** Re-entrancy guard for [[statementExec]]: the multi-insert NATIVE
-    * fallback re-submits the original text through `spark.sql`, which
-    * (with [[plans.HiveDialectParser]] injected) would match the statement
-    * again and recurse forever.
-    */
-  private val bypassStatements = new ThreadLocal[Boolean] {
-    override def initialValue: Boolean = false
-  }
-
-  /** The non-SELECT statement surface (LOAD/EXPORT/IMPORT/TEMPORARY
-    * FUNCTION/multi-insert) as an executor thunk, shared by [[sql]] and by
-    * the injected session parser — so the whole dialect works over
-    * Thrift/JDBC and raw `spark.sql`, not just this API. None = not a
-    * statement form; plain queries go through [[rewrite]] + the delegate
-    * parser.
-    */
   /** TOK_ALTERTABLE_RENAMECOL executor: rebuild the data schema with the
     * column renamed/retyped/recommented and repositioned (FIRST / AFTER c —
     * Hive's alterStatementSuffixRenameCol positions). Existing FILES are
@@ -3058,9 +3025,13 @@ object HiveQl {
   private val SetAutoReducers =
     """(?is)^\s*SET\s+(?:hiveconf:)?mapred\.reduce\.tasks\s*=\s*-1\s*;?\s*$""".r
 
+  /** The non-SELECT statement surface (LOAD/EXPORT/IMPORT/TEMPORARY
+    * FUNCTION/multi-insert/DDL the delegate cannot run as Hive does) as an
+    * executor thunk, planned by [[plans.HiveDialectParser]] as a command.
+    * None = not a statement form.
+    */
   def statementExec(q: String): Option[SparkSession => Unit] =
-    if (bypassStatements.get) None
-    else q match {
+    q match {
       case SetSystemProp(k, v) =>
         Some(_ => { System.setProperty(k.trim, v); () })
       case SetAutoReducers() =>
@@ -3155,9 +3126,7 @@ object HiveQl {
               }
               harParts.map(_.spec)
             }.getOrElse(Nil)
-          bypassStatements.set(true)
-          try s.sql(s"ALTER TABLE $oldName RENAME TO $newName")
-          finally bypassStatements.set(false)
+          native(s, s"ALTER TABLE $oldName RENAME TO $newName")
           if (archivedSpecs.nonEmpty) {
             val newTi = org.apache.spark.sql.catalyst.TableIdentifier(newName)
             val nm = cat.getTableMetadata(newTi)
@@ -3280,16 +3249,13 @@ object HiveQl {
           if (ext) require(graft.sources.kv.KvStore.exists(kvName),
             s"external KV table $kvName does not exist")
           else graft.sources.kv.KvStore.create(kvName)
-          try {
-            bypassStatements.set(true)
-            try s.sql(
-              s"""CREATE TABLE $table ($cols)
-                  USING graft.sources.kv.KvSource
-                  OPTIONS ('kv.table.name'='$kvName',
-                           'kv.columns.mapping'='$mapping'
-                           ${if (ext) ",'kv.external'='true'" else ""})""")
-            finally bypassStatements.set(false)
-          } catch { case e: Throwable =>
+          try native(s,
+            s"""CREATE TABLE $table ($cols)
+                USING graft.sources.kv.KvSource
+                OPTIONS ('kv.table.name'='$kvName',
+                         'kv.columns.mapping'='$mapping'
+                         ${if (ext) ",'kv.external'='true'" else ""})""")
+          catch { case e: Throwable =>
             if (!ext) graft.sources.kv.KvStore.drop(kvName) // rollback hook
             throw e
           }
@@ -3377,9 +3343,7 @@ object HiveQl {
         Some(s => createViewWithColumnList(s, q))
       case CreateViewPartitioned(head, view, cols, body) =>
         Some { s =>
-          bypassStatements.set(true)
-          try s.sql(rewrite(s"$head $body"))
-          finally bypassStatements.set(false)
+          native(s, s"$head $body")
           val cat = s.sessionState.catalog
           val ti = s.sessionState.sqlParser.parseTableIdentifier(view)
           val m = cat.getTableMetadata(ti)
@@ -3462,18 +3426,21 @@ object HiveQl {
             "MetadataTypedColumnsetSerDe", "DynamicSerDe", "ThriftDeserializer")
           require(known.exists(serdeClass.endsWith),
             s"ALTER TABLE SET SERDE: unknown serde class $serdeClass")
-          bypassStatements.set(true)
-          try s.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+          native(s, s"ALTER TABLE $table SET TBLPROPERTIES " +
             s"('graft.row.serde'='$serdeClass')")
-          finally bypassStatements.set(false)
         }
       case DropTable(table) =>
-        // NO_DROP enforcement (DDLTask.java:2995-3010), then the native
-        // DROP runs through the delegate parser (bypass guard as the
-        // multi-insert fallback uses). A MANAGED storage-handler table
-        // also drops its KV store table (HiveMetaHook commitDropTable).
+        // NO_DROP enforcement (DDLTask.java:2995-3010) vetoes first, so a
+        // refused drop keeps its indexes and archived partitions; then
+        // index metadata cascades with the table, archived partitions are
+        // repointed at deletable directories, and the native DROP runs.
+        // A MANAGED storage-handler table also drops its KV store table
+        // (HiveMetaHook commitDropTable).
         Some { s =>
           Protect.checkDrop(s, table.split('.').last)
+          if (s.catalog.tableExists(table))
+            operators.Indexes.dropAllForTable(s, table)
+          repointArchivedForDrop(s, table)
           val meta = try Some(s.sessionState.catalog.getTableMetadata(
             s.sessionState.sqlParser.parseTableIdentifier(table)))
           catch { case _: Exception => None }
@@ -3482,8 +3449,10 @@ object HiveQl {
             meta.exists(_.tableType ==
               org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
           if (!viewSkip) {
-            bypassStatements.set(true)
-            try s.sql(rewrite(q)) finally bypassStatements.set(false)
+            native(s, q)
+            // a dropped table's protect flags die with it (the reference
+            // keeps them in table properties)
+            if (!s.catalog.tableExists(table)) Protect.clearTable(s, table)
             meta.filter(_.provider.contains("graft.sources.kv.KvSource"))
               .foreach { m =>
                 val p = m.storage.properties.map {
@@ -3519,11 +3488,7 @@ object HiveQl {
             org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
           val mismatch = meta.isDefined &&
             (if (kind.equalsIgnoreCase("TABLE")) isView else !isView)
-          if (!mismatch) {
-            bypassStatements.set(true)
-            try s.sql(rewrite(q))
-            finally bypassStatements.set(false)
-          }
+          if (!mismatch) native(s, q)
         }
       case CreateRole(role) => Some(s => Authz.createRole(s, role))
       case DropRole(role) => Some(s => Authz.dropRole(s, role))
@@ -3535,17 +3500,13 @@ object HiveQl {
       case RevokePriv(privs, objType, objName, partSpec, pType, principal) =>
         Some(s => Authz.revoke(s, privs.split(",").map(_.trim).toSeq, pType,
           principal, objType, objName, Option(partSpec)))
-      case _ if statementRows(q).isDefined => None
       case _ if operators.MultiInsert.matches(q) =>
         Some { s =>
           if (!operators.MultiInsert.run(s, q)) {
-            // unhandled shape: native per-branch execution, guarded so the
-            // re-submitted text reaches the delegate parser; same Hive
-            // store-assignment retry as the handled path (a DIRECTORY
+            // unhandled shape: native per-branch execution, with the same
+            // Hive store-assignment retry as the handled path (a DIRECTORY
             // branch, e.g., lands here — input13.q)
-            bypassStatements.set(true)
-            try withLegacyStoreRetry(s)(c => c.sql(rewrite(q)))
-            finally bypassStatements.set(false)
+            withLegacyStoreRetry(s)(native(_, q))
           }
         }
       case _ => None
@@ -3553,9 +3514,8 @@ object HiveQl {
 
   /** Statement forms that RETURN ROWS (SHOW INDEXES and friends) — the
     * schema is static per statement type, so the injected parser can plan
-    * them as commands with declared output ([[plans.HiveShowStatement]])
-    * and [[sql]] can materialize a DataFrame. None = not a row-returning
-    * statement form.
+    * them as commands with declared output ([[plans.HiveShowStatement]]).
+    * None = not a row-returning statement form.
     */
   def statementRows(q: String)
       : Option[(org.apache.spark.sql.types.StructType,
@@ -3569,7 +3529,7 @@ object HiveQl {
       // describe_xpath.q): walk the column's type; a terminal STRUCT lists
       // its fields, anything else is one (last-segment, type) row. A first
       // segment that is NOT a table (db.table describes) delegates native.
-      case DescribeColPath(tbl, path) if !bypassStatements.get =>
+      case DescribeColPath(tbl, path) =>
         Some((schema("col_name", "data_type", "comment"), s => {
           import org.apache.spark.sql.types._
           val meta = try Some(s.sessionState.catalog.getTempViewOrPermanentTableMetadata(
@@ -3611,11 +3571,7 @@ object HiveQl {
               Seq(org.apache.spark.sql.Row(parts.last,
                 dt.catalogString, "from deserializer"))
             case None => // not table.column — a db.table describe: native
-              // bypass guard: the dialect parser re-dispatches statements
-              // through statementRows, so a plain delegate would recurse
-              bypassStatements.set(true)
-              val rows = try s.sql(q).collect().toSeq
-                finally bypassStatements.set(false)
+              val rows = native(s, q).collect().toSeq
               rows.map(r => org.apache.spark.sql.Row(
                 r.getString(0),
                 if (r.length > 1) r.getString(1) else null,
@@ -3626,7 +3582,7 @@ object HiveQl {
       // their recorded metadata (Hive's view partitions are pure metadata
       // — DDLSemanticAnalyzer addPartition on VIRTUAL_VIEW;
       // create_view_partitioned.q); tables delegate to the native command
-      case ShowPartitionsQ(t, spec) if !bypassStatements.get =>
+      case ShowPartitionsQ(t, spec) =>
         Some((schema("partition"), s => {
           val meta = try Some(s.sessionState.catalog.getTableMetadata(
             s.sessionState.sqlParser.parseTableIdentifier(t)))
@@ -3644,13 +3600,9 @@ object HiveQl {
                 want.forall { case (k, v) => kv.get(k).contains(v) }
               }.map(org.apache.spark.sql.Row(_))
             case None =>
-              // bypass: the dialect parser funnels spark.sql back through
-              // statementRows — without the flag this recurses
-              bypassStatements.set(true)
-              try s.sql(s"SHOW PARTITIONS $t" +
+              native(s, s"SHOW PARTITIONS $t" +
                 Option(spec).map(sp => s" PARTITION($sp)").getOrElse(""))
                 .collect().toSeq
-              finally bypassStatements.set(false)
           }
         }))
       // reference SHOW INDEXES schema (ShowIndexesDesc.java:39)

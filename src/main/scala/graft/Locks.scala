@@ -239,9 +239,8 @@ object Locks {
     */
   def lockObjectsFor(spark: SparkSession, stmt: String)
       : Seq[(String, Mode, LockData)] = {
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(HiveQl.rewrite(stmt))
-      catch { case _: Exception => return Nil } // non-plannable statement forms
+    val plan = plans.HiveDialectParser.of(spark).unresolvedPlan(stmt)
+      .getOrElse(return Nil) // non-plannable statement forms
     val modes = mutable.LinkedHashMap.empty[String, Mode]
     def visit(p: LogicalPlan, writing: Boolean): Unit = p match {
       case i: InsertIntoStatement =>

@@ -37,6 +37,7 @@ object MetastoreSmoke {
         .config("javax.jdo.option.ConnectionURL",
           s"jdbc:derby:;databaseName=$derby;create=true")
         .enableHiveSupport()
+        .withExtensions(GraftExtensions.inject)
         .getOrCreate()
       Sessions.ensureRegistered(s)
       s

@@ -3,6 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Table protect mode + TOUCH (the last §2.11 ALTER variants: Hive.g:658
   * TOK_ALTERTABLE_TOUCH, :750 alterStatementSuffixProtectMode with
@@ -21,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   *    unchanged tables.
   *
   * Mode state is JVM-scoped like the rest of the metadata surface;
-  * enforcement sits in the HiveQl.sql driver layer (the same place the
-  * reference checks, Driver/DDLTask) plus a DROP TABLE intercept in the
-  * statement dispatch.
+  * enforcement sits in the one statement path, the injected
+  * [[plans.HiveDialectParser]] (the same place the reference checks,
+  * Driver/DDLTask), plus a DROP TABLE intercept in the statement dispatch.
   */
 object Protect {
 
@@ -152,7 +153,8 @@ object Protect {
   private val DropPartitionStmt =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\)""".r
 
-  def checkStatement(spark: SparkSession, stmt: String): Unit = {
+  def checkStatement(spark: SparkSession, stmt: String,
+      parsed: Option[LogicalPlan]): Unit = {
     ensureLoaded(spark)
     // partition-level NO_DROP (DDLTask.dropPartition's protect check)
     DropPartitionStmt.findFirstMatchIn(stmt).foreach { m =>
@@ -162,9 +164,7 @@ object Protect {
           s"Partition ${m.group(2)} of table $t is protected from being dropped")
     }
     if (modes.isEmpty || !modes.values.exists(_._2)) return
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(HiveQl.rewrite(stmt))
-      catch { case _: Exception => return }
+    val plan = parsed.getOrElse(return)
     val (in, out) = Authz.referencedTables(plan)
     val refs = (in ++ out).map(_.split('.').last.toLowerCase).toSet
     refs.find(isOffline).foreach { t =>
@@ -225,12 +225,6 @@ object Protect {
     * exec hooks ride QueryExecutionListener, operators/Observed).
     */
   def touch(spark: SparkSession, table: String): Unit =
-    setDdlTime(spark, table, System.currentTimeMillis() / 1000)
-
-  /** Shared by TOUCH and the INSERT-path refresh (HiveQl.bumpInsertTargets —
-    * the loadTable/loadPartition metastore update HOLD_DDLTIME suppresses).
-    */
-  def setDdlTime(spark: SparkSession, table: String, seconds: Long): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('transient_lastDdlTime' = '$seconds')")
+    HiveQl.native(spark, s"ALTER TABLE $table SET TBLPROPERTIES " +
+      s"('transient_lastDdlTime' = '${System.currentTimeMillis() / 1000}')")
 }

@@ -32,11 +32,11 @@ object Sessions {
       // dispatches on the actual schema, so this is harmless when the
       // fixture is TIMESTAMP_MICROS.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ${...} substitution is done ONCE, with Hive semantics, in
-      // HiveQl.sql (VariableSubstitution.java: hivevar:/bare lookups,
-      // unresolved stays LITERAL). Spark's native pass must not run after
-      // it — it rewrites anything unresolved to empty string and doesn't
-      // know the hivevar: namespace.
+      // ${...} substitution is done ONCE, with Hive semantics, in the
+      // injected HiveDialectParser (VariableSubstitution.java: hivevar:/bare
+      // lookups, unresolved stays LITERAL). Spark's native pass must not
+      // run after it — it rewrites anything unresolved to empty string and
+      // doesn't know the hivevar: namespace.
       .config("spark.sql.variable.substitute", "false")
       // Hive names view columns from the DDL list / auto-generates aliases
       // (create_view.q's view3) — Spark's permanent-view alias check is a

@@ -191,7 +191,7 @@ object MultiInsert {
       case _ => return runJoin(spark, srcText, parsed) // join-shaped source
     }
 
-    val srcDf = spark.sql(s"SELECT * FROM $srcText")
+    val srcDf = graft.HiveQl.native(spark, s"SELECT * FROM $srcText")
     val view = s"graft_mi_src_${counter.incrementAndGet()}"
     srcDf.createOrReplaceTempView(view)
     try {
@@ -205,7 +205,7 @@ object MultiInsert {
         }
       }
       val probeSql = parsed.map(p => spliceFrom(p._4))
-      val probes = probeSql.map(spark.sql) // lazy: analysis only
+      val probes = probeSql.map(graft.HiveQl.native(spark, _)) // lazy: analysis only
 
       // union of source columns any branch references (name-level ∩ is a
       // safe over-approximation; `SELECT *` pulls every column). The
@@ -281,7 +281,7 @@ object MultiInsert {
     if (branchSql.size < 2 ||
         spark.conf.getOption("spark.graft.multiInsert.parallel").contains("false"))
       branchSql.foreach(b =>
-        graft.HiveQl.withLegacyStoreRetry(spark)(c => c.sql(b)))
+        graft.HiveQl.withLegacyStoreRetry(spark)(graft.HiveQl.native(_, b)))
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(branchSql.size, 4))
@@ -290,7 +290,7 @@ object MultiInsert {
         val tasks = branchSql.map { b =>
           new java.util.concurrent.Callable[Unit] {
             override def call(): Unit =
-              graft.HiveQl.withLegacyStoreRetry(spark)(c => c.sql(b))
+              graft.HiveQl.withLegacyStoreRetry(spark)(graft.HiveQl.native(_, b))
           }
         }
         // invokeAll waits for all; surface the FIRST branch failure (same
@@ -313,7 +313,7 @@ object MultiInsert {
       // spells `select`) — find the keyword case-insensitively
       val at = "(?i)\\bSELECT\\b".r.findFirstMatchIn(s)
         .map(_.start).getOrElse(0)
-      spark.sql(s.substring(at))
+      graft.HiveQl.native(spark, s.substring(at))
     }
 
   /** Join-shaped source: prune + materialize each base table ONCE, re-point
@@ -335,7 +335,7 @@ object MultiInsert {
     }
     // probe against the ORIGINAL join text — names resolve identically, and
     // the analyzed plans carry both branch and ON-condition references
-    val probes = parsed.map(p => spark.sql(spliceFrom(p._4, srcText)))
+    val probes = parsed.map(p => graft.HiveQl.native(spark, spliceFrom(p._4, srcText)))
     def refsAbove(plan: LogicalPlan): Seq[String] = plan match {
       case s: SubqueryAlias if aliasesLower(s.alias.toLowerCase) => Nil
       case node =>

@@ -1,5 +1,9 @@
 package graft.plans
 
+import scala.util.Try
+
+import graft.{Authz, HiveQl, Protect}
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
@@ -8,11 +12,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** A HiveQL statement form (LOAD/EXPORT/IMPORT/TEMPORARY FUNCTION/
-  * multi-insert) planned as an eagerly-run command, so the statement
-  * surface works from ANY parser entry point (Thrift, raw spark.sql) —
-  * the reference executes these as driver-side Tasks (MoveTask,
-  * FunctionTask), which is exactly Spark's RunnableCommand shape.
+/** A HiveQL statement planned as an eagerly-run command (a dialect form or
+  * a native write/DDL, then its post-hooks) — the reference's driver-side
+  * Tasks (MoveTask, StatsTask, DDLTask), in Spark's RunnableCommand shape.
   */
 case class HiveStatement(statement: String, exec: SparkSession => Unit)
     extends LeafRunnableCommand {
@@ -33,44 +35,77 @@ case class HiveShowStatement(statement: String, rowSchema: StructType,
 }
 
 /** Session-parser injection of the HiveQL dialect (SparkSessionExtensions
-  * `injectParser`): every STATEMENT entering the session — `spark.sql`,
-  * Thrift/JDBC clients, view re-parsing — passes through variable
-  * substitution and the HiveQl text rewrites (MAPJOIN/STREAMTABLE hints,
-  * TABLESAMPLE ... ON, UNIQUEJOIN) before the delegate parser sees it.
-  * This is the reference's layering: CliDriver and HiveServer both funnel
-  * through Driver.compile (Driver.java), so dialect handling lives below
-  * every entry point, not in one client.
-  *
-  * Both passes are IDEMPOTENT (a rewritten statement contains none of the
-  * trigger tokens; substitution reaches a fixed point), so text routed via
-  * [[graft.HiveQl.sql]] — which substitutes/rewrites for its own statement
-  * dispatch — parses identically when it re-enters through `spark.sql`.
-  * Fragment hooks (expressions, identifiers, schemas) delegate untouched:
-  * the dialect is a statement-level surface.
+  * `injectParser`) and the one statement path of a graft session: every
+  * statement from [[graft.HiveQl.sql]], raw `spark.sql`, Thrift/JDBC or the
+  * CLI is prepared ([[graft.HiveQl.prepare]]), classified, parsed by the
+  * delegate, checked and dispatched here, once — the reference's layering,
+  * where CliDriver and HiveServer both funnel through Driver.compile.
+  * Dialect rows plan as a [[HiveShowStatement]]; dialect commands and
+  * native writes/DDL as a [[HiveStatement]] that also runs the post-hooks;
+  * queries and row-returning native statements as the delegate's plan.
+  * Statements graft submits while running another ([[graft.HiveQl.native]])
+  * and view re-parsing take only substitution and the static rewrites.
+  * Fragment hooks (expressions, identifiers, schemas) delegate untouched.
   */
 class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
-  private def dialect(sqlText: String): String =
-    graft.HiveQl.rewrite(graft.HiveQl.resolveScriptPaths(session,
-      graft.HiveQl.resolveDefaultSampleCols(session,
-        graft.HiveQl.substituteVars(session, sqlText))))
+  private def dialect(sqlText: String): String = HiveQl.rewrite(HiveQl.resolveScriptPaths(
+    session, HiveQl.resolveDefaultSampleCols(session, HiveQl.substituteVars(session, sqlText))))
 
-  override def parsePlan(sqlText: String): LogicalPlan = {
-    val text = graft.HiveQl.substituteVars(session, sqlText)
-    graft.HiveQl.statementRows(text) match {
-      case Some((schema, rows)) =>
-        return HiveShowStatement(
-          text.linesIterator.mkString(" ").take(120), schema, rows)
+  override def parsePlan(sqlText: String): LogicalPlan =
+    if (HiveQl.inNative) delegate.parsePlan(dialect(sqlText))
+    else statement(sqlText)
+
+  private def statement(rawQ: String): LogicalPlan = {
+    val q = HiveQl.prepare(session, rawQ)
+    val label = q.linesIterator.mkString(" ").take(120)
+    val rows = explainRows(q).orElse(HiveQl.statementRows(q))
+    val command = if (rows.isDefined) None else HiveQl.statementExec(q)
+    val parsed =
+      if (rows.isDefined || command.isDefined) None
+      else Some(Try(delegate.parsePlan(HiveQl.rewrite(q))))
+    val plan = parsed.flatMap(_.toOption)
+    // Driver.doAuthorization, then OFFLINE protect mode, before anything runs
+    Authz.checkStatement(session, q, plan)
+    Protect.checkStatement(session, q, plan)
+    rows match {
+      case Some((schema, rowsOf)) => HiveShowStatement(label, schema, rowsOf)
       case None =>
-    }
-    graft.HiveQl.statementExec(text) match {
-      case Some(exec) => HiveStatement(text.linesIterator.mkString(" ").take(120), exec)
-      case None => delegate.parsePlan(graft.HiveQl.rewrite(
-        graft.HiveQl.resolveScriptPaths(session,
-          graft.HiveQl.resolveDefaultSampleCols(session, text))))
+        HiveQl.checkStatement(session, q, plan)
+        def run(body: SparkSession => Unit) =
+          HiveStatement(label, HiveQl.runStatement(_, q, rawQ)(body))
+        command.map(run).getOrElse {
+          val p = parsed.get.get // a parse error surfaces here, after the checks
+          if (HiveQl.isWrite(q)) run(HiveQl.runWrite(_, q, p)) else p
+        }
     }
   }
+
+  /** EXPLAIN over a DIALECT statement (one Spark's parser cannot see —
+    * SHOW INDEXES, LOAD, EXPORT...): the reference explains every
+    * statement kind (ExplainTask over the semantic analyzer's task DAG);
+    * the engine surfaces the statement's dialect dispatch as the plan.
+    * Spark-parseable bodies (EXPLAIN SELECT/DROP FUNCTION...) are left to
+    * Spark's own ExplainCommand.
+    */
+  private def explainRows(q: String): Option[(StructType, SparkSession => Seq[Row])] =
+    """(?is)^\s*EXPLAIN\s+(?:EXTENDED\s+|FORMATTED\s+|DEPENDENCY\s+)?([\s\S]*)$""".r
+      .findFirstMatchIn(q).map(_.group(1)).filter { body =>
+        try HiveQl.statementRows(body).isDefined || HiveQl.statementExec(body).isDefined
+        catch { case _: Exception => false }
+      }.map(body => (StructType.fromDDL("plan STRING NOT NULL"),
+        _ => Seq("ABSTRACT SYNTAX TREE:", "  " + body.trim.takeWhile(_ != '\n'),
+          "STAGE PLANS: dialect statement (graft statement dispatch)").map(Row(_))))
+
+  /** A native statement's unresolved plan, unchecked (None for dialect
+    * forms and unparseable text): what lock planning reads. */
+  def unresolvedPlan(sqlText: String): Option[LogicalPlan] = {
+    val text = HiveQl.substituteVars(session, sqlText)
+    if (HiveQl.statementRows(text).isDefined || HiveQl.statementExec(text).isDefined) None
+    else Try(delegate.parsePlan(dialect(text))).toOption
+  }
+
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(dialect(sqlText))
 
@@ -88,4 +123,15 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     delegate.parseDataType(sqlText)
   override def parseRoutineParam(sqlText: String): StructType =
     delegate.parseRoutineParam(sqlText)
+}
+
+object HiveDialectParser {
+  /** The session's HiveQL parser; a session without it would silently run
+    * plain Spark SQL. */
+  def of(spark: SparkSession): HiveDialectParser = {
+    val p = spark.sessionState.sqlParser
+    require(p.isInstanceOf[HiveDialectParser], s"session parser is " +
+      s"${p.getClass.getName}; build graft sessions with graft.Sessions.builder")
+    p.asInstanceOf[HiveDialectParser]
+  }
 }

@@ -12,17 +12,14 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * full-partition scan is a cluster-day, so the engine honors the conf
   * with the reference's own error phrasings.
   *
-  * Checks run over the UNRESOLVED parse of the rewritten statement —
-  * names are enough for all three rules, matching Driver-time semantic
-  * analysis (no execution cost when the conf is off).
+  * Checks run over the statement's UNRESOLVED plan — names are enough
+  * for all three rules, matching Driver-time semantic analysis (no
+  * execution cost when the conf is off).
   */
 object StrictMode {
 
-  def check(spark: SparkSession, q: String): Unit = {
+  def check(spark: SparkSession, plan: LogicalPlan): Unit = {
     if (!spark.conf.getOption("hive.mapred.mode").contains("strict")) return
-    val plan =
-      try spark.sessionState.sqlParser.parsePlan(graft.HiveQl.rewrite(q))
-      catch { case _: Exception => return }
     checkCartesian(plan)
     checkOrderByLimit(plan)
     checkPartitionPredicate(spark, plan)

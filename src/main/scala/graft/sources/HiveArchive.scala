@@ -161,7 +161,7 @@ object HiveArchive {
     val (_, dir) = partitionPath(spark, table, spec)
     val uri = archive(spark, dir)
     val specSql = spec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $table PARTITION ($specSql) SET LOCATION '$uri'")
+    graft.HiveQl.native(spark, s"ALTER TABLE $table PARTITION ($specSql) SET LOCATION '$uri'")
   }
 
   /** `ALTER TABLE t UNARCHIVE PARTITION (spec)`: extract + repoint back. */
@@ -170,6 +170,6 @@ object HiveArchive {
     val (_, dir) = partitionPath(spark, table, spec)
     unarchive(spark, dir)
     val specSql = spec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
-    spark.sql(s"ALTER TABLE $table PARTITION ($specSql) SET LOCATION '$dir'")
+    graft.HiveQl.native(spark, s"ALTER TABLE $table PARTITION ($specSql) SET LOCATION '$dir'")
   }
 }

@@ -154,7 +154,7 @@ object HiveLoad {
       }
       if (partSpec.nonEmpty) {
         val spec = partSpec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
-        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION ($spec)")
+        graft.HiveQl.native(spark, s"ALTER TABLE $table ADD IF NOT EXISTS PARTITION ($spec)")
       }
       spark.catalog.refreshTable(table)
       return
@@ -186,7 +186,7 @@ object HiveLoad {
       decoded.createOrReplaceTempView(tmp)
       val spec = partSpec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
       val verb = if (overwrite) "OVERWRITE TABLE" else "INTO TABLE"
-      try spark.sql(s"INSERT $verb $table PARTITION ($spec) SELECT * FROM $tmp")
+      try graft.HiveQl.native(spark, s"INSERT $verb $table PARTITION ($spec) SELECT * FROM $tmp")
       finally spark.catalog.dropTempView(tmp)
     } else decoded.write
       .mode(if (overwrite) "overwrite" else "append")

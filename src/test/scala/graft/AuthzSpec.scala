@@ -166,4 +166,18 @@ class AuthzSpec extends SparkSpec {
     }
     Authz.reset()
   }
+
+  test("raw spark.sql is authorized like HiveQl.sql (one statement path)") {
+    Authz.reset()
+    Tables.registerAll(spark, sfDir)
+    enforced {
+      asUser("mallory") {
+        val e = intercept[SecurityException](
+          spark.sql("SELECT count(*) FROM nation"))
+        assert(e.getMessage.startsWith(
+          "Authorization failed:No privilege 'Select' found for inputs"))
+      }
+    }
+    Authz.reset()
+  }
 }

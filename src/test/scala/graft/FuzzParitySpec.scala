@@ -13,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 1. ANSI-subset differential: generate random SELECTs (joins,
   *    aggregates, CASE, IN, LIKE, BETWEEN, HAVING, nested FROM-subquery,
   *    ORDER/LIMIT) that are valid in BOTH HiveQL and Spark SQL, run each
-  *    through `HiveQl.sql` (the full rewrite pipeline) AND raw
-  *    `spark.sql`, and require identical result multisets. Same engine
+  *    through `HiveQl.sql` (the full rewrite pipeline) AND the native
+  *    path graft's own statements take (`HiveQl.native`: substitution
+  *    and the static rewrites only), and require identical result
+  *    multisets. Same engine
   *    on both sides, so any divergence is a rewrite-pass bug, not a
   *    semantics gap. (Numeric compare is tolerance-based: the Hive
   *    FloatLiteral pass types `0.5` as DOUBLE where Spark's parser makes
@@ -179,7 +181,7 @@ class FuzzParitySpec extends SparkSpec {
   private def diffCase(r: Random, i: Int): Option[String] = {
     val q = genQuery(r)
     val viaHive = canon(HiveQl.sql(s, q))
-    val viaSpark = canon(s.sql(q))
+    val viaSpark = canon(HiveQl.native(s, q))
     if (viaHive == viaSpark) None
     else Some(s"fuzz#$i diverged:\n$q\nhive rows=${viaHive.size} " +
       s"spark rows=${viaSpark.size}\n" +

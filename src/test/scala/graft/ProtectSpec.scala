@@ -114,4 +114,17 @@ class ProtectSpec extends SparkSpec {
     assert(e2.getMessage.contains("HOLD_DDLTIME hint cannot be applied"))
     spark.sql("DROP TABLE hold_p")
   }
+
+  test("EXPLAIN of an INSERT writes nothing and runs no post-hook") {
+    spark.sql("DROP TABLE IF EXISTS explain_t")
+    spark.sql("CREATE TABLE explain_t (k BIGINT) USING parquet")
+    assert(ddlTime("explain_t").isEmpty)
+    val plan = HiveQl.sql(spark, "EXPLAIN INSERT INTO explain_t SELECT 1")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(plan.contains("InsertInto"), plan)
+    assert(ddlTime("explain_t").isEmpty,
+      "an explained INSERT must not refresh the DDL time")
+    assert(spark.table("explain_t").count() == 0)
+    spark.sql("DROP TABLE explain_t")
+  }
 }
