@@ -2274,23 +2274,9 @@ object HiveQl {
     InsertTarget.findAllMatchIn(masked).map(_.group(1)).toSeq.distinct
       .filterNot(_.equalsIgnoreCase("DIRECTORY")) // INSERT OVERWRITE DIRECTORY
       .foreach { t =>
-        try {
-          // one metastore read and one write, then the relation-cache
-          // invalidation ALTER TABLE SET TBLPROPERTIES performs (later scans
-          // must not keep a stale FileIndex). Not the SQL command: it makes
-          // six serialized metastore calls, and this runs after every INSERT
-          // from every entry point. Temp views / missing tables throw
-          // AnalysisException — ignored.
-          val cat = spark.sessionState.catalog
-          val ti = cat.qualifyIdentifier(spark.sessionState.sqlParser.parseTableIdentifier(t))
-          val raw = cat.externalCatalog.getTable(ti.database.get, ti.table)
-          val prev = raw.properties.get("transient_lastDdlTime").map(_.trim)
-            .filter(_.forall(_.isDigit)).map(_.toLong).getOrElse(0L)
-          val now = math.max(System.currentTimeMillis() / 1000, prev + 1)
-          cat.externalCatalog.alterTable(raw.copy(properties =
-            raw.properties + ("transient_lastDdlTime" -> now.toString)))
-          cat.invalidateCachedTable(ti)
-        } catch { case _: org.apache.spark.sql.AnalysisException => }
+        try Protect.setDdlTime(spark, t)(prev =>
+          math.max(System.currentTimeMillis() / 1000, prev + 1))
+        catch { case _: org.apache.spark.sql.AnalysisException => } // temp view / missing
       }
 
   /** hive.stats.autogather (StatsTask.java:56; HiveConf 0.8 default TRUE):

@@ -3,6 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Table protect mode + TOUCH (the last §2.11 ALTER variants: Hive.g:658
@@ -225,6 +226,22 @@ object Protect {
     * exec hooks ride QueryExecutionListener, operators/Observed).
     */
   def touch(spark: SparkSession, table: String): Unit =
-    HiveQl.native(spark, s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('transient_lastDdlTime' = '${System.currentTimeMillis() / 1000}')")
+    setDdlTime(spark, table)(_ => System.currentTimeMillis() / 1000)
+
+  /** Sets transient_lastDdlTime to `next` of its current value (0 if
+    * unset), for TOUCH and the INSERT refresh (HiveQl.bumpInsertTargets):
+    * one metastore read and write, then the cache invalidation ALTER TABLE
+    * SET TBLPROPERTIES does (that command makes six serialized calls). */
+  def setDdlTime(spark: SparkSession, table: String)(next: Long => Long): Unit = {
+    val cat = spark.sessionState.catalog
+    val ti = cat.qualifyIdentifier(spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val raw = cat.externalCatalog.getTable(ti.database.get, ti.table)
+    require(raw.tableType != CatalogTableType.VIEW,
+      s"$table is a view: ALTER TABLE does not apply to views")
+    val prev = raw.properties.get("transient_lastDdlTime").flatMap(_.trim.toLongOption)
+      .getOrElse(0L)
+    cat.externalCatalog.alterTable(raw.copy(properties =
+      raw.properties + ("transient_lastDdlTime" -> next(prev).toString)))
+    cat.invalidateCachedTable(ti)
+  }
 }

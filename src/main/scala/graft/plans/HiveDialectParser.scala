@@ -57,14 +57,21 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     if (HiveQl.inNative) delegate.parsePlan(dialect(sqlText))
     else statement(sqlText)
 
-  private def statement(rawQ: String): LogicalPlan = {
+  /** One statement's prepared text, dialect rows, dialect command and
+    * delegate parse (None for the two dialect kinds), each found once. */
+  private def classify(rawQ: String) = {
     val q = HiveQl.prepare(session, rawQ)
-    val label = q.linesIterator.mkString(" ").take(120)
     val rows = explainRows(q).orElse(HiveQl.statementRows(q))
     val command = if (rows.isDefined) None else HiveQl.statementExec(q)
     val parsed =
       if (rows.isDefined || command.isDefined) None
       else Some(Try(delegate.parsePlan(HiveQl.rewrite(q))))
+    (q, rows, command, parsed)
+  }
+
+  private def statement(rawQ: String): LogicalPlan = {
+    val (q, rows, command, parsed) = classify(rawQ)
+    val label = q.linesIterator.mkString(" ").take(120)
     val plan = parsed.flatMap(_.toOption)
     // Driver.doAuthorization, then OFFLINE protect mode, before anything runs
     Authz.checkStatement(session, q, plan)
@@ -98,13 +105,11 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
         _ => Seq("ABSTRACT SYNTAX TREE:", "  " + body.trim.takeWhile(_ != '\n'),
           "STAGE PLANS: dialect statement (graft statement dispatch)").map(Row(_))))
 
-  /** A native statement's unresolved plan, unchecked (None for dialect
-    * forms and unparseable text): what lock planning reads. */
-  def unresolvedPlan(sqlText: String): Option[LogicalPlan] = {
-    val text = HiveQl.substituteVars(session, sqlText)
-    if (HiveQl.statementRows(text).isDefined || HiveQl.statementExec(text).isDefined) None
-    else Try(delegate.parsePlan(dialect(text))).toOption
-  }
+  /** A native statement's unresolved plan as [[parsePlan]] classifies and
+    * parses it, unchecked (None for dialect forms and unparseable text):
+    * what lock planning reads. */
+  def unresolvedPlan(sqlText: String): Option[LogicalPlan] =
+    classify(sqlText)._4.flatMap(_.toOption)
 
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(dialect(sqlText))

@@ -84,6 +84,17 @@ class LockSpec extends SparkSpec {
       Seq(Locks.Exclusive), "insert target EXCLUSIVE (Driver.java:790-793)")
     assert(ins.collect { case (n, m, _) if n == "default@nation" => m } ==
       Seq(Locks.Shared))
+    // lock planning reads the statement as it runs: under hive.test.mode
+    // the INSERT writes, and so locks, the prefixed table
+    spark.conf.set("hive.test.mode", "true")
+    spark.conf.set("hive.test.mode.nosamplelist", "nation")
+    try assert(Locks.lockObjectsFor(spark,
+        "INSERT INTO TABLE lock_sink SELECT n_nationkey FROM nation")
+      .collect { case (n, Locks.Exclusive, _) => n } == Seq("default@test_lock_sink"))
+    finally {
+      spark.conf.unset("hive.test.mode")
+      spark.conf.unset("hive.test.mode.nosamplelist")
+    }
 
     // held during the statement, gone after (release-in-finally)
     spark.conf.set("hive.support.concurrency", "true")

@@ -66,9 +66,6 @@ def main():
         return 2
     a, b = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
-    threads = os.environ.get("DUCKDB_THREADS")
-    if threads:
-        con.execute(f"SET threads={int(threads)}")
     diffs = []
     qa, qb = outputs(a), outputs(b)
     for n in sorted(set(qa) - set(qb)):
