@@ -5,7 +5,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** GRANT/REVOKE authorization (closes the §7.5 authz drop): the
   * reference's privilege model — roles, per-principal grants on tables
@@ -477,15 +477,15 @@ object Authz {
       deny("Update", "outputs", spark.catalog.currentDatabase, table)
   }
 
-  /** Driver.doAuthorization for one statement over its unresolved plan
-    * (names are what get authorized; None for dialect forms): inputs need
-    * Select, insert targets need Update.
+  /** Driver.doAuthorization for one statement over its reads and writes
+    * (names are what get authorized) and its unresolved plan's column
+    * names (None for dialect forms): reads need Select, writes Update.
     */
   private val AddPartitionAuth =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION""".r
 
   def checkStatement(spark: SparkSession, stmt: String,
-      parsed: Option[LogicalPlan]): Unit = {
+      parsed: Option[LogicalPlan], refs: plans.StatementRefs): Unit = {
     if (!enabled(spark)) return
     // DDLSemanticAnalyzer's addPartition output requires CREATE
     // (authorization_fail_2.q's golden: "No privilege 'Create' found")
@@ -505,7 +505,6 @@ object Authz {
     val plan = parsed.getOrElse(return)
     val user = currentUser(spark)
     val db = spark.catalog.currentDatabase
-    val (inputs, outputs) = referencedTables(plan)
     // The statement's referenced attribute names (unresolved). Qualified
     // attributes (a.key) bind to the relation their qualifier aliases —
     // the reference checks needed columns PER TableScan
@@ -540,10 +539,10 @@ object Authz {
     scanAliases(plan)
     scanExprs(plan)
     plan.foreach(_.subqueries.foreach { sq => scanAliases(sq); scanExprs(sq) })
-    outputs.foreach { t =>
+    refs.writeTables.foreach { t =>
       if (!holds(spark, user, "Update", t)) deny("Update", "outputs", db, t)
     }
-    inputs.foreach { t =>
+    refs.reads.foreach { t =>
       val tl = t.toLowerCase
       val forThis = qualified.collect { case (q, cols)
         if aliasOf.get(q).contains(tl) || q == tl => cols }.flatten.toSet
@@ -567,22 +566,5 @@ object Authz {
             s"partitionName:$spec}. Use show grant to get more details.")
       }
     }
-  }
-
-  /** (inputs, insert targets) referenced by an unresolved plan. */
-  def referencedTables(plan: LogicalPlan): (Seq[String], Seq[String]) = {
-    val in = mutable.LinkedHashSet.empty[String]
-    val out = mutable.LinkedHashSet.empty[String]
-    def visit(p: LogicalPlan, writing: Boolean): Unit = p match {
-      case i: InsertIntoStatement =>
-        visit(i.table, writing = true)
-        visit(i.query, writing = false)
-      case u: UnresolvedRelation =>
-        (if (writing) out else in) += u.multipartIdentifier.mkString(".")
-      case other => other.children.foreach(visit(_, writing))
-    }
-    visit(plan, writing = false)
-    plan.foreach(_.subqueries.foreach(visit(_, writing = false)))
-    (in.toSeq, out.toSeq)
   }
 }

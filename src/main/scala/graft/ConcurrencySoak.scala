@@ -102,11 +102,14 @@ object ConcurrencySoak {
     // commitJob. That is exactly why the reference gates concurrent
     // writers behind the lock manager (Driver.acquireReadWriteLocks takes
     // EXCLUSIVE on insert targets under hive.support.concurrency): the
-    // soak therefore serializes shared-table inserts through LOCK TABLE
-    // ... EXCLUSIVE, which is the deployment contract a 100 TB warehouse
-    // with many writer jobs runs under.
+    // soak therefore serializes shared-table inserts through an EXCLUSIVE
+    // explicit lock, which is the deployment contract a 100 TB warehouse
+    // with many writer jobs runs under. The lock is taken on a companion
+    // table: an explicit lock on the insert target itself refuses the
+    // INSERT (insert_into1/2.q).
     HiveQl.sql(spark,
       "CREATE TABLE soak_shared (w INT, i INT) USING parquet")
+    HiveQl.sql(spark, "CREATE TABLE soak_shared_lock (k INT) USING parquet")
     HiveQl.sql(spark, "CREATE TABLE soak_conflict (k INT) USING parquet")
 
     // ---- lock-conflict semantics under two LIVE connections ------------
@@ -133,8 +136,9 @@ object ConcurrencySoak {
     val start = new CountDownLatch(1)
     val done = new CountDownLatch(nWorkers)
     val inserted = new java.util.concurrent.atomic.AtomicInteger(0)
-    // connections open SEQUENTIALLY (embedded Derby's first-boot race: 8
-    // simultaneous session handshakes each race metastore-client init,
+    // connections open and close SEQUENTIALLY, from this thread (embedded
+    // Derby's boot race: session handshakes and closes that overlap each
+    // race the Hive SessionState's metastore-client init or teardown,
     // XBM0J "directory already exists" / pm=null — a BI pool ramps its
     // connections one at a time too); all 8 stay LIVE through the soak,
     // which is the concurrency actually under test
@@ -162,7 +166,7 @@ object ConcurrencySoak {
                 var attempts = 0
                 while (!locked && attempts < 600 && failure.get == null) {
                   try {
-                    st.execute("LOCK TABLE soak_shared EXCLUSIVE")
+                    st.execute("LOCK TABLE soak_shared_lock EXCLUSIVE")
                     locked = true
                   } catch {
                     case e: java.sql.SQLException
@@ -174,7 +178,7 @@ object ConcurrencySoak {
                   s"after $attempts attempts (starvation)")
                 else {
                   try st.execute(s"INSERT INTO soak_shared VALUES ($w, $i)")
-                  finally st.execute("UNLOCK TABLE soak_shared")
+                  finally st.execute("UNLOCK TABLE soak_shared_lock")
                   inserted.incrementAndGet()
                 }
               case 2 =>
@@ -204,7 +208,6 @@ object ConcurrencySoak {
           rs.next()
           if (rs.getLong(1) != myInserts)
             fail(s"worker $w final count ${rs.getLong(1)} != $myInserts")
-          conn.close()
         } catch { case e: Throwable =>
           fail(s"worker $w died: ${e.getClass.getSimpleName} ${e.getMessage}")
         } finally done.countDown()
@@ -216,6 +219,11 @@ object ConcurrencySoak {
     if (!done.await(15, TimeUnit.MINUTES))
       fail(s"soak did not finish in 15 min — " +
         s"live workers: ${threads.count(_.isAlive)} (deadlock?)")
+    conns.zipWithIndex.foreach { case (c, w) =>
+      try c.close()
+      catch { case e: Throwable =>
+        fail(s"worker $w close: ${e.getClass.getSimpleName} ${e.getMessage}") }
+    }
 
     // ---- global lost-update check over the shared table ----------------
     if (failure.get == null) {

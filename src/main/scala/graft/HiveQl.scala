@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import graft.plans.StatementRefs.Write
 
 /** HiveQL dialect entry point (SURVEY.md §7.2 M1). Spark 4 parses nearly the
   * whole Hive-0.8 grammar natively (SORT/DISTRIBUTE/CLUSTER BY, LATERAL
@@ -1740,19 +1741,20 @@ object HiveQl {
     WriteStatement.findFirstIn(LeadingComments.replaceFirstIn(masked(q)._1, "")).isDefined
 
   /** A statement's semantic checks, after authorization and protect mode,
-    * over its unresolved plan (None for dialect forms and parse errors). */
-  private[graft] def checkStatement(spark: SparkSession, q: String, plan: Option[LogicalPlan]): Unit = {
-    val (maskedQ, qLits) = masked(q)
+    * over its unresolved plan (None for dialect forms) and its refs. */
+  private[graft] def checkStatement(spark: SparkSession, q: String,
+      plan: Option[LogicalPlan], refs: plans.StatementRefs): Unit = {
+    val maskedQ = masked(q)._1
     // HOLD_DDLTIME hint (Hive.g:1499 TOK_HOLD_DDLTIME; SemanticAnalyzer
     // .checkHoldDDLTime): rejected for dynamic or non-existent partitions
     // with the reference's exact message (ErrorMsg.java:170)
-    if (HoldDdltime.findFirstIn(maskedQ).isDefined) checkHoldDdltime(spark, maskedQ, qLits)
+    if (HoldDdltime.findFirstIn(maskedQ).isDefined) checkHoldDdltime(spark, refs.writes)
     checkSemanticHooksPre(spark, maskedQ)
-    plan.foreach(updateInputAccessTime(spark, _))
+    updateInputAccessTime(spark, refs.reads)
     checkSampleBounds(spark, maskedQ)
-    plan.foreach(plans.StrictMode.check(spark, _))
+    plan.foreach(plans.StrictMode.check(spark, _, refs))
     checkReservedPartitionNames(spark, q)
-    checkInsertLockConflicts(spark, maskedQ)
+    checkInsertLockConflicts(spark, refs.writeTables)
     checkExecHookClasses(spark)
     // DDLSemanticAnalyzer archive checks (archive3/4.q): exactly one
     // PARTITION clause
@@ -1760,15 +1762,15 @@ object HiveQl {
         .findFirstIn(maskedQ).isDefined)
       throw new IllegalArgumentException(
         "ARCHIVE can only be run on a single partition")
-    // duplicate INSERT OVERWRITE DIRECTORY targets in one multi-insert
-    // (duplicate_insert3.q)
-    locally {
-      val dirs = """(?is)INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY\s+'([^']+)'""".r
-        .findAllMatchIn(q).map(_.group(1)).toSeq
-      dirs.groupBy(identity).collectFirst { case (d, g) if g.size > 1 => d }
-        .foreach(d => throw new IllegalArgumentException(
-          s"The same output cannot be present multiple times: $d"))
-    }
+    // SemanticAnalyzer's duplicate-output check (duplicate_insert1–3.q):
+    // two INSERTs of one statement may not write the same table+partition
+    // or directory
+    val outputs = refs.writes.map(w => w.table -> (w.table.toLowerCase,
+      w.spec.map { case (k, v) => k.toLowerCase -> v })) ++
+      refs.dirs.map(d => d -> (d, Map.empty[String, Option[String]]))
+    outputs.groupBy(_._2).collectFirst { case (_, g) if g.size > 1 => g.head._1 }
+      .foreach(o => throw new IllegalArgumentException(
+        s"The same output cannot be present multiple times: $o"))
     // CREATE OR REPLACE VIEW may not add/drop partition columns while
     // partitions exist (create_or_replace_view1/2.q)
     """(?is)^\s*CREATE\s+OR\s+REPLACE\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)""".r
@@ -1794,9 +1796,9 @@ object HiveQl {
 
   /** Runs a non-query statement, then its post-hooks (the metastore side
     * effects of the reference's MoveTask/StatsTask/DDLTask). */
-  private[graft] def runStatement(spark: SparkSession, q: String, rawQ: String)(
-      run: SparkSession => Unit): Unit = {
-    val (maskedQ, qLits) = masked(q)
+  private[graft] def runStatement(spark: SparkSession, q: String, rawQ: String,
+      refs: plans.StatementRefs)(run: SparkSession => Unit): Unit = {
+    val maskedQ = masked(q)._1
     // tables contained in a database about to be dropped, captured while
     // the catalog can still list them — the post-drop grant/protect
     // cascade below needs the names (ADVICE r16 #4)
@@ -1811,9 +1813,9 @@ object HiveQl {
     // an INSERT refreshes the dest table's transient_lastDdlTime (the
     // metastore update loadTable/loadPartition performs) unless the
     // HOLD_DDLTIME hint suppresses it
-    if (HoldDdltime.findFirstIn(maskedQ).isEmpty) bumpInsertTargets(spark, maskedQ)
-    mergeSmallFiles(spark, maskedQ, qLits)
-    autogatherStats(spark, maskedQ, qLits)
+    if (HoldDdltime.findFirstIn(maskedQ).isEmpty) bumpInsertTargets(spark, refs.writeTables)
+    mergeSmallFiles(spark, refs.writes)
+    autogatherStats(spark, refs.writes)
     applyDefaultTableParams(spark, maskedQ)
     applySemanticHooksPost(spark, maskedQ)
     recordLocationPattern(spark, rawQ)
@@ -2027,12 +2029,8 @@ object HiveQl {
   // ANY lock refuses like the reference's retry-exhausted acquisition.
   // Only fires when the session's lock manager actually holds locks, so
   // un-locked workloads never pay the check.
-  private val InsertTargetStmt =
-    """(?is)\bINSERT\s+(?:INTO|OVERWRITE)\s+TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?""".r
-
-  private def checkInsertLockConflicts(spark: SparkSession, masked: String): Unit =
-    InsertTargetStmt.findAllMatchIn(masked).foreach { m =>
-      val t = m.group(1)
+  private def checkInsertLockConflicts(spark: SparkSession, targets: Seq[String]): Unit =
+    targets.foreach { t =>
       val me = Locks.owner(spark)
       val held = Locks.manager.getLocks(Some(Locks.lockName(spark, t)))
       // the statement's OWN implicit lock (withStatementLocks acquires it
@@ -2092,10 +2090,9 @@ object HiveQl {
   // ---- UpdateInputAccessTimeHook.PreExec shim (updateAccessTime.q): when
   // listed in hive.exec.pre.hooks, every input table of a query gets its
   // lastAccessTime stamped before execution.
-  private def updateInputAccessTime(spark: SparkSession, plan: LogicalPlan): Unit = {
+  private def updateInputAccessTime(spark: SparkSession, inputs: Seq[String]): Unit = {
     if (!spark.conf.getOption("hive.exec.pre.hooks").exists(
         _.contains("UpdateInputAccessTimeHook"))) return
-    val (inputs, _) = Authz.referencedTables(plan)
     val now = System.currentTimeMillis()
     inputs.foreach { t =>
       try {
@@ -2174,8 +2171,7 @@ object HiveQl {
     * nothing. Runs BEFORE autogatherStats so published numFiles/totalSize
     * describe the merged layout, same order as the reference's task DAG.
     */
-  private def mergeSmallFiles(spark: SparkSession, masked: String,
-      lits: IndexedSeq[String]): Unit = {
+  private def mergeSmallFiles(spark: SparkSession, writes: Seq[Write]): Unit = {
     val on = Seq("hive.merge.mapfiles", "hive.merge.mapredfiles")
       .exists(k => spark.conf.getOption(k).exists(_.trim.equalsIgnoreCase("true")))
     if (!on) return
@@ -2185,8 +2181,7 @@ object HiveQl {
     val per = spark.conf.getOption("hive.merge.size.per.task")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(256L * 1024 * 1024)
     val cat = spark.sessionState.catalog
-    InsertTarget.findAllMatchIn(masked).toSeq.foreach { m =>
-      val t = m.group(1)
+    writes.foreach { case Write(t, spec) =>
       try {
         val ti = spark.sessionState.sqlParser.parseTableIdentifier(t)
         val meta = cat.getTableMetadata(ti)
@@ -2212,16 +2207,10 @@ object HiveQl {
           // a STATIC partition spec scopes the merge to the partitions it
           // pins (O(written unit), like gatherStats) — only a dynamic or
           // absent spec walks the whole table directory
-          val staticKv: Map[String, String] = Option(m.group(3)).toSeq
-            .flatMap(s => sources.HiveExim.parsePartSpec(unmaskLiterals(s, lits)))
-            .collect { case (k, Some(v)) => k -> stripQuotes(v) }.toMap
-          val byLower = meta.partitionColumnNames.map(c => c.toLowerCase -> c).toMap
-          val normKv = staticKv.map { case (k, v) =>
-            byLower.getOrElse(k.toLowerCase, k) -> v }
           val dirs: Seq[String] =
-            if (meta.partitionColumnNames.nonEmpty && normKv.nonEmpty &&
-                Option(m.group(3)).exists(!_.split(",").exists(!_.contains("="))))
-              cat.listPartitions(ti, Some(normKv))
+            if (meta.partitionColumnNames.nonEmpty && spec.nonEmpty &&
+                spec.values.forall(_.isDefined))
+              cat.listPartitions(ti, Some(staticSpec(meta, spec)))
                 .map(p => new org.apache.hadoop.fs.Path(p.location).toString)
             else Seq(new org.apache.hadoop.fs.Path(meta.location).toString)
           val merged = dirs.map(d => sources.Compaction.compactIfFragmented(
@@ -2236,48 +2225,43 @@ object HiveQl {
   // rewriteMasked like STREAMTABLE, detection in the statement checks and
   // post-hooks above
   private val HoldDdltime = """(?i)/\*\+\s*HOLD_DDLTIME\s*\*/""".r
-  // the lookahead skips INSERT OVERWRITE [LOCAL] DIRECTORY (a path, not a
-  // table — it must not trigger table-property work); `quoted` identifiers
-  // are targets too (backtick/reserved-word tables, q153's `table`)
-  private val InsertTarget =
-    ("""(?is)\bINSERT\s+(?:OVERWRITE\s+|INTO\s+)(?!(?:LOCAL|DIRECTORY)\b)""" +
-      """(?:TABLE\s+)?((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)\s*(PARTITION\s*\(([^)]*)\))?""").r
+
+  /** A write's static partition values keyed by the table's own column
+    * spelling (Hive resolves partition-spec keys case-insensitively,
+    * stats3.q); dynamic columns are dropped. */
+  private def staticSpec(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      spec: Map[String, Option[String]]): Map[String, String] = {
+    val byLower = meta.partitionColumnNames.map(c => c.toLowerCase -> c).toMap
+    spec.collect { case (k, Some(v)) => byLower.getOrElse(k.toLowerCase, k) -> v }
+  }
 
   /** SemanticAnalyzer.java:3720,3859: HOLD_DDLTIME is illegal on a dynamic
-    * partition spec (a column with no `=`) and on a static partition that
-    * does not already exist.
+    * partition spec and on a static partition that does not already exist.
     */
-  private def checkHoldDdltime(spark: SparkSession, masked: String,
-      lits: IndexedSeq[String]): Unit =
-    InsertTarget.findAllMatchIn(masked).foreach { m =>
-      Option(m.group(3)).foreach { specMasked =>
-        val spec = unmaskLiterals(specMasked, lits)
-        val err = new IllegalStateException(
-          "HOLD_DDLTIME hint cannot be applied to dynamic partitions or " +
-            "non-existent partitions")
-        if (spec.split(",").exists(!_.contains("="))) throw err // dynamic
-        val exists =
-          try !native(spark,
-            s"SHOW PARTITIONS ${m.group(1)} PARTITION ($spec)").isEmpty
-          catch { case _: Exception => false }
-        if (!exists) throw err
-      }
+  private def checkHoldDdltime(spark: SparkSession, writes: Seq[Write]): Unit =
+    writes.filter(_.spec.nonEmpty).foreach { w =>
+      val cat = spark.sessionState.catalog
+      val exists = w.spec.values.forall(_.isDefined) && (try {
+        val ti = spark.sessionState.sqlParser.parseTableIdentifier(w.table)
+        cat.listPartitionNames(ti, Some(staticSpec(cat.getTableMetadata(ti), w.spec))).nonEmpty
+      } catch { case scala.util.control.NonFatal(_) => false })
+      if (!exists) throw new IllegalStateException(
+        "HOLD_DDLTIME hint cannot be applied to dynamic partitions or " +
+          "non-existent partitions")
     }
 
   /** The metastore side effect of a successful INSERT (Hive.loadTable /
     * loadPartition → alterTable): refresh the dest's transient_lastDdlTime.
     * Monotonic (max(now, prev+1)) so two inserts in one second still
-    * observably differ; skipped under HOLD_DDLTIME. Temp-view / directory
-    * targets have no table properties — ignored.
+    * observably differ; skipped under HOLD_DDLTIME. Temp-view targets have
+    * no table properties — ignored.
     */
-  private def bumpInsertTargets(spark: SparkSession, masked: String): Unit =
-    InsertTarget.findAllMatchIn(masked).map(_.group(1)).toSeq.distinct
-      .filterNot(_.equalsIgnoreCase("DIRECTORY")) // INSERT OVERWRITE DIRECTORY
-      .foreach { t =>
-        try Protect.setDdlTime(spark, t)(prev =>
-          math.max(System.currentTimeMillis() / 1000, prev + 1))
-        catch { case _: org.apache.spark.sql.AnalysisException => } // temp view / missing
-      }
+  private def bumpInsertTargets(spark: SparkSession, tables: Seq[String]): Unit =
+    tables.foreach { t =>
+      try Protect.setDdlTime(spark, t)(prev =>
+        math.max(System.currentTimeMillis() / 1000, prev + 1))
+      catch { case _: org.apache.spark.sql.AnalysisException => } // temp view / missing
+    }
 
   /** hive.stats.autogather (StatsTask.java:56; HiveConf 0.8 default TRUE):
     * every INSERT publishes numRows / rawDataSize / numFiles / totalSize
@@ -2292,8 +2276,7 @@ object HiveQl {
     * bytes (the reference's serde-resident size needs its write-path
     * counter).
     */
-  private def autogatherStats(spark: SparkSession, masked: String,
-      lits: IndexedSeq[String]): Unit = {
+  private def autogatherStats(spark: SparkSession, writes: Seq[Write]): Unit = {
     // the reference DEFAULTS the conf to true; here gathering activates on
     // an explicit SET — an implicit default would bill every insert in the
     // engine a second count job whether or not anyone reads the stats
@@ -2301,11 +2284,8 @@ object HiveQl {
     // warehouse that reads Hive stats) sets the conf, same surface.
     if (!spark.conf.getOption("hive.stats.autogather")
         .exists(v => !v.trim.equalsIgnoreCase("false"))) return
-    InsertTarget.findAllMatchIn(masked).toSeq.foreach { m =>
-      val specKv: Map[String, String] = Option(m.group(3)).toSeq
-        .flatMap(s => sources.HiveExim.parsePartSpec(unmaskLiterals(s, lits)))
-        .collect { case (k, Some(v)) => k -> stripQuotes(v) }.toMap
-      try gatherStats(spark, m.group(1), specKv)
+    writes.foreach { w =>
+      try gatherStats(spark, w.table, w.spec.collect { case (k, Some(v)) => k -> v })
       catch { case scala.util.control.NonFatal(_) => } // temp-view target etc.
     }
   }

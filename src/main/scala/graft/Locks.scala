@@ -3,8 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
 
 /** Concurrency locking (closes the §7.5 ZooKeeper-locking drop): the
   * reference's lock SEMANTICS — shared read locks, exclusive write locks,
@@ -232,29 +230,17 @@ object Locks {
 
   // --------------------------------------- implicit statement-scoped locks
 
-  /** Lock objects for one statement, from the PARSED (unresolved) plan:
-    * insert targets EXCLUSIVE, every other referenced relation SHARED,
-    * plus the current database SHARED (Driver.java:812-819). Dedup keeps
-    * the strongest mode; the list comes out name-sorted.
+  /** Lock objects for one statement, from its [[plans.StatementRefs]]:
+    * insert targets EXCLUSIVE, every other table read SHARED, plus the
+    * current database SHARED (Driver.java:812-819). Dedup keeps the
+    * strongest mode; the list comes out name-sorted.
     */
   def lockObjectsFor(spark: SparkSession, stmt: String)
       : Seq[(String, Mode, LockData)] = {
-    val plan = plans.HiveDialectParser.of(spark).unresolvedPlan(stmt)
-      .getOrElse(return Nil) // non-plannable statement forms
+    val refs = plans.HiveDialectParser.of(spark).refs(stmt)
     val modes = mutable.LinkedHashMap.empty[String, Mode]
-    def visit(p: LogicalPlan, writing: Boolean): Unit = p match {
-      case i: InsertIntoStatement =>
-        visit(i.table, writing = true)
-        visit(i.query, writing = false)
-      case u: UnresolvedRelation =>
-        val n = lockName(spark, u.multipartIdentifier.mkString("."))
-        val m = if (writing) Exclusive else Shared
-        if (m == Exclusive || !modes.contains(n)) modes.put(n, m)
-      case other => other.children.foreach(visit(_, writing))
-    }
-    visit(plan, writing = false)
-    // subquery expressions hold plans outside `children`
-    plan.foreach(_.subqueries.foreach(visit(_, writing = false)))
+    refs.reads.foreach(t => modes.put(lockName(spark, t), Shared))
+    refs.writeTables.foreach(t => modes.put(lockName(spark, t), Exclusive))
     if (modes.isEmpty) Nil
     else {
       val db = spark.catalog.currentDatabase

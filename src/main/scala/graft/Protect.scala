@@ -4,7 +4,6 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Table protect mode + TOUCH (the last §2.11 ALTER variants: Hive.g:658
   * TOK_ALTERTABLE_TOUCH, :750 alterStatementSuffixProtectMode with
@@ -155,7 +154,7 @@ object Protect {
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\)""".r
 
   def checkStatement(spark: SparkSession, stmt: String,
-      parsed: Option[LogicalPlan]): Unit = {
+      refs: plans.StatementRefs): Unit = {
     ensureLoaded(spark)
     // partition-level NO_DROP (DDLTask.dropPartition's protect check)
     DropPartitionStmt.findFirstMatchIn(stmt).foreach { m =>
@@ -165,10 +164,9 @@ object Protect {
           s"Partition ${m.group(2)} of table $t is protected from being dropped")
     }
     if (modes.isEmpty || !modes.values.exists(_._2)) return
-    val plan = parsed.getOrElse(return)
-    val (in, out) = Authz.referencedTables(plan)
-    val refs = (in ++ out).map(_.split('.').last.toLowerCase).toSet
-    refs.find(isOffline).foreach { t =>
+    val tables = (refs.reads ++ refs.writeTables)
+      .map(_.split('.').last.toLowerCase).toSet
+    tables.find(isOffline).foreach { t =>
       throw new IllegalStateException(
         s"Query against an offline table or partition: $t")
     }
@@ -187,7 +185,7 @@ object Protect {
     modes.toSeq.collect { case (k, (_, true)) if k.contains("@") => k }
       .foreach { k =>
         val Array(t, spec) = k.split("@", 2)
-        if (refs(t)) {
+        if (tables(t)) {
           val partCol = spec.takeWhile(_ != '=')
           // token boundary before the column name: `other_ds='x'` must not
           // count as constraining partition column `ds`

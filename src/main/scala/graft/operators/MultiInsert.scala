@@ -177,14 +177,6 @@ object MultiInsert {
         (mode.toUpperCase, target, Option(part).getOrElse(""), select)
       case _ => return false // non-SELECT branch form: native fallback
     }
-    // SemanticAnalyzer's duplicate-output check (clientnegative
-    // duplicate_insert1–3.q): two branches may not write the same
-    // table+partition
-    val targets = parsed.map(p =>
-      p._2.toLowerCase + "@" + p._3.toLowerCase.replaceAll("""[\s'"]""", ""))
-    targets.groupBy(identity).collectFirst { case (t, g) if g.size > 1 => t }
-      .foreach(t => throw new IllegalArgumentException(
-        s"The same output cannot be present multiple times: ${t.split('@').head}"))
     val alias = srcText match {
       case SimpleSrc(tbl, a) => Option(a).getOrElse(tbl.split('.').last)
       case SubquerySrc(_, a) => a
@@ -269,7 +261,8 @@ object MultiInsert {
     }
 
   /** Execute the INSERT branches. Branch targets are verified DISTINCT
-    * (the duplicate-output check above), so the branches are independent
+    * before the statement runs (the duplicate-output check in
+    * [[graft.HiveQl.checkStatement]]), so the branches are independent
     * jobs by construction — run them CONCURRENTLY (guide §2.6: actions are
     * only sequential because the driver calls them sequentially; the
     * reference's SemanticAnalyzer plans one job feeding N FileSinks, i.e.

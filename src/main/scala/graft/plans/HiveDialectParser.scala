@@ -1,14 +1,18 @@
 package graft.plans
 
+import scala.collection.mutable
 import scala.util.Try
 
 import graft.{Authz, HiveQl, Protect}
+import graft.operators.MultiInsert
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoDir, InsertIntoStatement, LogicalPlan,
+  UnresolvedWith}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -34,12 +38,64 @@ case class HiveShowStatement(statement: String, rowSchema: StructType,
   override def run(spark: SparkSession): Seq[Row] = rows(spark)
 }
 
+/** What one statement reads and writes, found once from its unresolved
+  * plan — the reference's ReadEntity/WriteEntity sets, which
+  * Driver.doAuthorization, acquireReadWriteLocks and the exec hooks all
+  * read. `reads` are the distinct tables read (CTE names excluded),
+  * `writes` every INSERT target in statement order, `dirs` every INSERT
+  * OVERWRITE DIRECTORY path.
+  */
+final case class StatementRefs(reads: Seq[String], writes: Seq[StatementRefs.Write],
+    dirs: Seq[String]) {
+  /** The distinct tables written. */
+  def writeTables: Seq[String] = writes.map(_.table).distinct
+}
+
+object StatementRefs {
+  /** An INSERT target and its PARTITION spec (a None value is a dynamic
+    * column; an empty map, no PARTITION clause). */
+  final case class Write(table: String, spec: Map[String, Option[String]])
+
+  val empty: StatementRefs = StatementRefs(Nil, Nil, Nil)
+
+  def of(plan: LogicalPlan): StatementRefs = {
+    val reads = mutable.LinkedHashSet.empty[String]
+    val ctes = mutable.Set.empty[String]
+    val writes = Seq.newBuilder[Write]
+    val dirs = Seq.newBuilder[String]
+    def name(u: UnresolvedRelation) = u.multipartIdentifier.mkString(".")
+    def visit(p: LogicalPlan): Unit = {
+      p match {
+        case i: InsertIntoStatement => i.table.foreach {
+          case u: UnresolvedRelation => writes += Write(name(u), i.partitionSpec)
+          case _ =>
+        }
+        case d: InsertIntoDir => dirs ++= d.storage.locationUri.map(_.toString)
+        case w: UnresolvedWith => w.cteRelations.foreach { case (n, body, _) =>
+          ctes += n.toLowerCase; visit(body) }
+        case u: UnresolvedRelation => reads += name(u)
+        case _ =>
+      }
+      p.children.foreach(visit)
+      // subquery expressions hold plans outside `children`
+      p.subqueries.foreach(visit)
+    }
+    visit(plan)
+    StatementRefs(reads.toSeq.filterNot(r => ctes(r.toLowerCase)), writes.result(),
+      dirs.result())
+  }
+}
+
 /** Session-parser injection of the HiveQL dialect (SparkSessionExtensions
   * `injectParser`) and the one statement path of a graft session: every
   * statement from [[graft.HiveQl.sql]], raw `spark.sql`, Thrift/JDBC or the
   * CLI is prepared ([[graft.HiveQl.prepare]]), classified, parsed by the
   * delegate, checked and dispatched here, once — the reference's layering,
   * where CliDriver and HiveServer both funnel through Driver.compile.
+  * The parse's [[StatementRefs]] is the one source of what the statement
+  * reads and writes: authorization, protect mode, strict mode, the
+  * access-time hook, HOLD_DDLTIME, the duplicate-output and lock-conflict
+  * checks, implicit locks and the INSERT post-hooks all read it.
   * Dialect rows plan as a [[HiveShowStatement]]; dialect commands and
   * native writes/DDL as a [[HiveStatement]] that also runs the post-hooks;
   * queries and row-returning native statements as the delegate's plan.
@@ -57,31 +113,34 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     if (HiveQl.inNative) delegate.parsePlan(dialect(sqlText))
     else statement(sqlText)
 
-  /** One statement's prepared text, dialect rows, dialect command and
-    * delegate parse (None for the two dialect kinds), each found once. */
+  /** One statement's prepared text, dialect rows, dialect command,
+    * delegate parse (None for the two dialect kinds, except a multi-insert,
+    * which runs as a command but parses natively) and the reads and writes
+    * of that parse, each found once. */
   private def classify(rawQ: String) = {
     val q = HiveQl.prepare(session, rawQ)
     val rows = explainRows(q).orElse(HiveQl.statementRows(q))
     val command = if (rows.isDefined) None else HiveQl.statementExec(q)
     val parsed =
-      if (rows.isDefined || command.isDefined) None
+      if (rows.isDefined || command.isDefined && !MultiInsert.matches(q)) None
       else Some(Try(delegate.parsePlan(HiveQl.rewrite(q))))
-    (q, rows, command, parsed)
+    val refs = parsed.flatMap(_.toOption).map(StatementRefs.of).getOrElse(StatementRefs.empty)
+    (q, rows, command, parsed, refs)
   }
 
   private def statement(rawQ: String): LogicalPlan = {
-    val (q, rows, command, parsed) = classify(rawQ)
+    val (q, rows, command, parsed, refs) = classify(rawQ)
     val label = q.linesIterator.mkString(" ").take(120)
     val plan = parsed.flatMap(_.toOption)
     // Driver.doAuthorization, then OFFLINE protect mode, before anything runs
-    Authz.checkStatement(session, q, plan)
-    Protect.checkStatement(session, q, plan)
+    Authz.checkStatement(session, q, plan, refs)
+    Protect.checkStatement(session, q, refs)
     rows match {
       case Some((schema, rowsOf)) => HiveShowStatement(label, schema, rowsOf)
       case None =>
-        HiveQl.checkStatement(session, q, plan)
+        HiveQl.checkStatement(session, q, plan, refs)
         def run(body: SparkSession => Unit) =
-          HiveStatement(label, HiveQl.runStatement(_, q, rawQ)(body))
+          HiveStatement(label, HiveQl.runStatement(_, q, rawQ, refs)(body))
         command.map(run).getOrElse {
           val p = parsed.get.get // a parse error surfaces here, after the checks
           if (HiveQl.isWrite(q)) run(HiveQl.runWrite(_, q, p)) else p
@@ -105,11 +164,10 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
         _ => Seq("ABSTRACT SYNTAX TREE:", "  " + body.trim.takeWhile(_ != '\n'),
           "STAGE PLANS: dialect statement (graft statement dispatch)").map(Row(_))))
 
-  /** A native statement's unresolved plan as [[parsePlan]] classifies and
-    * parses it, unchecked (None for dialect forms and unparseable text):
-    * what lock planning reads. */
-  def unresolvedPlan(sqlText: String): Option[LogicalPlan] =
-    classify(sqlText)._4.flatMap(_.toOption)
+  /** A statement's reads and writes as [[parsePlan]] classifies and parses
+    * it, unchecked (empty for dialect forms and unparseable text): what
+    * lock planning reads. */
+  def refs(sqlText: String): StatementRefs = classify(sqlText)._5
 
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(dialect(sqlText))

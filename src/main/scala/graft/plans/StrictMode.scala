@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** `hive.mapred.mode=strict` (SemanticAnalyzer's three strict-mode guards —
@@ -18,15 +18,12 @@ import org.apache.spark.sql.catalyst.plans.logical._
   */
 object StrictMode {
 
-  def check(spark: SparkSession, plan: LogicalPlan): Unit = {
+  def check(spark: SparkSession, plan: LogicalPlan, refs: StatementRefs): Unit = {
     if (!spark.conf.getOption("hive.mapred.mode").contains("strict")) return
     checkCartesian(plan)
     checkOrderByLimit(plan)
-    checkPartitionPredicate(spark, plan)
-    plan.foreach(_.subqueries.foreach { sq =>
-      checkCartesian(sq); checkOrderByLimit(sq)
-      checkPartitionPredicate(spark, sq)
-    })
+    plan.foreach(_.subqueries.foreach { sq => checkCartesian(sq); checkOrderByLimit(sq) })
+    checkPartitionPredicate(spark, plan, refs.reads)
   }
 
   private def checkCartesian(plan: LogicalPlan): Unit = plan.foreach {
@@ -56,46 +53,40 @@ object StrictMode {
     walk(plan, limited = false)
   }
 
-  /** A partitioned catalog table must be filtered on at least one of its
-    * partition columns (SemanticAnalyzer's NO_PARTITION_PREDICATE check —
-    * name-level approximation: any filter/join condition referencing a
-    * partition column counts, matching the reference's PcrExprProc walk).
+  /** A partitioned table the statement reads must be filtered on at least
+    * one of its partition columns (SemanticAnalyzer's NO_PARTITION_PREDICATE
+    * check — name-level approximation: any filter/join condition in the
+    * statement referencing a partition column counts, matching the
+    * reference's PcrExprProc walk). Write targets are not reads: the
+    * reference runs `INSERT OVERWRITE TABLE t PARTITION (ds=..) SELECT ..`
+    * in strict mode (input39.q).
     */
-  private def checkPartitionPredicate(spark: SparkSession, plan: LogicalPlan): Unit = {
+  private def checkPartitionPredicate(spark: SparkSession, plan: LogicalPlan,
+      reads: Seq[String]): Unit = {
     val filterAttrs = scala.collection.mutable.Set.empty[String]
-    plan.foreach {
-      case f: Filter => f.condition.foreach {
-        case a: UnresolvedAttribute => filterAttrs += a.nameParts.last.toLowerCase
-        case _ =>
+    def visit(p: LogicalPlan): Unit = p.foreach { node =>
+      val conditions = node match {
+        case f: Filter => Seq(f.condition)
+        case j: Join => j.condition.toSeq
+        case _ => Nil
       }
-      case j: Join => j.condition.toSeq.foreach(_.foreach {
+      conditions.foreach(_.foreach {
         case a: UnresolvedAttribute => filterAttrs += a.nameParts.last.toLowerCase
         case _ =>
       })
-      case _ =>
+      node.subqueries.foreach(visit)
     }
-    // write targets are exempt: strict pruning guards READS only — the
-    // reference legally runs `INSERT OVERWRITE TABLE t PARTITION (ds=..)
-    // SELECT ..` in strict mode (input39.q); identity-based so the same
-    // table read elsewhere in the statement is still checked
-    val writeTargets = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
-    plan.foreach {
-      case i: InsertIntoStatement => writeTargets.add(i.table)
-      case _ =>
-    }
-    plan.foreach {
-      case u: UnresolvedRelation if !writeTargets.contains(u) =>
-        val name = u.multipartIdentifier.last
-        val meta = try Some(spark.sessionState.catalog.getTableMetadata(
-          TableIdentifier(name, u.multipartIdentifier.dropRight(1).lastOption)))
-        catch { case _: Exception => None }
-        meta.filter(_.partitionColumnNames.nonEmpty).foreach { m =>
-          if (!m.partitionColumnNames.exists(c => filterAttrs(c.toLowerCase)))
-            throw new IllegalArgumentException(
-              s"""No partition predicate found for Alias "$name" Table "$name"""")
-        }
-      case _ =>
+    visit(plan)
+    reads.foreach { t =>
+      val parts = t.split('.')
+      val meta = try Some(spark.sessionState.catalog.getTableMetadata(
+        TableIdentifier(parts.last, parts.dropRight(1).lastOption)))
+      catch { case _: Exception => None }
+      meta.filter(_.partitionColumnNames.nonEmpty).foreach { m =>
+        if (!m.partitionColumnNames.exists(c => filterAttrs(c.toLowerCase)))
+          throw new IllegalArgumentException(
+            s"""No partition predicate found for Alias "${parts.last}" Table "${parts.last}"""")
+      }
     }
   }
 }

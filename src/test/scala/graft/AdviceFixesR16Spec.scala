@@ -84,7 +84,7 @@ class AdviceFixesR16Spec extends SparkSpec {
           "SELECT key FROM adv16_src")
       assert(HiveQl.sql(s, "SELECT * FROM adv16_sp WHERE ds='1'").count() == 2)
       // an unconstrained READ of the same table still refuses — including
-      // as the source of an insert (identity-scoped exemption)
+      // as the source of an insert (only the write target is exempt)
       val e1 = intercept[Exception](HiveQl.sql(s,
         "SELECT count(*) FROM adv16_sp").collect())
       assert(e1.getMessage.contains("No partition predicate"))

@@ -61,6 +61,8 @@ class AuthzSpec extends SparkSpec {
     Tables.registerAll(spark, sfDir)
     spark.sql("DROP TABLE IF EXISTS authz_sink")
     spark.sql("CREATE TABLE authz_sink (k BIGINT) USING parquet")
+    spark.sql("DROP TABLE IF EXISTS authz_sink2")
+    spark.sql("CREATE TABLE authz_sink2 (k BIGINT) USING parquet")
     enforced {
       asUser("mallory") {
         val e = intercept[SecurityException](
@@ -85,9 +87,18 @@ class AuthzSpec extends SparkSpec {
       asUser("mallory") {
         HiveQl.sql(spark, "INSERT INTO authz_sink SELECT n_nationkey FROM nation")
         assert(spark.table("authz_sink").count() == 25)
+        // a multi-insert's every target needs Update, not just the first
+        val e = intercept[SecurityException](HiveQl.sql(spark,
+          """FROM nation
+             INSERT INTO TABLE authz_sink SELECT n_nationkey
+             INSERT INTO TABLE authz_sink2 SELECT n_regionkey"""))
+        assert(e.getMessage.contains(
+          "No privilege 'Update' found for outputs { database:default, table:authz_sink2}"))
+        assert(spark.table("authz_sink").count() == 25, "nothing ran")
       }
     }
     spark.sql("DROP TABLE IF EXISTS authz_sink")
+    spark.sql("DROP TABLE IF EXISTS authz_sink2")
     Authz.reset()
   }
 

@@ -84,6 +84,14 @@ class LockSpec extends SparkSpec {
       Seq(Locks.Exclusive), "insert target EXCLUSIVE (Driver.java:790-793)")
     assert(ins.collect { case (n, m, _) if n == "default@nation" => m } ==
       Seq(Locks.Shared))
+    // a multi-insert locks every target EXCLUSIVE and its source SHARED
+    val multi = Locks.lockObjectsFor(spark,
+      """FROM nation
+         INSERT INTO TABLE lock_sink SELECT n_nationkey
+         INSERT OVERWRITE TABLE lock_sink2 SELECT n_regionkey""")
+    assert(multi.map(o => (o._1, o._2)) == Seq(("default", Locks.Shared),
+      ("default@lock_sink", Locks.Exclusive), ("default@lock_sink2", Locks.Exclusive),
+      ("default@nation", Locks.Shared)))
     // lock planning reads the statement as it runs: under hive.test.mode
     // the INSERT writes, and so locks, the prefixed table
     spark.conf.set("hive.test.mode", "true")

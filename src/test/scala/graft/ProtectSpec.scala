@@ -37,7 +37,23 @@ class ProtectSpec extends SparkSpec {
       // other tables unaffected
       assert(HiveQl.sql(spark, "SELECT count(*) AS c FROM region")
         .collect().head.getLong(0) == 5)
-    } finally HiveQl.sql(spark, "ALTER TABLE nation DISABLE OFFLINE")
+      // a multi-insert reading the offline table is refused before any
+      // branch writes
+      spark.sql("DROP TABLE IF EXISTS prot_mi_a")
+      spark.sql("DROP TABLE IF EXISTS prot_mi_b")
+      spark.sql("CREATE TABLE prot_mi_a (k BIGINT) USING parquet")
+      spark.sql("CREATE TABLE prot_mi_b (k BIGINT) USING parquet")
+      val mi = intercept[Exception](HiveQl.sql(spark,
+        """FROM nation
+           INSERT INTO TABLE prot_mi_a SELECT n_nationkey
+           INSERT INTO TABLE prot_mi_b SELECT n_regionkey"""))
+      assert(mi.getMessage.contains("Query against an offline table"))
+      assert(spark.table("prot_mi_a").count() == 0)
+    } finally {
+      HiveQl.sql(spark, "ALTER TABLE nation DISABLE OFFLINE")
+      spark.sql("DROP TABLE IF EXISTS prot_mi_a")
+      spark.sql("DROP TABLE IF EXISTS prot_mi_b")
+    }
     assert(HiveQl.sql(spark, "SELECT count(*) AS c FROM nation")
       .collect().head.getLong(0) == 25)
   }

@@ -293,8 +293,8 @@ class SqlDialectSpec extends SparkSpec {
   }
 
   test("INSERT OVERWRITE LOCAL DIRECTORY must not be treated as a table target") {
-    // ADVICE r10: the InsertTarget regex captured LOCAL as a table name,
-    // issuing a stray SHOW TBLPROPERTIES LOCAL per statement
+    // a directory target is a path, never a table: no table-property work
+    // may run for a table named LOCAL or DIRECTORY
     val dir = tmp("graft-localdir")
     HiveQl.sql(spark,
       s"INSERT OVERWRITE LOCAL DIRECTORY '$dir/out' SELECT 1, 'z'")
@@ -310,6 +310,28 @@ class SqlDialectSpec extends SparkSpec {
     assert(props.get("transient_lastDdlTime").exists(_.trim.forall(_.isDigit)),
       s"backquoted insert target must refresh transient_lastDdlTime, got $props")
     spark.sql("DROP TABLE `end`")
+    // every check and post-hook reads one list of reads and writes, taken
+    // from the statement's parsed plan
+    import plans.StatementRefs
+    import plans.StatementRefs.Write
+    val refsOf = plans.HiveDialectParser.of(spark).refs _
+    Seq(
+      "INSERT INTO t SELECT key FROM src" ->
+        StatementRefs(Seq("src"), Seq(Write("t", Map())), Nil),
+      "INSERT INTO `table` SELECT 1" ->
+        StatementRefs(Nil, Seq(Write("table", Map())), Nil),
+      "INSERT OVERWRITE TABLE db.t PARTITION (ds='a', hr) SELECT key, hr FROM src" ->
+        StatementRefs(Seq("src"), Seq(Write("db.t", Map("ds" -> Some("a"), "hr" -> None))), Nil),
+      s"INSERT OVERWRITE LOCAL DIRECTORY '$dir/refs' SELECT key FROM src" ->
+        StatementRefs(Seq("src"), Nil, Seq(s"file:$dir/refs")),
+      "WITH s AS (SELECT key FROM src) INSERT INTO t SELECT key FROM s" ->
+        StatementRefs(Seq("src"), Seq(Write("t", Map())), Nil),
+      """FROM src
+         INSERT OVERWRITE TABLE a SELECT key
+         INSERT INTO b PARTITION (ds='1') SELECT value WHERE key > 0""" ->
+        StatementRefs(Seq("src"),
+          Seq(Write("a", Map()), Write("b", Map("ds" -> Some("1")))), Nil)
+    ).foreach { case (stmt, want) => assert(refsOf(stmt) == want, stmt) }
   }
 
   test("SET and ADD FILE command lines run through HiveQl (ql/processors analogue)") {
