@@ -5,7 +5,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** GRANT/REVOKE authorization (closes the §7.5 authz drop): the
   * reference's privilege model — roles, per-principal grants on tables
@@ -478,14 +477,13 @@ object Authz {
   }
 
   /** Driver.doAuthorization for one statement over its reads and writes
-    * (names are what get authorized) and its unresolved plan's column
-    * names (None for dialect forms): reads need Select, writes Update.
+    * (names are what get authorized) and the column names its query
+    * blocks reference: reads need Select, writes Update.
     */
   private val AddPartitionAuth =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION""".r
 
-  def checkStatement(spark: SparkSession, stmt: String,
-      parsed: Option[LogicalPlan], refs: plans.StatementRefs): Unit = {
+  def checkStatement(spark: SparkSession, stmt: String, refs: plans.StatementRefs): Unit = {
     if (!enabled(spark)) return
     // DDLSemanticAnalyzer's addPartition output requires CREATE
     // (authorization_fail_2.q's golden: "No privilege 'Create' found")
@@ -502,7 +500,6 @@ object Authz {
         if (!holds(spark, currentUser(spark), "Alter", t))
           deny("Alter", "inputs", spark.catalog.currentDatabase, t)
       }
-    val plan = parsed.getOrElse(return)
     val user = currentUser(spark)
     val db = spark.catalog.currentDatabase
     // The statement's referenced attribute names (unresolved). Qualified
@@ -518,31 +515,31 @@ object Authz {
     // alias / bare-name → canonical relation name, from the plan's own
     // SubqueryAlias(UnresolvedRelation) shells
     val aliasOf = mutable.Map.empty[String, String]
-    def scanAliases(p: LogicalPlan): Unit = p.foreach {
-      case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(id, u: UnresolvedRelation) =>
-        aliasOf(id.name.toLowerCase) = u.multipartIdentifier.mkString(".").toLowerCase
-      case u: UnresolvedRelation =>
-        val full = u.multipartIdentifier.mkString(".").toLowerCase
-        aliasOf.getOrElseUpdate(u.multipartIdentifier.last.toLowerCase, full)
-        aliasOf(full) = full
-      case _ =>
+    refs.blocks.flatMap(_.nodes).foreach { p =>
+      p match {
+        case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(id, u: UnresolvedRelation) =>
+          aliasOf(id.name.toLowerCase) = u.multipartIdentifier.mkString(".").toLowerCase
+        case u: UnresolvedRelation =>
+          val full = u.multipartIdentifier.mkString(".").toLowerCase
+          aliasOf.getOrElseUpdate(u.multipartIdentifier.last.toLowerCase, full)
+          aliasOf(full) = full
+        case _ =>
+      }
+      p.expressions.foreach(_.foreach {
+        case _: UnresolvedStar => star = true
+        case a: UnresolvedAttribute =>
+          if (a.nameParts.size > 1)
+            qualified.getOrElseUpdate(a.nameParts.init.mkString(".").toLowerCase,
+              mutable.LinkedHashSet.empty) += a.nameParts.last.toLowerCase
+          else unqualified += a.nameParts.last.toLowerCase
+        case _ =>
+      })
     }
-    def scanExprs(p: LogicalPlan): Unit = p.foreach(_.expressions.foreach(_.foreach {
-      case _: UnresolvedStar => star = true
-      case a: UnresolvedAttribute =>
-        if (a.nameParts.size > 1)
-          qualified.getOrElseUpdate(a.nameParts.init.mkString(".").toLowerCase,
-            mutable.LinkedHashSet.empty) += a.nameParts.last.toLowerCase
-        else unqualified += a.nameParts.last.toLowerCase
-      case _ =>
-    }))
-    scanAliases(plan)
-    scanExprs(plan)
-    plan.foreach(_.subqueries.foreach { sq => scanAliases(sq); scanExprs(sq) })
-    refs.writeTables.foreach { t =>
+    refs.writeTables.map(_.unquotedString).foreach { t =>
       if (!holds(spark, user, "Update", t)) deny("Update", "outputs", db, t)
     }
-    refs.reads.foreach { t =>
+    refs.reads.foreach { ti =>
+      val t = ti.unquotedString
       val tl = t.toLowerCase
       val forThis = qualified.collect { case (q, cols)
         if aliasOf.get(q).contains(tl) || q == tl => cols }.flatten.toSet
@@ -559,10 +556,10 @@ object Authz {
       // boundary must survive so `other_ds='x'` cannot pin column `ds`
       val norm = stmt.toLowerCase.replaceAll("""['"]""", "")
         .replaceAll("""\s*=\s*""", "=")
-      deniedPartition(spark, user, tl.split('.').last, norm).foreach { spec =>
+      deniedPartition(spark, user, ti.table.toLowerCase, norm).foreach { spec =>
         throw new SecurityException(
           s"Authorization failed:No privilege 'Select' found for inputs " +
-            s"{ database:$db, table:${tl.split('.').last}, " +
+            s"{ database:$db, table:${ti.table.toLowerCase}, " +
             s"partitionName:$spec}. Use show grant to get more details.")
       }
     }

@@ -1741,9 +1741,9 @@ object HiveQl {
     WriteStatement.findFirstIn(LeadingComments.replaceFirstIn(masked(q)._1, "")).isDefined
 
   /** A statement's semantic checks, after authorization and protect mode,
-    * over its unresolved plan (None for dialect forms) and its refs. */
+    * over its text and its refs. */
   private[graft] def checkStatement(spark: SparkSession, q: String,
-      plan: Option[LogicalPlan], refs: plans.StatementRefs): Unit = {
+      refs: plans.StatementRefs): Unit = {
     val maskedQ = masked(q)._1
     // HOLD_DDLTIME hint (Hive.g:1499 TOK_HOLD_DDLTIME; SemanticAnalyzer
     // .checkHoldDDLTime): rejected for dynamic or non-existent partitions
@@ -1752,7 +1752,7 @@ object HiveQl {
     checkSemanticHooksPre(spark, maskedQ)
     updateInputAccessTime(spark, refs.reads)
     checkSampleBounds(spark, maskedQ)
-    plan.foreach(plans.StrictMode.check(spark, _, refs))
+    plans.StrictMode.check(spark, refs)
     checkReservedPartitionNames(spark, q)
     checkInsertLockConflicts(spark, refs.writeTables)
     checkExecHookClasses(spark)
@@ -1765,8 +1765,8 @@ object HiveQl {
     // SemanticAnalyzer's duplicate-output check (duplicate_insert1–3.q):
     // two INSERTs of one statement may not write the same table+partition
     // or directory
-    val outputs = refs.writes.map(w => w.table -> (w.table.toLowerCase,
-      w.spec.map { case (k, v) => k.toLowerCase -> v })) ++
+    val outputs = refs.writes.map(w => w.table.unquotedString ->
+      (w.table.unquotedString.toLowerCase, w.spec.map { case (k, v) => k.toLowerCase -> v })) ++
       refs.dirs.map(d => d -> (d, Map.empty[String, Option[String]]))
     outputs.groupBy(_._2).collectFirst { case (_, g) if g.size > 1 => g.head._1 }
       .foreach(o => throw new IllegalArgumentException(
@@ -2029,10 +2029,10 @@ object HiveQl {
   // ANY lock refuses like the reference's retry-exhausted acquisition.
   // Only fires when the session's lock manager actually holds locks, so
   // un-locked workloads never pay the check.
-  private def checkInsertLockConflicts(spark: SparkSession, targets: Seq[String]): Unit =
+  private def checkInsertLockConflicts(spark: SparkSession, targets: Seq[TableIdentifier]): Unit =
     targets.foreach { t =>
       val me = Locks.owner(spark)
-      val held = Locks.manager.getLocks(Some(Locks.lockName(spark, t)))
+      val held = Locks.manager.getLocks(Some(Locks.lockName(spark, t.unquotedString)))
       // the statement's OWN implicit lock (withStatementLocks acquires it
       // before compile) never conflicts — Driver.acquireReadWriteLocks only
       // blocks on locks it did not take itself (lock1-3.q run inserts fine
@@ -2090,14 +2090,12 @@ object HiveQl {
   // ---- UpdateInputAccessTimeHook.PreExec shim (updateAccessTime.q): when
   // listed in hive.exec.pre.hooks, every input table of a query gets its
   // lastAccessTime stamped before execution.
-  private def updateInputAccessTime(spark: SparkSession, inputs: Seq[String]): Unit = {
+  private def updateInputAccessTime(spark: SparkSession, inputs: Seq[TableIdentifier]): Unit = {
     if (!spark.conf.getOption("hive.exec.pre.hooks").exists(
         _.contains("UpdateInputAccessTimeHook"))) return
     val now = System.currentTimeMillis()
-    inputs.foreach { t =>
+    inputs.foreach { ti =>
       try {
-        val ti = TableIdentifier(t.split('.').last,
-          t.split('.').dropRight(1).lastOption)
         val meta = spark.sessionState.catalog.getTableMetadata(ti)
         spark.sessionState.catalog.alterTable(meta.copy(lastAccessTime = now))
       } catch { case _: Exception => }
@@ -2181,9 +2179,8 @@ object HiveQl {
     val per = spark.conf.getOption("hive.merge.size.per.task")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(256L * 1024 * 1024)
     val cat = spark.sessionState.catalog
-    writes.foreach { case Write(t, spec) =>
+    writes.foreach { case Write(ti, spec) =>
       try {
-        val ti = spark.sessionState.sqlParser.parseTableIdentifier(t)
         val meta = cat.getTableMetadata(ti)
         val provider = meta.provider.getOrElse("parquet")
         // hetero tables mix formats per partition — a bulk rewrite would
@@ -2215,7 +2212,7 @@ object HiveQl {
             else Seq(new org.apache.hadoop.fs.Path(meta.location).toString)
           val merged = dirs.map(d => sources.Compaction.compactIfFragmented(
             spark, d, per, avg, fmt, schemaOpt, meta.storage.properties))
-          if (merged.contains(true)) spark.catalog.refreshTable(t)
+          if (merged.contains(true)) spark.catalog.refreshTable(ti.quotedString)
         }
       } catch { case scala.util.control.NonFatal(_) => } // temp views etc.
     }
@@ -2241,10 +2238,9 @@ object HiveQl {
   private def checkHoldDdltime(spark: SparkSession, writes: Seq[Write]): Unit =
     writes.filter(_.spec.nonEmpty).foreach { w =>
       val cat = spark.sessionState.catalog
-      val exists = w.spec.values.forall(_.isDefined) && (try {
-        val ti = spark.sessionState.sqlParser.parseTableIdentifier(w.table)
-        cat.listPartitionNames(ti, Some(staticSpec(cat.getTableMetadata(ti), w.spec))).nonEmpty
-      } catch { case scala.util.control.NonFatal(_) => false })
+      val exists = w.spec.values.forall(_.isDefined) && (try cat.listPartitionNames(
+          w.table, Some(staticSpec(cat.getTableMetadata(w.table), w.spec))).nonEmpty
+        catch { case scala.util.control.NonFatal(_) => false })
       if (!exists) throw new IllegalStateException(
         "HOLD_DDLTIME hint cannot be applied to dynamic partitions or " +
           "non-existent partitions")
@@ -2256,9 +2252,9 @@ object HiveQl {
     * observably differ; skipped under HOLD_DDLTIME. Temp-view targets have
     * no table properties — ignored.
     */
-  private def bumpInsertTargets(spark: SparkSession, tables: Seq[String]): Unit =
+  private def bumpInsertTargets(spark: SparkSession, tables: Seq[TableIdentifier]): Unit =
     tables.foreach { t =>
-      try Protect.setDdlTime(spark, t)(prev =>
+      try Protect.setDdlTime(spark, t.quotedString)(prev =>
         math.max(System.currentTimeMillis() / 1000, prev + 1))
       catch { case _: org.apache.spark.sql.AnalysisException => } // temp view / missing
     }
@@ -2285,7 +2281,7 @@ object HiveQl {
     if (!spark.conf.getOption("hive.stats.autogather")
         .exists(v => !v.trim.equalsIgnoreCase("false"))) return
     writes.foreach { w =>
-      try gatherStats(spark, w.table, w.spec.collect { case (k, Some(v)) => k -> v })
+      try gatherStats(spark, w.table.quotedString, w.spec.collect { case (k, Some(v)) => k -> v })
       catch { case scala.util.control.NonFatal(_) => } // temp-view target etc.
     }
   }

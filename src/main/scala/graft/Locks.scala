@@ -239,8 +239,8 @@ object Locks {
       : Seq[(String, Mode, LockData)] = {
     val refs = plans.HiveDialectParser.of(spark).refs(stmt)
     val modes = mutable.LinkedHashMap.empty[String, Mode]
-    refs.reads.foreach(t => modes.put(lockName(spark, t), Shared))
-    refs.writeTables.foreach(t => modes.put(lockName(spark, t), Exclusive))
+    refs.reads.foreach(t => modes.put(lockName(spark, t.unquotedString), Shared))
+    refs.writeTables.foreach(t => modes.put(lockName(spark, t.unquotedString), Exclusive))
     if (modes.isEmpty) Nil
     else {
       val db = spark.catalog.currentDatabase

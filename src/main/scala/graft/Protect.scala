@@ -153,8 +153,7 @@ object Protect {
   private val DropPartitionStmt =
     """(?is)^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\)""".r
 
-  def checkStatement(spark: SparkSession, stmt: String,
-      refs: plans.StatementRefs): Unit = {
+  def checkStatement(spark: SparkSession, stmt: String, refs: plans.StatementRefs): Unit = {
     ensureLoaded(spark)
     // partition-level NO_DROP (DDLTask.dropPartition's protect check)
     DropPartitionStmt.findFirstMatchIn(stmt).foreach { m =>
@@ -164,8 +163,7 @@ object Protect {
           s"Partition ${m.group(2)} of table $t is protected from being dropped")
     }
     if (modes.isEmpty || !modes.values.exists(_._2)) return
-    val tables = (refs.reads ++ refs.writeTables)
-      .map(_.split('.').last.toLowerCase).toSet
+    val tables = (refs.reads ++ refs.writeTables).map(_.table.toLowerCase).toSet
     tables.find(isOffline).foreach { t =>
       throw new IllegalStateException(
         s"Query against an offline table or partition: $t")

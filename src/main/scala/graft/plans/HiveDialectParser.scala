@@ -41,48 +41,70 @@ case class HiveShowStatement(statement: String, rowSchema: StructType,
 /** What one statement reads and writes, found once from its unresolved
   * plan — the reference's ReadEntity/WriteEntity sets, which
   * Driver.doAuthorization, acquireReadWriteLocks and the exec hooks all
-  * read. `reads` are the distinct tables read (CTE names excluded),
-  * `writes` every INSERT target in statement order, `dirs` every INSERT
-  * OVERWRITE DIRECTORY path.
-  */
-final case class StatementRefs(reads: Seq[String], writes: Seq[StatementRefs.Write],
-    dirs: Seq[String]) {
+  * read: its query blocks, every INSERT target in statement order and
+  * every INSERT OVERWRITE DIRECTORY path. */
+final case class StatementRefs(blocks: Seq[StatementRefs.Block],
+    writes: Seq[StatementRefs.Write], dirs: Seq[String]) {
+  /** The distinct tables read. */
+  lazy val reads: Seq[TableIdentifier] = blocks.flatMap(_.reads).distinct
   /** The distinct tables written. */
-  def writeTables: Seq[String] = writes.map(_.table).distinct
+  def writeTables: Seq[TableIdentifier] = writes.map(_.table).distinct
 }
 
 object StatementRefs {
   /** An INSERT target and its PARTITION spec (a None value is a dynamic
     * column; an empty map, no PARTITION clause). */
-  final case class Write(table: String, spec: Map[String, Option[String]])
+  final case class Write(table: TableIdentifier, spec: Map[String, Option[String]])
 
-  val empty: StatementRefs = StatementRefs(Nil, Nil, Nil)
+  /** One query block: the statement's plan, or a subquery expression's,
+    * with the CTE bodies defined in it (a CTE is a named FROM subquery),
+    * as every plan node it holds and the tables those nodes read. */
+  final case class Block(nodes: Seq[LogicalPlan], reads: Seq[TableIdentifier])
 
+  /** CTE names are scoped: a WITH's names are visible in its main query,
+    * each definition sees only the earlier ones (and itself under
+    * RECURSIVE), and a subquery sees the names of its enclosing scope. A
+    * one-part name in scope is the CTE; every other relation is a table
+    * read. */
   def of(plan: LogicalPlan): StatementRefs = {
-    val reads = mutable.LinkedHashSet.empty[String]
-    val ctes = mutable.Set.empty[String]
+    val blocks = Seq.newBuilder[Block]
     val writes = Seq.newBuilder[Write]
     val dirs = Seq.newBuilder[String]
-    def name(u: UnresolvedRelation) = u.multipartIdentifier.mkString(".")
-    def visit(p: LogicalPlan): Unit = {
-      p match {
-        case i: InsertIntoStatement => i.table.foreach {
-          case u: UnresolvedRelation => writes += Write(name(u), i.partitionSpec)
-          case _ =>
+    def table(u: UnresolvedRelation) =
+      TableIdentifier(u.multipartIdentifier.last, u.multipartIdentifier.init.lastOption)
+    def block(root: LogicalPlan, outer: Set[String]): Unit = {
+      val nodes = Seq.newBuilder[LogicalPlan]
+      val reads = mutable.LinkedHashSet.empty[TableIdentifier]
+      val subqueries = mutable.ArrayBuffer.empty[(LogicalPlan, Set[String])]
+      def visit(p: LogicalPlan, ctes: Set[String]): Unit = {
+        nodes += p
+        // subquery expressions hold plans outside `children`
+        subqueries ++= p.subqueries.map(_ -> ctes)
+        p match {
+          case w: UnresolvedWith =>
+            val names = w.cteRelations.map(_._1.toLowerCase)
+            w.cteRelations.zipWithIndex.foreach { case ((_, body, _), i) =>
+              visit(body, ctes ++ names.take(if (w.allowRecursion) i + 1 else i)) }
+            visit(w.child, ctes ++ names)
+          case u: UnresolvedRelation =>
+            val parts = u.multipartIdentifier
+            if (parts.size > 1 || !ctes(parts.head.toLowerCase)) reads += table(u)
+          case i: InsertIntoStatement =>
+            writes ++= i.table.collect {
+              case u: UnresolvedRelation => Write(table(u), i.partitionSpec) }
+            visit(i.query, ctes)
+          case d: InsertIntoDir =>
+            dirs ++= d.storage.locationUri.map(_.toString)
+            visit(d.child, ctes)
+          case _ => p.children.foreach(visit(_, ctes))
         }
-        case d: InsertIntoDir => dirs ++= d.storage.locationUri.map(_.toString)
-        case w: UnresolvedWith => w.cteRelations.foreach { case (n, body, _) =>
-          ctes += n.toLowerCase; visit(body) }
-        case u: UnresolvedRelation => reads += name(u)
-        case _ =>
       }
-      p.children.foreach(visit)
-      // subquery expressions hold plans outside `children`
-      p.subqueries.foreach(visit)
+      visit(root, outer)
+      blocks += Block(nodes.result(), reads.toSeq)
+      subqueries.foreach { case (sq, ctes) => block(sq, ctes) }
     }
-    visit(plan)
-    StatementRefs(reads.toSeq.filterNot(r => ctes(r.toLowerCase)), writes.result(),
-      dirs.result())
+    block(plan, Set.empty)
+    StatementRefs(blocks.result(), writes.result(), dirs.result())
   }
 }
 
@@ -124,21 +146,22 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     val parsed =
       if (rows.isDefined || command.isDefined && !MultiInsert.matches(q)) None
       else Some(Try(delegate.parsePlan(HiveQl.rewrite(q))))
-    val refs = parsed.flatMap(_.toOption).map(StatementRefs.of).getOrElse(StatementRefs.empty)
+    val refs = parsed.flatMap(_.toOption).fold(StatementRefs(Nil, Nil, Nil))(StatementRefs.of)
     (q, rows, command, parsed, refs)
   }
 
   private def statement(rawQ: String): LogicalPlan = {
     val (q, rows, command, parsed, refs) = classify(rawQ)
+    // a multi-insert runs as a command, but its checks read its parse
+    if (command.isDefined) parsed.foreach(_.get)
     val label = q.linesIterator.mkString(" ").take(120)
-    val plan = parsed.flatMap(_.toOption)
     // Driver.doAuthorization, then OFFLINE protect mode, before anything runs
-    Authz.checkStatement(session, q, plan, refs)
+    Authz.checkStatement(session, q, refs)
     Protect.checkStatement(session, q, refs)
     rows match {
       case Some((schema, rowsOf)) => HiveShowStatement(label, schema, rowsOf)
       case None =>
-        HiveQl.checkStatement(session, q, plan, refs)
+        HiveQl.checkStatement(session, q, refs)
         def run(body: SparkSession => Unit) =
           HiveStatement(label, HiveQl.runStatement(_, q, rawQ, refs)(body))
         command.map(run).getOrElse {

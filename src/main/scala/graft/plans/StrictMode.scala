@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical._
 
@@ -18,15 +17,15 @@ import org.apache.spark.sql.catalyst.plans.logical._
   */
 object StrictMode {
 
-  def check(spark: SparkSession, plan: LogicalPlan, refs: StatementRefs): Unit = {
-    if (!spark.conf.getOption("hive.mapred.mode").contains("strict")) return
-    checkCartesian(plan)
-    checkOrderByLimit(plan)
-    plan.foreach(_.subqueries.foreach { sq => checkCartesian(sq); checkOrderByLimit(sq) })
-    checkPartitionPredicate(spark, plan, refs.reads)
-  }
+  /** Each rule runs per query block of the statement's parse. */
+  def check(spark: SparkSession, refs: StatementRefs): Unit =
+    if (spark.conf.getOption("hive.mapred.mode").contains("strict")) refs.blocks.foreach { b =>
+      b.nodes.foreach(checkCartesian)
+      checkOrderByLimit(b.nodes.head)
+      checkPartitionPredicate(spark, b)
+    }
 
-  private def checkCartesian(plan: LogicalPlan): Unit = plan.foreach {
+  private def checkCartesian(node: LogicalPlan): Unit = node match {
     case j: Join if j.condition.isEmpty &&
         (j.joinType == org.apache.spark.sql.catalyst.plans.Inner ||
          j.joinType == org.apache.spark.sql.catalyst.plans.Cross) =>
@@ -36,7 +35,8 @@ object StrictMode {
     case _ =>
   }
 
-  /** ORDER BY (a global Sort) requires a LIMIT somewhere above it. */
+  /** ORDER BY (a global Sort) requires a LIMIT somewhere above it, in the
+    * block's main query (CTE bodies are not walked). */
   private def checkOrderByLimit(plan: LogicalPlan): Unit = {
     def walk(p: LogicalPlan, limited: Boolean): Unit = p match {
       case l: GlobalLimit => l.children.foreach(walk(_, limited = true))
@@ -53,39 +53,27 @@ object StrictMode {
     walk(plan, limited = false)
   }
 
-  /** A partitioned table the statement reads must be filtered on at least
-    * one of its partition columns (SemanticAnalyzer's NO_PARTITION_PREDICATE
-    * check — name-level approximation: any filter/join condition in the
-    * statement referencing a partition column counts, matching the
-    * reference's PcrExprProc walk). Write targets are not reads: the
+  /** A partitioned table a query block reads must be filtered in that
+    * block on at least one of its partition columns (SemanticAnalyzer's
+    * NO_PARTITION_PREDICATE check — name-level approximation: any
+    * filter/join condition referencing a partition column counts, matching
+    * the reference's PcrExprProc walk). Write targets are not reads: the
     * reference runs `INSERT OVERWRITE TABLE t PARTITION (ds=..) SELECT ..`
     * in strict mode (input39.q).
     */
-  private def checkPartitionPredicate(spark: SparkSession, plan: LogicalPlan,
-      reads: Seq[String]): Unit = {
-    val filterAttrs = scala.collection.mutable.Set.empty[String]
-    def visit(p: LogicalPlan): Unit = p.foreach { node =>
-      val conditions = node match {
-        case f: Filter => Seq(f.condition)
-        case j: Join => j.condition.toSeq
-        case _ => Nil
-      }
-      conditions.foreach(_.foreach {
-        case a: UnresolvedAttribute => filterAttrs += a.nameParts.last.toLowerCase
-        case _ =>
-      })
-      node.subqueries.foreach(visit)
-    }
-    visit(plan)
-    reads.foreach { t =>
-      val parts = t.split('.')
-      val meta = try Some(spark.sessionState.catalog.getTableMetadata(
-        TableIdentifier(parts.last, parts.dropRight(1).lastOption)))
+  private def checkPartitionPredicate(spark: SparkSession, block: StatementRefs.Block): Unit = {
+    val filterAttrs = block.nodes.flatMap {
+      case f: Filter => Seq(f.condition)
+      case j: Join => j.condition.toSeq
+      case _ => Nil
+    }.flatMap(_.collect { case a: UnresolvedAttribute => a.nameParts.last.toLowerCase }).toSet
+    block.reads.foreach { ti =>
+      val meta = try Some(spark.sessionState.catalog.getTableMetadata(ti))
       catch { case _: Exception => None }
       meta.filter(_.partitionColumnNames.nonEmpty).foreach { m =>
         if (!m.partitionColumnNames.exists(c => filterAttrs(c.toLowerCase)))
           throw new IllegalArgumentException(
-            s"""No partition predicate found for Alias "${parts.last}" Table "${parts.last}"""")
+            s"""No partition predicate found for Alias "${ti.table}" Table "${ti.table}"""")
       }
     }
   }

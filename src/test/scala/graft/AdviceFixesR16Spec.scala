@@ -92,6 +92,20 @@ class AdviceFixesR16Spec extends SparkSpec {
         "INSERT OVERWRITE TABLE adv16_sp PARTITION (ds='2') " +
           "SELECT key FROM adv16_sp").collect())
       assert(e2.getMessage.contains("No partition predicate"))
+      // a CTE body belongs to the query block that defines it: a filter in
+      // the body or on the CTE's output prunes the table the body reads
+      Seq("WITH s AS (SELECT * FROM adv16_sp WHERE ds='1') SELECT * FROM s",
+        "WITH s AS (SELECT * FROM adv16_sp) SELECT * FROM s WHERE ds='1'").foreach { q =>
+        assert(HiveQl.sql(s, q).count() == 2, q)
+      }
+      // an unfiltered CTE body still refuses; a subquery's filter prunes
+      // only the subquery's own reads
+      Seq("WITH s AS (SELECT * FROM adv16_sp) SELECT * FROM s",
+        "SELECT * FROM adv16_sp WHERE key IN (SELECT key FROM adv16_sp WHERE ds='1')")
+        .foreach { q =>
+          val e = intercept[Exception](HiveQl.sql(s, q).collect())
+          assert(e.getMessage.contains("No partition predicate"), q)
+        }
     } finally {
       s.conf.set("hive.mapred.mode", "nonstrict")
       purge(s, "adv16_sp", "adv16_src")

@@ -95,6 +95,15 @@ class AuthzSpec extends SparkSpec {
         assert(e.getMessage.contains(
           "No privilege 'Update' found for outputs { database:default, table:authz_sink2}"))
         assert(spark.table("authz_sink").count() == 25, "nothing ran")
+        // a CTE name hides a table only inside its own WITH: the outer
+        // query's and the CTE body's `region` are the table
+        Seq("SELECT count(*) FROM region WHERE r_regionkey IN " +
+            "(WITH region AS (SELECT 1 AS r_regionkey) SELECT r_regionkey FROM region)",
+          "WITH region AS (SELECT * FROM region) SELECT count(*) FROM region").foreach { q =>
+          val e = intercept[SecurityException](HiveQl.sql(spark, q))
+          assert(e.getMessage.contains(
+            "No privilege 'Select' found for inputs { database:default, table:region}"), q)
+        }
       }
     }
     spark.sql("DROP TABLE IF EXISTS authz_sink")

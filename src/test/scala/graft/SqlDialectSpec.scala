@@ -301,37 +301,58 @@ class SqlDialectSpec extends SparkSpec {
     val files = new java.io.File(dir + "/out")
       .listFiles.filter(f => f.isFile && !f.getName.startsWith("_"))
     assert(files.nonEmpty, "directory insert must land files")
-    // and a BACKQUOTED target still gets its DDL-time refresh
-    spark.sql("DROP TABLE IF EXISTS `end`")
-    spark.sql("CREATE TABLE `end` (k BIGINT) USING parquet")
-    HiveQl.sql(spark, "INSERT INTO `end` SELECT 5")
-    val props = spark.sql("SHOW TBLPROPERTIES `end`").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props.get("transient_lastDdlTime").exists(_.trim.forall(_.isDigit)),
-      s"backquoted insert target must refresh transient_lastDdlTime, got $props")
-    spark.sql("DROP TABLE `end`")
+    // and a BACKQUOTED target still gets its DDL-time refresh, also when
+    // the name needs its quotes
+    Seq("end", "123").foreach { n =>
+      spark.sql(s"DROP TABLE IF EXISTS `$n`")
+      spark.sql(s"CREATE TABLE `$n` (k BIGINT) USING parquet")
+      HiveQl.sql(spark, s"INSERT INTO `$n` SELECT 5")
+      val props = spark.sql(s"SHOW TBLPROPERTIES `$n`").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(props.get("transient_lastDdlTime").exists(_.trim.forall(_.isDigit)),
+        s"backquoted insert target `$n` must refresh transient_lastDdlTime, got $props")
+      spark.sql(s"DROP TABLE `$n`")
+    }
     // every check and post-hook reads one list of reads and writes, taken
     // from the statement's parsed plan
-    import plans.StatementRefs
+    import org.apache.spark.sql.catalyst.TableIdentifier
     import plans.StatementRefs.Write
-    val refsOf = plans.HiveDialectParser.of(spark).refs _
+    def refsOf(stmt: String) = {
+      val r = plans.HiveDialectParser.of(spark).refs(stmt)
+      (r.reads, r.writes, r.dirs)
+    }
+    val (src, t) = (TableIdentifier("src"), TableIdentifier("t"))
     Seq(
-      "INSERT INTO t SELECT key FROM src" ->
-        StatementRefs(Seq("src"), Seq(Write("t", Map())), Nil),
+      "INSERT INTO t SELECT key FROM src" -> (Seq(src), Seq(Write(t, Map())), Nil),
       "INSERT INTO `table` SELECT 1" ->
-        StatementRefs(Nil, Seq(Write("table", Map())), Nil),
+        (Nil, Seq(Write(TableIdentifier("table"), Map())), Nil),
       "INSERT OVERWRITE TABLE db.t PARTITION (ds='a', hr) SELECT key, hr FROM src" ->
-        StatementRefs(Seq("src"), Seq(Write("db.t", Map("ds" -> Some("a"), "hr" -> None))), Nil),
+        (Seq(src), Seq(Write(TableIdentifier("t", Some("db")),
+          Map("ds" -> Some("a"), "hr" -> None))), Nil),
       s"INSERT OVERWRITE LOCAL DIRECTORY '$dir/refs' SELECT key FROM src" ->
-        StatementRefs(Seq("src"), Nil, Seq(s"file:$dir/refs")),
+        (Seq(src), Nil, Seq(s"file:$dir/refs")),
       "WITH s AS (SELECT key FROM src) INSERT INTO t SELECT key FROM s" ->
-        StatementRefs(Seq("src"), Seq(Write("t", Map())), Nil),
+        (Seq(src), Seq(Write(t, Map())), Nil),
       """FROM src
          INSERT OVERWRITE TABLE a SELECT key
          INSERT INTO b PARTITION (ds='1') SELECT value WHERE key > 0""" ->
-        StatementRefs(Seq("src"),
-          Seq(Write("a", Map()), Write("b", Map("ds" -> Some("1")))), Nil)
+        (Seq(src), Seq(Write(TableIdentifier("a"), Map()),
+          Write(TableIdentifier("b"), Map("ds" -> Some("1")))), Nil),
+      // a CTE name hides a table only inside its own WITH: not in an
+      // enclosing query, and not in its own (non-RECURSIVE) body
+      "SELECT * FROM src WHERE k IN (WITH src AS (SELECT 1 AS k) SELECT k FROM src)" ->
+        (Seq(src), Nil, Nil),
+      "WITH src AS (SELECT * FROM src) SELECT * FROM src" -> (Seq(src), Nil, Nil)
     ).foreach { case (stmt, want) => assert(refsOf(stmt) == want, stmt) }
+    // a multi-insert the delegate cannot parse fails before any branch runs
+    spark.sql("DROP TABLE IF EXISTS mi_a")
+    spark.sql("CREATE TABLE mi_a (k BIGINT) USING parquet")
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](HiveQl.sql(spark,
+      """FROM (SELECT 1L AS k) s
+         INSERT INTO TABLE mi_a SELECT k
+         INSERT INTO TABLE mi_b SELECT k,"""))
+    assert(spark.table("mi_a").count() == 0, "no branch may run")
+    spark.sql("DROP TABLE mi_a")
   }
 
   test("SET and ADD FILE command lines run through HiveQl (ql/processors analogue)") {
