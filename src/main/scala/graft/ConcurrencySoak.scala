@@ -62,6 +62,11 @@ object ConcurrencySoak {
       .getOrCreate()
     Sessions.ensureRegistered(spark)
     spark.sparkContext.setLogLevel("WARN")
+    // each expected LOCK refusal reaches its worker as an SQLException; the
+    // Thrift operation would also log it as a full ERROR stack
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.hive.thriftserver.SparkExecuteStatementOperation",
+      org.apache.logging.log4j.Level.OFF)
 
     val port = {
       val ss = new java.net.ServerSocket(0)

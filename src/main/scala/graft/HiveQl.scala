@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoDir, InsertIntoStatement, LogicalPlan,
+  Union}
 import graft.plans.StatementRefs.Write
 
 /** HiveQL dialect entry point (SURVEY.md §7.2 M1). Spark 4 parses nearly the
@@ -23,11 +24,11 @@ import graft.plans.StatementRefs.Write
   *    (Hive.g:1595-1614, JoinDesc.UNIQUE_JOIN) rewritten to a chained
   *    FULL OUTER join + presence filter — a key row survives iff it appears
   *    in some PRESERVEd source or in every source;
-  *  - `FROM src INSERT ... INSERT ...` multi-insert (Hive.g:1385-1419)
-  *    executed via [[operators.MultiInsert]] with a SINGLE scan of the
-  *    common source (SemanticAnalyzer.java:1385-1419 plans one map phase
-  *    feeding N sinks); join-shaped sources fall back to native
-  *    per-branch execution.
+  *  - `FROM src INSERT ... INSERT ...` multi-insert (Hive.g:1385-1419):
+  *    Spark parses it into a `Union` of INSERT branches, which
+  *    [[runWrite]] hands to [[operators.MultiInsert]] to run with a SINGLE
+  *    scan of the common source (SemanticAnalyzer.java:1385-1419 plans one
+  *    map phase feeding N sinks).
   */
 object HiveQl {
   private val MapJoin = """(?i)/\*\+\s*MAPJOIN\s*\(([^)]*)\)\s*\*/""".r
@@ -1789,10 +1790,17 @@ object HiveQl {
   }
 
   /** Runs a native write/DDL's parsed plan with Hive's self-read overwrite
-    * and store-assignment semantics. */
+    * and store-assignment semantics; a multi-insert's branches share one
+    * scan of their source. */
   private[graft] def runWrite(spark: SparkSession, q: String, plan: LogicalPlan): Unit =
-    withSelfReadOverwriteRetry(spark, q)(withLegacyStoreRetry(spark)(
-      _.sessionState.executePlan(plan).assertCommandExecuted()))
+    plan match {
+      case u: Union if u.children.forall(b =>
+          b.isInstanceOf[InsertIntoStatement] || b.isInstanceOf[InsertIntoDir]) =>
+        operators.MultiInsert.run(spark, u.children)
+      case _ =>
+        withSelfReadOverwriteRetry(spark, q)(withLegacyStoreRetry(spark)(
+          _.sessionState.executePlan(plan).assertCommandExecuted()))
+    }
 
   /** Runs a non-query statement, then its post-hooks (the metastore side
     * effects of the reference's MoveTask/StatsTask/DDLTask). */
@@ -2102,14 +2110,14 @@ object HiveQl {
     }
   }
 
+  private val DropViewIfExists =
+    """(?is)^\s*DROP\s+VIEW\s+IF\s+EXISTS\s+([\w.]+)\s*;?\s*$""".r
+
   // CREATE VIEW v(c1 [COMMENT ...], c2) [TBLPROPERTIES ...] AS body —
   // Hive names the output columns FROM THE LIST (Hive.g createViewStatement
   // columnNameCommentList), so the body's expressions need no aliases;
   // Spark refuses unaliased expressions in permanent views. Lowered to a
   // wrapper select that aliases the body's output positionally.
-  private val DropIfExistsKind =
-    """(?is)^\s*DROP\s+(TABLE|VIEW)\s+IF\s+EXISTS\s+([\w.]+)\s*;?\s*$""".r
-
   private val CreateViewCols =
     ("""(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?""" +
       """([\w.]+)\s*\(([^)]*)\)\s*(TBLPROPERTIES\s*\([^)]*\))?\s*AS\s+(.*?)\s*;?\s*$""").r
@@ -2617,19 +2625,6 @@ object HiveQl {
         }
     }
 
-  /** Hive's script-output reader hands the LAST declared column the entire
-    * remainder of its line: LazySimpleSerDe parses N-1 delimiters and the
-    * Nth column keeps any further tabs (input18.q: TRANSFORM of 4 exprs
-    * through cat into the default (key, value) pair gives
-    * value = 'val_x<tab>3<tab>7'). Spark's BaseScriptTransformationExec
-    * splits EVERY field (String.split(fmt, -1)) and drops the extras.
-    * Opt-in parity rewrite (SET graft.transform.absorbRemainder=true,
-    * driver path): pipe the script through sed turning its first N-1 tabs
-    * into \x02 and declare the output row format FIELDS TERMINATED BY
-    * '\x02' — Spark then splits into exactly N fields and the last keeps
-    * its real tabs. Skipped for commands carrying double quotes (wrapper
-    * quoting would corrupt them) and serde/row-format forms.
-    */
   /** ScriptOperator.java:274-277: every script operator exports an env var
     * (name from hive.script.operator.id.env.var, default
     * HIVE_SCRIPT_OPERATOR_ID, dots/dashes mangled to '_' per
@@ -2764,6 +2759,20 @@ object HiveQl {
 
   private val TransformUsing =
     """(?is)(TRANSFORM\s*\([^)]*\)\s*)USING\s+'([^']+)'(\s*AS\s*\(([^)]*)\))?""".r
+
+  /** Hive's script-output reader hands the LAST declared column the entire
+    * remainder of its line: LazySimpleSerDe parses N-1 delimiters and the
+    * Nth column keeps any further tabs (input18.q: TRANSFORM of 4 exprs
+    * through cat into the default (key, value) pair gives
+    * value = 'val_x<tab>3<tab>7'). Spark's BaseScriptTransformationExec
+    * splits EVERY field (String.split(fmt, -1)) and drops the extras.
+    * Opt-in parity rewrite (SET graft.transform.absorbRemainder=true,
+    * driver path): pipe the script through sed turning its first N-1 tabs
+    * into \x02 and declare the output row format FIELDS TERMINATED BY
+    * '\x02' — Spark then splits into exactly N fields and the last keeps
+    * its real tabs. Skipped for commands carrying double quotes (wrapper
+    * quoting would corrupt them) and serde/row-format forms.
+    */
   private def absorbTransformRemainder(spark: SparkSession, q: String): String = {
     if (!spark.conf.getOption("graft.transform.absorbRemainder")
         .contains("true")) return q
@@ -3438,19 +3447,16 @@ object HiveQl {
         Some(s => Locks.lockTable(s, table, mode, Option(part)))
       case UnlockTable(table, part) =>
         Some(s => Locks.unlockTable(s, table, Option(part)))
-      // HIVE-2133 (create_view.q): DROP TABLE IF EXISTS ignores a matching
-      // VIEW name, and DROP VIEW IF EXISTS ignores a matching TABLE name —
-      // Spark raises WRONG_COMMAND_FOR_OBJECT_TYPE for both
-      case DropIfExistsKind(kind, name) =>
+      // HIVE-2133 (create_view.q): DROP VIEW IF EXISTS ignores a matching
+      // TABLE name (DropTable above is the DROP TABLE IF EXISTS half) —
+      // Spark raises WRONG_COMMAND_FOR_OBJECT_TYPE
+      case DropViewIfExists(name) =>
         Some { s =>
-          val meta = try Some(s.sessionState.catalog.getTableMetadata(
-            s.sessionState.sqlParser.parseTableIdentifier(stripTicks(name))))
-          catch { case scala.util.control.NonFatal(_) => None }
-          val isView = meta.exists(_.tableType ==
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-          val mismatch = meta.isDefined &&
-            (if (kind.equalsIgnoreCase("TABLE")) isView else !isView)
-          if (!mismatch) native(s, q)
+          val isTable = try s.sessionState.catalog.getTableMetadata(
+              s.sessionState.sqlParser.parseTableIdentifier(name)).tableType !=
+            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
+          catch { case scala.util.control.NonFatal(_) => false }
+          if (!isTable) native(s, q)
         }
       case CreateRole(role) => Some(s => Authz.createRole(s, role))
       case DropRole(role) => Some(s => Authz.dropRole(s, role))
@@ -3462,15 +3468,6 @@ object HiveQl {
       case RevokePriv(privs, objType, objName, partSpec, pType, principal) =>
         Some(s => Authz.revoke(s, privs.split(",").map(_.trim).toSeq, pType,
           principal, objType, objName, Option(partSpec)))
-      case _ if operators.MultiInsert.matches(q) =>
-        Some { s =>
-          if (!operators.MultiInsert.run(s, q)) {
-            // unhandled shape: native per-branch execution, with the same
-            // Hive store-assignment retry as the handled path (a DIRECTORY
-            // branch, e.g., lands here — input13.q)
-            withLegacyStoreRetry(s)(native(_, q))
-          }
-        }
       case _ => None
     }
 

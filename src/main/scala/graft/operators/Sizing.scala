@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Data-proportional repartitioning (guide §2.2/§2.6): partition count must
   * follow DATA SIZE, not core count. The LLM-pipeline operators historically
@@ -73,9 +74,12 @@ object Sizing {
     * (compressed) file footprint — exactly the quantity the 32 MB gate
     * wants. Driver-side only, no job.
     */
-  def planBytes(df: DataFrame): Long =
+  def planBytes(df: DataFrame): Long = planBytes(df.queryExecution)
+
+  /** As above, for a plan that is not a DataFrame. */
+  def planBytes(qe: QueryExecution): Long =
     try {
-      val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val s = qe.optimizedPlan.stats.sizeInBytes
       if (s.isValidLong) s.toLong else Long.MaxValue
     } catch { case _: Throwable => -1L }
 }

@@ -4,7 +4,6 @@ import scala.collection.mutable
 import scala.util.Try
 
 import graft.{Authz, HiveQl, Protect}
-import graft.operators.MultiInsert
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
@@ -136,15 +135,14 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
     else statement(sqlText)
 
   /** One statement's prepared text, dialect rows, dialect command,
-    * delegate parse (None for the two dialect kinds, except a multi-insert,
-    * which runs as a command but parses natively) and the reads and writes
-    * of that parse, each found once. */
+    * delegate parse (None for the two dialect kinds) and the reads and
+    * writes of that parse, each found once. */
   private def classify(rawQ: String) = {
     val q = HiveQl.prepare(session, rawQ)
     val rows = explainRows(q).orElse(HiveQl.statementRows(q))
     val command = if (rows.isDefined) None else HiveQl.statementExec(q)
     val parsed =
-      if (rows.isDefined || command.isDefined && !MultiInsert.matches(q)) None
+      if (rows.isDefined || command.isDefined) None
       else Some(Try(delegate.parsePlan(HiveQl.rewrite(q))))
     val refs = parsed.flatMap(_.toOption).fold(StatementRefs(Nil, Nil, Nil))(StatementRefs.of)
     (q, rows, command, parsed, refs)
@@ -152,8 +150,6 @@ class HiveDialectParser(session: SparkSession, delegate: ParserInterface)
 
   private def statement(rawQ: String): LogicalPlan = {
     val (q, rows, command, parsed, refs) = classify(rawQ)
-    // a multi-insert runs as a command, but its checks read its parse
-    if (command.isDefined) parsed.foreach(_.get)
     val label = q.linesIterator.mkString(" ").take(120)
     // Driver.doAuthorization, then OFFLINE protect mode, before anything runs
     Authz.checkStatement(session, q, refs)

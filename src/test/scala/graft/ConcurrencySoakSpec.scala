@@ -28,9 +28,22 @@ class ConcurrencySoakSpec extends AnyFunSuite {
       "graft.ConcurrencySoak", scratch, "100")
     val pb = new ProcessBuilder(argv: _*).redirectErrorStream(true)
     val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    // stream the soak's output: keep the OK flag and a bounded tail only
+    val tail = new java.util.ArrayDeque[String]
+    var ok = false
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
+    try {
+      var line = in.readLine()
+      while (line != null) {
+        ok ||= line.contains("[soak] OK")
+        tail.addLast(line)
+        if (tail.size > 200) tail.removeFirst()
+        line = in.readLine()
+      }
+    } finally in.close()
     val code = proc.waitFor()
-    assert(code == 0 && out.contains("[soak] OK"),
-      s"concurrency soak failed (exit $code):\n${out.takeRight(5000)}")
+    assert(code == 0 && ok, s"concurrency soak failed (exit $code):\n" +
+      String.join("\n", tail).takeRight(5000))
   }
 }

@@ -1,44 +1,77 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 
 /** Multi-insert single-scan executor (SURVEY §7.4 hard part 3; ref
   * parse/Hive.g:1385-1419, SemanticAnalyzer.java:1385-1419 — one map phase
-  * feeds N FileSinks). The scan assertion counts executed
-  * FileSourceScanExec nodes over the source: with the shared cache the
-  * branches read the InMemoryRelation (0 top-level file scans — the one
-  * real scan happens inside the cache fill, which Spark materializes
-  * exactly once); with materialize=none every branch re-scans the files
-  * (N file scans). The 0-vs-N pair is the single-scan evidence.
+  * feeds N FileSinks). The scan assertions count executed
+  * FileSourceScanExec nodes over a source: a source over the 32 MB cache
+  * rule is read by every branch from the InMemoryRelation (0 top-level file
+  * scans — the one real scan happens inside the cache fill, which Spark
+  * materializes exactly once), while the small fixture tables stay under
+  * the rule and every branch re-scans them (N file scans). The 0-vs-N pair
+  * is the single-scan evidence.
   */
-class MultiInsertSpec extends SparkSpec {
+class MultiInsertSpec extends SparkSpec with BeforeAndAfterAll {
 
-  /** file scans of `needle` in an executed plan, NOT descending into
-    * cached relations (an InMemoryTableScan reads blocks, not files)
-    */
-  private def fileScans(p: SparkPlan, needle: String): Int = p match {
-    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan, needle)
-    case q: QueryStageExec => fileScans(q.plan, needle) // AQE stages are leaves
-    case f: FileSourceScanExec =>
-      if (f.relation.location.rootPaths.exists(_.toString.contains(needle))) 1 else 0
-    case _: InMemoryTableScanExec => 0
-    case other => other.children.map(fileScans(_, needle)).sum
+  private val bigRoot = Files.createTempDirectory("graft-mi-big")
+
+  /** A parquet source written uncompressed so its on-disk size crosses the
+    * cache rule even after pruning to the (k, v) columns the branches read;
+    * `pad` is the column no branch references. */
+  private lazy val bigDir: String = {
+    val dir = bigRoot.toString + "/big"
+    spark.range(1000000).selectExpr("id AS k", "md5(CAST(id AS STRING)) AS v",
+        "md5(CAST(-id AS STRING)) AS pad")
+      .write.option("compression", "none").parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("mis_big")
+    dir
   }
 
-  /** total `needle` file scans across every query executed in `body`
+  // the source is about 80 MB on disk
+  override def afterAll(): Unit =
+    try {
+      spark.catalog.dropTempView("mis_big")
+      org.apache.commons.io.FileUtils.deleteDirectory(bigRoot.toFile)
+    } finally super.afterAll()
+
+  /** every node of an executed plan, through AQE wrappers (a cached
+    * relation's scan is a leaf: it reads blocks, not files) */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** What every query executed in `body` read: per root path, its
+    * top-level file scans; and the columns of the cached relations read. */
+  private case class Reads(plans: Seq[SparkPlan]) {
+    def fileScans(needle: String): Int = plans.flatMap(nodes).count {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.toString.contains(needle))
+      case _ => false
+    }
+    def cachedColumns: Set[String] = plans.flatMap(nodes).collect {
+      case m: InMemoryTableScanExec => m.relation.output.map(_.name.toLowerCase)
+    }.flatten.toSet
+  }
+
+  /** the executed plans of every query run in `body`
     * (QueryExecutionListener is async — poll until the count is stable)
     */
-  private def countSourceScans(needle: String)(body: => Unit): Int = {
-    val n = new AtomicInteger
+  private def observe(body: => Unit): Reads = {
+    val seen = new ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        n.addAndGet(fileScans(qe.executedPlan, needle))
+        seen.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
@@ -48,86 +81,92 @@ class MultiInsertSpec extends SparkSpec {
       var stable = 0
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (stable < 5 && System.nanoTime() < deadline) {
-        val cur = n.get
+        val cur = seen.size
         if (cur == last) stable += 1 else { stable = 0; last = cur }
         Thread.sleep(100)
       }
     } finally spark.listenerManager.unregister(l)
-    n.get
+    Reads(seen.asScala.toSeq)
   }
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  private val stmtFor = (t1: String, t2: String) => s"""
-    FROM orders
-    INSERT OVERWRITE TABLE $t1 SELECT o_orderkey, o_totalprice WHERE o_totalprice < 150000
-    INSERT OVERWRITE TABLE $t2 SELECT o_orderkey, o_totalprice WHERE o_totalprice >= 150000"""
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private def mkPair(wh: String, t1: String, t2: String): Unit = {
-    spark.sql(s"CREATE TABLE $t1 (k BIGINT, price DOUBLE) USING parquet LOCATION '$wh/a'")
-    spark.sql(s"CREATE TABLE $t2 (k BIGINT, price DOUBLE) USING parquet LOCATION '$wh/b'")
-  }
+  private def count(q: String): Long = spark.sql(q).collect()(0).getLong(0)
+
+  private def dropAll(tables: String*): Unit =
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
   test("multi-insert scans the common source once (0 file scans vs N uncached)") {
     Tables.registerAll(spark, sfDir)
-    mkPair(tmp("graft-mi-c"), "mis_c1", "mis_c2")
-    mkPair(tmp("graft-mi-u"), "mis_u1", "mis_u2")
+    val big = bigDir
+    val wh = tmp("graft-mi-simple")
+    for (t <- Seq("mis_b1", "mis_b2"))
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) USING parquet LOCATION '$wh/$t'")
+    for (t <- Seq("mis_s1", "mis_s2"))
+      spark.sql(s"CREATE TABLE $t (k BIGINT, price DOUBLE) USING parquet LOCATION '$wh/$t'")
     try {
-      // the fixture source is far below the auto-materialize threshold
-      // (the size-aware default would re-scan it), so pin the cache mode
-      // the 0-scan assertion is about
-      spark.conf.set("spark.graft.multiInsert.materialize", "cache")
-      val cached =
-        try countSourceScans("orders") { HiveQl.sql(spark, stmtFor("mis_c1", "mis_c2")) }
-        finally spark.conf.unset("spark.graft.multiInsert.materialize")
-      spark.conf.set("spark.graft.multiInsert.materialize", "none")
-      val uncached =
-        try countSourceScans("orders") { HiveQl.sql(spark, stmtFor("mis_u1", "mis_u2")) }
-        finally spark.conf.unset("spark.graft.multiInsert.materialize")
+      val large = observe { HiveQl.sql(spark, """
+        FROM mis_big
+        INSERT OVERWRITE TABLE mis_b1 SELECT k, v WHERE k < 1000
+        INSERT OVERWRITE TABLE mis_b2 SELECT k, upper(v) WHERE k >= 999000""") }
+      val small = observe { HiveQl.sql(spark, """
+        FROM orders
+        INSERT OVERWRITE TABLE mis_s1 SELECT o_orderkey, o_totalprice WHERE o_totalprice < 150000
+        INSERT OVERWRITE TABLE mis_s2 SELECT o_orderkey, o_totalprice WHERE o_totalprice >= 150000""") }
 
-      // both modes produce identical, complete results
+      assert(rows(spark.table("mis_b1")) ==
+        rows(spark.sql("SELECT k, v FROM mis_big WHERE k < 1000")))
+      assert(rows(spark.table("mis_b2")) ==
+        rows(spark.sql("SELECT k, upper(v) FROM mis_big WHERE k >= 999000")))
       val total = spark.table("orders").count()
-      for ((a, b) <- Seq(("mis_c1", "mis_c2"), ("mis_u1", "mis_u2"))) {
-        val (na, nb) = (spark.table(a).count(), spark.table(b).count())
-        assert(na > 0 && nb > 0 && na + nb == total,
-          s"branches must partition the source: $a=$na $b=$nb total=$total")
-      }
-      assert(cached == 0,
-        s"cached fan-out must not re-scan source files per branch, saw $cached")
-      assert(uncached == 2,
-        s"materialize=none is the per-branch re-scan baseline, saw $uncached")
+      val (na, nb) = (spark.table("mis_s1").count(), spark.table("mis_s2").count())
+      assert(na > 0 && nb > 0 && na + nb == total,
+        s"branches must partition the source: mis_s1=$na mis_s2=$nb total=$total")
 
-      // the executor pruned the cache to exactly the referenced columns
-      val rep = operators.MultiInsert.lastReport.get
-      assert(rep.cachedColumns.map(_.toLowerCase).toSet ==
-        Set("o_orderkey", "o_totalprice"),
-        s"cache must hold only branch-referenced columns: ${rep.cachedColumns}")
-    } finally Seq("mis_c1", "mis_c2", "mis_u1", "mis_u2")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      assert(large.fileScans(big) == 0,
+        s"cached fan-out must not re-scan source files per branch, saw ${large.fileScans(big)}")
+      assert(small.fileScans("orders") == 2,
+        s"a source under the cache rule is re-scanned per branch, saw ${small.fileScans("orders")}")
+      // the cache holds exactly the referenced columns
+      assert(large.cachedColumns == Set("k", "v"), large.cachedColumns)
+      assert(small.cachedColumns.isEmpty, small.cachedColumns)
+    } finally dropAll("mis_b1", "mis_b2", "mis_s1", "mis_s2")
   }
 
   test("WHERE-less and aggregate branches work; subquery source is cached") {
     Tables.registerAll(spark, sfDir)
+    val big = bigDir
     val wh = tmp("graft-mi-sub")
     spark.sql(s"CREATE TABLE mis_cnt (st STRING, n BIGINT) USING parquet LOCATION '$wh/cnt'")
     spark.sql(s"CREATE TABLE mis_all (k BIGINT) USING parquet LOCATION '$wh/all'")
+    spark.sql(s"CREATE TABLE mis_bcnt (r BIGINT, n BIGINT) USING parquet LOCATION '$wh/bcnt'")
+    spark.sql(s"CREATE TABLE mis_ball (k BIGINT) USING parquet LOCATION '$wh/ball'")
     try {
-      spark.conf.set("spark.graft.multiInsert.materialize", "cache")
-      try HiveQl.sql(spark, """
+      val small = observe { HiveQl.sql(spark, """
         FROM (SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderkey <= 100) src
         INSERT OVERWRITE TABLE mis_cnt SELECT o_orderstatus, count(*) GROUP BY o_orderstatus
-        INSERT OVERWRITE TABLE mis_all SELECT o_orderkey""")
-      finally spark.conf.unset("spark.graft.multiInsert.materialize")
+        INSERT OVERWRITE TABLE mis_all SELECT o_orderkey""") }
       val cnt = spark.table("mis_cnt").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val all = spark.table("mis_all").count()
-      assert(all == cnt.values.sum && all ==
-        spark.sql("SELECT count(*) FROM orders WHERE o_orderkey <= 100").collect()(0).getLong(0))
-      assert(operators.MultiInsert.lastReport.get.materialized)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS mis_cnt")
-      spark.sql("DROP TABLE IF EXISTS mis_all")
-    }
+      assert(all == cnt.values.sum &&
+        all == count("SELECT count(*) FROM orders WHERE o_orderkey <= 100"))
+      assert(small.fileScans("orders") == 2, s"saw ${small.fileScans("orders")}")
+
+      val large = observe { HiveQl.sql(spark, """
+        FROM (SELECT k, v, pad FROM mis_big WHERE k % 100 = 0) s
+        INSERT OVERWRITE TABLE mis_bcnt SELECT k % 7, count(*) GROUP BY k % 7
+        INSERT OVERWRITE TABLE mis_ball SELECT k WHERE v < '8'""") }
+      assert(rows(spark.table("mis_bcnt")) == rows(spark.sql(
+        "SELECT k % 7, count(*) FROM mis_big WHERE k % 100 = 0 GROUP BY k % 7")))
+      assert(rows(spark.table("mis_ball")) == rows(spark.sql(
+        "SELECT k FROM mis_big WHERE k % 100 = 0 AND v < '8'")))
+      assert(large.fileScans(big) == 0, s"saw ${large.fileScans(big)}")
+      assert(large.cachedColumns == Set("k", "v"), large.cachedColumns)
+    } finally dropAll("mis_cnt", "mis_all", "mis_bcnt", "mis_ball")
   }
 
   test("partitioned INSERT branches (static + dynamic partition spec)") {
@@ -138,110 +177,107 @@ class MultiInsertSpec extends SparkSpec {
     spark.sql(s"""CREATE TABLE mis_pd (k BIGINT) USING parquet
       PARTITIONED BY (st STRING) LOCATION '$wh/pd'""")
     try {
-      spark.conf.set("spark.graft.multiInsert.materialize", "cache")
-      try HiveQl.sql(spark, """
+      HiveQl.sql(spark, """
         FROM orders
         INSERT OVERWRITE TABLE mis_ps PARTITION (tag='lo') SELECT o_orderkey WHERE o_orderkey <= 50
         INSERT OVERWRITE TABLE mis_pd PARTITION (st) SELECT o_orderkey, o_orderstatus WHERE o_orderkey <= 500""")
-      finally spark.conf.unset("spark.graft.multiInsert.materialize")
-      assert(operators.MultiInsert.lastReport.get.materialized)
       assert(spark.table("mis_ps").filter(col("tag") === "lo").count() ==
-        spark.sql("SELECT count(*) FROM orders WHERE o_orderkey <= 50").collect()(0).getLong(0))
+        count("SELECT count(*) FROM orders WHERE o_orderkey <= 50"))
       val byStatus = spark.table("mis_pd").groupBy("st").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val exp = spark.sql("""SELECT o_orderstatus, count(*) FROM orders
           WHERE o_orderkey <= 500 GROUP BY o_orderstatus""")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(byStatus == exp, s"dynamic partitions must fan out: $byStatus vs $exp")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS mis_ps")
-      spark.sql("DROP TABLE IF EXISTS mis_pd")
-    }
+    } finally dropAll("mis_ps", "mis_pd")
   }
 
-  test("join-shaped source is shared per table: each base table scanned once") {
+  test("join-shaped source is shared per table: the large side is scanned once") {
     Tables.registerAll(spark, sfDir)
+    val big = bigDir
     val wh = tmp("graft-mi-join")
-    for (t <- Seq("mis_j1", "mis_j2", "mis_j3", "mis_j4"))
-      spark.sql(s"CREATE TABLE $t (n STRING) USING parquet LOCATION '$wh/$t'")
-    val stmt = (t1: String, t2: String) => s"""
-        FROM nation JOIN region ON n_regionkey = r_regionkey
-        INSERT OVERWRITE TABLE $t1 SELECT n_name WHERE r_name = 'ASIA'
-        INSERT OVERWRITE TABLE $t2 SELECT r_name WHERE n_name = 'NATION_3'"""
+    for (t <- Seq("mis_j1", "mis_j2"))
+      spark.sql(s"CREATE TABLE $t (n STRING, v STRING) USING parquet LOCATION '$wh/$t'")
     try {
-      operators.MultiInsert.lastReport = None
-      // cached: branches re-run the join over the cached per-table blocks —
-      // zero top-level file scans of either base table (0-vs-N as for the
-      // simple source; the single real scan per table is the cache fill)
-      val (nCached, rCached) = {
-        var r = -1
-        spark.conf.set("spark.graft.multiInsert.materialize", "cache")
-        val n =
-          try countSourceScans("nation") {
-            r = countSourceScans("region") { HiveQl.sql(spark, stmt("mis_j1", "mis_j2")) }
-          } finally spark.conf.unset("spark.graft.multiInsert.materialize")
-        (n, r)
-      }
-      val rep = operators.MultiInsert.lastReport
-        .getOrElse(fail("join source must be handled, not fall back"))
-      assert(rep.materialized)
-      // pruned per table: only branch/join-referenced columns are cached
-      assert(rep.cachedColumns.map(_.toLowerCase).toSet ==
-        Set("nation.n_name", "nation.n_regionkey", "region.r_name", "region.r_regionkey"),
-        s"per-table pruning: ${rep.cachedColumns}")
-
-      spark.conf.set("spark.graft.multiInsert.materialize", "none")
-      val (nRaw, rRaw) =
-        try {
-          var r = -1
-          val n = countSourceScans("nation") {
-            r = countSourceScans("region") { HiveQl.sql(spark, stmt("mis_j3", "mis_j4")) }
-          }
-          (n, r)
-        } finally spark.conf.unset("spark.graft.multiInsert.materialize")
-
-      assert(nCached == 0 && rCached == 0,
-        s"cached join fan-out must not re-scan base tables: nation=$nCached region=$rCached")
-      assert(nRaw == 2 && rRaw == 2,
-        s"materialize=none re-scans each table per branch: nation=$nRaw region=$rRaw")
-
-      // both modes correct and identical
-      val asia = spark.sql(
-        "SELECT count(*) FROM nation JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA'")
-        .collect()(0).getLong(0)
-      for ((a, b) <- Seq(("mis_j1", "mis_j2"), ("mis_j3", "mis_j4"))) {
-        assert(spark.table(a).count() == asia && asia > 0)
-        assert(spark.table(b).count() == 1) // each nation joins exactly one region
-      }
-    } finally Seq("mis_j1", "mis_j2", "mis_j3", "mis_j4")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      // each branch re-runs the join over the cached large side's blocks;
+      // the small side stays under the cache rule and is re-scanned
+      val reads = observe { HiveQl.sql(spark, """
+        FROM mis_big b JOIN nation n ON b.k % 25 = n.n_nationkey
+        INSERT OVERWRITE TABLE mis_j1 SELECT n.n_name, b.v WHERE b.k < 100
+        INSERT OVERWRITE TABLE mis_j2 SELECT n_name, v WHERE k >= 999900""") }
+      assert(rows(spark.table("mis_j1")) == rows(spark.sql("""SELECT n.n_name, b.v
+        FROM mis_big b JOIN nation n ON b.k % 25 = n.n_nationkey WHERE b.k < 100""")))
+      assert(rows(spark.table("mis_j2")) == rows(spark.sql("""SELECT n_name, v
+        FROM mis_big b JOIN nation n ON b.k % 25 = n.n_nationkey WHERE k >= 999900""")))
+      assert(spark.table("mis_j1").count() == 100)
+      assert(reads.fileScans(big) == 0 && reads.fileScans("nation") == 2,
+        s"big=${reads.fileScans(big)} nation=${reads.fileScans("nation")}")
+      // pruned per table: the branch and join-key columns of the large side
+      assert(reads.cachedColumns == Set("k", "v"), reads.cachedColumns)
+    } finally dropAll("mis_j1", "mis_j2")
   }
 
-  test("join-source tokenizer is literal-safe: parens/JOIN inside ON strings") {
+  test("join source with parens/JOIN inside an ON string literal") {
     Tables.registerAll(spark, sfDir)
     val wh = tmp("graft-mi-lit")
     for (t <- Seq("mis_l1", "mis_l2"))
       spark.sql(s"CREATE TABLE $t (n STRING) USING parquet LOCATION '$wh/$t'")
     try {
-      operators.MultiInsert.lastReport = None
       // the ON condition carries a literal with an unbalanced paren AND a
-      // JOIN keyword — masking must keep the tokenizer's depth-0 view intact
-      // and the literal must reach the executed branches byte-identical
-      HiveQl.sql(spark, """
+      // JOIN keyword, which must reach the executed branches intact
+      val reads = observe { HiveQl.sql(spark, """
         FROM nation JOIN region ON n_regionkey = r_regionkey
              AND r_name != '(x JOIN'
         INSERT OVERWRITE TABLE mis_l1 SELECT n_name WHERE r_name = 'ASIA'
-        INSERT OVERWRITE TABLE mis_l2 SELECT r_name WHERE n_name = 'NATION_3'""")
-      val rep = operators.MultiInsert.lastReport
-        .getOrElse(fail("literal-bearing join source must still be shared"))
-      assert(rep.branchSql.forall(_.contains("'(x JOIN'")),
-        s"literal must survive the rewrite verbatim: ${rep.branchSql}")
-      val asia = spark.sql(
-        """SELECT count(*) FROM nation JOIN region ON n_regionkey = r_regionkey
-           WHERE r_name = 'ASIA'""").collect()(0).getLong(0)
+        INSERT OVERWRITE TABLE mis_l2 SELECT r_name WHERE n_name = 'NATION_3'""") }
+      val asia = count("""SELECT count(*) FROM nation JOIN region ON n_regionkey = r_regionkey
+           WHERE r_name = 'ASIA'""")
       assert(spark.table("mis_l1").count() == asia && asia > 0)
-      assert(spark.table("mis_l2").count() == 1)
-    } finally Seq("mis_l1", "mis_l2")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      assert(spark.table("mis_l2").count() == 1) // each nation joins exactly one region
+      assert(reads.fileScans("nation") == 2 && reads.fileScans("region") == 2,
+        s"nation=${reads.fileScans("nation")} region=${reads.fileScans("region")}")
+    } finally dropAll("mis_l1", "mis_l2")
+  }
+
+  test("a select-list literal holding a tail keyword stays a literal") {
+    Tables.registerAll(spark, sfDir)
+    val wh = tmp("graft-mi-kw")
+    spark.sql(s"CREATE TABLE mis_w1 (s STRING, k BIGINT) USING parquet LOCATION '$wh/w1'")
+    spark.sql(s"CREATE TABLE mis_w2 (s STRING, n BIGINT) USING parquet LOCATION '$wh/w2'")
+    try {
+      HiveQl.sql(spark, """
+        FROM orders
+        INSERT OVERWRITE TABLE mis_w1 SELECT concat(o_orderstatus, ' where '), o_orderkey
+          WHERE o_orderkey < 50
+        INSERT OVERWRITE TABLE mis_w2 SELECT concat(o_orderstatus, ' group '), count(*)
+          GROUP BY o_orderstatus""")
+      val w1 = rows(spark.table("mis_w1"))
+      assert(w1.nonEmpty && w1 == rows(spark.sql("""SELECT concat(o_orderstatus, ' where '),
+        o_orderkey FROM orders WHERE o_orderkey < 50""")))
+      assert(rows(spark.table("mis_w2")) == rows(spark.sql("""SELECT
+        concat(o_orderstatus, ' group '), count(*) FROM orders GROUP BY o_orderstatus""")))
+    } finally dropAll("mis_w1", "mis_w2")
+  }
+
+  test("table, backticked and DIRECTORY branches share one scan") {
+    val big = bigDir
+    val wh = tmp("graft-mi-dir")
+    spark.sql(s"CREATE TABLE mis_t (k BIGINT) USING parquet LOCATION '$wh/t'")
+    spark.sql(s"CREATE TABLE `123mis` (k BIGINT, v STRING) USING parquet LOCATION '$wh/q'")
+    val out = s"$wh/out"
+    try {
+      val reads = observe { HiveQl.sql(spark, s"""
+        FROM mis_big
+        INSERT OVERWRITE TABLE mis_t SELECT k WHERE k < 10
+        INSERT INTO `123mis` SELECT k, v WHERE k BETWEEN 10 AND 19
+        INSERT OVERWRITE DIRECTORY '$out' SELECT k, v WHERE k >= 999995""") }
+      assert(rows(spark.table("mis_t")) == (0 until 10).map(_.toString).sorted)
+      assert(rows(spark.table("`123mis`")) ==
+        rows(spark.sql("SELECT k, v FROM mis_big WHERE k BETWEEN 10 AND 19")))
+      val landed = spark.read.format("graft.sources.HiveTextSource")
+        .schema("k BIGINT, v STRING").load(out)
+      assert(rows(landed) == rows(spark.sql("SELECT k, v FROM mis_big WHERE k >= 999995")))
+      assert(reads.fileScans(big) == 0, s"saw ${reads.fileScans(big)}")
+    } finally dropAll("mis_t", "`123mis`")
   }
 }

@@ -204,6 +204,23 @@ class SqlDialectSpec extends SparkSpec {
     spark.sql("DROP TABLE ts_bkt"); spark.sql("DROP TABLE ts_flat")
   }
 
+  test("DROP VIEW IF EXISTS ignores a table, DROP TABLE IF EXISTS a view (HIVE-2133)") {
+    spark.sql("DROP TABLE IF EXISTS drop_kind_t")
+    spark.sql("CREATE TABLE drop_kind_t (k INT) USING parquet")
+    spark.sql("CREATE OR REPLACE VIEW drop_kind_v AS SELECT 1 AS k")
+    try {
+      HiveQl.sql(spark, "DROP VIEW IF EXISTS drop_kind_t")
+      HiveQl.sql(spark, "DROP TABLE IF EXISTS drop_kind_v")
+      assert(spark.catalog.tableExists("drop_kind_t") && spark.catalog.tableExists("drop_kind_v"))
+      HiveQl.sql(spark, "DROP VIEW IF EXISTS drop_kind_v")
+      HiveQl.sql(spark, "DROP VIEW IF EXISTS drop_kind_none")
+      assert(!spark.catalog.tableExists("drop_kind_v"))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS drop_kind_t")
+      spark.sql("DROP VIEW IF EXISTS drop_kind_v")
+    }
+  }
+
   test("bare INSERT OVERWRITE DIRECTORY resolves to hivetext (union.q form)") {
     // Hive's destination KW_DIRECTORY writes LazySimpleSerDe text with no
     // format clause; Spark needs USING — the dialect supplies hivetext
