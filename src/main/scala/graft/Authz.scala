@@ -309,7 +309,19 @@ object Authz {
     * to the survivor).
     */
   private[graft] def forgetDatabase(spark: SparkSession, db: String,
-      tables: Seq[String]): Unit = synchronized {
+      tables: Seq[String]): Unit = forget(spark, db, tables, dbRows = true)
+
+  /** DROP TABLE cascade (the table's TBL_PRIVS rows die with the table):
+    * purge the table and partition grants of `table` in `db`, by the
+    * spelling rules of [[forgetDatabase]]. Without it a re-created table
+    * of the same name inherits the old grants, and re-granting one fails
+    * with "already granted".
+    */
+  private[graft] def forgetTable(spark: SparkSession, db: String,
+      table: String): Unit = forget(spark, db, Seq(table), dbRows = false)
+
+  private def forget(spark: SparkSession, db: String, tables: Seq[String],
+      dbRows: Boolean): Unit = synchronized {
     ensureLoaded(spark)
     val d = db.toLowerCase
     val qualified = tables.map(t => d + "." + t.toLowerCase).toSet
@@ -318,7 +330,7 @@ object Authz {
     }.toSet
     def scoped(g: Grant): Boolean = {
       val base = g.objName.split('@')(0)
-      (g.objType == "DATABASE" && g.objName == d) ||
+      (dbRows && g.objType == "DATABASE" && g.objName == d) ||
         (g.objType != "DATABASE" && (qualified(base) || bare(base)))
     }
     val gone = grants.toSeq.filter(scoped)

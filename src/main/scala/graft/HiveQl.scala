@@ -3422,8 +3422,14 @@ object HiveQl {
           if (!viewSkip) {
             native(s, q)
             // a dropped table's protect flags die with it (the reference
-            // keeps them in table properties)
-            if (!s.catalog.tableExists(table)) Protect.clearTable(s, table)
+            // keeps them in table properties), and so do its grants
+            // (TBL_PRIVS rows)
+            if (!s.catalog.tableExists(table)) {
+              Protect.clearTable(s, table)
+              meta.foreach(m => Authz.forgetTable(s,
+                m.identifier.database.getOrElse(s.catalog.currentDatabase),
+                m.identifier.table))
+            }
             meta.filter(_.provider.contains("graft.sources.kv.KvSource"))
               .foreach { m =>
                 val p = m.storage.properties.map {

@@ -210,12 +210,12 @@ object Dedup extends QueryModule {
     * the one frame.
     *
     * `epoch` numbers the admission calls chained through this store: each
-    * delta's scratch artifacts (staged delta signatures, rejected verdict)
-    * stage in the app-scoped scratch under epoch-scoped names
-    * (`<name>_d<epoch>_*`), so the NEXT admit on the chain never clobbers
-    * files a still-lazy `admitted` result from the PREVIOUS admit reads
-    * (the q131 composition consumes both deltas' admissions at the end),
-    * and a store name must be unique within an application. Each
+    * delta's scratch artifact (its staged signatures) stages in the
+    * app-scoped scratch under an epoch-scoped name (`<name>_d<epoch>_*`),
+    * so the NEXT admit on the chain never clobbers files a still-lazy
+    * frame from the PREVIOUS admit reads, and a store name must be unique
+    * within an application. The rejected verdict is no scratch artifact:
+    * it is held on the driver ([[incrementalAdmit]]). Each
     * admission's store append lands under `epoch=N`, never touching
     * earlier partitions, so a previously returned SigStore's DataFrames (a
     * snapshot of the partitions that existed at its epoch) stay valid
@@ -350,6 +350,22 @@ object Dedup extends QueryModule {
       .select(col("b_id").as("doc_id")).distinct()
   }
 
+  /** The verdict step both store-backed admissions share: collects the
+    * one-column `verdict` (distinct rejected ids, at most one per delta
+    * row) once, and returns the filter that drops those ids from a frame
+    * keyed by `key` — a `NOT IN` over literals, planned as an `InSet`,
+    * with no join and no job of its own. Null ids are dropped from the
+    * list (one null in an `IN` list makes every non-matching row's
+    * predicate NULL), and a row whose own key is null is kept, as the
+    * left-anti join it replaces kept it. An empty verdict filters nothing.
+    */
+  private def rejecting(verdict: org.apache.spark.sql.DataFrame,
+      key: String): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
+    val ids = verdict.collect().map(_.get(0)).filter(_ != null)
+    if (ids.isEmpty) identity
+    else _.filter(col(key).isNull || !col(key).isin(ids.toIndexedSeq: _*))
+  }
+
   /** Incremental near-dup ADMISSION against a pre-staged [[SigStore]] — the
     * production delta-dedup loop: only the incoming delta is hashed; the
     * existing corpus is represented ENTIRELY by the store (zero scans of
@@ -369,28 +385,31 @@ object Dedup extends QueryModule {
     * COST: O(delta) shuffle. Only the store rows of the buckets the delta
     * touches cross an exchange (the prefilter), and verification reads the
     * word sets carried on the candidate rows, so no store-sized join runs.
-    * The store's parquet is still scanned once per admission.
+    * The store's parquet is still scanned once per admission. The verdict
+    * is collected to the driver once ([[rejecting]]): at most one id per
+    * REJECTED delta doc, so the driver holds O(delta) ids, never anything
+    * store-sized.
     *
     * JOB BUDGET: the admission is bound by per-job fixed cost (scheduling,
     * AQE re-planning and the driver gap around each job), not by compute,
-    * so it runs only the jobs its result needs — eight per call on
-    * IncrementalAdmitSpec's fixture, which pins the count, plus the
-    * caller's collection of `admitted`: the delta stage (one write: the
-    * delta's signatures are computed once, here), the verdict (five: the
-    * prefilter's broadcast of the delta's keys, the broadcast of the delta
-    * rows the candidates join, the capped window's exchange, the distinct's
-    * exchange and one write) and the epoch append (the verdict broadcast
-    * and one write). What keeps it there: every staged copy and store read
-    * is schema-pinned (no inference job — see [[Staging]]), every write
-    * follows Staging's shared size rule (a delta-sized write is one file
-    * with no rebalance exchange; the distinct-rooted verdict keeps its own
-    * AQE-coalesced shuffle), and one append publishes words and band
-    * hashes together.
+    * so it runs only the jobs its result needs — seven per call on
+    * IncrementalAdmitSpec's fixture, which pins the count, plus one for
+    * the caller's collection of `admitted`: the delta stage (one write: the
+    * delta's signatures are computed once, here), the verdict's collection
+    * (five: the prefilter's broadcast of the delta's keys, the broadcast of
+    * the delta rows the candidates join, the capped window's exchange, the
+    * distinct's exchange and the result) and the epoch append (one write).
+    * Both consumers of the verdict, the append's input and `admitted`,
+    * filter on the collected ids, which Spark plans as an `InSet` with no
+    * join and no job. What keeps it there: every staged copy and store
+    * read is schema-pinned (no inference job — see [[Staging]]), every
+    * write follows Staging's shared size rule (a delta-sized write is one
+    * file with no rebalance exchange), and one append publishes words and
+    * band hashes together.
     *
-    * The delta stage and the verdict live in the app-scoped scratch
-    * ([[Staging.stage]]) even for a durable store: the lazy `admitted`
-    * result needs them only within the application, and the durable
-    * directory receives only the epoch append.
+    * The delta stage lives in the app-scoped scratch ([[Staging.stage]])
+    * even for a durable store: the durable directory receives only the
+    * epoch append.
     */
   def incrementalAdmit(store: SigStore,
       incoming: org.apache.spark.sql.DataFrame, threshold: Double,
@@ -404,17 +423,15 @@ object Dedup extends QueryModule {
       signaturesOf(wordsOf(incoming.transform(Sizing.spreadForCompute)),
         numHashes, numBands),
       s"${ep}_delta_sigs")
-    val rejected = Staging.stage(
-      admissionVerdict(store.sigs, inSigs, threshold, resolvedCap(cap)),
-      s"${ep}_delta_rejected")
+    val admit = rejecting(
+      admissionVerdict(store.sigs, inSigs, threshold, resolvedCap(cap)), "doc_id")
     // store update = APPEND the admitted delta's rows as a new epoch
     // partition — existing epochs are never read or rewritten, so the
     // update's I/O is proportional to the delta (IncrementalAdmitSpec pins
     // bytes-written and the untouched epoch-0 files)
     val newEpoch = store.epoch + 1
-    appendStore(inSigs.join(rejected, Seq("doc_id"), "left_anti"),
-      sigDir(store.name), store.baseDir, newEpoch)
-    (incoming.join(rejected, Seq("doc_id"), "left_anti"),
+    appendStore(admit(inSigs), sigDir(store.name), store.baseDir, newEpoch)
+    (admit(incoming),
       store.copy(
         sigs = readEpochs(s, storePath(s, sigDir(store.name), store.baseDir),
           store.sigs.schema),
@@ -562,7 +579,7 @@ object Dedup extends QueryModule {
           Window.partitionBy(col("c_id")).orderBy(col("vec_id"))))
         .filter(col("mrk") <= c)
         .select(col("vec_id"), col("c_id"), col("ne"), col("origin"))
-    val rejected = Staging.stage(
+    val admit = rejecting(
       kept.toDF("a_id", "c_id", "na", "origin")
         .join(inAssigned.toDF("b_id", "c_id", "nb"), Seq("c_id"))
         .filter(when(col("origin") === "E", col("a_id") =!= col("b_id"))
@@ -570,16 +587,14 @@ object Dedup extends QueryModule {
         .selectExpr("b_id", "round(vec_dot(na, nb), 4) AS sim")
         .filter(col("sim") >= threshold)
         .select(col("b_id").as("vec_id")).distinct(),
-      s"${ep}_delta_rejected")
-    val admitted = incoming.join(rejected, Seq("vec_id"), "left_anti")
+      "vec_id")
     // same append-only update as [[incrementalAdmit]]: only the admitted
     // delta's assignments land, as a fresh epoch partition
     val newEpoch = store.epoch + 1
-    appendStore(inAssigned.join(rejected, Seq("vec_id"), "left_anti"),
-      s"${store.name}_members", store.baseDir, newEpoch)
+    appendStore(admit(inAssigned), s"${store.name}_members", store.baseDir, newEpoch)
     val newMembers = readEpochs(s, storePath(s, s"${store.name}_members", store.baseDir),
       store.members.schema)
-    (admitted,
+    (admit(incoming),
       VecStore(store.name, store.centroids, newMembers, store.baseDir,
         newEpoch))
   }

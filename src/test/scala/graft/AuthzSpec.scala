@@ -187,6 +187,23 @@ class AuthzSpec extends SparkSpec {
     Authz.reset()
   }
 
+  test("DROP TABLE takes the table's grants with it") {
+    // TBL_PRIVS rows die with the table: a re-created table of the same
+    // name starts with no grants, so re-granting one is not 'already
+    // granted' and SHOW GRANT lists only the new grant
+    Authz.reset()
+    HiveQl.sql(spark, "DROP TABLE IF EXISTS authz_regrant")
+    HiveQl.sql(spark, "CREATE TABLE authz_regrant (k INT)")
+    HiveQl.sql(spark, "GRANT SELECT, UPDATE ON TABLE authz_regrant TO USER alice")
+    HiveQl.sql(spark, "DROP TABLE authz_regrant")
+    HiveQl.sql(spark, "CREATE TABLE authz_regrant (k INT)")
+    HiveQl.sql(spark, "GRANT SELECT ON TABLE authz_regrant TO USER alice")
+    assert(HiveQl.sql(spark, "SHOW GRANT USER alice ON TABLE authz_regrant")
+      .collect().map(_.getString(4)).toSeq == Seq("Select"))
+    HiveQl.sql(spark, "DROP TABLE authz_regrant")
+    Authz.reset()
+  }
+
   test("raw spark.sql is authorized like HiveQl.sql (one statement path)") {
     Authz.reset()
     Tables.registerAll(spark, sfDir)

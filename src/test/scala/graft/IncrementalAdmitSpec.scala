@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{In, InSet, Not}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 
 import graft.operators.Dedup
 
@@ -23,6 +24,22 @@ class IncrementalAdmitSpec extends SparkSpec {
       (other.children ++ other.subqueries).map(fileScans(_, needle)).sum
   }
 
+  /** The filters of `p` that drop a literal id list: `NOT (id IN (...))`,
+    * or its `InSet` form once the list passes Spark's conversion threshold. */
+  private def notInFilters(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => notInFilters(a.executedPlan)
+    case q: QueryStageExec => notInFilters(q.plan)
+    case other =>
+      val here = other match {
+        case f: FilterExec if f.condition.find {
+          case Not(_: In) | Not(_: InSet) => true
+          case _ => false
+        }.isDefined => 1
+        case _ => 0
+      }
+      here + other.children.map(notInFilters).sum
+  }
+
   // deterministic near-dups: a word-PERMUTED copy has the identical distinct
   // word set, hence the identical minhash signature (all bands agree) and
   // exact Jaccard 1.0 — no probabilistic banding in the fixture
@@ -34,6 +51,15 @@ class IncrementalAdmitSpec extends SparkSpec {
   private def docs(rows: (Long, String)*): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
+  }
+
+  /** `df` written to its own parquet dir and read back: a delta whose
+    * plan keeps a scan and a filter (a local frame's filter folds into
+    * its rows at optimization, and its collect runs no job). */
+  private def onDisk(df: org.apache.spark.sql.DataFrame, name: String): org.apache.spark.sql.DataFrame = {
+    val dir = sys.props("java.io.tmpdir") + "/" + name
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
   }
 
   /** Spark jobs started inside `body` and the shuffle bytes their tasks
@@ -98,19 +124,28 @@ class IncrementalAdmitSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(corpusDir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
 
-    val delta = docs(100L -> perm, 101L -> third) // 100 near-dups doc 1
+    // 100 near-dups doc 1 and 102 doc 2; two rejected ids keep the
+    // verdict an IN list (Spark rewrites a one-element IN to an equality)
+    val permOther = "tango sierra romeo quebec papa oscar november mike lima kilo"
+    val delta = onDisk(docs(100L -> perm, 101L -> third, 102L -> permOther),
+      "spec_admit_text_delta")
     val (admitted, updated) = Dedup.incrementalAdmit(store, delta, 0.8, None, 16, 2)
     val got = admitted.select($"doc_id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == Seq(101L), "the word-permuted copy must be rejected")
+    assert(got.toSeq == Seq(101L), "the word-permuted copies must be rejected")
     assert(updated.words.count() == 3, "store update must also run corpus-free")
 
-    // executed-plan pin (StagingSpec's 0-rescan pattern): admission is an
-    // anti-join against the STAGED verdict — no corpus scan, no re-verify
+    // executed-plan pin (StagingSpec's 0-rescan pattern): the verdict was
+    // collected during the admission, so the admitted plan is the delta
+    // under a NOT IN filter — no corpus, store or scratch scan, no re-verify
     val plan = admitted.queryExecution.executedPlan
     assert(fileScans(plan, "spec_admit_corpus") == 0,
       s"admission must read the signature store, never the corpus:\n$plan")
-    assert(fileScans(plan, "spec_admit_store_d0_delta_rejected") == 1,
-      s"admission must anti-join the staged rejected set:\n$plan")
+    assert(fileScans(plan, "spec_admit_store") == 0,
+      s"the admitted frame must not re-read the signature store:\n$plan")
+    assert(fileScans(plan, graft.operators.Staging.scratchRoot(spark)) == 0,
+      s"the admitted frame must not read staged scratch:\n$plan")
+    assert(fileScans(plan, "spec_admit_text_delta") == 1 && notInFilters(plan) == 1,
+      s"the admitted frame must be the delta under one NOT IN filter:\n$plan")
   }
 
   test("updated store chains: delta 2 is judged against delta 1's admissions") {
@@ -242,12 +277,11 @@ class IncrementalAdmitSpec extends SparkSpec {
   test("one admission runs a pinned number of jobs") {
     // the admission is bound by per-job fixed cost, not compute: a schema-
     // inference read-back, a rebalance exchange on a delta-sized write or a
-    // second verdict join each come back as extra jobs and fail this pin.
+    // verdict join each come back as extra jobs and fail this pin.
     // Bound measured on this fixture: delta signatures write (1), verdict
-    // (prefilter key broadcast, delta-row broadcast, window exchange,
-    // distinct exchange, write: 5), epoch append (verdict broadcast,
-    // write: 2)
-    val budget = 8
+    // collection (prefilter key broadcast, delta-row broadcast, window
+    // exchange, distinct exchange, result: 5), epoch append (write: 1)
+    val budget = 7
     val store = Dedup.buildSigStore(docs(1L -> base, 2L -> other), "spec_admit_jobs")
     val delta = docs(100L -> perm, 101L -> third)
     var admitted: org.apache.spark.sql.DataFrame = null
@@ -256,6 +290,48 @@ class IncrementalAdmitSpec extends SparkSpec {
     }
     assert(jobs <= budget, s"one admission ran $jobs jobs, budget $budget")
     assert(admitted.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(101L))
+  }
+
+  test("collecting the admitted frame runs exactly one job") {
+    // the verdict is already on the driver: the admitted frame is a scan
+    // of the delta under a NOT IN filter, with no broadcast of the verdict
+    val store = Dedup.buildSigStore(docs(1L -> base, 2L -> other), "spec_admit_collect")
+    val delta = onDisk(docs(100L -> perm, 101L -> third), "spec_admit_collect_delta")
+    val admitted = Dedup.incrementalAdmit(store, delta, 0.8, None, 16, 2)._1
+    var got: Seq[Long] = Nil
+    val (jobs, _) = measured {
+      got = admitted.select("doc_id").collect().map(_.getLong(0)).toSeq
+    }
+    assert(got == Seq(101L))
+    assert(jobs == 1, s"collecting the admitted frame ran $jobs jobs")
+  }
+
+  test("a null-id delta row is kept, and an empty verdict filters nothing") {
+    import spark.implicits._
+    val permOther = "tango sierra romeo quebec papa oscar november mike lima kilo"
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+      df.select("doc_id").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq.sorted
+    val store = Dedup.buildSigStore(docs(1L -> base, 2L -> other), "spec_admit_nulls")
+    // a null id matches no verdict id, so the row is kept whatever its
+    // text (here a near-dup of store doc 2), as the anti-join kept it;
+    // 100 is rejected, so the verdict is not empty
+    val withNull = onDisk(Seq(
+        (Option.empty[Long], permOther), (Some(100L), perm), (Some(101L), third))
+      .toDF("doc_id", "text"), "spec_admit_null_delta")
+    val (adm1, store1) = Dedup.incrementalAdmit(store, withNull, 0.8, None, 16, 2)
+    assert(ids(adm1) == Seq(None, Some(101L)))
+    assert(ids(store1.words) == Seq(None, Some(1L), Some(2L), Some(101L)))
+    // no delta doc near-dups anything: every row admits, unfiltered
+    val fresh = "aa bb cc dd ee ff gg hh ii jj"
+    val (adm2, store2) = Dedup.incrementalAdmit(store1,
+      onDisk(docs(200L -> fresh, 201L -> "one two three four five six seven eight nine ten"),
+        "spec_admit_empty_delta"), 0.8, None, 16, 2)
+    assert(ids(adm2) == Seq(Some(200L), Some(201L)))
+    assert(notInFilters(adm2.queryExecution.executedPlan) == 0,
+      "an empty verdict must add no filter")
+    assert(ids(store2.words) == Seq(None, Some(1L), Some(2L), Some(101L),
+      Some(200L), Some(201L)))
   }
 
   test("over-cap bucket and both-band agreement: raw candidate rows admit the same ids") {
@@ -313,9 +389,9 @@ class IncrementalAdmitSpec extends SparkSpec {
   }
 
   test("a durable store directory holds only the store after admissions") {
-    // the delta stage and the verdict are app-scoped scratch: two
-    // admissions leave nothing but the signature component in the
-    // caller's directory
+    // the delta stage is app-scoped scratch and the verdict is held on
+    // the driver: two admissions leave nothing but the signature component
+    // in the caller's directory
     val dir = java.nio.file.Files.createTempDirectory("graft-sigstore-clean").toString
     val store0 = Dedup.buildSigStore(docs(1L -> base), "clean_store", baseDir = Some(dir))
     val (adm1, store1) = Dedup.incrementalAdmit(

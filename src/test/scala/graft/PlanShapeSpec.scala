@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{In, InSet, Not}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.QFileParity.RefData
 
 /** Asserts the physical plans are the ones a 100 TB deployment needs — not
@@ -8,7 +16,7 @@ import graft.operators.QFileParity.RefData
   * small sides broadcast, top-k plans use TakeOrderedAndProject, semi joins
   * stay semi.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
@@ -295,16 +303,68 @@ class PlanShapeSpec extends SparkSpec {
       s"clusters must come from the staged propagation rounds:\n$p")
   }
 
-  test("q132: vector admission — capped cluster probe, anti-join verdict") {
-    val p = plan("q132_vec_admission")
-    assert(p.contains("LeftAnti"),
-      s"admission must anti-join the rejected set:\n$p")
-    assert(p.contains("vecstore_existing_d0"),
-      s"the verdict must come from the staged store scratch:\n$p")
+  /** Runs registry query `name` on an isolated clone it listens to, and
+    * returns the query's frame with the executed plans of every query the
+    * registry function ran (listener managers are per session, and the
+    * registry would otherwise clone one of its own; QueryExecutionListener
+    * is async — poll until the count is stable).
+    */
+  private def observed(name: String): (DataFrame, Seq[SparkPlan]) = {
+    val qs = Sessions.isolatedClone(spark)
+    val seen = new ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    qs.listenerManager.register(l)
+    try {
+      val out = SparkEntry.queries(name)(qs, sfDir)
+      var last = -1
+      var stable = 0
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (stable < 5 && System.nanoTime() < deadline) {
+        val cur = seen.size
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+        Thread.sleep(100)
+      }
+      (out, seen.asScala.toSeq)
+    } finally qs.listenerManager.unregister(l)
+  }
+
+  private def scans(p: SparkPlan, needle: String): Int =
+    collectWithSubqueries(p) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(needle)) => f
+    }.size
+
+  test("q132: vector admission — capped cluster probe, NOT IN verdict") {
+    val (df, ran) = observed("q132_vec_admission")
+    val admitted = df.queryExecution.executedPlan
+    // the verdict was collected inside the admission, so the admitted
+    // frame is the incoming vectors under the verdict's NOT IN filter:
+    // no join, and no read of the store or of staged scratch
+    val notIn = collect(admitted) {
+      case f: FilterExec if f.condition.find {
+        case Not(_: In) | Not(_: InSet) => true
+        case _ => false
+      }.isDefined => f
+    }
+    assert(notIn.size == 1 && scans(admitted, "embeddings") == 1,
+      s"admission must be one NOT IN filter over the incoming vectors:\n$admitted")
+    assert(!admitted.toString.contains("LeftAnti") &&
+      scans(admitted, "vecstore_existing") == 0,
+      s"the admitted frame must not join or re-read the verdict's inputs:\n$admitted")
+    // the verdict query read the staged delta members and the store's
+    // members (the epoch append reads the staged delta only)
+    assert(ran.exists(p => scans(p, "vecstore_existing_d0") > 0 &&
+        scans(p, "vecstore_existing_members") > 0),
+      "the verdict must come from the staged delta scratch and the store:\n" +
+        ran.mkString("\n---\n"))
     // the only non-equi join is the broadcast argmax against the tiny
     // centroid table — by design (q104's assignment shape)
-    assert(!p.contains("CartesianProduct"),
-      s"cluster pairing must stay on the c_id equi-join:\n$p")
+    assert(ran.forall(p => !p.toString.contains("CartesianProduct")),
+      "cluster pairing must stay on the c_id equi-join:\n" + ran.mkString("\n---\n"))
   }
 
   test("engine-written sorted buckets join with ZERO shuffle exchange (SMB)") {
