@@ -353,11 +353,12 @@ object Dedup extends QueryModule {
   /** The verdict step both store-backed admissions share: collects the
     * one-column `verdict` (distinct rejected ids, at most one per delta
     * row) once, and returns the filter that drops those ids from a frame
-    * keyed by `key` — a `NOT IN` over literals, planned as an `InSet`,
-    * with no join and no job of its own. Null ids are dropped from the
-    * list (one null in an `IN` list makes every non-matching row's
-    * predicate NULL), and a row whose own key is null is kept, as the
-    * left-anti join it replaces kept it. An empty verdict filters nothing.
+    * keyed by `key` — a `NOT IN` over literals (an `InSet` once the list
+    * is long), with no join and no job of its own. Null ids are dropped
+    * from the list (one null in an `IN` list makes every non-matching
+    * row's predicate NULL), and a row whose own key is null is kept, as
+    * the left-anti join it replaces kept it. An empty verdict filters
+    * nothing.
     */
   private def rejecting(verdict: org.apache.spark.sql.DataFrame,
       key: String): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
@@ -400,12 +401,12 @@ object Dedup extends QueryModule {
     * the delta rows the candidates join, the capped window's exchange, the
     * distinct's exchange and the result) and the epoch append (one write).
     * Both consumers of the verdict, the append's input and `admitted`,
-    * filter on the collected ids, which Spark plans as an `InSet` with no
-    * join and no job. What keeps it there: every staged copy and store
-    * read is schema-pinned (no inference job — see [[Staging]]), every
-    * write follows Staging's shared size rule (a delta-sized write is one
-    * file with no rebalance exchange), and one append publishes words and
-    * band hashes together.
+    * filter on the collected ids, a `NOT IN` in the stage that scans
+    * them, with no join and no job. What keeps it there: every staged
+    * copy and store read is schema-pinned (no inference job — see
+    * [[Staging]]), every write follows Staging's shared size rule (a
+    * delta-sized write is one file with no rebalance exchange), and one
+    * append publishes words and band hashes together.
     *
     * The delta stage lives in the app-scoped scratch ([[Staging.stage]])
     * even for a durable store: the durable directory receives only the
