@@ -3423,12 +3423,15 @@ object HiveQl {
             native(s, q)
             // a dropped table's protect flags die with it (the reference
             // keeps them in table properties), and so do its grants
-            // (TBL_PRIVS rows)
+            // (TBL_PRIVS rows). Also when IF EXISTS found no table: rows
+            // under its name are orphans, e.g. persisted by an earlier
+            // application whose in-memory catalog did not survive, and
+            // would otherwise pass to the next table of that name
             if (!s.catalog.tableExists(table)) {
               Protect.clearTable(s, table)
-              meta.foreach(m => Authz.forgetTable(s,
-                m.identifier.database.getOrElse(s.catalog.currentDatabase),
-                m.identifier.table))
+              scala.util.Try(s.sessionState.sqlParser.parseTableIdentifier(table))
+                .foreach(id => Authz.forgetTable(s,
+                  id.database.getOrElse(s.catalog.currentDatabase), id.table))
             }
             meta.filter(_.provider.contains("graft.sources.kv.KvSource"))
               .foreach { m =>

@@ -200,6 +200,17 @@ class AuthzSpec extends SparkSpec {
     HiveQl.sql(spark, "GRANT SELECT ON TABLE authz_regrant TO USER alice")
     assert(HiveQl.sql(spark, "SHOW GRANT USER alice ON TABLE authz_regrant")
       .collect().map(_.getString(4)).toSeq == Seq("Select"))
+    // grant rows whose table the catalog no longer holds (an application
+    // restarted over the same warehouse with an in-memory catalog) go with
+    // a DROP TABLE IF EXISTS of the name
+    spark.sessionState.catalog.dropTable(
+      org.apache.spark.sql.catalyst.TableIdentifier("authz_regrant"),
+      ignoreIfNotExists = false, purge = false)
+    HiveQl.sql(spark, "DROP TABLE IF EXISTS authz_regrant")
+    HiveQl.sql(spark, "CREATE TABLE authz_regrant (k INT)")
+    HiveQl.sql(spark, "GRANT SELECT ON TABLE authz_regrant TO USER alice")
+    assert(HiveQl.sql(spark, "SHOW GRANT USER alice ON TABLE authz_regrant")
+      .collect().map(_.getString(4)).toSeq == Seq("Select"))
     HiveQl.sql(spark, "DROP TABLE authz_regrant")
     Authz.reset()
   }

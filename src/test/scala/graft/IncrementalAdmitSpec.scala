@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.{In, InSet, Not}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 
 import graft.operators.Dedup
@@ -13,7 +13,7 @@ import graft.operators.Dedup
   * delta doc is rejected on ANY verified match to the store, regardless of
   * whether its id sorts below the existing near-dup's.
   */
-class IncrementalAdmitSpec extends SparkSpec {
+class IncrementalAdmitSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def fileScans(p: SparkPlan, needle: String): Int = p match {
     case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan, needle)
@@ -26,19 +26,12 @@ class IncrementalAdmitSpec extends SparkSpec {
 
   /** The filters of `p` that drop a literal id list: `NOT (id IN (...))`,
     * or its `InSet` form once the list passes Spark's conversion threshold. */
-  private def notInFilters(p: SparkPlan): Int = p match {
-    case a: AdaptiveSparkPlanExec => notInFilters(a.executedPlan)
-    case q: QueryStageExec => notInFilters(q.plan)
-    case other =>
-      val here = other match {
-        case f: FilterExec if f.condition.find {
-          case Not(_: In) | Not(_: InSet) => true
-          case _ => false
-        }.isDefined => 1
-        case _ => 0
-      }
-      here + other.children.map(notInFilters).sum
-  }
+  private def notInFilters(p: SparkPlan): Int = collect(p) {
+    case f: FilterExec if f.condition.find {
+      case Not(_: In) | Not(_: InSet) => true
+      case _ => false
+    }.isDefined => f
+  }.size
 
   // deterministic near-dups: a word-PERMUTED copy has the identical distinct
   // word set, hence the identical minhash signature (all bands agree) and
